@@ -221,7 +221,7 @@ object Bench {
     // the COMPLETE map (93+ queries, harness, streaming, scale) goes
     // to a file artifact the judge reads whole
     try java.nio.file.Files.write(
-      java.nio.file.Paths.get("/root/repo/BENCH_FULL.json"),
+      java.nio.file.Paths.get("BENCH_FULL.json"),
       java.util.Arrays.asList(fullLine))
     catch { case scala.util.control.NonFatal(_) => () }
     // stdout gets a line that PARSES inside the driver's 2000-char

@@ -73,7 +73,7 @@ object BenchScale {
       "SELECT PERCENTILEEST50(ArrDelay), PERCENTILEEST95(ArrDelay) FROM ontime",
       "SELECT approx_quantile(ArrDelay, 0.5), approx_quantile(ArrDelay, 0.95) FROM ontime"))
 
-  def dataRoot: String = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR", "/root/repo/bench_data")
+  def dataRoot: String = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR", "bench_data")
 
   private def r3(v: Double): String =
     String.format(java.util.Locale.US, "%.3f", Double.box(v))
@@ -148,7 +148,7 @@ object BenchScale {
     try {
       val req = s"""{"views":{${views.map { case (k, v) =>
           s"${jstr(k)}:${jstr(v)}" }.mkString(",")}},"sql":${jstr(sql)},"reps":$reps}"""
-      val pb = new ProcessBuilder("python3", "/root/repo/tools/duck_once.py")
+      val pb = new ProcessBuilder("python3", "tools/duck_once.py")
       // merge stderr into stdout: an UNREAD stderr pipe that fills its
       // ~64 KB buffer blocks the child's writes while we block on
       // readAllBytes(stdout) — a whole-ladder deadlock from one chatty
@@ -1486,7 +1486,7 @@ object BenchScale {
   }
 
   def main(args: Array[String]): Unit = {
-    val outFile = if (args.nonEmpty) args(0) else "/root/repo/BENCH_SCALE_r08.json"
+    val outFile = if (args.nonEmpty) args(0) else "BENCH_SCALE_r08.json"
     // optional second arg restricts the scale ladder ("sf1,sf100") —
     // smoke runs and resumes after an interrupted ladder
     val wanted: Set[String] =

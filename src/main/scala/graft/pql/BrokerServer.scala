@@ -196,7 +196,8 @@ object BrokerMain {
   def main(args: Array[String]): Unit = {
     val tableDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
     val port = if (args.length > 1) args(1).toInt else 8099
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     val spark = org.apache.spark.sql.SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

@@ -54,14 +54,11 @@ object SortedLayout {
       case _ => false
     }
 
-  // memoized per (file set incl. size+mtime, column): footers are
-  // immutable once written, and repeated pages over the same segment
-  // must not re-open 10^5 footers per query. Bounded like
-  // [[Tables.footerCountCache]] — a long-lived session paging over
-  // ever-changing table versions must not accumulate driver memory
-  // (each entry holds per-file stats, ~100 B × file count).
+  // memoized per (file set, column): repeated pages over the same
+  // segment must not re-open 10^5 footers per query (each entry holds
+  // per-file stats, ~100 B × file count)
   private val layoutCache =
-    new scala.collection.concurrent.TrieMap[(Seq[String], String), Option[Seq[FileStat]]]
+    new FileSets.Lru[(Seq[FileSets.Stamp], String), Option[Seq[FileStat]]]
 
   /** The sorted layout of `df`'s scan for `column`, or None when the
     * frame is not a bare parquet scan, the column's per-file ranges
@@ -74,11 +71,8 @@ object SortedLayout {
         case fs: HadoopFsRelation if fs.fileFormat.isInstanceOf[ParquetFileFormat] =>
           try {
             val statuses = fs.location.listFiles(Nil, Nil).flatMap(_.files)
-            val key = (statuses
-              .map(f => s"${f.getPath}@${f.getLen}:${f.getModificationTime}").sorted,
-              column.toLowerCase)
-            if (layoutCache.size > 256) layoutCache.clear()
-            layoutCache.getOrElseUpdate(key, {
+            val key = (FileSets.fingerprint(statuses.map(_.fileStatus)), column.toLowerCase)
+            layoutCache.getOrElseUpdate(key) {
               val spark = df.sparkSession
               val confBc = spark.sparkContext.broadcast(
                 new org.apache.spark.util.SerializableConfiguration(
@@ -104,7 +98,7 @@ object SortedLayout {
                 // a single file is "sorted" but prunes nothing
                 if (disjoint && asc.size > 1) Some(asc) else None
               }
-            })
+            }
           } catch { case scala.util.control.NonFatal(_) => None }
         case _ => None
       }

@@ -21,6 +21,29 @@ object Tables {
     * declarative so Catalyst pushes filters/projections into the
     * parquet reader (PushedFilters / ReadSchema in explain output).
     *
+    * The resolved relation is cached per table path, keyed on a
+    * snapshot of the table (the broker's routing table in the
+    * reference is rebuilt only when the segment set changes, not per
+    * query). `spark.read.parquet` lists the directory and runs a
+    * one-task job to infer the schema; on unchanged files a load
+    * instead returns a fresh frame over the cached relation: no job,
+    * and new attribute ids as a fresh read has, so two loads of one
+    * table still join. The snapshot key holds:
+    *  - the `(name, length, mtime)` stamps of a plain `listStatus` of
+    *    `<dir>/<name>.parquet` (and of its partition directories),
+    *    `.`-names dropped, and for a file-sink table of its
+    *    `_spark_metadata` log ([[FileSets.listTable]]);
+    *  - the calling session, by identity (a relation is bound to the
+    *    session that resolved it), and the parquet schema-inference
+    *    confs [[inferenceConfs]].
+    * The listing is taken BEFORE the relation is built, so a cached
+    * relation is never older than its key: a commit that lands
+    * between the two only costs one more miss on the next load. A
+    * changed key rebuilds with `spark.read.parquet` and replaces the
+    * path's entry; at most [[FileSets.MaxEntries]] paths stay cached.
+    * A missing path is never cached and raises `spark.read.parquet`'s
+    * own error.
+    *
     * `events.ts` has appeared in two physical encodings across
     * test-data generations: TIMESTAMP(NANOS) — which Spark 4 only
     * reads via `spark.sql.legacy.parquet.nanosAsLong`, as an
@@ -31,7 +54,7 @@ object Tables {
     * on ~1.7e18 nano epochs) and NTZ casts wall-clock-preserving under
     * the UTC session zone every entry point sets. */
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val df = spark.read.parquet(s"$dir/$name.parquet")
+    val df = relation(spark, s"$dir/$name.parquet")
     val tsType = df.schema.fields.find(_.name == "ts").map(_.dataType)
     if (name == "events" && tsType.contains(org.apache.spark.sql.types.LongType)) {
       df.withColumn("ts", org.apache.spark.sql.functions.expr("timestamp_micros(ts div 1000)"))
@@ -40,6 +63,44 @@ object Tables {
       df.withColumn("ts", org.apache.spark.sql.functions.col("ts")
         .cast(org.apache.spark.sql.types.TimestampType))
     } else df
+  }
+
+  /** Session confs that change the schema `spark.read.parquet` infers. */
+  private val inferenceConfs: Seq[String] = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema")
+
+  /** Snapshot key of one table path; SparkSession does not override
+    * `equals`, so the session compares by identity. */
+  private final case class Snapshot(session: SparkSession,
+      confs: Seq[Option[String]], files: Seq[FileSets.Stamp])
+
+  private val relations = new FileSets.Lru[String,
+    (Snapshot, org.apache.spark.sql.sources.BaseRelation)]
+
+  private def relation(spark: SparkSession, path: String): DataFrame = {
+    val root = new org.apache.hadoop.fs.Path(path)
+    val snapshot =
+      try Some(Snapshot(spark, inferenceConfs.map(spark.conf.getOption),
+        FileSets.listTable(root.getFileSystem(spark.sessionState.newHadoopConf()), root)))
+      catch { case _: java.io.FileNotFoundException => None }
+    snapshot match {
+      case None => spark.read.parquet(path)
+      case Some(key) => relations.get(path) match {
+        case Some((cached, rel)) if cached == key => spark.baseRelationToDataFrame(rel)
+        case _ =>
+          val df = spark.read.parquet(path)
+          df.queryExecution.analyzed match {
+            case lr: org.apache.spark.sql.execution.datasources.LogicalRelation =>
+              relations.put(path, (key, lr.relation))
+            case _ =>
+          }
+          df
+      }
+    }
   }
 
   /** Register every table as a temp view so `spark.sql` and the PQL
@@ -58,8 +119,7 @@ object Tables {
     * and a driver-side loop would serialize on the driver exactly like
     * a collect. Any transform, filter, or non-parquet source returns
     * None and the caller falls back to the ordinary scan-based count. */
-  private val footerCountCache =
-    new scala.collection.concurrent.TrieMap[Seq[String], Long]
+  private val footerCountCache = new FileSets.Lru[Seq[FileSets.Stamp], Long]
 
   def metadataRowCount(df: DataFrame): Option[Long] = {
     import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
@@ -74,41 +134,34 @@ object Tables {
             // answer rather than a fallback
             val statuses = fs.location.listFiles(Nil, Nil).flatMap(_.files)
             val files = statuses.map(_.getPath.toString).sorted
-            // cache key carries size+mtime (free — the FileIndex has
-            // the statuses cached): an in-place overwrite that reuses
-            // part-file names must not serve a stale count
-            val cacheKey = statuses
-              .map(f => s"${f.getPath}@${f.getLen}:${f.getModificationTime}").sorted
+            // the FileIndex has the statuses cached: the key is free
+            val cacheKey = FileSets.fingerprint(statuses.map(_.fileStatus))
             if (files.isEmpty) Some(0L)
-            else footerCountCache.get(cacheKey).orElse {
+            // memoized per file set — repeated COUNT(*) must not
+            // re-open 10^5 footers per query
+            else Some(footerCountCache.getOrElseUpdate(cacheKey) {
               val spark = df.sparkSession
               // the session's hadoop conf, not a blank Configuration —
               // object-store credentials/filesystems live there
               val confBc = spark.sparkContext.broadcast(
                 new org.apache.spark.util.SerializableConfiguration(
                   spark.sessionState.newHadoopConf()))
-              val n =
-                try spark.sparkContext
-                  .parallelize(files, math.min(files.size, 32))
-                  .map { p =>
-                    import org.apache.hadoop.fs.Path
-                    import org.apache.parquet.hadoop.ParquetFileReader
-                    import org.apache.parquet.hadoop.util.HadoopInputFile
-                    val r = ParquetFileReader.open(HadoopInputFile.fromPath(
-                      new Path(p), confBc.value.value))
-                    try r.getRecordCount finally r.close()
-                  }.sum().toLong
-                // the broadcast only serves this one job — destroy it
-                // eagerly; caching the count while leaving the conf
-                // broadcast alive would accumulate driver+executor
-                // memory across a long-lived session's cache misses
-                finally confBc.destroy()
-              // memoize per (path, size, mtime) file set — repeated
-              // COUNT(*) must not re-open 10^5 footers per query
-              if (footerCountCache.size > 256) footerCountCache.clear()
-              footerCountCache.put(cacheKey, n)
-              Some(n)
-            }
+              try spark.sparkContext
+                .parallelize(files, math.min(files.size, 32))
+                .map { p =>
+                  import org.apache.hadoop.fs.Path
+                  import org.apache.parquet.hadoop.ParquetFileReader
+                  import org.apache.parquet.hadoop.util.HadoopInputFile
+                  val r = ParquetFileReader.open(HadoopInputFile.fromPath(
+                    new Path(p), confBc.value.value))
+                  try r.getRecordCount finally r.close()
+                }.sum().toLong
+              // the broadcast only serves this one job — destroy it
+              // eagerly; caching the count while leaving the conf
+              // broadcast alive would accumulate driver+executor
+              // memory across a long-lived session's cache misses
+              finally confBc.destroy()
+            })
           } catch { case scala.util.control.NonFatal(_) => None }
         case _ => None
       }

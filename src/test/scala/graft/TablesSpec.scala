@@ -1,0 +1,201 @@
+package graft
+
+import java.net.{HttpURLConnection, URI}
+import java.nio.charset.StandardCharsets
+import java.nio.file.Files
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.streaming.Trigger
+
+import graft.pql.BrokerServer
+import graft.sources.Tables
+import graft.streaming.RealtimeIngest
+
+/** `Tables.load`'s snapshot-keyed relation cache: a load of unchanged
+  * files reuses the resolved relation (no Spark job), and every change
+  * of the file set, the sink log, the inference confs or the session
+  * shows in the next load. */
+class TablesSpec extends SparkSpec {
+  import spark.implicits._
+
+  private def tempDir(prefix: String): String =
+    Files.createTempDirectory(prefix).toFile.getAbsolutePath
+
+  /** Spark jobs `f` launches on this thread. The listener bus delivers
+    * in order, so once a later marker job has arrived every job of `f`
+    * has been counted. */
+  private def jobsOf[T](f: => T): (T, Int) = {
+    val group = s"tables-spec-${System.nanoTime()}"
+    val marker = group + "-marker"
+    val jobs = new AtomicInteger
+    val markerSeen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))) match {
+          case Some(`group`) => jobs.incrementAndGet(); ()
+          case Some(`marker`) => markerSeen.countDown()
+          case _ =>
+        }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted")
+      val out = try f finally sc.clearJobGroup()
+      sc.setJobGroup(marker, "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(markerSeen.await(30, java.util.concurrent.TimeUnit.SECONDS),
+        "listener bus did not deliver the marker job")
+      (out, jobs.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  private def relationOf(df: org.apache.spark.sql.DataFrame): HadoopFsRelation =
+    df.queryExecution.analyzed.collectFirst {
+      case lr: LogicalRelation => lr.relation.asInstanceOf[HadoopFsRelation]
+    }.getOrElse(fail("not a file-source scan"))
+
+  private def brokerCount(port: Int, table: String): String = {
+    val conn = new URI(s"http://127.0.0.1:$port/query").toURL
+      .openConnection().asInstanceOf[HttpURLConnection]
+    conn.setRequestMethod("POST")
+    conn.setDoOutput(true)
+    conn.setRequestProperty("Content-Type", "application/json")
+    val os = conn.getOutputStream
+    try os.write(s"""{"pql": "SELECT COUNT(*) FROM $table"}""".getBytes(StandardCharsets.UTF_8))
+    finally os.close()
+    val in = conn.getInputStream
+    try new String(in.readAllBytes(), StandardCharsets.UTF_8) finally in.close()
+  }
+
+  private val CountValue = """"value": "(\d+)"""".r
+
+  private def countOf(body: String): Long =
+    CountValue.findFirstMatchIn(body).map(_.group(1).toLong)
+      .getOrElse(fail(s"no COUNT(*) value in ${body.take(300)}"))
+
+  test("a second load of an unchanged table launches no Spark job") {
+    val dir = tempDir("graft_tables_hit")
+    spark.range(0, 1000).toDF("id").repartition(3)
+      .write.parquet(s"$dir/t.parquet")
+    val (first, firstJobs) = jobsOf(Tables.load(spark, dir, "t"))
+    assert(firstJobs > 0, "a cold load infers the schema in a job")
+    val (second, secondJobs) = jobsOf(Tables.load(spark, dir, "t"))
+    assert(secondJobs == 0)
+    assert(second.count() == 1000L && first.count() == 1000L)
+    // each load carries fresh attribute ids, so two loads still join
+    val joined = first.as("a").join(second.as("b"), $"a.id" === $"b.id")
+    assert(joined.count() == 1000L)
+  }
+
+  test("appended part files and in-place overwrites show in the next broker answer") {
+    val dir = tempDir("graft_tables_fresh")
+    val path = s"$dir/grow.parquet"
+    spark.range(0, 100).toDF("id").coalesce(1).write.parquet(path)
+    val broker = new BrokerServer(spark, dir)
+    val port = broker.start()
+    try {
+      assert(countOf(brokerCount(port, "grow")) == 100L)
+      assert(countOf(brokerCount(port, "grow")) == 100L)
+      spark.range(100, 130).toDF("id").coalesce(1).write.mode("append").parquet(path)
+      assert(countOf(brokerCount(port, "grow")) == 130L)
+      spark.range(0, 7).toDF("id").coalesce(1).write.mode("overwrite").parquet(path)
+      assert(countOf(brokerCount(port, "grow")) == 7L)
+      assert(Tables.load(spark, dir, "grow").as[Long].collect().sorted.toSeq == (0L until 7L))
+    } finally broker.stop()
+  }
+
+  test("a file added inside an existing nested partition shows in the next load") {
+    val dir = tempDir("graft_tables_part")
+    val path = s"$dir/parts.parquet"
+    spark.range(0, 60).toDF("id").selectExpr("id", "id % 2 AS p", "id % 3 AS q")
+      .write.partitionBy("p", "q").parquet(path)
+    assert(Tables.load(spark, dir, "parts").count() == 60L)
+    // a second file in p=0/q=0/: neither the root nor p=0/ changes
+    val leaf = new java.io.File(s"$path/p=0/q=0")
+    val part = leaf.listFiles().filter(_.getName.endsWith(".parquet")).head
+    Files.copy(part.toPath, new java.io.File(leaf, "part-added.parquet").toPath)
+    val added = spark.read.parquet(part.getAbsolutePath).count()
+    assert(Tables.load(spark, dir, "parts").count() == 60L + added)
+  }
+
+  test("a file-sink table answers its committed rows after every batch, .tmp logs aside") {
+    val dir = tempDir("graft_tables_sink")
+    val source = MemoryStream[(Long, Long)](spark)
+    val q = RealtimeIngest.start(source.toDF.toDF("id", "v"), s"$dir/live.parquet",
+      s"$dir/ckp", Trigger.ProcessingTime(0L))
+    try {
+      val log = new java.io.File(s"$dir/live.parquet/_spark_metadata")
+      var committed = 0L
+      (1 to 4).foreach { batch =>
+        val before = committed
+        source.addData((committed until committed + 50L * batch).map(i => (i, i % 7)))
+        q.processAllAvailable()
+        committed += 50L * batch
+        if (batch > 1) {
+          // the commit race: the batch's part files are written but its
+          // log entry is still the sink's hidden `.N.<uuid>.tmp`. A load
+          // then sees the previous commit; once the log entry is renamed
+          // into place, the next load sees the new one although no data
+          // file changed in between. The log directory's own mtime is
+          // pinned, as on a store without directory mtimes, so only the
+          // log's listing can show the commit.
+          val entry = new java.io.File(log, (batch - 1).toString)
+          val inFlight = new java.io.File(log, s".${batch - 1}.${java.util.UUID.randomUUID}.tmp")
+          val logMtime = log.lastModified()
+          assert(entry.renameTo(inFlight) && log.setLastModified(logMtime))
+          assert(Tables.load(spark, dir, "live").count() == before, s"batch $batch in flight")
+          assert(inFlight.renameTo(entry) && log.setLastModified(logMtime))
+        }
+        val df = Tables.load(spark, dir, "live")
+        assert(df.count() == committed, s"after batch $batch")
+        assert(df.agg(org.apache.spark.sql.functions.max("id")).as[Long].head() == committed - 1)
+        // a leftover `.tmp` log write and a data file that no log entry
+        // names: neither becomes visible
+        Files.write(new java.io.File(log, s".${batch + 100}.${java.util.UUID.randomUUID}.tmp")
+          .toPath, "v1\n".getBytes(StandardCharsets.UTF_8))
+        val part = new java.io.File(s"$dir/live.parquet").listFiles()
+          .filter(_.getName.endsWith(".parquet")).head
+        Files.copy(part.toPath, new java.io.File(part.getParentFile,
+          s"part-stray-$batch.parquet").toPath)
+        assert(Tables.load(spark, dir, "live").count() == committed, s"after batch $batch, strays")
+      }
+    } finally q.stop()
+  }
+
+  test("a missing table answers code 200 every time and is served once it exists") {
+    val dir = tempDir("graft_tables_missing")
+    val broker = new BrokerServer(spark, dir)
+    val port = broker.start()
+    try {
+      (1 to 2).foreach { _ =>
+        val body = brokerCount(port, "later")
+        assert(body.contains("\"errorCode\": 200"), body.take(300))
+      }
+      spark.range(0, 11).toDF("id").write.parquet(s"$dir/later.parquet")
+      assert(countOf(brokerCount(port, "later")) == 11L)
+    } finally broker.stop()
+  }
+
+  test("sessions and inference confs never share a relation") {
+    val dir = tempDir("graft_tables_session")
+    spark.range(0, 5).toDF("id").write.parquet(s"$dir/s.parquet")
+    val other = spark.newSession()
+    val mine = relationOf(Tables.load(spark, dir, "s"))
+    val theirs = relationOf(Tables.load(other, dir, "s"))
+    assert(mine.sparkSession eq spark)
+    assert(theirs.sparkSession eq other)
+    assert(theirs ne mine)
+    // alternating sessions on one path rebuild, never cross over
+    assert(relationOf(Tables.load(spark, dir, "s")).sparkSession eq spark)
+    assert(relationOf(Tables.load(other, dir, "s")).sparkSession eq other)
+    // within one session, a schema-inference conf is part of the key
+    val before = relationOf(Tables.load(other, dir, "s"))
+    assert(relationOf(Tables.load(other, dir, "s")) eq before)
+    other.conf.set("spark.sql.parquet.binaryAsString", "true")
+    assert(relationOf(Tables.load(other, dir, "s")) ne before)
+  }
+}
