@@ -74,7 +74,7 @@ final class BrokerServer(spark: SparkSession, tableDir: String, port: Int = 0,
     server.createContext("/debug/routingTable/",
       BrokerServer.textHandler { path =>
         val table = path.stripPrefix("/debug/routingTable/")
-        BrokerServer.routingTableJson(tableDir, table)
+        BrokerServer.routingTableJson(spark, tableDir, table)
       })
     server.createContext("/debug/timeBoundary/",
       BrokerServer.textHandler { path =>
@@ -332,52 +332,58 @@ object BrokerServer {
     }
   }
 
-  /** Routing snapshot (`PinotBrokerDebug.debugRoutingTable` /
-    * `RoutingTable.dumpSnapshot`): which segments answer for the
-    * table. Single-process analog: this broker serves every segment
-    * (parquet part file) of the table's dataset. */
   /** Debug-endpoint table names feed filesystem paths — reject
     * anything that could traverse outside tableDir (`..`, separators,
     * URL-encoded or not) before building the path. */
   private def validTableName(table: String): Boolean =
     table.matches("[A-Za-z0-9_]+")
 
-  def routingTableJson(tableDir: String, table: String): String = {
-    if (!validTableName(table))
-      return exceptionJson(QueryExecutionErrorCode, s"unknown table: $table")
-    val dir = new java.io.File(s"$tableDir/$table.parquet")
-    if (!dir.exists())
-      exceptionJson(QueryExecutionErrorCode, s"unknown table: $table")
-    else {
-      // a table dataset is a directory of part files or one bare file
-      val segs =
-        if (dir.isFile) Seq(dir.getName)
-        else Option(dir.listFiles()).toSeq.flatten
-          .filter(f => f.isFile && f.getName.endsWith(".parquet"))
-          .map(_.getName).sorted
-      s"""{${js(table)}: {"localhost": ${segs.map(js).mkString("[", ",", "]")}}}"""
-    }
+  /** The files a query of `table` reads, as `Tables.load` resolves
+    * them (for a file-sink table, the committed part files only, not
+    * in-flight or aborted ones), or None for an unknown table. */
+  private def servedFiles(spark: SparkSession, tableDir: String,
+      table: String): Option[Seq[String]] = {
+    if (!validTableName(table)) return None
+    val root = new org.apache.hadoop.fs.Path(s"$tableDir/$table.parquet")
+    if (!root.getFileSystem(spark.sessionState.newHadoopConf()).exists(root)) None
+    else Some(Tables.load(spark, tableDir, table).inputFiles.toSeq.sorted)
   }
 
+  /** Routing snapshot (`PinotBrokerDebug.debugRoutingTable` /
+    * `RoutingTable.dumpSnapshot`): which segments answer for the
+    * table. Single-process analog: this broker serves every segment
+    * (parquet part file) a query of the table reads, named relative
+    * to the table's dataset. */
+  def routingTableJson(spark: SparkSession, tableDir: String, table: String): String =
+    servedFiles(spark, tableDir, table) match {
+      case None => exceptionJson(QueryExecutionErrorCode, s"unknown table: $table")
+      case Some(files) =>
+        val root = new org.apache.hadoop.fs.Path(s"$tableDir/$table.parquet")
+        val prefix = root.getFileSystem(spark.sessionState.newHadoopConf())
+          .makeQualified(root).toString + "/"
+        val segs = files.map(f =>
+          if (f.startsWith(prefix)) f.stripPrefix(prefix)
+          else new org.apache.hadoop.fs.Path(f).getName).sorted
+        s"""{${js(table)}: {"localhost": ${segs.map(js).mkString("[", ",", "]")}}}"""
+    }
+
   /** Time boundary (`PinotBrokerDebug.debugTimeBoundaryService` /
-    * `TimeBoundaryService.TimeBoundaryInfo`): the table's max time
-    * value, read from segment FOOTER stats only
-    * ([[graft.sources.Minion.segmentEndTime]] — the same
+    * `TimeBoundaryService.TimeBoundaryInfo`): the max time value of
+    * the files a query of the table reads, from their FOOTER stats
+    * only ([[graft.sources.Minion.filesTimeRange]] — the same
     * metadata-not-rows rule the reference's service follows). */
   def timeBoundaryJson(spark: SparkSession, tableDir: String, table: String,
-      timeColumn: String = "ts"): String = {
-    if (!validTableName(table))
-      return exceptionJson(QueryExecutionErrorCode, s"unknown table: $table")
-    val dir = s"$tableDir/$table.parquet"
-    if (!new java.io.File(dir).exists())
-      exceptionJson(QueryExecutionErrorCode, s"unknown table: $table")
-    else graft.sources.Minion.segmentEndTime(spark, dir, timeColumn) match {
-      case Some(end) =>
-        s"""{"timeColumnName": ${js(timeColumn)}, "timeValue": ${js(end.toString)}}"""
-      case None => exceptionJson(QueryExecutionErrorCode,
-        s"no footer time stats for $table.$timeColumn")
+      timeColumn: String = "ts"): String =
+    servedFiles(spark, tableDir, table) match {
+      case None => exceptionJson(QueryExecutionErrorCode, s"unknown table: $table")
+      case Some(files) =>
+        graft.sources.Minion.filesTimeRange(spark, files, timeColumn) match {
+          case Some((_, end)) =>
+            s"""{"timeColumnName": ${js(timeColumn)}, "timeValue": ${js(end.toString)}}"""
+          case None => exceptionJson(QueryExecutionErrorCode,
+            s"no footer time stats for $table.$timeColumn")
+        }
     }
-  }
 
   /** First value of `name` in a raw query string. */
   def queryParam(rawQuery: String, name: String): Option[String] =

@@ -1,6 +1,11 @@
 package graft.sources
 
+import scala.reflect.ClassTag
+
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.datasources.HadoopFsRelation
 
 /** What the caches in `graft.sources` key on: the file set of a table,
   * as `(path, length, mtime)` per file. Footers and schemas are
@@ -8,9 +13,10 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
   * valid while its fingerprint does; an in-place overwrite that reuses
   * part-file names still changes length or mtime.
   *
-  * Every such cache is an [[Lru]] of at most [[MaxEntries]] entries: a
-  * long-lived session over ever-changing table versions must not
-  * accumulate driver memory.
+  * Values derived per file carry over from one file set of a table to
+  * the next through a [[Carry]]. Every such cache is an [[Lru]] of at
+  * most [[MaxEntries]] entries: a long-lived session over ever-changing
+  * table versions must not accumulate driver memory.
   */
 object FileSets {
 
@@ -45,12 +51,37 @@ object FileSets {
     fingerprint(files ++ dirs) ++ nested.flatMap(d => listTable(fs, d.getPath))
   }
 
+  /** Sorted stamps of the files a relation's scan reads, from its file
+    * index's cached listing (for a file-sink table, the committed
+    * files only). */
+  def scanFiles(rel: HadoopFsRelation): Seq[Stamp] =
+    fingerprint(rel.location.listFiles(Nil, Nil).flatMap(_.files).map(_.fileStatus))
+
+  /** Table key of a relation for a [[Carry]]: its sorted root paths. */
+  def rootKey(rel: HadoopFsRelation): Seq[String] =
+    rel.location.rootPaths.map(_.toString).sorted
+
+  /** `f(path, conf)` for each of `files` (non-empty), in order, as one
+    * Spark job of one task per file, at most 32 tasks. `conf` is the
+    * session's Hadoop conf, not a blank `Configuration`: object-store
+    * credentials and file systems live there. Its broadcast serves this
+    * one job and is destroyed after it, so a long-lived session's
+    * misses do not accumulate driver or executor memory. */
+  def perFile[V: ClassTag](spark: SparkSession, files: Seq[Stamp])(
+      f: (String, Configuration) => V): Seq[V] = {
+    val confBc = spark.sparkContext.broadcast(
+      new org.apache.spark.util.SerializableConfiguration(spark.sessionState.newHadoopConf()))
+    try spark.sparkContext.parallelize(files.map(_.path), math.min(files.size, 32))
+      .map(p => f(p, confBc.value.value)).collect().toSeq
+    finally confBc.destroy()
+  }
+
   /** Entry cap of every file-set keyed cache. */
   val MaxEntries = 256
 
   /** Thread-safe map that evicts its least recently used entry past
-    * [[MaxEntries]]. A value is computed outside the lock, so
-    * concurrent misses on one key may each compute it; the last one
+    * [[MaxEntries]]. Values are computed outside the lock, so
+    * concurrent misses on one key may each compute one; the last put
     * stays. */
   final class Lru[K, V] {
     private val map = new java.util.LinkedHashMap[K, V](16, 0.75f, true) {
@@ -59,10 +90,32 @@ object FileSets {
     }
     def get(k: K): Option[V] = synchronized(Option(map.get(k)))
     def put(k: K, v: V): Unit = synchronized { map.put(k, v); () }
-    def getOrElseUpdate(k: K)(v: => V): V = get(k).getOrElse {
-      val computed = v
-      put(k, computed)
-      computed
+  }
+
+  /** Per-file values derived from immutable files (footer counts,
+    * footer stats), carried over from the last file set seen under one
+    * key, typically a table root: a table that grows by one file pays
+    * for that one file. [[values]] calls `compute` only with the
+    * stamps the key's previous set lacks (an overwrite in place has a
+    * new stamp, so it is recomputed) and then keeps the values of the
+    * current set alone, so deleted files drop out. At most
+    * [[MaxEntries]] keys are kept. */
+  final class Carry[K, V] {
+    private val last = new Lru[K, Map[Stamp, V]]
+
+    /** One value per entry of `files`, in order. `compute` receives a
+      * non-empty sequence and returns one value per stamp, in order. */
+    def values(key: K, files: Seq[Stamp])(compute: Seq[Stamp] => Seq[V]): Seq[V] = {
+      val known = last.get(key).getOrElse(Map.empty[Stamp, V])
+      val fresh = files.filterNot(known.contains)
+      val computed = if (fresh.isEmpty) Map.empty[Stamp, V] else {
+        val vs = compute(fresh)
+        require(vs.size == fresh.size, s"${vs.size} values for ${fresh.size} files")
+        fresh.zip(vs).toMap
+      }
+      val current = files.map(s => s -> known.getOrElse(s, computed(s))).toMap
+      last.put(key, current)
+      files.map(current)
     }
   }
 }

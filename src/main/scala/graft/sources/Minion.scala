@@ -139,24 +139,30 @@ object Minion {
     * segment times as long epoch values in the configured TimeUnit). */
   def segmentTimeRange(spark: SparkSession, segmentDir: String,
       timeCol: String): Option[(Long, Long)] = {
-    import scala.jdk.CollectionConverters._
-    import org.apache.hadoop.fs.Path
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
-    val conf = spark.sessionState.newHadoopConf()
     val root = new java.io.File(segmentDir)
     // a segment is a directory of part files, or one bare parquet file
     val files =
       if (root.isFile && root.getName.endsWith(".parquet")) Seq(root)
       else Option(root.listFiles()).toSeq.flatten
         .filter(f => f.isFile && f.getName.endsWith(".parquet"))
+    filesTimeRange(spark, files.map(_.getAbsolutePath), timeCol)
+  }
+
+  /** [[segmentTimeRange]] over the given files (paths or URIs); None
+    * when there are none. */
+  def filesTimeRange(spark: SparkSession, files: Seq[String],
+      timeCol: String): Option[(Long, Long)] = {
+    import scala.jdk.CollectionConverters._
+    import org.apache.hadoop.fs.Path
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    val conf = spark.sessionState.newHadoopConf()
     if (files.isEmpty) return None
     // per file: None = unknown (missing column/stats — poisons the
     // segment), Some(None) = no rows (contributes nothing),
     // Some(Some((min, max))) = known file interval
     val perFile: Seq[Option[Option[(Long, Long)]]] = files.map { f =>
-      val r = ParquetFileReader.open(
-        HadoopInputFile.fromPath(new Path(f.getAbsolutePath), conf))
+      val r = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(f), conf))
       try {
         val groups = r.getRowGroups.asScala
         def stat(get: org.apache.parquet.column.statistics.Statistics[_] => Any) =

@@ -24,7 +24,7 @@ import org.apache.spark.sql.functions.{col, lit}
   * merely claims a sort order never returns wrong pages.
   *
   * At 100 TB the footer sweep is one distributed metadata job over
-  * ~10⁵ file footers (memoized per immutable file set) and the query
+  * ~10⁵ file footers (carried over per immutable file) and the query
   * then scans 1-2 files instead of every segment — the same
   * read-bound-by-answer-size property the reference gets from its
   * sorted index.
@@ -54,54 +54,43 @@ object SortedLayout {
       case _ => false
     }
 
-  // memoized per (file set, column): repeated pages over the same
-  // segment must not re-open 10^5 footers per query (each entry holds
-  // per-file stats, ~100 B × file count)
-  private val layoutCache =
-    new FileSets.Lru[(Seq[FileSets.Stamp], String), Option[Seq[FileStat]]]
+  // per-file stats carry over per (table root, column): repeated pages
+  // over the same segments must not re-open 10^5 footers per query,
+  // and a page after a commit opens only the new files' footers (each
+  // entry holds ~100 B per file)
+  private val fileStats = new FileSets.Carry[(Seq[String], String), Option[FileStat]]
 
   /** The sorted layout of `df`'s scan for `column`, or None when the
     * frame is not a bare parquet scan, the column's per-file ranges
     * overlap (not a sorted layout), any footer lacks stats, or any
     * file contains nulls in the column (null ordering cannot be
-    * decided from range stats). Result is ASC-ordered by file min. */
+    * decided from range stats). Result is ASC-ordered by file min.
+    * The disjointness check runs over the whole file set every time;
+    * only the footer reads carry over. */
   def layoutFor(df: DataFrame, column: String): Option[Seq[FileStat]] = {
     df.queryExecution.optimizedPlan match {
-      case lr: LogicalRelation => lr.relation match {
-        case fs: HadoopFsRelation if fs.fileFormat.isInstanceOf[ParquetFileFormat] =>
-          try {
-            val statuses = fs.location.listFiles(Nil, Nil).flatMap(_.files)
-            val key = (FileSets.fingerprint(statuses.map(_.fileStatus)), column.toLowerCase)
-            layoutCache.getOrElseUpdate(key) {
-              val spark = df.sparkSession
-              val confBc = spark.sparkContext.broadcast(
-                new org.apache.spark.util.SerializableConfiguration(
-                  spark.sessionState.newHadoopConf()))
-              val files = statuses.map(_.getPath.toString).sorted
-              val stats =
-                try spark.sparkContext
-                  .parallelize(files, math.min(math.max(files.size, 1), 32))
-                  .map(p => fileStat(p, column, confBc.value.value))
-                  .collect().toSeq
-                finally confBc.destroy()
-              if (stats.exists(_.isEmpty)) None
-              else {
-                val flat = stats.flatten.filter(_.rows > 0)
-                val asc = flat.sortBy(s =>
-                  s.minKey.fold(d => (0, d, ""), str => (1, 0.0, str)))
-                // disjoint ranges: each file starts at or after the
-                // previous file's end (boundary ties legal — absorbed
-                // by the subset walk)
-                val disjoint = asc.zip(asc.drop(1)).forall { case (a, b) =>
-                  a.numeric == b.numeric && leq(a.maxKey, b.minKey)
-                }
-                // a single file is "sorted" but prunes nothing
-                if (disjoint && asc.size > 1) Some(asc) else None
-              }
+      case LogicalRelation(fs: HadoopFsRelation, _, _, _, _)
+          if fs.fileFormat.isInstanceOf[ParquetFileFormat] =>
+        try {
+          val files = FileSets.scanFiles(fs)
+          val stats = fileStats.values((FileSets.rootKey(fs), column.toLowerCase), files) {
+            fresh => FileSets.perFile(df.sparkSession, fresh)(fileStat(_, column, _))
+          }
+          if (stats.exists(_.isEmpty)) None
+          else {
+            val flat = stats.flatten.filter(_.rows > 0)
+            val asc = flat.sortBy(s =>
+              s.minKey.fold(d => (0, d, ""), str => (1, 0.0, str)))
+            // disjoint ranges: each file starts at or after the
+            // previous file's end (boundary ties legal — absorbed
+            // by the subset walk)
+            val disjoint = asc.zip(asc.drop(1)).forall { case (a, b) =>
+              a.numeric == b.numeric && leq(a.maxKey, b.minKey)
             }
-          } catch { case scala.util.control.NonFatal(_) => None }
-        case _ => None
-      }
+            // a single file is "sorted" but prunes nothing
+            if (disjoint && asc.size > 1) Some(asc) else None
+          }
+        } catch { case scala.util.control.NonFatal(_) => None }
       case _ => None
     }
   }

@@ -1,6 +1,10 @@
 package graft.sources
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation,
+  PartitioningAwareFileIndex}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 
 /** Table registry over the driver-generated parquet test tables.
   *
@@ -39,10 +43,23 @@ object Tables {
     * The listing is taken BEFORE the relation is built, so a cached
     * relation is never older than its key: a commit that lands
     * between the two only costs one more miss on the next load. A
-    * changed key rebuilds with `spark.read.parquet` and replaces the
-    * path's entry; at most [[FileSets.MaxEntries]] paths stay cached.
-    * A missing path is never cached and raises `spark.read.parquet`'s
-    * own error.
+    * changed key rebuilds the relation and replaces the path's entry;
+    * at most [[FileSets.MaxEntries]] paths stay cached. A missing path
+    * is never cached and raises `spark.read.parquet`'s own error.
+    *
+    * A rebuild reuses the previous entry's data schema
+    * (`spark.read.schema(s).parquet`: a listing, no job) when inference
+    * would read the same bytes again. With `mergeSchema` off Spark
+    * infers from ONE file ([[inferenceFile]]): `_common_metadata`, else
+    * `_metadata`, else the first data file by path, among the files
+    * the relation lists (for a file sink, the committed ones). Reuse
+    * needs the same session and inference confs, `mergeSchema` off, no
+    * partition columns, and that file unchanged in the new relation
+    * (same path, length and mtime). Anything else (a new file that
+    * sorts first, an overwrite of the first file, a partitioned
+    * table, schema merging) rebuilds with `spark.read.parquet`. The
+    * file sink names part files `part-<n>-<uuid>`, so an appended
+    * file rarely sorts first.
     *
     * `events.ts` has appeared in two physical encodings across
     * test-data generations: TIMESTAMP(NANOS) — which Spark 4 only
@@ -78,11 +95,15 @@ object Tables {
   private final case class Snapshot(session: SparkSession,
       confs: Seq[Option[String]], files: Seq[FileSets.Stamp])
 
-  private val relations = new FileSets.Lru[String,
-    (Snapshot, org.apache.spark.sql.sources.BaseRelation)]
+  /** A resolved relation, the key it was resolved under and the stamp
+    * of the file its data schema comes from ([[inferenceFile]]). */
+  private final case class Resolved(key: Snapshot, relation: HadoopFsRelation,
+      inferredFrom: Option[FileSets.Stamp])
+
+  private val relations = new FileSets.Lru[String, Resolved]
 
   private def relation(spark: SparkSession, path: String): DataFrame = {
-    val root = new org.apache.hadoop.fs.Path(path)
+    val root = new Path(path)
     val snapshot =
       try Some(Snapshot(spark, inferenceConfs.map(spark.conf.getOption),
         FileSets.listTable(root.getFileSystem(spark.sessionState.newHadoopConf()), root)))
@@ -90,17 +111,54 @@ object Tables {
     snapshot match {
       case None => spark.read.parquet(path)
       case Some(key) => relations.get(path) match {
-        case Some((cached, rel)) if cached == key => spark.baseRelationToDataFrame(rel)
-        case _ =>
-          val df = spark.read.parquet(path)
-          df.queryExecution.analyzed match {
-            case lr: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-              relations.put(path, (key, lr.relation))
-            case _ =>
+        case Some(cached) if cached.key == key => spark.baseRelationToDataFrame(cached.relation)
+        case previous =>
+          // the previous snapshot's schema, when inference would read
+          // the very same file again; else a full read
+          val reused = previous.filter(canReuseSchema(spark, _, key)).flatMap { cached =>
+            val df = spark.read.schema(cached.relation.dataSchema).parquet(path)
+            val sameFile = fsRelation(df).exists(r =>
+              r.partitionSchema.isEmpty && inferenceFile(r) == cached.inferredFrom)
+            if (sameFile) Some(df) else None
           }
+          val df = reused.getOrElse(spark.read.parquet(path))
+          fsRelation(df).foreach(r => relations.put(path, Resolved(key, r, inferenceFile(r))))
           df
       }
     }
+  }
+
+  private def fsRelation(df: DataFrame): Option[HadoopFsRelation] =
+    df.queryExecution.analyzed match {
+      case LogicalRelation(r: HadoopFsRelation, _, _, _, _) => Some(r)
+      case _ => None
+    }
+
+  /** Whether a changed snapshot may take `cached`'s data schema instead
+    * of inferring it: same session and inference confs, no schema
+    * merging (which reads every file), no partition columns (inferred
+    * from directory names, not from a file), and a known inference
+    * file, which the caller still compares on the new relation. */
+  private def canReuseSchema(spark: SparkSession, cached: Resolved, key: Snapshot): Boolean =
+    (cached.key.session eq key.session) && cached.key.confs == key.confs &&
+      !spark.sessionState.conf.isParquetSchemaMergingEnabled &&
+      cached.relation.partitionSchema.isEmpty && cached.inferredFrom.isDefined
+
+  /** The one file `spark.read.parquet` infers a schema from when
+    * `mergeSchema` is off (Spark's `ParquetUtils.inferSchema`):
+    * `_common_metadata`, else `_metadata`, else the first data file by
+    * path, all among the files the relation's index lists (for a
+    * file-sink table, the committed ones). None for an index of
+    * another kind, whose schema is then never reused. */
+  private def inferenceFile(rel: HadoopFsRelation): Option[FileSets.Stamp] = {
+    val files = rel.location match {
+      case index: PartitioningAwareFileIndex => FileSets.fingerprint(index.allFiles())
+      case _ => Nil
+    }
+    val summaries = Seq("_common_metadata", "_metadata")
+    def named(n: String) = files.find(s => new Path(s.path).getName == n)
+    named(summaries(0)).orElse(named(summaries(1)))
+      .orElse(files.find(s => !summaries.contains(new Path(s.path).getName)))
   }
 
   /** Register every table as a temp view so `spark.sql` and the PQL
@@ -117,74 +175,58 @@ object Tables {
     * segment metadata, zero docs scanned). Footer reads are
     * DISTRIBUTED over executors — at 100 TB a table is 10⁵+ segments
     * and a driver-side loop would serialize on the driver exactly like
-    * a collect. Any transform, filter, or non-parquet source returns
-    * None and the caller falls back to the ordinary scan-based count. */
-  private val footerCountCache = new FileSets.Lru[Seq[FileSets.Stamp], Long]
+    * a collect. Counts carry over per table root and file stamp
+    * ([[FileSets.Carry]]): a repeated COUNT(*) opens no footer, and one
+    * after a commit opens only the new files' footers, as the
+    * reference records a segment's doc count once, at commit. Any
+    * transform, filter, or non-parquet source returns None and the
+    * caller falls back to the ordinary scan-based count. */
+  private val footerCounts = new FileSets.Carry[Seq[String], Long]
 
-  def metadataRowCount(df: DataFrame): Option[Long] = {
-    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-    import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+  def metadataRowCount(df: DataFrame): Option[Long] =
     df.queryExecution.optimizedPlan match {
-      case lr: LogicalRelation => lr.relation match {
-        case fs: HadoopFsRelation if fs.fileFormat.isInstanceOf[ParquetFileFormat] =>
-          try {
-            // ALL files the scan would read — filtering by a ".parquet"
-            // suffix here would silently undercount tables whose part
-            // files carry other names (Hive/Impala writers), a wrong
-            // answer rather than a fallback
-            val statuses = fs.location.listFiles(Nil, Nil).flatMap(_.files)
-            val files = statuses.map(_.getPath.toString).sorted
-            // the FileIndex has the statuses cached: the key is free
-            val cacheKey = FileSets.fingerprint(statuses.map(_.fileStatus))
-            if (files.isEmpty) Some(0L)
-            // memoized per file set — repeated COUNT(*) must not
-            // re-open 10^5 footers per query
-            else Some(footerCountCache.getOrElseUpdate(cacheKey) {
-              val spark = df.sparkSession
-              // the session's hadoop conf, not a blank Configuration —
-              // object-store credentials/filesystems live there
-              val confBc = spark.sparkContext.broadcast(
-                new org.apache.spark.util.SerializableConfiguration(
-                  spark.sessionState.newHadoopConf()))
-              try spark.sparkContext
-                .parallelize(files, math.min(files.size, 32))
-                .map { p =>
-                  import org.apache.hadoop.fs.Path
-                  import org.apache.parquet.hadoop.ParquetFileReader
-                  import org.apache.parquet.hadoop.util.HadoopInputFile
-                  val r = ParquetFileReader.open(HadoopInputFile.fromPath(
-                    new Path(p), confBc.value.value))
-                  try r.getRecordCount finally r.close()
-                }.sum().toLong
-              // the broadcast only serves this one job — destroy it
-              // eagerly; caching the count while leaving the conf
-              // broadcast alive would accumulate driver+executor
-              // memory across a long-lived session's cache misses
-              finally confBc.destroy()
-            })
-          } catch { case scala.util.control.NonFatal(_) => None }
-        case _ => None
-      }
+      case LogicalRelation(fs: HadoopFsRelation, _, _, _, _)
+          if fs.fileFormat.isInstanceOf[ParquetFileFormat] =>
+        try {
+          // ALL files the scan would read — filtering by a ".parquet"
+          // suffix here would silently undercount tables whose part
+          // files carry other names (Hive/Impala writers), a wrong
+          // answer rather than a fallback. The FileIndex has the
+          // statuses cached: the stamps are free.
+          val files = FileSets.scanFiles(fs)
+          Some(footerCounts.values(FileSets.rootKey(fs), files) { fresh =>
+            FileSets.perFile(df.sparkSession, fresh) { (p, conf) =>
+              import org.apache.parquet.hadoop.ParquetFileReader
+              import org.apache.parquet.hadoop.util.HadoopInputFile
+              val r = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(p), conf))
+              try r.getRecordCount finally r.close()
+            }
+          }.sum)
+        } catch { case scala.util.control.NonFatal(_) => None }
       case _ => None
     }
-  }
 
   /** Top-level column names of a segment, from parquet FOOTER metadata
     * only — the `SegmentMetadata.getSchema()` the reference's pruners
     * consult without touching data. Empty when the dir has no parquet
     * files. All files of a segment share one schema (single write),
-    * so the first footer speaks for the segment. */
+    * so the first footer speaks for the segment. The segment is listed
+    * through the session's Hadoop `FileSystem` (plain `listStatus`,
+    * see [[FileSets.listTable]]), so a `file:` URI or any Hadoop path
+    * works. */
   def segmentColumns(spark: SparkSession, segmentDir: String): Set[String] = {
     import scala.jdk.CollectionConverters._
-    import org.apache.hadoop.fs.Path
     import org.apache.parquet.hadoop.ParquetFileReader
     import org.apache.parquet.hadoop.util.HadoopInputFile
     val conf = spark.sessionState.newHadoopConf()
-    Option(new java.io.File(segmentDir).listFiles()).toSeq.flatten
-      .filter(f => f.isFile && f.getName.endsWith(".parquet"))
-      .sortBy(_.getName).headOption.map { f =>
-        val r = ParquetFileReader.open(
-          HadoopInputFile.fromPath(new Path(f.getAbsolutePath), conf))
+    val root = new Path(segmentDir)
+    val fs = root.getFileSystem(conf)
+    val listed =
+      try fs.listStatus(root).toSeq
+      catch { case _: java.io.FileNotFoundException => Nil }
+    listed.filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
+      .sortBy(_.getPath.getName).headOption.map { f =>
+        val r = ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf))
         try r.getFooter.getFileMetaData.getSchema.getFields.asScala
           .map(_.getName).toSet
         finally r.close()

@@ -190,6 +190,38 @@ class BrokerServerSpec extends SparkSpec {
     } finally broker.stop()
   }
 
+  test("routingTable and timeBoundary show the committed files of a file-sink table") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_broker_sink").toFile.getAbsolutePath
+    val source = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long)](spark)
+    val q = graft.streaming.RealtimeIngest.start(source.toDF.toDF("id", "ts"),
+      s"$dir/live.parquet", s"$dir/ckp",
+      org.apache.spark.sql.streaming.Trigger.ProcessingTime(0L))
+    val broker = new BrokerServer(spark, dir)
+    val port = broker.start()
+    try {
+      source.addData((0L until 20L).map(i => (i, 1000L + i)))
+      q.processAllAvailable()
+      // an uncommitted part file: in the directory, in no log entry,
+      // with a later time than any committed row
+      val table = new java.io.File(s"$dir/live.parquet")
+      Seq((99L, 5000L)).toDF("id", "ts").coalesce(1)
+        .write.parquet(s"$dir/stray")
+      val stray = new java.io.File(s"$dir/stray").listFiles()
+        .filter(_.getName.endsWith(".parquet")).head
+      java.nio.file.Files.move(stray.toPath,
+        new java.io.File(table, "part-00000-stray.c000.snappy.parquet").toPath)
+      val committed = table.listFiles().map(_.getName)
+        .filter(n => n.endsWith(".parquet") && !n.contains("stray"))
+      assert(committed.nonEmpty)
+      val routing = http("GET", s"http://127.0.0.1:$port/debug/routingTable/live")
+      assert(!routing.contains("stray"), routing.take(300))
+      committed.foreach(n => assert(routing.contains(s""""$n""""), routing.take(300)))
+      val boundary = http("GET", s"http://127.0.0.1:$port/debug/timeBoundary/live")
+      assert(boundary.contains("\"timeValue\": \"1019\""), boundary.take(300))
+    } finally { broker.stop(); q.stop() }
+  }
+
   test("QpsLimiter: token-bucket refill at qps with burst max(1, qps)") {
     var now = 0L
     val clock = () => now

@@ -30,6 +30,16 @@ class SchemaEvolutionSpec extends SparkSpec {
     assert(Tables.segmentColumns(spark, tmp("missing")) === Set.empty)
   }
 
+  test("segments named by file: URIs are listed and pruned like paths") {
+    val uris = segs.map(d => new java.io.File(d).toURI.toString)
+    assert(uris.forall(_.startsWith("file:")))
+    assert(Tables.segmentColumns(spark, uris.head) === Set("id", "v"))
+    assert(Tables.segmentColumns(spark, uris(1)) === Set("id", "v", "tag"))
+    val (df, pruned) = Tables.loadEvolved(spark, uris, Seq("id", "tag"))
+    assert(pruned === Seq(uris.head))
+    assert(df.get.orderBy($"id").as[(Long, String)].collect().toSeq === Seq((3L, "a"), (4L, "b")))
+  }
+
   test("query on common columns scans every segment") {
     val (df, pruned) = Tables.loadEvolved(spark, segs, Seq("id", "v"))
     assert(pruned === Nil)

@@ -10,32 +10,43 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.Trigger
 
-import graft.pql.BrokerServer
-import graft.sources.Tables
+import graft.pql.{BrokerServer, Pql}
+import graft.sources.{SortedLayout, Tables}
 import graft.streaming.RealtimeIngest
 
 /** `Tables.load`'s snapshot-keyed relation cache: a load of unchanged
   * files reuses the resolved relation (no Spark job), and every change
   * of the file set, the sink log, the inference confs or the session
-  * shows in the next load. */
+  * shows in the next load. A changed file set reuses what is known per
+  * file: the schema while the inference file stands, footer counts
+  * and sorted-layout stats of files already seen. */
 class TablesSpec extends SparkSpec {
   import spark.implicits._
 
   private def tempDir(prefix: String): String =
     Files.createTempDirectory(prefix).toFile.getAbsolutePath
 
-  /** Spark jobs `f` launches on this thread. The listener bus delivers
-    * in order, so once a later marker job has arrived every job of `f`
-    * has been counted. */
+  /** Spark jobs `f` launches on this thread. */
   private def jobsOf[T](f: => T): (T, Int) = {
+    val (out, jobs, _) = jobsAndTasksOf(f)
+    (out, jobs)
+  }
+
+  /** Spark jobs `f` launches on this thread, and their tasks. The
+    * listener bus delivers in order, so once a later marker job has
+    * arrived every job of `f` has been counted. */
+  private def jobsAndTasksOf[T](f: => T): (T, Int, Int) = {
     val group = s"tables-spec-${System.nanoTime()}"
     val marker = group + "-marker"
     val jobs = new AtomicInteger
+    val tasks = new AtomicInteger
     val markerSeen = new java.util.concurrent.CountDownLatch(1)
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))) match {
-          case Some(`group`) => jobs.incrementAndGet(); ()
+          case Some(`group`) =>
+            jobs.incrementAndGet()
+            tasks.addAndGet(e.stageInfos.map(_.numTasks).sum); ()
           case Some(`marker`) => markerSeen.countDown()
           case _ =>
         }
@@ -49,7 +60,7 @@ class TablesSpec extends SparkSpec {
       try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
       assert(markerSeen.await(30, java.util.concurrent.TimeUnit.SECONDS),
         "listener bus did not deliver the marker job")
-      (out, jobs.get)
+      (out, jobs.get, tasks.get)
     } finally sc.removeSparkListener(listener)
   }
 
@@ -197,5 +208,161 @@ class TablesSpec extends SparkSpec {
     assert(relationOf(Tables.load(other, dir, "s")) eq before)
     other.conf.set("spark.sql.parquet.binaryAsString", "true")
     assert(relationOf(Tables.load(other, dir, "s")) ne before)
+  }
+
+  /** Writes `df` as one parquet file named `name` inside `table`,
+    * through a scratch directory, so the table never lists a partial
+    * file; returns its row count. */
+  private def addFile(table: String, name: String, df: org.apache.spark.sql.DataFrame): Long = {
+    val scratch = tempDir("graft_tables_add")
+    df.coalesce(1).write.mode("overwrite").parquet(s"$scratch/f")
+    val part = new java.io.File(s"$scratch/f").listFiles()
+      .filter(_.getName.endsWith(".parquet")).head
+    Files.move(part.toPath, new java.io.File(table, name).toPath,
+      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    // a replaced file's checksum would no longer match
+    new java.io.File(table, s".$name.crc").delete()
+    df.count()
+  }
+
+  /** A table sorted on `id` into 3 range-disjoint files, 0 until 300. */
+  private def sortedTable(dir: String, name: String): String = {
+    val path = s"$dir/$name.parquet"
+    spark.range(0, 300).selectExpr("id", "id * 2 AS v")
+      .repartitionByRange(3, $"id").sortWithinPartitions("id").write.parquet(path)
+    path
+  }
+
+  test("an appended file: schema reused with no job, footer and layout jobs of 1 task") {
+    val dir = tempDir("graft_tables_append")
+    val path = sortedTable(dir, "grow")
+    val first = Tables.load(spark, dir, "grow")
+    assert(Tables.metadataRowCount(first).contains(300L))
+    assert(SortedLayout.layoutFor(first, "id").map(_.size).contains(3))
+    // Spark names part files `part-00000-<uuid>...`: this one sorts last
+    addFile(path, "part-99999-added.parquet", spark.range(300, 400).selectExpr("id", "id * 2 AS v"))
+    val (grown, loadJobs) = jobsOf(Tables.load(spark, dir, "grow"))
+    assert(loadJobs == 0, "the inference file is unchanged: the schema is reused")
+    assert(grown.schema == spark.read.parquet(path).schema)
+    val (count, countJobs, countTasks) = jobsAndTasksOf(Tables.metadataRowCount(grown))
+    assert(count.contains(grown.count()) && count.contains(400L))
+    assert((countJobs, countTasks) == ((1, 1)), "only the new footer is opened")
+    val (layout, layoutJobs, layoutTasks) = jobsAndTasksOf(SortedLayout.layoutFor(grown, "id"))
+    assert(layout.map(_.size).contains(4))
+    assert((layoutJobs, layoutTasks) == ((1, 1)))
+    // nothing new: no job at all
+    assert(jobsOf(Tables.metadataRowCount(Tables.load(spark, dir, "grow")))._2 == 0)
+    assert(jobsOf(SortedLayout.layoutFor(Tables.load(spark, dir, "grow"), "id"))._2 == 0)
+    // the routed page equals the unrouted scan's
+    val page = Pql.run(spark, dir, "SELECT id, v FROM grow ORDER BY id DESC LIMIT 5")
+    val scan = spark.read.parquet(path).orderBy($"id".desc).limit(5)
+    assert(page.as[(Long, Long)].collect().toSeq == scan.as[(Long, Long)].collect().toSeq)
+    assert(page.as[(Long, Long)].collect().head == ((399L, 798L)))
+  }
+
+  test("a new first file with another schema, or an overwritten first file, rebuilds") {
+    val dir = tempDir("graft_tables_first")
+    val path = s"$dir/t.parquet"
+    spark.range(0, 50).toDF("id").coalesce(1).write.parquet(path)
+    Tables.load(spark, dir, "t")
+    // sorts before every `part-00000-...` file: Spark now infers from it
+    addFile(path, "part-0000-first.parquet", spark.range(50, 60).selectExpr("id", "'x' AS extra"))
+    val (df, jobs) = jobsOf(Tables.load(spark, dir, "t"))
+    assert(jobs > 0)
+    assert(df.schema == spark.read.parquet(path).schema)
+    assert(df.columns.toSeq == Seq("id", "extra"))
+    assert(df.where($"extra" === "x").count() == 10L)
+    // an in-place overwrite of that same first file with the first
+    // schema: new stamp, so inference runs again
+    val first = new java.io.File(path, "part-0000-first.parquet")
+    addFile(path, first.getName, spark.range(50, 55).toDF("id"))
+    assert(first.setLastModified(first.lastModified() + 10000L))
+    val (back, backJobs) = jobsOf(Tables.load(spark, dir, "t"))
+    assert(backJobs > 0)
+    assert(back.columns.toSeq == Seq("id") && back.count() == 55L)
+  }
+
+  test("partitioned tables and mergeSchema=true always rebuild") {
+    val dir = tempDir("graft_tables_rebuild")
+    val parts = s"$dir/parts.parquet"
+    spark.range(0, 40).selectExpr("id", "id % 2 AS p").write.partitionBy("p").parquet(parts)
+    Tables.load(spark, dir, "parts")
+    addFile(s"$parts/p=1", "part-99999-added.parquet", spark.range(40, 45).toDF("id"))
+    val (partsDf, partsJobs) = jobsOf(Tables.load(spark, dir, "parts"))
+    assert(partsJobs > 0)
+    assert(partsDf.count() == 45L && partsDf.where($"p" === 1).count() == 25L)
+
+    val merging = spark.newSession()
+    merging.conf.set("spark.sql.parquet.mergeSchema", "true")
+    val flat = s"$dir/flat.parquet"
+    spark.range(0, 30).toDF("id").coalesce(1).write.parquet(flat)
+    Tables.load(merging, dir, "flat")
+    addFile(flat, "part-99999-added.parquet", spark.range(30, 35).selectExpr("id", "id AS more"))
+    val (merged, mergedJobs) = jobsOf(Tables.load(merging, dir, "flat"))
+    assert(mergedJobs > 0)
+    assert(merged.columns.toSeq == Seq("id", "more") && merged.count() == 35L)
+  }
+
+  test("footer counts: an overwrite in place is recounted, a deleted file drops out") {
+    val dir = tempDir("graft_tables_counts")
+    val path = sortedTable(dir, "c")
+    assert(Tables.metadataRowCount(Tables.load(spark, dir, "c")).contains(300L))
+    val files = new java.io.File(path).listFiles()
+      .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
+    val last = files.last
+    val mtime = last.lastModified()
+    addFile(path, last.getName, spark.range(1000, 1007).selectExpr("id", "id * 2 AS v"))
+    assert(last.setLastModified(mtime + 10000L))
+    val reloaded = Tables.load(spark, dir, "c")
+    val (count, jobs, tasks) = jobsAndTasksOf(Tables.metadataRowCount(reloaded))
+    assert(count.contains(reloaded.count()))
+    assert((jobs, tasks) == ((1, 1)))
+    val kept = count.get
+    val gone = spark.read.parquet(files.head.getAbsolutePath).count()
+    assert(files.head.delete())
+    val shrunk = Tables.load(spark, dir, "c")
+    val (after, afterJobs) = jobsOf(Tables.metadataRowCount(shrunk))
+    assert(after.contains(kept - gone) && afterJobs == 0)
+    assert(Tables.load(spark, dir, "c").count() == kept - gone)
+  }
+
+  test("an appended file overlapping a range turns the sorted layout off") {
+    val dir = tempDir("graft_tables_overlap")
+    val path = sortedTable(dir, "o")
+    assert(SortedLayout.layoutFor(Tables.load(spark, dir, "o"), "id").isDefined)
+    addFile(path, "part-99999-overlap.parquet", spark.range(150, 160).selectExpr("id", "id * 2 AS v"))
+    val (layout, jobs, tasks) = jobsAndTasksOf(SortedLayout.layoutFor(Tables.load(spark, dir, "o"), "id"))
+    assert(layout.isEmpty)
+    assert((jobs, tasks) == ((1, 1)))
+    val page = Pql.run(spark, dir, "SELECT id FROM o ORDER BY id LIMIT 3, 2")
+    assert(page.as[Long].collect().toSeq == Seq(3L, 4L))
+  }
+
+  test("a file-sink table counts committed rows only, opening only new footers") {
+    val dir = tempDir("graft_tables_sink_count")
+    val source = MemoryStream[(Long, Long)](spark)
+    val q = RealtimeIngest.start(source.toDF.toDF("id", "v"), s"$dir/live.parquet",
+      s"$dir/ckp", Trigger.ProcessingTime(0L))
+    try {
+      var committed = 0L
+      var seen = Set.empty[String]
+      (1 to 3).foreach { batch =>
+        source.addData((committed until committed + 40L * batch).map(i => (i, i % 5)))
+        q.processAllAvailable()
+        committed += 40L * batch
+        // a part file that no log entry names
+        val part = new java.io.File(s"$dir/live.parquet").listFiles()
+          .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).head
+        Files.copy(part.toPath, new java.io.File(part.getParentFile,
+          s"part-stray-$batch.parquet").toPath)
+        val df = Tables.load(spark, dir, "live")
+        val files = df.inputFiles.toSet
+        assert(!files.exists(_.contains("part-stray")))
+        val (count, _, tasks) = jobsAndTasksOf(Tables.metadataRowCount(df))
+        assert(count.contains(committed), s"after batch $batch")
+        assert(tasks <= (files -- seen).size, s"after batch $batch")
+        seen = files
+      }
+    } finally q.stop()
   }
 }
