@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Benchmark main: times every SparkEntry query at SPARK_GRAFT_SF_DIR
@@ -10,10 +9,11 @@ import org.apache.spark.sql.functions._
   *  - one full WARMUP pass first, so JVM/codegen/classload cost lands
   *    nowhere in the per-query numbers (previously the first Map entry
   *    absorbed ~5 s of it);
-  *  - the action is a checksum `sum(xxhash64(struct(*)))` over every
-  *    output column, NOT `.count()` — count lets Catalyst prune the
-  *    computed projections of non-aggregating queries, so expensive
-  *    columns never executed and selection-class timings were fiction;
+  *  - the action is [[LocalSession.checksum]], an xor of `xxhash64`
+  *    over every output column, NOT `.count()` — count lets Catalyst
+  *    prune the computed projections of non-aggregating queries, so
+  *    expensive columns never executed and selection-class timings
+  *    were fiction;
   *  - failures are LOUD: stack trace to stderr, query listed in
   *    "failed", exit code 1 — never a silently-fast bogus number.
   */
@@ -24,22 +24,10 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
 
-    /** Force full evaluation of every output column: xor-fold a row
-      * hash over all columns (xor cannot overflow under ANSI mode,
-      * unlike sum). */
     def run(name: String): Unit = {
-      val df = SparkEntry.queries(name)(spark, sfDir)
-      df.agg(bit_xor(xxhash64(struct(df.columns.map(col): _*)))).collect()
+      LocalSession.checksum(SparkEntry.queries(name)(spark, sfDir)); ()
     }
 
     // correctness HARNESSES, not throughput queries: each runs
@@ -186,7 +174,7 @@ object Bench {
         def pqlT(name: String): Double = {
           val pql = BenchScale.workload.find(_._1 == name).get._3
           val df = graft.pql.Pql.toDataFrame(graft.pql.Pql.parse(pql), _ => table)
-          t2(df.agg(bit_xor(xxhash64(struct(df.columns.map(col): _*)))).collect())
+          t2(LocalSession.checksum(df))
         }
         val parts = Seq("a1_count", "a4_groupby_1dim", "a6_groupby_3dim",
           "s1_filter_topn", "h1_hll", "h2_pctest").map(n => s""""$n":${r3(pqlT(n))}""")
@@ -200,8 +188,8 @@ object Bench {
               .agg(sum(col("ArrDelay")).as("s"), count(lit(1)).as("c"))
             if (!ok) ""
             else {
-              val rt = t2(routed.agg(bit_xor(xxhash64(struct(routed.columns.map(col): _*)))).collect())
-              val ft = t2(fact.agg(bit_xor(xxhash64(struct(fact.columns.map(col): _*)))).collect())
+              val rt = t2(LocalSession.checksum(routed))
+              val ft = t2(LocalSession.checksum(fact))
               s""","st_routed":${r3(rt)},"st_scan":${r3(ft)}"""
             }
           }

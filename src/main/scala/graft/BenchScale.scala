@@ -78,12 +78,7 @@ object BenchScale {
   private def r3(v: Double): String =
     String.format(java.util.Locale.US, "%.3f", Double.box(v))
 
-  /** Full-result checksum action (never lets Catalyst prune unused
-    * projections — the Bench.scala rule). */
-  private def exec(df: DataFrame): Unit = {
-    df.agg(bit_xor(xxhash64(struct(df.columns.map(col): _*)))).collect()
-    ()
-  }
+  private def exec(df: DataFrame): Unit = { LocalSession.checksum(df); () }
 
   private def time(f: => Unit): Double = {
     val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
@@ -1492,14 +1487,8 @@ object BenchScale {
     val wanted: Set[String] =
       if (args.length > 1) args(1).split(",").map(_.trim).toSet
       else Set("sf1", "sf100", "sf1000", "sf10000")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = LocalSession.cpus
+    val spark = LocalSession()
     // sub-section re-run: "pipeline:sf100,sf1000" re-measures ONLY the
     // pipeline subsection of the named tags and splices it into the
     // existing artifact — a pipeline-operator change should not cost a

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import graft.pql.CorpusHarness
 
 /** Chunked driver for the full golden-corpus sweep: runs corpus lines
@@ -9,22 +8,18 @@ import graft.pql.CorpusHarness
   * resumable, so arbitrarily long sweeps compose from bounded
   * invocations (`CorpusFullSpec` is the single-process variant). */
 object CorpusSweep {
+  /** Thousands of micro-queries over an 8000-row cached fixture:
+    * single-partition shuffles and no AQE — AQE's stage-by-stage
+    * resubmission and multi-partition exchanges drown the scheduler at
+    * this job rate (measured: 12-partition+AQE ran ~100× slower). */
+  val MicroQueryConfs: Seq[(String, String)] = Seq(
+    "spark.sql.shuffle.partitions" -> "1",
+    "spark.sql.adaptive.enabled" -> "false")
+
   def main(args: Array[String]): Unit = {
     val Array(startS, endS, outFile) = args.take(3)
     val (start, end) = (startS.toInt, endS.toInt)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // thousands of micro-queries over an 8000-row cached fixture:
-      // single-partition shuffles and no AQE — AQE's stage-by-stage
-      // resubmission and multi-partition exchanges drown the scheduler
-      // at this job rate (measured: 12-partition+AQE ran ~100× slower)
-      .config("spark.sql.shuffle.partitions", "1")
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(MicroQueryConfs: _*)
     val fx = CorpusHarness.fixture(spark)
     // GRAFT_CORPUS_HYBRID=1: answer the PQL side from the stitched
     // offline∪realtime hybrid view (HybridClusterIntegrationTest mode)
@@ -59,7 +54,7 @@ object CorpusSweep {
     try {
       lines.grouped(500).foreach { chunk =>
         val os = CorpusHarness.compareAll(spark, fx, chunk,
-          parallelism = cpus.toInt, pqlTable = pqlTable)
+          parallelism = LocalSession.cpus, pqlTable = pqlTable)
         os.foreach(o => out.println(
           s"${o.id}\t${o.matched}\t${o.mode}\t${o.reason.replace('\t', ' ').replace('\n', ' ')}"))
         out.flush()

@@ -1,36 +1,104 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import java.util.concurrent.atomic.AtomicLong
 
-/** Plan/latency probe: `runMain graft.Explain <query> <sfDir> [runs]`
-  * prints the formatted plan, then (for runs > 0) executes with the
-  * bench checksum action and prints per-run wall times — the loop for
-  * auditing one query's plan shape and latency without a full Bench
-  * pass. `SPARK_GRAFT_AQE=false` disables AQE for A/B runs. */
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.execution.FormattedMode
+
+/** Plan and latency probe for `SparkEntry` rows, all in one JVM:
+  *
+  *   runMain graft.Explain <sfDir> <reps> [plans:<outDir>] q1 [q2 ...]
+  *
+  * For each query: one warmup execution (codegen, class loading and
+  * session-cached fixture builds land here), then its final adaptive
+  * plan (`isFinalPlan=true`, reused exchanges and AQE shuffle reads
+  * visible) to stdout, or to `<outDir>/<q>.txt` with `plans:`. Then
+  * `reps` timed executions of the [[LocalSession.checksum]] action per
+  * query, each after a `System.gc()` settle, run round-robin across
+  * the named queries, so two rows compare as interleaved paired reps.
+  * Prints min / p50 / max and Spark jobs per execution per query: the
+  * eager operators (rankSelect passes, connected components) run jobs
+  * their output frame's plan never shows, so the job count is the
+  * evidence of their pass structure. */
 object Explain {
   def main(args: Array[String]): Unit = {
-    val name = args(0)
-    val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
-    val runs = if (args.length > 2) args(2).toInt else 2
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val aqe = sys.env.getOrElse("SPARK_GRAFT_AQE", "true")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", aqe)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val fn = SparkEntry.queries(name)
-    fn(spark, sfDir).explain("formatted")
-    import org.apache.spark.sql.functions.{bit_xor, struct, xxhash64}
-    (1 to runs).foreach { i =>
-      val t0 = System.nanoTime()
-      val df = fn(spark, sfDir)
-      df.agg(bit_xor(xxhash64(struct(df.columns.map(df(_)): _*)))).collect()
-      println(f"[explain] $name run $i: ${(System.nanoTime() - t0) / 1e9}%.2f s (aqe=$aqe)")
+    require(args.length >= 3,
+      "usage: graft.Explain <sfDir> <reps> [plans:<outDir>] q1 [q2 ...]")
+    val sfDir = args(0)
+    val reps = args(1).toInt
+    require(reps > 0, s"reps must be positive, got $reps")
+    val (planDir, names) = args.drop(2).toSeq.partition(_.startsWith("plans:"))
+    val spark = LocalSession()
+
+    val jobCount = new AtomicLong()
+    spark.sparkContext.addSparkListener(new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = {
+        jobCount.incrementAndGet(); ()
+      }
+    })
+    // listener delivery is async: poll until the count is stable for
+    // two consecutive intervals (a fixed sleep under-counts on a loaded
+    // box with long event queues), at most 5 s so a busy bus never
+    // hangs the probe
+    def settledJobs(): Long = {
+      var prev = -1L
+      var stable = 0
+      var waited = 0
+      while (stable < 2 && waited < 5000) {
+        Thread.sleep(100); waited += 100
+        val c = jobCount.get()
+        if (c == prev) stable += 1 else { stable = 0; prev = c }
+      }
+      jobCount.get()
+    }
+    def exec(n: String): Unit = {
+      LocalSession.checksum(SparkEntry.queries(n)(spark, sfDir)); ()
+    }
+    def failed(n: String, e: Throwable): Unit = {
+      println(s"[explain] $n FAILED: ${e.getMessage}")
+      e.printStackTrace()
+    }
+
+    val live = names.filter { n =>
+      try {
+        exec(n)
+        val df = SparkEntry.queries(n)(spark, sfDir)
+        df.queryExecution.toRdd.foreachPartition((_: Iterator[_]) => ())
+        val plan = df.queryExecution.explainString(FormattedMode)
+        planDir.headOption match {
+          case Some(p) =>
+            val out = new java.io.File(p.stripPrefix("plans:"))
+            out.mkdirs()
+            java.nio.file.Files.writeString(new java.io.File(out, s"$n.txt").toPath, plan)
+          case None => println(s"[explain] $n final plan:\n$plan")
+        }
+        true
+      } catch { case e: Throwable => failed(n, e); false }
+    }
+
+    val times = live.map(_ -> scala.collection.mutable.ArrayBuffer[Double]()).toMap
+    val jobs = scala.collection.mutable.Map[String, Long]().withDefaultValue(0L)
+    var dropped = Set.empty[String]
+    var seen = settledJobs()
+    (1 to reps).foreach { _ =>
+      live.filterNot(dropped).foreach { n =>
+        try {
+          System.gc()
+          val t0 = System.nanoTime()
+          exec(n)
+          times(n) += (System.nanoTime() - t0) / 1e9
+        } catch { case e: Throwable => failed(n, e); dropped += n }
+        val now = settledJobs()
+        jobs(n) += now - seen
+        seen = now
+      }
+    }
+    live.filterNot(dropped).foreach { n =>
+      val ts = times(n).toSeq
+      val sorted = ts.sorted
+      println(f"[explain] $n%-32s min=${sorted.head}%.3f p50=${sorted(ts.size / 2)}%.3f " +
+        f"max=${sorted.last}%.3f jobs=${jobs(n).toDouble / ts.size}%.1f " +
+        f"reps=${ts.map(x => f"$x%.3f").mkString(",")}")
     }
     spark.stop()
   }

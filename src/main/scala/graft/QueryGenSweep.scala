@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import graft.pql.{CorpusHarness, QueryGen}
 
 /** Multi-seed sweep driver for the generated-query gate: runs
@@ -15,16 +14,7 @@ object QueryGenSweep {
     val seedStart = if (args.nonEmpty) args(0).toLong else 1L
     val numSeeds = if (args.length > 1) args(1).toInt else 10
     val linesPerSeed = if (args.length > 2) args(2).toInt else 500
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // micro-query regime: see CorpusSweep's measured rationale
-      .config("spark.sql.shuffle.partitions", "1")
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(CorpusSweep.MicroQueryConfs: _*)
     val fx = CorpusHarness.fixture(spark)
     // GRAFT_QG_HYBRID=1 / GRAFT_QG_STARTREE=1: answer the PQL side
     // from the stitched hybrid view / the star-tree-routed fact

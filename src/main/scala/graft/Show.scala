@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Print a query's rows: `runMain graft.Show <query> <sfDir> [n]` —
   * the quickest way to eyeball a SparkEntry result during development
   * (Explain shows plans/latency; this shows values). */
@@ -10,15 +8,7 @@ object Show {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
     val n = if (args.length > 2) args(2).toInt else 50
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
     SparkEntry.queries(name)(spark, sfDir).show(n, truncate = false)
     spark.stop()
   }

@@ -1,31 +1,16 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // SPARK_GRAFT_MASTER=local-cluster[2,8,4096] runs the whole dump
-    // across REAL executor JVM boundaries — the deployment proof that
-    // dict decode arrays, star-tree routing, sorted footer sweeps, and
-    // broadcast paths serialize correctly off-driver (local[n] shares
-    // one JVM and cannot catch a serialization bug). Requires the
-    // application classes on the executor classpath: SPARK_GRAFT_JARS
-    // points at the packaged library jar.
-    val builder = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.ts is parquet TIMESTAMP(NANOS); Spark 4 only reads it as
-      // an epoch-nanos long (graft.sources.Tables.load converts back).
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val spark = sys.env.get("SPARK_GRAFT_JARS")
-      .map(j => builder.config("spark.jars", j)).getOrElse(builder)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // SPARK_GRAFT_MASTER=local-cluster[2,8,4096] (with SPARK_GRAFT_JARS
+    // naming the packaged jar) runs the whole dump across REAL executor
+    // JVM boundaries — the deployment proof that dict decode arrays,
+    // star-tree routing, sorted footer sweeps, and broadcast paths
+    // serialize correctly off-driver (see LocalSession)
+    val spark = LocalSession()
     new java.io.File(outDir).mkdirs()
     // normalized (no trailing slash) — keeps "${outAbs}_aux" a SIBLING
     // of outDir even if the caller passed "out/"

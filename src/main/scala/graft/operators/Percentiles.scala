@@ -184,9 +184,9 @@ object Percentiles {
     * cells)). 4096/octave is the paired-probe winner: a shallower
     * 64/octave pass left a uniform 31-octave value domain with ~780K
     * rows in each top-octave cell at 100M rows, so the loop still ran
-    * an equal-width pass and the fusion saved nothing (RankSelectProbe,
-    * interleaved A/B); at 4096/octave the bracket lands under the
-    * narrowing cap and the whole query is two scans. The small-input
+    * an equal-width pass and the fusion saved nothing (interleaved A/B
+    * reps, OPTIMIZATION_r12.md §7); at 4096/octave the bracket lands
+    * under the narrowing cap and the whole query is two scans. The small-input
     * cost (the fused shuffle approaches the data size when task rows <
     * occupied cells) is bounded by one distinct-shaped KB-scale
     * shuffle. */
@@ -203,12 +203,6 @@ object Percentiles {
     * pass. */
   private final val FusedGlobalCellBound = (1 << 18) + 1
   private final val FusedKeyedCellBound = (1 << 19) + 1
-
-  /** A/B hook for scale probes ONLY: forces the classic dedicated
-    * stats-pass flow (the fused pass's fallback), so the fused-scan
-    * win can be measured with interleaved reps in one JVM. Never set
-    * on query paths. */
-  @volatile private[graft] var forceStatsPass: Boolean = false
 
   /** GLOBAL exact percentiles by iterative rank-narrowing selection —
     * the NEAR-UNIQUE-column answer where [[histogramAggs]]'s distinct
@@ -268,7 +262,7 @@ object Percentiles {
   /** Past [[SelectMaxGroups]] the histogram answers UNCONDITIONALLY —
     * including on near-unique columns where its shuffle state is the
     * data itself. That regime was probed at 100M rows × 100 groups
-    * (GroupedPctProbe `batched`, r10): the chunked-narrowing
+    * (round 10, recorded in SURVEY.md): the chunked-narrowing
     * alternative (⌈G/64⌉ batches × ~4-5 full counting scans each)
     * costs 215 s where the "degenerate" histogram answers in 21.6 s,
     * values identical — the histogram's worst case is ONE shuffle
@@ -378,10 +372,8 @@ object Percentiles {
     // take ladder ever does.
     val fusedBound =
       if (keyCols.isEmpty) FusedGlobalCellBound else FusedKeyedCellBound
-    val fusedRows =
-      if (forceStatsPass) Array.empty[org.apache.spark.sql.Row]
-      else fusedAgg.head(fusedBound)
-    val fusedOk = !forceStatsPass && fusedRows.length < fusedBound
+    val fusedRows = fusedAgg.head(fusedBound)
+    val fusedOk = fusedRows.length < fusedBound
 
     final case class CellRow(cell: Long, c: Long, mn: Double, mx: Double)
     final case class GStat(keyVals: IndexedSeq[Any], n: Long, nNaN: Long,

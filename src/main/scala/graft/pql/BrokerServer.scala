@@ -196,16 +196,7 @@ object BrokerMain {
   def main(args: Array[String]): Unit = {
     val tableDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
     val port = if (args.length > 1) args(1).toInt else 8099
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSession()
     val broker = new BrokerServer(spark, tableDir, port)
     val bound = broker.start()
     println(s"[broker] listening on http://127.0.0.1:$bound/query (tables: $tableDir)")

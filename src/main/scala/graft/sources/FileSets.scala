@@ -51,6 +51,20 @@ object FileSets {
     fingerprint(files ++ dirs) ++ nested.flatMap(d => listTable(fs, d.getPath))
   }
 
+  /** The parquet files of a segment (a directory of part files, or one
+    * bare `.parquet` file), sorted by name, from one plain `listStatus`
+    * (see [[listTable]]) through the Hadoop `FileSystem` of `conf`, so a
+    * `file:` URI or any Hadoop path works. Empty when it does not
+    * exist. */
+  def segmentFiles(conf: Configuration, segment: String): Seq[FileStatus] = {
+    val root = new Path(segment)
+    val listed =
+      try root.getFileSystem(conf).listStatus(root).toSeq
+      catch { case _: java.io.FileNotFoundException => Nil }
+    listed.filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
+      .sortBy(_.getPath.getName)
+  }
+
   /** Sorted stamps of the files a relation's scan reads, from its file
     * index's cached listing (for a file-sink table, the committed
     * files only). */

@@ -136,16 +136,12 @@ object Minion {
     * chunk lacks stats.
     *
     * Integral time columns only (epoch values — the reference stores
-    * segment times as long epoch values in the configured TimeUnit). */
+    * segment times as long epoch values in the configured TimeUnit).
+    * The segment is listed by [[FileSets.segmentFiles]]. */
   def segmentTimeRange(spark: SparkSession, segmentDir: String,
       timeCol: String): Option[(Long, Long)] = {
-    val root = new java.io.File(segmentDir)
-    // a segment is a directory of part files, or one bare parquet file
-    val files =
-      if (root.isFile && root.getName.endsWith(".parquet")) Seq(root)
-      else Option(root.listFiles()).toSeq.flatten
-        .filter(f => f.isFile && f.getName.endsWith(".parquet"))
-    filesTimeRange(spark, files.map(_.getAbsolutePath), timeCol)
+    val files = FileSets.segmentFiles(spark.sessionState.newHadoopConf(), segmentDir)
+    filesTimeRange(spark, files.map(_.getPath.toString), timeCol)
   }
 
   /** [[segmentTimeRange]] over the given files (paths or URIs); None
@@ -199,18 +195,11 @@ object Minion {
   /** Footer-metadata row count across a segment's files — the
     * reference's `SegmentZKMetadata.getTotalRawDocs`, never a scan. */
   def segmentRowCount(spark: SparkSession, segmentDir: String): Long = {
-    import org.apache.hadoop.fs.Path
     import org.apache.parquet.hadoop.ParquetFileReader
     import org.apache.parquet.hadoop.util.HadoopInputFile
     val conf = spark.sessionState.newHadoopConf()
-    val root = new java.io.File(segmentDir)
-    val files =
-      if (root.isFile && root.getName.endsWith(".parquet")) Seq(root)
-      else Option(root.listFiles()).toSeq.flatten
-        .filter(f => f.isFile && f.getName.endsWith(".parquet"))
-    files.map { f =>
-      val r = ParquetFileReader.open(
-        HadoopInputFile.fromPath(new Path(f.getAbsolutePath), conf))
+    FileSets.segmentFiles(conf, segmentDir).map { f =>
+      val r = ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf))
       try r.getRecordCount finally r.close()
     }.sum
   }
@@ -304,11 +293,8 @@ object Minion {
           nowMs - endTimeMs > retentionMs
       }
     }.map { dir =>
-      def delete(f: java.io.File): Unit = {
-        Option(f.listFiles()).toSeq.flatten.foreach(delete)
-        f.delete(); ()
-      }
-      delete(new java.io.File(dir))
+      val p = new org.apache.hadoop.fs.Path(dir)
+      p.getFileSystem(spark.sessionState.newHadoopConf()).delete(p, true)
       dir
     }
   }

@@ -210,22 +210,15 @@ object Tables {
     * only — the `SegmentMetadata.getSchema()` the reference's pruners
     * consult without touching data. Empty when the dir has no parquet
     * files. All files of a segment share one schema (single write),
-    * so the first footer speaks for the segment. The segment is listed
-    * through the session's Hadoop `FileSystem` (plain `listStatus`,
-    * see [[FileSets.listTable]]), so a `file:` URI or any Hadoop path
-    * works. */
+    * so the first footer speaks for the segment
+    * ([[FileSets.segmentFiles]]: a `file:` URI or any Hadoop path
+    * works). */
   def segmentColumns(spark: SparkSession, segmentDir: String): Set[String] = {
     import scala.jdk.CollectionConverters._
     import org.apache.parquet.hadoop.ParquetFileReader
     import org.apache.parquet.hadoop.util.HadoopInputFile
     val conf = spark.sessionState.newHadoopConf()
-    val root = new Path(segmentDir)
-    val fs = root.getFileSystem(conf)
-    val listed =
-      try fs.listStatus(root).toSeq
-      catch { case _: java.io.FileNotFoundException => Nil }
-    listed.filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-      .sortBy(_.getPath.getName).headOption.map { f =>
+    FileSets.segmentFiles(conf, segmentDir).headOption.map { f =>
         val r = ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf))
         try r.getFooter.getFileMetaData.getSchema.getFields.asScala
           .map(_.getName).toSet

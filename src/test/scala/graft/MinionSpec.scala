@@ -146,6 +146,27 @@ class MinionSpec extends SparkSpec {
     assert(Minion.segmentTimeRange(spark, tmp("tr0"), "nope") === None)
   }
 
+  test("a file: URI segment reads, checks and expires like its plain path") {
+    import java.util.concurrent.TimeUnit
+    val day = 86400000L
+    val now = java.time.Instant.parse("2020-06-15T00:00:00Z").toEpochMilli
+    val path = tmp("uri_seg")
+    Seq((1L, now - 40 * day), (2L, now - 35 * day), (3L, now - 38 * day)).toDF("id", "ts")
+      .repartition(2).write.mode("overwrite").parquet(path)
+    val uri = new java.io.File(path).toURI.toString
+    assert(uri.startsWith("file:"))
+    assert(Minion.segmentTimeRange(spark, uri, "ts") === Some((now - 40 * day, now - 35 * day)))
+    assert(Minion.segmentTimeRange(spark, uri, "ts") === Minion.segmentTimeRange(spark, path, "ts"))
+    assert(Minion.segmentRowCount(spark, uri) === 3L)
+    assert(Minion.segmentRowCount(spark, path) === 3L)
+    val r = Minion.checkSegmentIntervals(spark, Seq(uri), "ts", TimeUnit.MILLISECONDS)
+    assert(r.totalDocs === 3L)
+    assert(r.segmentsWithInvalidInterval.isEmpty)
+    assert(Minion.enforceRetention(spark, Seq(uri), "ts", TimeUnit.MILLISECONDS,
+      retentionMs = 30 * day, nowMs = now) === Seq(uri))
+    assert(!new java.io.File(path).exists())
+  }
+
   test("checkSegmentIntervals: missing-segment math, totals, invalid reporting") {
     import java.util.concurrent.TimeUnit
     val day = 86400000L

@@ -237,6 +237,37 @@ class PercentilesSpec extends SparkSpec {
     assertSelectParity(df, "v")
   }
 
+  test("rankSelect: more fused cells than the collect bound retreat to the stats pass") {
+    // bits 40+ of i << 40 differ row to row, so every value sits in its
+    // own 24-bit radix cell (sign, exponent, 12 mantissa bits): 270,000
+    // cells trip the global fused bound of 2^18 + 1, the fused collect
+    // is truncated, and the dedicated stats pass plus the narrowing
+    // loop answer. Positive doubles sort as their bit patterns, so the
+    // data is already in value order.
+    val data = (0L until 270000L).map(i => java.lang.Double.longBitsToDouble(i << 40))
+    val df = data.toDF("v")
+    assert(df.select(graft.functions.GraftFunctions.radixCell(col("v"), 24))
+      .distinct().count() > (1L << 18) + 1)
+    val got = Percentiles.rankSelect(df, "v", rsSpecs).head()
+    val interp = rsSpecs.filterNot(_.nearestRank)
+    val want = df.agg(expr(
+      s"percentile(v, array(${interp.map(_.fraction).mkString(",")}))")).head().getSeq[Double](0)
+    rsSpecs.zipWithIndex.foreach { case (s, i) =>
+      val a = got.getDouble(i)
+      if (s.nearestRank) {
+        // the data value at 1-indexed rank max(ceil(f * n), 1)
+        val b = data((math.max(math.ceil(s.fraction * data.size).toLong, 1L) - 1).toInt)
+        assert(a == b, s"${s.name}: $a != $b")
+      } else {
+        // 1-ULP slack: percentile computes lo*(1-w)+hi*w, rankSelect
+        // lo+w*(hi-lo) — equal reals, not always equal floats
+        val b = want(interp.indexOf(s))
+        assert(a == b || math.abs(a - b) <= math.ulp(math.max(math.abs(a), math.abs(b))),
+          s"${s.name}: $a != $b")
+      }
+    }
+  }
+
   private def assertKeyedParity(df: org.apache.spark.sql.DataFrame,
       keys: Seq[String], valueCol: String,
       cap: Long = 2L << 20, buckets: Int = 8192): Unit = {
@@ -307,8 +338,8 @@ class PercentilesSpec extends SparkSpec {
       "histogram, values pinned against an INDEPENDENT oracle") {
     // 100 groups x near-unique doubles: the shape the (reverted) r10
     // chunked-narrowing branch existed for — probed 10x SLOWER than
-    // the histogram it bypassed (215 s vs 21.6 s at 100M,
-    // GroupedPctProbe), so >64 groups answer from histogramAggs
+    // the histogram it bypassed (215 s vs 21.6 s at 100M, recorded
+    // in SURVEY.md, round 10), so >64 groups answer from histogramAggs
     // unconditionally. Since the route IS histogramAggs, comparing
     // against histogramAggs would be tautological; the oracle here is
     // Spark's own exact `percentile` (interpolated specs) and a

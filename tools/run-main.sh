@@ -12,7 +12,10 @@ for p in java.base/java.lang java.base/java.lang.invoke java.base/java.lang.refl
          java.base/sun.util.calendar; do
   ADD_OPENS="$ADD_OPENS --add-opens $p=ALL-UNNAMED"
 done
+# build.sbt's default heap: min(24g, physical RAM / 2), in MiB;
+# SPARK_DRIVER_MEM overrides it
+HEAP_MB=$(awk '/^MemTotal:/ {m = int($2 / 2048); print (m > 24576 ? 24576 : m)}' /proc/meminfo)
 exec java $ADD_OPENS \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-  -Xmx"${SPARK_DRIVER_MEM:-8g}" \
+  -Xmx"${SPARK_DRIVER_MEM:-${HEAP_MB}m}" \
   -cp "target/scala-2.13/classes:/opt/spark/jars/*" "$@"
