@@ -41,38 +41,40 @@ object CorpusHarness {
 
   private val MaxRowsToCompare = 10000
 
-  /** Synthesized corpus fixture: the MV table (for PQL), its H2-style
-    * flat twin (for hsqls, registered as temp view `mytable`), and the
-    * parsed corpus. */
-  final case class Fixture(lines: Vector[OnTimeCorpus.Line], mv: DataFrame, flat: DataFrame)
+  /** Synthesized OnTime fixture: the MV table (for PQL) and its
+    * H2-style flat twin (for hsqls, registered as temp view `mytable`).
+    * Corpus lines are not part of it: replay loads them through
+    * [[OnTimeCorpus.corpus]] ([[corpusLines]]). */
+  final case class Fixture(mv: DataFrame, flat: DataFrame)
 
   @volatile private var cached: (SparkSession, Int, Fixture) = null
 
-  /** Build (or reuse) the fixture: parse the corpus, mine literal
-    * pools, synthesize `numRows` deterministic rows, cache both views.
-    * Keyed on (session, numRows) so Verify and tests share one build. */
+  /** Build (or reuse) the fixture: synthesize `numRows` deterministic
+    * rows of the in-code schema ([[OnTimeCorpus.Schema]]) from
+    * [[OnTimeCorpus.fixturePools]] and cache both views. Needs no file:
+    * the corpus, where present, only adds its mined literals to the
+    * pools. Keyed on (session, numRows) so Verify and tests share one
+    * build. */
   def fixture(spark: SparkSession, numRows: Int = 8000): Fixture = {
     val c = cached
     if (c != null && (c._1 eq spark) && c._2 == numRows) return c._3
     synchronized {
       val c2 = cached
       if (c2 != null && (c2._1 eq spark) && c2._2 == numRows) return c2._3
-      val lines = OnTimeCorpus.loadCorpus()
-      val schema = PinotSchema.load(spark, OnTimeCorpus.SchemaPath)
-      val pools = OnTimeCorpus.minePools(lines)
       // round-trip the synthesized frame through parquet before
-      // caching: the synthesis plan embeds the mined literal pools
-      // (~1.7 MB of task binary), and every micro-query task would
-      // otherwise ship them — with thousands of harness statements
-      // that serialization dominated wall time ("task of very large
-      // size" warnings). Re-read, each plan is a plain 4-file scan.
-      OnTimeCorpus.synthesize(spark, schema, pools, numRows)
+      // caching: the synthesis plan embeds the literal pools (~1.7 MB
+      // of task binary with the corpus-mined ones), and every
+      // micro-query task would otherwise ship them — with thousands of
+      // harness statements that serialization dominated wall time
+      // ("task of very large size" warnings). Re-read, each plan is a
+      // plain 4-file scan.
+      OnTimeCorpus.synthesize(spark, OnTimeCorpus.Schema, OnTimeCorpus.fixturePools(), numRows)
         .write.mode("overwrite").parquet(segDir(numRows))
       val mv = spark.read.parquet(segDir(numRows)).cache()
       val flat = OnTimeCorpus.flatten(mv).cache()
       flat.createOrReplaceTempView("mytable")
       flat.count() // materialize both caches once
-      val f = Fixture(lines, mv, flat)
+      val f = Fixture(mv, flat)
       cached = (spark, numRows, f)
       f
     }
@@ -197,9 +199,10 @@ object CorpusHarness {
         .map(_.name).toSet)
   }
 
-  private def minedNeeds(fx: Fixture): Seq[(Int, (Set[String], Set[String]))] = {
+  private def minedNeeds(fx: Fixture,
+      lines: Seq[OnTimeCorpus.Line]): Seq[(Int, (Set[String], Set[String]))] = {
     val (scalarCols, numericCols) = colSets(fx)
-    fx.lines.flatMap { l =>
+    lines.flatMap { l =>
       (try Some(Pql.parse(l.pql))
       catch { case _: IllegalArgumentException => None })
         .flatMap(routableNeed(_, scalarCols, numericCols))
@@ -207,18 +210,27 @@ object CorpusHarness {
     }
   }
 
-  /** Mine star-tree configs for the corpus workload: greedy set cover —
-    * each round grows a dimension set (preferring the column that
-    * completes the most one-dim-short lines, then the most-demanded
-    * column), takes every still-uncovered line it can answer, and
-    * declares the union of their aggregation columns as the tree's
-    * metrics. Deterministic: ties break on column name, the corpus and
-    * schema are fixed inputs. The corpus draws columns uniformly from
-    * an ~80-column schema, so no small tree family covers everything —
-    * the point is a sizable, *predictable* routed subset whose answers
-    * must be bit-identical to the scan plans. */
+  /** The workload star-trees are mined for: the generated mode-A pool
+    * that `q_querygen_duck` draws from (its first lines are the
+    * `q_querygen_*` samples), plus every corpus line where the corpus
+    * file exists. */
+  private def miningWorkload(): Seq[OnTimeCorpus.Line] =
+    QueryGen.lines(graft.queries.CorpusQueries.GenPoolSize) ++
+      (if (OnTimeCorpus.corpusPresent) OnTimeCorpus.corpus else Nil)
+
+  /** Mine star-tree configs for the harness workload
+    * ([[miningWorkload]]): greedy set cover — each round grows a
+    * dimension set (preferring the column that completes the most
+    * one-dim-short lines, then the most-demanded column), takes every
+    * still-uncovered line it can answer, and declares the union of
+    * their aggregation columns as the tree's metrics. Deterministic:
+    * ties break on column name, the workload and schema are fixed
+    * inputs. The generator and the corpus both draw columns uniformly
+    * from an ~80-column schema, so no small tree family covers
+    * everything — the point is a sizable, *predictable* routed subset
+    * whose answers must be bit-identical to the scan plans. */
   def starTreeSpecs(fx: Fixture, maxTrees: Int = 6, maxDims: Int = 8): Seq[TreeSpec] = {
-    var remaining = minedNeeds(fx).map(_._2)
+    var remaining = minedNeeds(fx, miningWorkload()).map(_._2)
     val out = Seq.newBuilder[TreeSpec]
     var t = 0
     while (t < maxTrees && remaining.nonEmpty) {
@@ -255,10 +267,11 @@ object CorpusHarness {
     out.result()
   }
 
-  /** Line ids the mining model predicts WILL route given the built
-    * trees — equated with actual plan shape in CorpusStarTreeSpec. */
+  /** Corpus line ids the mining model predicts WILL route given the
+    * built trees — equated with actual plan shape in
+    * CorpusStarTreeSpec. Reads the corpus file. */
   def predictedRoutedIds(fx: Fixture, specs: Seq[TreeSpec]): Set[Int] =
-    minedNeeds(fx).collect {
+    minedNeeds(fx, OnTimeCorpus.corpus).collect {
       case (id, need) if specs.exists(_.covers(need)) => id
     }.toSet
 
@@ -702,10 +715,14 @@ object CorpusHarness {
     * ordered selections from the encoded copy. */
   def runLines(spark: SparkSession, ids: Seq[Int], numRows: Int = 8000,
       hybrid: Boolean = false, starTree: Boolean = false,
-      dict: Boolean = false): DataFrame = {
-    val fx = fixture(spark, numRows)
-    val byId = fx.lines.map(l => l.id -> l).toMap
-    runLineSet(spark, ids.map(byId), numRows, hybrid, starTree, dict)
+      dict: Boolean = false): DataFrame =
+    runLineSet(spark, corpusLines(ids), numRows, hybrid, starTree, dict)
+
+  /** The corpus lines with these ids, in `ids` order. Reads the corpus
+    * file, so a missing file fails with its path. */
+  def corpusLines(ids: Seq[Int]): Seq[OnTimeCorpus.Line] = {
+    val byId = OnTimeCorpus.corpus.map(l => l.id -> l).toMap
+    ids.map(byId)
   }
 
   /** As [[runLines]] but over an explicit line set (the [[QueryGen]]
@@ -743,7 +760,7 @@ object CorpusHarness {
     * results → exact DuckDB oracle material). Spark-free: `oracleSql`
     * is a static contract, so this reads and parses the corpus only. */
   def aggOnlyLines(k: Int): Vector[OnTimeCorpus.Line] =
-    OnTimeCorpus.loadCorpus().filter { l =>
+    OnTimeCorpus.corpus.filter { l =>
       val q = try Some(Pql.parse(l.pql)) catch { case _: IllegalArgumentException => None }
       q.exists(p => p.groupBy.isEmpty && p.select.forall(Pql.isAggExpr) && p.select.nonEmpty)
     }.take(k)

@@ -8,9 +8,9 @@ import org.apache.spark.sql.functions.{col, try_element_at, lit}
 import org.apache.spark.sql.types._
 
 /** The reference's 10,000-query golden corpus, executable: loader for
-  * the `{"hsqls":[...], "pql":"..."}` query file, a deterministic
-  * synthesizer for OnTime-schema data, and the H2-style multi-value
-  * flattening.
+  * the `{"hsqls":[...], "pql":"..."}` query file, the OnTime schema
+  * declared in code, seeded literal pools, a deterministic synthesizer
+  * for OnTime-schema data, and the H2-style multi-value flattening.
   *
   * The reference's integration harness builds segments from an OnTime
   * Avro file and mirrors every record into an H2 table, splitting each
@@ -18,11 +18,16 @@ import org.apache.spark.sql.types._
   * (`ClusterIntegrationTestUtils.java:84-180`,
   * `MAX_NUM_ELEMENTS_IN_MULTI_VALUE_TO_COMPARE = 5` at line 70). The
   * data file itself is not shipped in the repo, so we synthesize rows
-  * against the published schema
-  * (`On_Time_On_Time_Performance_2014_100k_subset_nonulls.schema`),
-  * drawing values from the literal pools mined out of the corpus's own
-  * predicates — that guarantees the WHERE clauses have non-trivial
-  * selectivity on both engines, so comparisons are not vacuous.
+  * against the published schema ([[Columns]], written out field by
+  * field from `On_Time_On_Time_Performance_2014_100k_subset_nonulls.schema`
+  * as FIXTURES.md §1 lists it), drawing values from per-column literal
+  * pools ([[fixturePools]]): the seeded [[SeededPools]], plus, where
+  * the corpus file exists, the literals mined out of the corpus's own
+  * predicates. Both the generated queries ([[QueryGen]],
+  * [[QueryGenB]], which draw only from the seeded pools) and the
+  * corpus predicates therefore select non-trivial subsets on both
+  * engines, so comparisons are not vacuous. Only corpus replay reads
+  * the corpus file ([[corpus]]); nothing else needs it.
   *
   * Everything is seeded and iteration-ordered: the same (seed, rows)
   * always produces byte-identical data, so the DuckDB oracle can be
@@ -37,6 +42,66 @@ object OnTimeCorpus {
   val ResourceDir = "/root/reference/pinot-integration-tests/src/test/resources"
   val CorpusPath = s"$ResourceDir/On_Time_On_Time_Performance_2014_100k_subset.test_queries_10K"
   val SchemaPath = s"$ResourceDir/On_Time_On_Time_Performance_2014_100k_subset_nonulls.schema"
+
+  /** True where `path` is a regular file: the reference's corpus and
+    * `.schema` are not shipped, so whatever reads them checks first. */
+  def present(path: String): Boolean =
+    java.nio.file.Files.isRegularFile(java.nio.file.Paths.get(path))
+
+  /** True where the corpus file exists; only corpus replay needs it. */
+  def corpusPresent: Boolean = present(CorpusPath)
+
+  // ---- schema -------------------------------------------------------------
+
+  /** The time column (INT days since epoch; the hybrid time boundary). */
+  final val TimeColumn = "DaysSinceEpoch"
+
+  /** The OnTime schema's 79 fields (FIXTURES.md §1): 53 single-value
+    * and 9 multi-value dimensions, 16 metrics, then the time column,
+    * grouped as [[PinotSchema.load]] reads the `.schema` file
+    * (dimensionFieldSpecs ++ metricFieldSpecs ++ timeFieldSpec) and in
+    * FIXTURES.md's order within a group. Pinot type names, so
+    * [[QueryGen]] uses the list as is. */
+  val Columns: Vector[QueryGen.Col] = {
+    def sv(t: String, names: String*) = names.map(QueryGen.Col(_, t, multiValue = false))
+    def mv(t: String, names: String*) = names.map(QueryGen.Col(_, t, multiValue = true))
+    val dimensions =
+      sv("LONG", "AirlineID") ++
+      sv("INT", "ArrTime", "CRSArrTime", "CRSDepTime", "CRSElapsedTime", "DepTime",
+        "DayOfWeek", "DayofMonth", "Month", "Quarter", "Year") ++
+      sv("STRING", "ArrTimeBlk", "DepTimeBlk", "CancellationCode", "Carrier",
+        "UniqueCarrier", "TailNum", "FlightDate") ++
+      sv("STRING", "Dest", "DestCityName", "DestState", "DestStateName", "Origin",
+        "OriginCityName", "OriginState", "OriginStateName") ++
+      sv("INT", "DestAirportID", "DestAirportSeqID", "DestCityMarketID", "DestStateFips",
+        "DestWac", "OriginAirportID", "OriginAirportSeqID", "OriginCityMarketID",
+        "OriginStateFips", "OriginWac") ++
+      sv("INT", "Distance", "DistanceGroup", "FlightNum", "Flights", "Diverted",
+        "DivActualElapsedTime", "DivAirportLandings", "DivArrDelay", "DivDistance",
+        "DivReachedDest", "FirstDepTime", "LongestAddGTime", "TotalAddGTime", "TaxiIn",
+        "TaxiOut", "WheelsOn", "WheelsOff") ++
+      mv("INT", "DivAirportIDs", "DivAirportSeqIDs") ++
+      mv("STRING", "DivAirports") ++
+      mv("FLOAT", "DivLongestGTimes") ++
+      mv("STRING", "DivTailNums") ++
+      mv("LONG", "DivTotalGTimes") ++
+      mv("INT", "DivWheelsOffs", "DivWheelsOns") ++
+      mv("STRING", "RandomAirports")
+    val metrics =
+      sv("INT", "ActualElapsedTime", "AirTime", "ArrDel15", "ArrivalDelayGroups",
+        "Cancelled", "CarrierDelay", "DepDel15", "DepartureDelayGroups",
+        "LateAircraftDelay", "NASDelay", "SecurityDelay", "WeatherDelay") ++
+      sv("FLOAT", "ArrDelay", "DepDelayMinutes") ++
+      sv("DOUBLE", "ArrDelayMinutes", "DepDelay")
+    (dimensions ++ metrics ++ sv("INT", TimeColumn)).toVector
+  }
+
+  /** [[Columns]] as Spark sees them: a multi-value field is an
+    * `ArrayType` of its element type. */
+  val Schema: StructType = StructType(Columns.map { c =>
+    val base = PinotSchema.sparkType(c.dataType)
+    StructField(c.name, if (c.multiValue) ArrayType(base) else base)
+  })
 
   /** One corpus line: the PQL under test plus its paired H2 SQLs (one
     * per aggregation for aggregation queries, one for selections). */
@@ -103,8 +168,11 @@ object OnTimeCorpus {
     Line(id, pql, hsqls.result())
   }
 
-  def loadCorpus(path: String = CorpusPath): Vector[Line] = {
-    val src = scala.io.Source.fromFile(path, "UTF-8")
+  /** The corpus, parsed once. Where the file is missing, every access
+    * throws the `FileNotFoundException` that names its path (a lazy
+    * val whose initializer throws stays uninitialized). */
+  lazy val corpus: Vector[Line] = {
+    val src = scala.io.Source.fromFile(CorpusPath, "UTF-8")
     try src.getLines().zipWithIndex.collect {
       case (l, i) if l.trim.nonEmpty => parseLine(i, l.trim)
     }.toVector
@@ -140,10 +208,85 @@ object OnTimeCorpus {
     pools.map { case (k, v) => k -> v.toVector }.toMap
   }
 
+  // ---- seeded pools -------------------------------------------------------
+
+  private val PoolSeed = 20261019L
+
+  /** Strings outside the code alphabet, a few of which go into every
+    * STRING pool. The corpus's own values (city names such as
+    * "Coeur d'Alene, ID") carry such characters, so the generated lines
+    * must too: an apostrophe exercises the `''` escape, a space or
+    * comma a `REGEXP_LIKE` pattern that is not plain alphanumerics, and
+    * a regex metacharacter the generator's equality fallback
+    * ([[QueryGen]]'s `regexOrEq`). No backslash: Spark SQL reads it as
+    * an escape in string literals, the reference's H2 does not. */
+  private val SpecialStrings = Vector("O'HARE", "COEUR D'ALENE, ID", "FORT WORTH, TX",
+    "NEW YORK", "ST. LOUIS, MO", "A+B", "(C)", "X*Y", "Q?", "[Z]", "P|Q", "$4", "^K", "{N}")
+
+  /** Seeded per-column literal pools, in [[minePools]]' raw form
+    * (`BigDecimal` numbers, `String` strings): 6–25 distinct values per
+    * column of [[Columns]], each column drawn from its own stream
+    * (seeded by `PoolSeed` and the column name), so the pools are the
+    * same on every machine. The reference mines its generator pools
+    * from the Avro data (`QueryGenerator.java:238-270`); that data is
+    * not shipped, so these pools stand in for it. Values:
+    *  - INT / LONG: whole numbers in [-100, 2400) — far below 2^31
+    *    even after mode B's `col × 9`; the time column holds 2014's
+    *    epoch days (16071–16435), as the OnTime data does;
+    *  - FLOAT / DOUBLE: halves in [-50, 550) — dyadic, so sums are
+    *    exact in both engines ([[synthesize]]);
+    *  - STRING: one or two of [[SpecialStrings]], then codes of 2–7
+    *    characters, a letter then letters or digits. */
+  val SeededPools: Map[String, Vector[Any]] = Columns.map { c =>
+    val rnd = new Random(PoolSeed ^ c.name.hashCode)
+    def draw(): Any = c.dataType match {
+      case "STRING" =>
+        val alnum = "ABCDEFGHIJKLMNOPQRSTUVWXYZ0123456789"
+        alnum(rnd.nextInt(26)).toString +
+          Seq.fill(1 + rnd.nextInt(6))(alnum(rnd.nextInt(alnum.length))).mkString
+      case "FLOAT" | "DOUBLE" => BigDecimal(rnd.nextInt(1200) - 100) / 2
+      case _ if c.name == TimeColumn => BigDecimal(16071 + rnd.nextInt(365))
+      case _ => BigDecimal(rnd.nextInt(2500) - 100)
+    }
+    val want = 6 + rnd.nextInt(20)
+    val specials = if (c.dataType == "STRING") 1 + rnd.nextInt(2) else 0
+    val out = mutable.LinkedHashSet.empty[Any]
+    while (out.size < specials) out += SpecialStrings(rnd.nextInt(SpecialStrings.size))
+    while (out.size < want) out += draw()
+    c.name -> out.toVector
+  }.toMap
+
+  /** The pools both generators draw literals from: [[SeededPools]],
+    * plus three literals per FLOAT / DOUBLE column that are not dyadic
+    * (one decimal digit, never .0 or .5), so comparisons meet decimals
+    * that a float cannot hold exactly. The fixture never synthesizes
+    * these, so its sums stay exact. */
+  val GeneratorPools: Map[String, Vector[Any]] = SeededPools.map { case (name, seeded) =>
+    Columns.find(_.name == name).map(_.dataType) match {
+      case Some("FLOAT" | "DOUBLE") =>
+        val rnd = new Random(PoolSeed ^ name.hashCode ^ 1L)
+        val tenths = Vector(1, 2, 3, 4, 6, 7, 8, 9)
+        name -> (seeded ++ Vector.fill(3)(
+          BigDecimal(rnd.nextInt(600) - 50) + BigDecimal(tenths(rnd.nextInt(8))) / 10)).distinct
+      case _ => name -> seeded
+    }
+  }
+
+  /** The pools [[CorpusHarness.fixture]] synthesizes from: per column,
+    * the seeded pool followed by the corpus's mined literals where the
+    * corpus file exists (so corpus predicates stay selective), else
+    * the seeded pool alone. */
+  def fixturePools(): Map[String, Vector[Any]] = {
+    val mined = if (corpusPresent) minePools(corpus) else Map.empty[String, Vector[Any]]
+    (SeededPools.keySet ++ mined.keySet).iterator.map { c =>
+      c -> (SeededPools.getOrElse(c, Vector.empty) ++ mined.getOrElse(c, Vector.empty)).distinct
+    }.toMap
+  }
+
   // ---- synthesis --------------------------------------------------------
 
   /** Deterministic OnTime-shaped rows. Per column: ~70% of values come
-    * from its mined literal pool (typed), the rest fill a slightly
+    * from its literal pool (typed), the rest fill a slightly
     * widened [min, max] range (numerics) or re-draw from the pool
     * (strings). Multi-value columns get 1–4 elements — the reference
     * harness compares at most 5 (`MAX_NUM_ELEMENTS_..._TO_COMPARE`),
@@ -173,7 +316,8 @@ object OnTimeCorpus {
       if (nums.nonEmpty) {
         val (mn, mx) = (nums.min, nums.max)
         val pad = math.max(2.0, (mx - mn) * 0.1)
-        Gen(typed, mn - pad, mx + pad)
+        // a half-aligned lower bound keeps the float/double fill dyadic
+        Gen(typed, math.floor((mn - pad) * 2) / 2, mx + pad)
       } else Gen(typed, 0, 500)
     }
 

@@ -10,7 +10,7 @@ import org.apache.spark.sql.types._
   * (multi-value field → ArrayType, BOOLEAN kept native). */
 object PinotSchema {
 
-  private def sparkType(dt: String): DataType = dt.toUpperCase match {
+  private[pql] def sparkType(dt: String): DataType = dt.toUpperCase match {
     case "INT" => IntegerType
     case "LONG" => LongType
     case "FLOAT" => FloatType

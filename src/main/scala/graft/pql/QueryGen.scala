@@ -11,11 +11,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * multi-value columns, each paired with equivalent H2-dialect SQL
   * that the harness executes independently (Spark SQL over the
   * flattened `__MV0..4` twin — [[CorpusHarness]]'s comparison rules).
-  * Where the fixed 10K corpus can no longer surprise the front-end
-  * (its literal pools were mined into the fixture), the generator
-  * probes fresh predicate/aggregation/group-by COMBINATIONS every
-  * seed: NOT IN chains OR-joined with MV BETWEEN, TOP 0 group-bys,
-  * regex predicates (which the shipped corpus contains zero of), etc.
+  * Where the fixed 10K corpus can no longer surprise the front-end,
+  * the generator probes fresh predicate/aggregation/group-by
+  * COMBINATIONS every seed: NOT IN chains OR-joined with MV BETWEEN,
+  * TOP 0 group-bys, regex predicates (which the shipped corpus
+  * contains zero of), etc.
   *
   * Faithful to the reference's shape grammar:
   *  - strategies: selection | aggregation, uniform
@@ -47,12 +47,16 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    pattern's characters come from a real value, so sensitivity is
   *    symmetric (the 'i' was an H2-vs-Pinot accommodation).
   *
-  * Values come from the corpus's mined literal pools — the reference
-  * mines its pools from the Avro data (:238-270); our fixture's data
-  * IS drawn ~70% from these pools ([[OnTimeCorpus.synthesize]]), so
-  * generated predicates select real subsets, and the whole pipeline
-  * stays Spark-free/deterministic so `oracleSql` can be built as a
-  * static contract.
+  * Values come from the seeded literal pools
+  * ([[OnTimeCorpus.GeneratorPools]]) — the reference mines its pools
+  * from the Avro data (:238-270), which is not shipped; our fixture's
+  * data IS drawn ~70% from pools that contain these values
+  * ([[OnTimeCorpus.fixturePools]], [[OnTimeCorpus.synthesize]]), save
+  * a few non-dyadic float literals kept out of the data, so generated
+  * predicates select real subsets. Neither the schema nor
+  * the pools read a file, and the whole pipeline stays
+  * Spark-free/deterministic so `oracleSql` can be built as a static
+  * contract.
   *
   * Test-harness plumbing, not engine code: all driver-side work is
   * bounded by the generated line count.
@@ -76,38 +80,14 @@ object QueryGen {
       dataType != "STRING" && dataType != "BOOLEAN" && dataType != "BYTES"
   }
 
-  /** Spark-free read of the Pinot schema JSON (machine-written, flat
-    * field-spec objects): dimensionFieldSpecs ++ metricFieldSpecs ++
-    * the time field, deduped by name (the timeFieldSpec's incoming and
-    * outgoing granularity blocks repeat the same column). Spark-free
-    * because [[duckOracle]] must be constructible without a session
-    * (the oracleSql map is a static contract). */
-  def loadColumns(path: String = OnTimeCorpus.SchemaPath): Vector[Col] = {
-    val txt = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(path)), "UTF-8")
-    val block = """\{[^{}]*\}""".r
-    val name = """"name"\s*:\s*"([^"]+)"""".r
-    val dataType = """"dataType"\s*:\s*"([^"]+)"""".r
-    val svField = """"singleValueField"\s*:\s*(true|false)""".r
-    val seen = mutable.LinkedHashSet.empty[String]
-    block.findAllIn(txt).toVector.flatMap { b =>
-      (name.findFirstMatchIn(b).map(_.group(1)),
-        dataType.findFirstMatchIn(b).map(_.group(1))) match {
-        case (Some(n), Some(d)) if !seen.contains(n) =>
-          seen += n
-          val sv = svField.findFirstMatchIn(b).forall(_.group(1).toBoolean)
-          Some(Col(n, d.toUpperCase, multiValue = !sv))
-        case _ => None
-      }
-    }
-  }
-
   /** SQL-token value pools per column, mirroring
     * `storeAvroValueIntoValueSet` (QueryGenerator.java:184-192):
-    * numbers as raw tokens, strings quoted with `''` escaping. */
-  def sqlTokenPools(
-      lines: Seq[OnTimeCorpus.Line] = OnTimeCorpus.loadCorpus()): Map[String, Vector[String]] =
-    OnTimeCorpus.minePools(lines).map { case (c, vs) =>
+    * numbers as raw tokens, strings quoted with `''` escaping. The
+    * generators use the seeded pools only
+    * ([[OnTimeCorpus.GeneratorPools]]), so they emit the same lines on
+    * every machine, with or without the corpus file. */
+  def sqlTokenPools(): Map[String, Vector[String]] =
+    OnTimeCorpus.GeneratorPools.map { case (c, vs) =>
       c -> vs.map {
         case s: String => "'" + s.replace("'", "''") + "'"
         case d: BigDecimal => if (d.isWhole) d.toBigInt.toString else d.toString
@@ -293,7 +273,7 @@ object QueryGen {
   /** Deterministic generated lines: same (n, seed) → byte-identical
     * queries, any JVM. */
   def lines(n: Int, seed: Long = DefaultSeed): Vector[OnTimeCorpus.Line] = {
-    val g = new Generator(loadColumns(), sqlTokenPools(), seed)
+    val g = new Generator(OnTimeCorpus.Columns, sqlTokenPools(), seed)
     (0 until n).map(g.line).toVector
   }
 

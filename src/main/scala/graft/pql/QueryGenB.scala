@@ -552,7 +552,7 @@ object QueryGenB {
   // ---- entry points -----------------------------------------------------
 
   def genLines(n: Int, seed: Long = DefaultSeed): Vector[GenLine] = {
-    val g = new Generator(QueryGen.loadColumns(), QueryGen.sqlTokenPools(), seed)
+    val g = new Generator(OnTimeCorpus.Columns, QueryGen.sqlTokenPools(), seed)
     (0 until n).map(g.line).toVector
   }
 
@@ -600,7 +600,7 @@ object QueryGenB {
     * selection shapes valued BY DUCKDB, closing the "only aggregation
     * lines are externally valued" gap. */
   def duckSelLines(k: Int, seed: Long = DefaultSeed): Vector[OnTimeCorpus.Line] = {
-    val g = new Generator(QueryGen.loadColumns(), QueryGen.sqlTokenPools(), seed)
+    val g = new Generator(OnTimeCorpus.Columns, QueryGen.sqlTokenPools(), seed)
     (0 until k).map(g.duckSelection).toVector
   }
 

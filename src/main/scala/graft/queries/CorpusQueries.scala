@@ -142,9 +142,18 @@ object CorpusQueries {
       graft.pql.QueryGenB.runSample(s, GenBSampleLines, dict = true))
   )
 
+  /** The rows that replay the reference's corpus lines: they read the
+    * corpus file ([[graft.pql.OnTimeCorpus.CorpusPath]]) and fail with
+    * its path where it is missing. Every other row of this module runs
+    * on the generated grammars and needs no file. */
+  val CorpusReplayRows: Set[String] = Set(
+    "q_corpus_sample", "q_corpus_duck", "q_corpus_hybrid", "q_corpus_startree", "q_corpus_dict")
+
+  /** Static oracles. `q_corpus_duck`'s is built from the corpus lines
+    * themselves, so it is present only where the corpus file exists;
+    * every other oracle needs no file. */
   def oracles: Map[String, String] = Map(
     "q_corpus_sample" -> CorpusHarness.sampleOracle(SampleStep),
-    "q_corpus_duck" -> CorpusHarness.duckSliceOracle(DuckLines),
     "q_corpus_hybrid" -> CorpusHarness.sampleOracle(SampleStep),
     "q_corpus_startree" -> CorpusHarness.sampleOracle(SampleStep),
     "q_querygen_sample" -> graft.pql.QueryGen.sampleOracle(GenSampleLines),
@@ -159,5 +168,7 @@ object CorpusQueries {
     "q_corpus_dict" -> CorpusHarness.sampleOracle(SampleStep),
     "q_querygen_dict" -> graft.pql.QueryGen.sampleOracle(GenSampleLines),
     "q_querygen_graft_dict" -> graft.pql.QueryGenB.sampleOracle(GenBSampleLines)
-  )
+  ) ++ (if (graft.pql.OnTimeCorpus.corpusPresent)
+    Map("q_corpus_duck" -> CorpusHarness.duckSliceOracle(DuckLines))
+  else Map.empty)
 }

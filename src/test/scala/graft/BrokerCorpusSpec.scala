@@ -160,14 +160,18 @@ class BrokerCorpusSpec extends SparkSpec {
     val port = broker.start()
     try {
       val base = s"http://127.0.0.1:$port/query"
-      val byId = fx.lines.map(l => l.id -> l).toMap
-      val lines = CorpusHarness.sampleIds(125).map(byId) ++
-        graft.pql.QueryGen.lines(30) ++ graft.pql.QueryGenB.lines(30)
-      val failures = lines.flatMap { l =>
-        checkLine(base, l, fx.mv).map(r => s"id=${l.id}: $r\n  pql: ${l.pql}")
+      def check(lines: Seq[OnTimeCorpus.Line]): Unit = {
+        val failures = lines.flatMap { l =>
+          checkLine(base, l, fx.mv).map(r => s"id=${l.id}: $r\n  pql: ${l.pql}")
+        }
+        assert(failures.isEmpty,
+          s"${failures.length} broker mismatches:\n${failures.take(5).mkString("\n")}")
       }
-      assert(failures.isEmpty,
-        s"${failures.length} broker mismatches:\n${failures.take(5).mkString("\n")}")
+      // the generated lines need no file; the corpus half replays the
+      // reference's lines and runs wherever the corpus exists
+      check(graft.pql.QueryGen.lines(30) ++ graft.pql.QueryGenB.lines(30))
+      assumeFile(OnTimeCorpus.CorpusPath)
+      check(CorpusHarness.corpusLines(CorpusHarness.sampleIds(125)))
     } finally {
       broker.stop()
       Files.deleteIfExists(link)

@@ -1,6 +1,6 @@
 package graft
 
-import graft.pql.{CorpusHarness, Pql}
+import graft.pql.{CorpusHarness, OnTimeCorpus, Pql}
 import graft.plans.DictRegistry
 
 /** Corpus × dictionary-layout routing: [[graft.plans.DictRoutingRule]]
@@ -18,6 +18,7 @@ import graft.plans.DictRegistry
 class CorpusDictSpec extends SparkSpec {
 
   test("dict layout routes corpus shapes; all answers match the plain twin") {
+    assumeFile(OnTimeCorpus.CorpusPath)
     val fx = CorpusHarness.fixture(spark)
     Graft.enable(spark)
     val idx = CorpusHarness.registerCorpusDict(spark, fx)
@@ -32,7 +33,7 @@ class CorpusDictSpec extends SparkSpec {
       }
 
       val table = spark.read.parquet(CorpusHarness.dictFactDir())
-      val byId = fx.lines.map(l => l.id -> l).toMap
+      val byId = OnTimeCorpus.corpus.map(l => l.id -> l).toMap
       val ids = CorpusHarness.sampleIds(40)
 
       // plan census: the rewrite must fire on a non-trivial share of

@@ -1,6 +1,6 @@
 package graft
 
-import graft.pql.CorpusHarness
+import graft.pql.{CorpusHarness, OnTimeCorpus}
 
 /** The full 10,000-line golden-corpus sweep — the reference's own
   * integration bar (`ClusterIntegrationTestUtils.testQuery` over every
@@ -18,7 +18,7 @@ class CorpusFullSpec extends SparkSpec {
     spark.sparkContext.setLogLevel("WARN") // 25K jobs of INFO would dominate wall time
     val fx = CorpusHarness.fixture(spark)
     val t0 = System.nanoTime()
-    val outcomes = fx.lines.grouped(1000).zipWithIndex.flatMap { case (chunk, i) =>
+    val outcomes = OnTimeCorpus.corpus.grouped(1000).zipWithIndex.flatMap { case (chunk, i) =>
       val os = CorpusHarness.compareAll(spark, fx, chunk, parallelism = 8)
       val done = (i + 1) * 1000
       val secs = (System.nanoTime() - t0) / 1e9

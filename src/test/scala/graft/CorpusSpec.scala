@@ -9,7 +9,8 @@ import graft.pql.{CorpusHarness, OnTimeCorpus, Pql}
 class CorpusSpec extends SparkSpec {
 
   test("corpus file parses into (pql, hsqls) lines with the expected multiplicities") {
-    val lines = OnTimeCorpus.loadCorpus()
+    assumeFile(OnTimeCorpus.CorpusPath)
+    val lines = OnTimeCorpus.corpus
     assert(lines.length === 10000)
     assert(lines.head.hsqls.nonEmpty)
     // one hsql per aggregation, one for selections (reference layout)
@@ -22,7 +23,8 @@ class CorpusSpec extends SparkSpec {
   }
 
   test("literal pools cover nearly every column, typed") {
-    val pools = OnTimeCorpus.minePools(OnTimeCorpus.loadCorpus())
+    assumeFile(OnTimeCorpus.CorpusPath)
+    val pools = OnTimeCorpus.minePools(OnTimeCorpus.corpus)
     assert(pools.size >= 75, s"only ${pools.size} columns pooled")
     assert(pools("DestState").forall(_.isInstanceOf[String]))
     assert(pools("ArrTime").forall(_.isInstanceOf[BigDecimal]))
@@ -31,21 +33,24 @@ class CorpusSpec extends SparkSpec {
   test("synthesis is deterministic and predicates are selective") {
     val fx = CorpusHarness.fixture(spark)
     assert(fx.mv.count() === 8000)
-    // same seed → identical frame (hash both builds)
+    // same seed → identical frame (hash both builds), rebuilt from the
+    // schema and pools the fixture itself synthesizes from
     import org.apache.spark.sql.functions._
-    val again = OnTimeCorpus.synthesize(spark,
-      graft.pql.PinotSchema.load(spark, OnTimeCorpus.SchemaPath),
-      OnTimeCorpus.minePools(fx.lines), 8000)
+    val again = OnTimeCorpus.synthesize(spark, OnTimeCorpus.Schema,
+      OnTimeCorpus.fixturePools(), 8000)
     def fp(df: org.apache.spark.sql.DataFrame) = OnTimeCorpus.flatten(df)
       .agg(bit_xor(xxhash64(col("Carrier"), col("ArrTime"), col("DivTailNums__MV0"))))
       .head().getLong(0)
     assert(fp(fx.mv) === fp(again), "same seed must give identical data")
-    // pool-driven values: corpus predicates actually select rows
+    // pool-driven values: corpus predicates actually select rows (the
+    // literals are the corpus's, mined into the pools where it exists)
+    assumeFile(OnTimeCorpus.CorpusPath)
     val sel = fx.flat.where("DestState IN ('VI', 'UT', 'VA') OR ArrTime < 806").count()
     assert(sel > 0 && sel < 8000, s"predicate should be selective, got $sel")
   }
 
   test("sampled corpus lines all match PQL-vs-hsql (every 100th line)") {
+    assumeFile(OnTimeCorpus.CorpusPath)
     val outcomes = CorpusHarness.runLines(spark, CorpusHarness.sampleIds(100)).collect()
     val bad = outcomes.filter(!_.getBoolean(2))
     assert(bad.isEmpty, s"${bad.length}/${outcomes.length} mismatched; first 5:\n" +
@@ -68,6 +73,7 @@ class CorpusSpec extends SparkSpec {
   }
 
   test("sampled corpus lines match from the HYBRID view (every 200th line)") {
+    assumeFile(OnTimeCorpus.CorpusPath)
     val outcomes = CorpusHarness.runLines(spark, CorpusHarness.sampleIds(200),
       hybrid = true).collect()
     val bad = outcomes.filter(!_.getBoolean(2))
@@ -77,6 +83,7 @@ class CorpusSpec extends SparkSpec {
   }
 
   test("duck slice emits one rounded value per aggregation of the first 40 agg-only lines") {
+    assumeFile(OnTimeCorpus.CorpusPath)
     val df = CorpusHarness.duckSlice(spark, 5)
     val rows = df.collect()
     assert(rows.length >= 5)

@@ -1,6 +1,6 @@
 package graft
 
-import graft.pql.{CorpusHarness, Pql}
+import graft.pql.{CorpusHarness, OnTimeCorpus, Pql}
 import graft.plans.StarTreeRegistry
 
 /** Corpus × star-tree routing: the reference's star-tree contract is
@@ -16,6 +16,7 @@ import graft.plans.StarTreeRegistry
 class CorpusStarTreeSpec extends SparkSpec {
 
   test("mined trees route predicted lines only; routed answers match the twin") {
+    assumeFile(OnTimeCorpus.CorpusPath)
     val fx = CorpusHarness.fixture(spark)
     Graft.enable(spark)
     val specs = CorpusHarness.registerCorpusTrees(spark, fx)
@@ -27,7 +28,7 @@ class CorpusStarTreeSpec extends SparkSpec {
       assert(predicted.nonEmpty)
 
       val table = spark.read.parquet(CorpusHarness.stFactDir())
-      val byId = fx.lines.map(l => l.id -> l).toMap
+      val byId = OnTimeCorpus.corpus.map(l => l.id -> l).toMap
 
       // plan census over a deterministic slice that includes routed
       // lines: every 40th line plus the first 40 predicted-routed ids.

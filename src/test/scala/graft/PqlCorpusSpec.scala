@@ -3,7 +3,7 @@ package graft
 import scala.io.Source
 import scala.util.{Failure, Success, Try}
 
-import graft.pql.{PinotSchema, Pql}
+import graft.pql.{OnTimeCorpus, PinotSchema, Pql}
 
 /** The reference's 10,000-query golden corpus (BASELINE.md B1:
   * `On_Time_..._test_queries_10K`, the PQL side of each line) through
@@ -13,9 +13,8 @@ import graft.pql.{PinotSchema, Pql}
   * of reach — parse + plan coverage is the attainable gate). */
 class PqlCorpusSpec extends SparkSpec {
 
-  private val res = "/root/reference/pinot-integration-tests/src/test/resources"
-  private val corpusPath = s"$res/On_Time_On_Time_Performance_2014_100k_subset.test_queries_10K"
-  private val schemaPath = s"$res/On_Time_On_Time_Performance_2014_100k_subset_nonulls.schema"
+  private val corpusPath = OnTimeCorpus.CorpusPath
+  private val schemaPath = OnTimeCorpus.SchemaPath
 
   private def pqlOf(line: String): String = {
     // each line is {"hsqls": [...], "pql": "..."}; extract the pql
@@ -32,6 +31,7 @@ class PqlCorpusSpec extends SparkSpec {
     Source.fromFile(corpusPath, "UTF-8").getLines().map(pqlOf).toVector
 
   test("all 10,000 corpus queries parse") {
+    assumeFile(corpusPath)
     val failures = corpus.zipWithIndex.flatMap { case (q, i) =>
       Try(Pql.parse(q)) match {
         case Success(_) => None
@@ -43,6 +43,8 @@ class PqlCorpusSpec extends SparkSpec {
   }
 
   test("sampled corpus queries analyze against the OnTime schema") {
+    assumeFile(corpusPath)
+    assumeFile(schemaPath)
     val schema = PinotSchema.load(spark, schemaPath)
     assert(schema.fields.length >= 79, s"schema came back short: ${schema.length}")
     val empty = PinotSchema.emptyTable(spark, schema)

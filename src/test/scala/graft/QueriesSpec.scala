@@ -11,6 +11,8 @@ class QueriesSpec extends SparkSpec {
 
   SparkEntry.queries.foreach { case (name, fn) =>
     test(s"$name runs and returns rows at sf0.001") {
+      if (graft.queries.CorpusQueries.CorpusReplayRows(name))
+        assumeFile(graft.pql.OnTimeCorpus.CorpusPath)
       val df = fn(spark, sfDir)
       assert(df.columns.nonEmpty)
       assert(df.count() > 0, s"$name returned 0 rows")

@@ -18,8 +18,22 @@ class QueryGenSpec extends SparkSpec {
     assert(a != c, "different seeds must generate different query sets")
   }
 
+  /** FIXTURES.md §1's tables, row by row: (name, Pinot type, MV,
+    * Spark type cell), in the document's order. */
+  private def fixturesSchema(): Vector[(String, String, Boolean, String)] = {
+    val src = scala.io.Source.fromFile("FIXTURES.md", "UTF-8")
+    val doc = try src.getLines().toVector finally src.close()
+    doc.dropWhile(!_.startsWith("## 1.")).drop(1).takeWhile(!_.startsWith("## "))
+      .filter(l => l.startsWith("| ") && !l.startsWith("| Column"))
+      .flatMap { row =>
+        val cells = row.split('|').map(_.replace("**", "").trim)
+        val pinot = cells(2).split(',').map(_.trim)
+        cells(1).split(',').map(_.trim).map(n => (n, pinot.head, pinot.contains("MV"), cells(3)))
+      }
+  }
+
   test("schema read matches the Spark-side fixture schema (names, MV split)") {
-    val cols = QueryGen.loadColumns()
+    val cols = OnTimeCorpus.Columns
     val fx = CorpusHarness.fixture(spark)
     val sparkFields = fx.mv.schema.fields
     assert(cols.map(_.name).toSet === sparkFields.map(_.name).toSet)
@@ -27,6 +41,27 @@ class QueryGenSpec extends SparkSpec {
       case f if f.dataType.isInstanceOf[org.apache.spark.sql.types.ArrayType] => f.name
     }.toSet
     assert(cols.filter(_.multiValue).map(_.name).toSet === mvSpark)
+    // the declaration is the schema FIXTURES.md §1 writes out: every
+    // column with its Pinot type, MV flag and Spark type, in order
+    val doc = fixturesSchema()
+    assert(doc.length === 79, s"FIXTURES.md §1 lists ${doc.length} columns")
+    assert(cols.map(c => (c.name, c.dataType, c.multiValue)) === doc.map(d => (d._1, d._2, d._3)))
+    def render(dt: org.apache.spark.sql.types.DataType): String = dt match {
+      case org.apache.spark.sql.types.ArrayType(el, _) => s"ArrayType($el)"
+      case other => other.toString
+    }
+    OnTimeCorpus.Schema.fields.zip(doc).foreach { case (f, (n, _, _, sparkCell)) =>
+      assert(sparkCell.startsWith(render(f.dataType)), s"$n: ${f.dataType} vs FIXTURES.md $sparkCell")
+    }
+  }
+
+  test("the in-code schema equals the reference's .schema file (names, types, MV split)") {
+    assumeFile(OnTimeCorpus.SchemaPath)
+    // order aside: the file's field-spec blocks group differently
+    def typed(st: org.apache.spark.sql.types.StructType) =
+      st.fields.map(f => f.name -> f.dataType).toSet
+    assert(typed(OnTimeCorpus.Schema) ===
+      typed(graft.pql.PinotSchema.load(spark, OnTimeCorpus.SchemaPath)))
   }
 
   test("500 generated lines: every PQL parses and matches its SQL twin") {
@@ -43,6 +78,22 @@ class QueryGenSpec extends SparkSpec {
     assert(lines.exists(_.pql.contains("NOT IN")), "no NOT IN generated")
     assert(lines.exists(_.hsqls.exists(_.contains("__MV"))),
       "no multi-value predicate or projection generated")
+    // literal classes the seeded pools carry beyond plain codes and
+    // halves: the '' escape, a regex pattern over a space or comma, an
+    // equality on a value with a regex metacharacter (the regex
+    // branch's fallback), and a float/double column against a literal
+    // that is not dyadic
+    assert(lines.exists(_.pql.contains("''")), "no quoted literal with an escaped apostrophe")
+    assert(lines.exists(_.pql.matches(""".*REGEXP_LIKE\(\w+, '[^']*[ ,][^']*'\).*""")),
+      "no regex pattern over a value with a space or comma")
+    assert(lines.exists(_.pql.matches(""".*\w+ = '[^']*[.+*?()\[\]{}|^$][^']*'.*""")),
+      "no equality on a value with a regex metacharacter")
+    val floatCols = OnTimeCorpus.Columns
+      .filter(c => c.dataType == "FLOAT" || c.dataType == "DOUBLE").map(_.name).toSet
+    val floatCmp = """(\w+) (?:=|<>|<=|>=|<|>|BETWEEN) (-?\d+\.\d+)""".r
+    assert(lines.exists(l => floatCmp.findAllMatchIn(l.pql).exists(m =>
+      floatCols(m.group(1)) && !(BigDecimal(m.group(2)) * 2).isWhole)),
+      "no float/double column compared with a non-dyadic literal")
 
     val fx = CorpusHarness.fixture(spark)
     val outcomes = CorpusHarness.compareAll(spark, fx, lines)

@@ -15,4 +15,10 @@ trait SparkSpec extends AnyFunSuite {
     .getOrCreate()
 
   val sfDir = "/root/testdata/sf0.001"
+
+  /** Cancel the test unless `path` is a regular file — for tests that
+    * replay the reference's corpus or read its `.schema`, which are
+    * not shipped; they run wherever the file exists. */
+  def assumeFile(path: String): Unit =
+    assume(graft.pql.OnTimeCorpus.present(path), s"needs $path")
 }
