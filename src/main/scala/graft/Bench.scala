@@ -42,13 +42,7 @@ object Bench {
     // timed set); the headline total stays a throughput number over
     // engine queries, and the gates are still timed, once, under
     // "harness"
-    val harnessNames =
-      Set("q_corpus_sample", "q_corpus_duck", "q_corpus_hybrid", "q_corpus_startree",
-        "q_querygen_sample", "q_querygen_duck", "q_querygen_startree",
-        "q_querygen_hybrid", "q_querygen_graft", "q_querygen_duck_b",
-        "q_querygen_duck_sel", "q_querygen_graft_startree",
-        "q_querygen_graft_hybrid", "q_corpus_dict", "q_querygen_dict",
-        "q_querygen_graft_dict")
+    val harnessNames = graft.queries.CorpusQueries.queries.keySet
 
     val names = SparkEntry.queries.keys.toSeq.filterNot(harnessNames).sorted
     val failed = scala.collection.mutable.ArrayBuffer[String]()
@@ -125,14 +119,10 @@ object Bench {
     // comparisons). Build here, untimed; the timed rows then measure
     // the comparison workload. Old (build-inclusive) numbers are kept
     // in OPTIMIZATION_r12.md per the measurement-change rule.
-    // Registration stays per-row (runLineSet registers/unregisters).
+    // Registration stays per-row (CorpusHarness.compare registers and
+    // unregisters the layouts it reads).
     try {
-      val fx = graft.pql.CorpusHarness.fixture(spark)
-      graft.pql.CorpusHarness.registerCorpusTrees(spark, fx)
-      graft.plans.StarTreeRegistry.unregister(graft.pql.CorpusHarness.stFactDir())
-      graft.pql.CorpusHarness.registerCorpusDict(spark, fx)
-      graft.plans.DictRegistry.unregister(graft.pql.CorpusHarness.dictFactDir())
-      graft.pql.CorpusHarness.hybridView(spark)
+      graft.pql.CorpusHarness.prepare(spark, graft.pql.CorpusHarness.Layout.all)
       ()
     } catch { case e: Throwable =>
       System.err.println("[bench] harness fixture prewarm FAILED " +
@@ -141,7 +131,7 @@ object Bench {
     }
     // corpus harnesses: one timed pass each (deterministic workload;
     // a best-of-N over hundreds of statements just repeats the work)
-    val harness = harnessNames.toSeq.sorted.filter(SparkEntry.queries.contains).flatMap { n =>
+    val harness = harnessNames.toSeq.sorted.flatMap { n =>
       try {
         val t0 = System.nanoTime()
         run(n)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{bit_xor, col, struct, xxhash64}
 
 /** The one session builder of every main (Bench, BenchScale, Verify,
-  * Show, Explain, CorpusSweep, QueryGenSweep, BrokerMain), with one
+  * Show, Explain, HarnessSweep, BrokerMain), with one
   * environment contract:
   *
   *  - `SPARK_GRAFT_CPUS`: cores of `local[n]` and the shuffle partition

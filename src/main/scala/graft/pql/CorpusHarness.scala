@@ -1,7 +1,11 @@
 package graft.pql
 
+import java.util.concurrent.{Callable, Executors}
+
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.types.ArrayType
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.{ArrayType, DecimalType, NumericType, StringType}
 
 /** Result-level execution of the 10K golden corpus: each line's PQL
   * runs through the graft front-end ([[Pql.toDataFrame]]) and each
@@ -34,6 +38,15 @@ import org.apache.spark.sql.types.ArrayType
   * Spark over identical data, so we hold a far tighter relative 1e-9 —
   * a real compilation bug cannot hide inside a ±1.0 window.
   *
+  * One harness serves every layout the PQL side can read ([[Layout]]:
+  * plain, hybrid, star-tree, dictionary). [[compare]] parses each line
+  * and collects its hsql twin once, then checks every requested
+  * layout's PQL answer against it. The `q_corpus_*` / `q_querygen_*`
+  * gate rows ([[graft.queries.CorpusQueries]]), the specs and the
+  * resumable sweep main
+  * `graft.HarnessSweep <corpus|a|b> <lo-hi> <layout,…> <outFile>` all
+  * run through it.
+  *
   * Harness code, driver-side by design: every collect is bounded by
   * the reference's own MAX_NUM_ROWS_TO_COMPARE = 10,000.
   */
@@ -41,82 +54,285 @@ object CorpusHarness {
 
   private val MaxRowsToCompare = 10000
 
-  /** Synthesized OnTime fixture: the MV table (for PQL) and its
-    * H2-style flat twin (for hsqls, registered as temp view `mytable`).
-    * Corpus lines are not part of it: replay loads them through
-    * [[OnTimeCorpus.corpus]] ([[corpusLines]]). */
-  final case class Fixture(mv: DataFrame, flat: DataFrame)
+  /** Rows of the synthesized fixture. */
+  private val NumRows = 8000
 
-  @volatile private var cached: (SparkSession, Int, Fixture) = null
+  /** Driver threads [[compare]] and the duck slices run lines on: the
+    * work is per-line query PLANNING (parse/analyze over the
+    * 115-column fixture) plus tiny jobs, both of which overlap across
+    * threads (Spark's scheduler is built for multi-threaded drivers). */
+  private val Parallelism = 8
 
-  /** Build (or reuse) the fixture: synthesize `numRows` deterministic
-    * rows of the in-code schema ([[OnTimeCorpus.Schema]]) from
-    * [[OnTimeCorpus.fixturePools]] and cache both views. Needs no file:
-    * the corpus, where present, only adds its mined literals to the
-    * pools. Keyed on (session, numRows) so Verify and tests share one
-    * build. */
-  def fixture(spark: SparkSession, numRows: Int = 8000): Fixture = {
-    val c = cached
-    if (c != null && (c._1 eq spark) && c._2 == numRows) return c._3
-    synchronized {
-      val c2 = cached
-      if (c2 != null && (c2._1 eq spark) && c2._2 == numRows) return c2._3
-      // round-trip the synthesized frame through parquet before
-      // caching: the synthesis plan embeds the literal pools (~1.7 MB
-      // of task binary with the corpus-mined ones), and every
-      // micro-query task would otherwise ship them — with thousands of
-      // harness statements that serialization dominated wall time
-      // ("task of very large size" warnings). Re-read, each plan is a
-      // plain 4-file scan.
-      OnTimeCorpus.synthesize(spark, OnTimeCorpus.Schema, OnTimeCorpus.fixturePools(), numRows)
-        .write.mode("overwrite").parquet(segDir(numRows))
-      val mv = spark.read.parquet(segDir(numRows)).cache()
-      val flat = OnTimeCorpus.flatten(mv).cache()
-      flat.createOrReplaceTempView("mytable")
-      flat.count() // materialize both caches once
-      val f = Fixture(mv, flat)
-      cached = (spark, numRows, f)
-      f
+  /** Star-tree mining bound: at most this many trees of at most this
+    * many dimensions each. */
+  private val MaxTrees = 6
+  private val MaxDims = 8
+
+  /** Parquet dump backing the fixture — the "segment directory". Every
+    * harness JVM rewrites it before reading it. */
+  val segDir: String = s"${System.getProperty("java.io.tmpdir")}/graft_corpus_fx_$NumRows"
+
+  /** Fact-segment copies the routed layouts read, and the dictionary-
+    * encoded copy. The base fixture's parquet is CACHED, and Spark's
+    * cache manager substitutes the InMemoryRelation for ANY read of the
+    * same path — which would bypass the routing rules (they match file
+    * scans) and make the routed layouts vacuous. A distinct path
+    * defeats the fragment match. Star-tree and dictionary each keep
+    * their own copy, so both can be registered at once. Tagged with
+    * the JVM pid: unlike the base fixture (which each process rewrites
+    * once before reading), these dirs are written and read while OTHER
+    * harness JVMs may be doing the same, and two writers corrupt each
+    * other's `_temporary` commit dirs. */
+  private val jvmTag: Long = java.lang.ProcessHandle.current().pid()
+  private val stFactDir: String = s"${segDir}_stfact_$jvmTag"
+  private val dictFactDir: String = s"${segDir}_dictfact_$jvmTag"
+  private val dictEncDir: String = s"${segDir}_dictenc_$jvmTag"
+  private val treeDirPrefix = s"${segDir}_startree_${jvmTag}_"
+
+  /** One-shot startup sweep of fixture dirs left behind by DEAD
+    * harness JVMs. The per-pid dirs above are written once per
+    * process and never deleted (the process may still be serving
+    * routed queries from them at any point in its life), so across a
+    * round's many harness JVMs they accumulate — the round-12 scale
+    * ladder lost ~26 GB of /tmp to them and crashed mid-run. Scope is
+    * deliberately narrow: only the name shapes THIS object writes
+    * (`…_startree_<pid>_<i>`, and `…_startree_<pid>_6x8_<i>` from
+    * harness versions that tagged the mining shape), and only when the
+    * embedded pid is provably not a live process (a recycled pid keeps
+    * the dir — conservative; a later sweep collects it). The shared
+    * pid-less base dirs (`graft_corpus_fx_<n>`) are never touched:
+    * every process rewrites those before reading them. */
+  private[graft] def sweepStaleFixtureDirs(): Int = {
+    val StFact = """graft_corpus_fx_\d+_(?:stfact|dictfact|dictenc)_(\d+)""".r
+    val StTree = """graft_corpus_fx_\d+_startree_(\d+)_.*""".r
+    def alive(pid: Long): Boolean = {
+      val h = java.lang.ProcessHandle.of(pid)
+      h.isPresent && h.get.isAlive
     }
+    def rmTree(f: java.io.File): Unit = {
+      val kids = f.listFiles()
+      if (kids != null) kids.foreach(rmTree)
+      f.delete()
+    }
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    val entries = Option(tmp.listFiles()).getOrElse(Array.empty[java.io.File])
+    var removed = 0
+    entries.foreach { f =>
+      val stalePid = f.getName match {
+        case StFact(p) => Some(p.toLong)
+        case StTree(p) => Some(p.toLong)
+        case _ => None
+      }
+      stalePid.foreach { p =>
+        if (p != jvmTag && !alive(p)) { rmTree(f); removed += 1 }
+      }
+    }
+    removed
   }
+  sweepStaleFixtureDirs() // once, at first use of the harness in this JVM
 
-  /** HYBRID-table mode — the reference's
-    * `HybridClusterIntegrationTest` dimension (offline segments +
-    * realtime consumption of the SAME data, stitched by the broker's
-    * time boundary): the PQL side answers from
-    * [[graft.streaming.HybridTable.view]] over an offline slice
-    * (rows at or below the median `DaysSinceEpoch` — the "pushed
-    * segments") and a realtime side holding the FULL row stream (the
-    * reference test feeds every Avro row to Kafka, so the sides
-    * overlap on the whole offline range). The boundary stitch must
-    * answer each row EXACTLY once — any leak or double-count breaks
-    * aggregations against the flat twin, which still reads the plain
-    * full table. Cached per (session, numRows) like the base fixture. */
-  @volatile private var cachedHybrid: (SparkSession, Int, DataFrame) = null
+  // ---- the fixture: one cache per session -------------------------------
 
-  def hybridView(spark: SparkSession, numRows: Int = 8000): DataFrame = {
-    val c = cachedHybrid
-    if (c != null && (c._1 eq spark) && c._2 == numRows) return c._3
-    synchronized {
-      val c2 = cachedHybrid
-      if (c2 != null && (c2._1 eq spark) && c2._2 == numRows) return c2._3
-      val fx = fixture(spark, numRows)
-      val timeCol = "DaysSinceEpoch"
-      val cut = fx.mv.selectExpr(s"percentile($timeCol, 0.5)").head().getDouble(0)
-      val offline = fx.mv.filter(org.apache.spark.sql.functions.col(timeCol) <= cut)
-      val view = graft.streaming.HybridTable.view(offline, fx.mv, timeCol).cache()
+  /** The synthesized OnTime fixture of one session, and the one cache of
+    * everything the layouts build over it. `mv` is the MV table the PQL
+    * side reads; `flat` is its H2-style flat twin, registered as temp
+    * view `mytable`, which every hsql reads. [[NumRows]] deterministic
+    * rows of the in-code schema ([[OnTimeCorpus.Schema]]) drawn from
+    * [[OnTimeCorpus.fixturePools]]; needs no file (the corpus, where
+    * present, only adds its mined literals to the pools). The layouts'
+    * structures below are built on first use, under the instance lock
+    * of their lazy vals. */
+  final class Fixture private[CorpusHarness] (val spark: SparkSession) {
+    // round-trip the synthesized frame through parquet before caching:
+    // the synthesis plan embeds the literal pools (~1.7 MB of task
+    // binary with the corpus-mined ones), and every micro-query task
+    // would otherwise ship them — with thousands of harness statements
+    // that serialization dominated wall time ("task of very large
+    // size" warnings). Re-read, each plan is a plain 4-file scan.
+    OnTimeCorpus.synthesize(spark, OnTimeCorpus.Schema, OnTimeCorpus.fixturePools(), NumRows)
+      .write.mode("overwrite").parquet(segDir)
+    val mv: DataFrame = spark.read.parquet(segDir).cache()
+    val flat: DataFrame = OnTimeCorpus.flatten(mv).cache()
+    flat.createOrReplaceTempView("mytable")
+    flat.count() // materialize both caches once
+
+    /** HYBRID-table view — the reference's `HybridClusterIntegrationTest`
+      * dimension (offline segments + realtime consumption of the SAME
+      * data, stitched by the broker's time boundary):
+      * [[graft.streaming.HybridTable.view]] over an offline slice (rows
+      * at or below the median time value — the "pushed segments") and
+      * a realtime side holding the FULL row stream (the reference test
+      * feeds every Avro row to Kafka, so the sides overlap on the whole
+      * offline range). The stitch must answer each row EXACTLY once —
+      * any leak or double-count breaks aggregations against the flat
+      * twin, which still reads the plain full table. */
+    lazy val hybrid: DataFrame = {
+      val timeCol = OnTimeCorpus.TimeColumn
+      val cut = mv.selectExpr(s"percentile($timeCol, 0.5)").head().getDouble(0)
+      val view = graft.streaming.HybridTable.view(mv.filter(col(timeCol) <= cut), mv, timeCol)
+        .cache()
       view.count() // materialize once; micro-queries then scan the cache
-      cachedHybrid = (spark, numRows, view)
       view
     }
+
+    /** The star-trees mined for the harness workload ([[starTreeSpecs]]). */
+    lazy val treeSpecs: Seq[TreeSpec] = starTreeSpecs(this)
+
+    /** [[treeSpecs]] built over the fact copy ([[stFactDir]], written
+      * here) and persisted as parquet, so queries column-prune the
+      * rollup scan like any segment. Enables the routing rules in this
+      * session, as [[dict]] does. */
+    private[pql] lazy val treeIndexes: Seq[graft.plans.StarTree.Index] = {
+      graft.Graft.enable(spark)
+      mv.write.mode("overwrite").parquet(stFactDir)
+      treeSpecs.zipWithIndex.map { case (s, i) =>
+        graft.plans.StarTree.build(mv, s.dims, s.metrics).rollup
+          .write.mode("overwrite").parquet(s"$treeDirPrefix$i")
+        graft.plans.StarTree.Index(s.dims, s.metrics, spark.read.parquet(s"$treeDirPrefix$i"))
+      }
+    }
+
+    /** The dictionary forward-index layout over EVERY single-value
+      * string dimension of the fact copy ([[dictFactDir]], written
+      * here), encoded into [[dictEncDir]]. MV/array columns are not
+      * dictionary-encodable and numerics pass through raw; at fixture
+      * scale each dictionary holds at most [[NumRows]] entries. */
+    lazy val dict: graft.plans.DictLayout.Index = {
+      graft.Graft.enable(spark)
+      mv.write.mode("overwrite").parquet(dictFactDir)
+      val dictCols = mv.schema.fields.filter(_.dataType == StringType).map(_.name).toSeq
+      graft.plans.DictLayout.build(spark, spark.read.parquet(dictFactDir),
+        dictFactDir, dictEncDir, dictCols)
+    }
   }
 
-  // ---- star-tree routed mode --------------------------------------------
+  private var cached: Fixture = null
 
-  /** Parquet dump backing the fixture — the "segment directory" the
-    * star-tree registry keys routing on. */
-  def segDir(numRows: Int = 8000): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_corpus_fx_$numRows"
+  /** This session's fixture, built on first use and then shared by
+    * Verify, Bench and every spec of the JVM. */
+  def fixture(spark: SparkSession): Fixture = synchronized {
+    if (cached == null || !(cached.spark eq spark)) cached = new Fixture(spark)
+    cached
+  }
+
+  // ---- layouts ------------------------------------------------------------
+
+  /** Where the PQL side of a comparison reads from. The hsql twin always
+    * reads the plain flat table, so no layout defect can cancel out.
+    * Each layout owns the table its PQL side reads, the registration
+    * of the segment its routing rule answers from, and the plan
+    * fragments its route [[census]] looks for: `routedRoot`, the copy
+    * it routes onto, and `factRoot`, the raw fact copy it routes away
+    * from. The scan layouts have neither. */
+  sealed abstract class Layout(val name: String, private[pql] val routedRoot: Option[String],
+      private[pql] val factRoot: Option[String]) {
+    /** The table the PQL side reads, built on first use. */
+    private[pql] def table(fx: Fixture): DataFrame
+    private[pql] def register(fx: Fixture): Unit = ()
+    private[pql] def unregister(): Unit = ()
+    /** Whether a plan under this layout can read a routed copy. */
+    def routes: Boolean = routedRoot.nonEmpty
+  }
+
+  object Layout {
+    /** The plain cached fixture table. */
+    case object Plain extends Layout("plain", None, None) {
+      private[pql] def table(fx: Fixture): DataFrame = fx.mv
+    }
+
+    /** The stitched offline∪realtime view ([[Fixture.hybrid]]). */
+    case object Hybrid extends Layout("hybrid", None, None) {
+      private[pql] def table(fx: Fixture): DataFrame = fx.hybrid
+    }
+
+    /** The uncached fact copy with the mined star-tree rollups
+      * registered: [[graft.plans.StarTreeRoutingRule]] answers routable
+      * lines from a rollup, so a routing defect flips `matched`. */
+    case object StarTree extends Layout("startree", Some(treeDirPrefix), Some(stFactDir)) {
+      private[pql] def table(fx: Fixture): DataFrame = {
+        fx.treeIndexes
+        fx.spark.read.parquet(stFactDir)
+      }
+      override private[pql] def register(fx: Fixture): Unit =
+        fx.treeIndexes.foreach(graft.plans.StarTreeRegistry.register(stFactDir, _))
+      override private[pql] def unregister(): Unit =
+        graft.plans.StarTreeRegistry.unregister(stFactDir)
+    }
+
+    /** The uncached fact copy with the dictionary layout registered:
+      * [[graft.plans.DictRoutingRule]] answers routable aggregates and
+      * ordered selections from the encoded copy (int dict ids, decode
+      * at output) while non-routable shapes (MV group keys, transform
+      * group keys) keep the raw scan, so an id-space translation or
+      * decode defect flips `matched`. */
+    case object Dict extends Layout("dict", Some(dictEncDir), Some(dictFactDir)) {
+      private[pql] def table(fx: Fixture): DataFrame = {
+        fx.dict
+        fx.spark.read.parquet(dictFactDir)
+      }
+      override private[pql] def register(fx: Fixture): Unit =
+        graft.plans.DictRegistry.register(dictFactDir, fx.dict)
+      override private[pql] def unregister(): Unit =
+        graft.plans.DictRegistry.unregister(dictFactDir)
+    }
+
+    val all: Seq[Layout] = Seq(Plain, Hybrid, StarTree, Dict)
+
+    def named(name: String): Layout = all.find(_.name == name).getOrElse(
+      throw new IllegalArgumentException(
+        s"unknown layout '$name' (one of ${all.map(_.name).mkString(", ")})"))
+  }
+
+  /** Build everything `layouts` read in this session — the fixture, the
+    * hybrid view, the rollups, the dictionary layout — and return their
+    * tables, in order. [[compare]] and [[census]] start here; Bench
+    * calls it to keep one-time builds out of its timed harness rows. */
+  def prepare(spark: SparkSession, layouts: Seq[Layout]): Seq[DataFrame] = {
+    val fx = fixture(spark)
+    layouts.map(_.table(fx))
+  }
+
+  /** `f` over the tables `layouts` read, with their segments registered
+    * for its duration. */
+  private def withLayouts[A](spark: SparkSession, layouts: Seq[Layout])(
+      f: Seq[DataFrame] => A): A = {
+    val tables = prepare(spark, layouts)
+    val fx = fixture(spark)
+    layouts.foreach(_.register(fx))
+    try f(tables) finally layouts.foreach(_.unregister())
+  }
+
+  // ---- route census -----------------------------------------------------
+
+  /** What one line's optimized plan reads under a layout: `routed` —
+    * its routed copy (a registered rollup, the dictionary-encoded
+    * copy); `scansFact` — its raw fact copy. Routed means the plan
+    * READS the routed copy: absence of the fact scan alone is not
+    * routing, because `LIMIT 0` and contradictory predicates
+    * constant-fold the scan away and a global `COUNT(*)` takes the
+    * metadata-only plan, all without touching a routed copy. A plan may
+    * legitimately read neither; so does a line that does not parse. */
+  final case class Route(routed: Boolean, scansFact: Boolean)
+
+  /** The [[Route]] of each line under `layout`, from its optimized plan
+    * alone (nothing executes). The scan layouts never route. */
+  def census(spark: SparkSession, layout: Layout, lines: Seq[OnTimeCorpus.Line]): Seq[Route] =
+    withLayouts(spark, Seq(layout)) { case Seq(table) =>
+      lines.map { l =>
+        (try Some(Pql.parse(l.pql)) catch { case _: IllegalArgumentException => None }) match {
+          case None => Route(routed = false, scansFact = false)
+          case Some(q) =>
+            val roots = Pql.toDataFrame(q, _ => table).queryExecution.optimizedPlan.collect {
+              case LogicalRelation(fs: HadoopFsRelation, _, _, _, _) =>
+                fs.location.rootPaths.map(_.toString)
+            }.flatten
+            def reads(root: Option[String]) = root.exists(r => roots.exists(_.contains(r)))
+            Route(reads(layout.routedRoot), reads(layout.factRoot))
+        }
+      }
+    }
+
+  // ---- star-tree mining -------------------------------------------------
 
   /** One mined star-tree: the dimensionsSplitOrder + metric columns a
     * reference table config would declare for this workload, plus how
@@ -193,10 +409,8 @@ object CorpusHarness {
     // DecimalType is excluded to mirror the rule exactly: rollupExpr/
     // reAggExpr refuse AVG over decimals (re-summing widens precision)
     (fields.filterNot(_.dataType.isInstanceOf[ArrayType]).map(_.name).toSet,
-      fields.filter(f => f.dataType
-        .isInstanceOf[org.apache.spark.sql.types.NumericType] &&
-        !f.dataType.isInstanceOf[org.apache.spark.sql.types.DecimalType])
-        .map(_.name).toSet)
+      fields.filter(f => f.dataType.isInstanceOf[NumericType] &&
+        !f.dataType.isInstanceOf[DecimalType]).map(_.name).toSet)
   }
 
   private def minedNeeds(fx: Fixture,
@@ -229,14 +443,14 @@ object CorpusHarness {
     * from an ~80-column schema, so no small tree family covers
     * everything — the point is a sizable, *predictable* routed subset
     * whose answers must be bit-identical to the scan plans. */
-  def starTreeSpecs(fx: Fixture, maxTrees: Int = 6, maxDims: Int = 8): Seq[TreeSpec] = {
+  def starTreeSpecs(fx: Fixture): Seq[TreeSpec] = {
     var remaining = minedNeeds(fx, miningWorkload()).map(_._2)
     val out = Seq.newBuilder[TreeSpec]
     var t = 0
-    while (t < maxTrees && remaining.nonEmpty) {
+    while (t < MaxTrees && remaining.nonEmpty) {
       var dims = Set.empty[String]
       var d = 0
-      while (d < maxDims) {
+      while (d < MaxDims) {
         val gain = scala.collection.mutable.Map.empty[String, Int].withDefaultValue(0)
         val freq = scala.collection.mutable.Map.empty[String, Int].withDefaultValue(0)
         remaining.foreach { case (ds, _) =>
@@ -250,7 +464,7 @@ object CorpusHarness {
           else None
         pick match {
           case Some(c) => dims += c; d += 1
-          case None => d = maxDims
+          case None => d = MaxDims
         }
       }
       val spec0 = TreeSpec(dims.toSeq.sorted, Nil, 0)
@@ -268,205 +482,12 @@ object CorpusHarness {
   }
 
   /** Corpus line ids the mining model predicts WILL route given the
-    * built trees — equated with actual plan shape in
+    * built trees — equated with actual plan shape ([[census]]) in
     * CorpusStarTreeSpec. Reads the corpus file. */
   def predictedRoutedIds(fx: Fixture, specs: Seq[TreeSpec]): Set[Int] =
     minedNeeds(fx, OnTimeCorpus.corpus).collect {
       case (id, need) if specs.exists(_.covers(need)) => id
     }.toSet
-
-  /** Fact-segment copy used by star-tree mode. The base fixture's
-    * parquet is CACHED (`fixture` calls `.cache()`), and Spark's cache
-    * manager substitutes the InMemoryRelation for ANY read of the same
-    * path — which would bypass the routing rule (it matches file
-    * scans) and make the whole mode vacuous. A distinct path defeats
-    * the fragment match, so star-tree queries really hit a
-    * `LogicalRelation` the rule can rewrite. Tagged with the JVM pid:
-    * unlike the base fixture (which each process rewrites once before
-    * reading), these dirs are written and read while OTHER harness
-    * JVMs may be doing the same, and two writers corrupt each other's
-    * `_temporary` commit dirs. */
-  private val jvmTag: Long = java.lang.ProcessHandle.current().pid()
-
-  def stFactDir(numRows: Int = 8000): String = s"${segDir(numRows)}_stfact_$jvmTag"
-
-  /** One-shot startup sweep of fixture dirs left behind by DEAD
-    * harness JVMs. The per-pid dirs above are written once per
-    * process and never deleted (the process may still be serving
-    * routed queries from them at any point in its life), so across a
-    * round's many harness JVMs they accumulate — the round-12 scale
-    * ladder lost ~26 GB of /tmp to them and crashed mid-run. Scope is
-    * deliberately narrow: only the two name shapes THIS object
-    * writes, and only when the embedded pid is provably not a live
-    * process (a recycled pid keeps the dir — conservative; a later
-    * sweep collects it). The shared pid-less base dirs
-    * (`graft_corpus_fx_<n>`) are never touched: every process
-    * rewrites those before reading them. */
-  private[graft] def sweepStaleFixtureDirs(): Int = {
-    val StFact = """graft_corpus_fx_\d+_(?:stfact|dictfact|dictenc)_(\d+)""".r
-    val StTree = """graft_corpus_fx_\d+_startree_(\d+)_.*""".r
-    def alive(pid: Long): Boolean = {
-      val h = java.lang.ProcessHandle.of(pid)
-      h.isPresent && h.get.isAlive
-    }
-    def rmTree(f: java.io.File): Unit = {
-      val kids = f.listFiles()
-      if (kids != null) kids.foreach(rmTree)
-      f.delete()
-    }
-    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
-    val entries = Option(tmp.listFiles()).getOrElse(Array.empty[java.io.File])
-    var removed = 0
-    entries.foreach { f =>
-      val stalePid = f.getName match {
-        case StFact(p) => Some(p.toLong)
-        case StTree(p) => Some(p.toLong)
-        case _ => None
-      }
-      stalePid.foreach { p =>
-        if (p != jvmTag && !alive(p)) { rmTree(f); removed += 1 }
-      }
-    }
-    removed
-  }
-  sweepStaleFixtureDirs() // once, at first use of the harness in this JVM
-
-  @volatile private var builtTrees: (SparkSession, (Int, Int, Int), Seq[TreeSpec]) = null
-
-  /** Build, persist (parquet — queries then column-prune the rollup
-    * scan like any segment), and register the mined trees for the
-    * star-tree fact segment ([[stFactDir]], also written here). Caller
-    * owns cleanup: `StarTreeRegistry.unregister(stFactDir(numRows))`.
-    * The expensive part (mining + 6 cube builds + parquet writes) runs
-    * once per (session, numRows) under the default shape; repeat calls
-    * only re-register the already-persisted rollups. */
-  def registerCorpusTrees(spark: SparkSession, fx: Fixture,
-      numRows: Int = 8000, maxTrees: Int = 6, maxDims: Int = 8): Seq[TreeSpec] = {
-    // paths carry the mining SHAPE too: a non-default-shape call must
-    // never overwrite files a cached default-shape registration will
-    // re-read (shape-blind paths + shape-keyed cache = poisoned pairs)
-    def treePath(i: Int) =
-      s"${segDir(numRows)}_startree_${jvmTag}_${maxTrees}x${maxDims}_$i"
-    val key = (numRows, maxTrees, maxDims)
-    val cached = builtTrees
-    val specs =
-      if (cached != null && (cached._1 eq spark) && cached._2 == key)
-        cached._3
-      else synchronized {
-        val c2 = builtTrees
-        if (c2 != null && (c2._1 eq spark) && c2._2 == key) c2._3
-        else {
-          fx.mv.write.mode("overwrite").parquet(stFactDir(numRows))
-          val built = starTreeSpecs(fx, maxTrees, maxDims)
-          built.zipWithIndex.foreach { case (s, i) =>
-            graft.plans.StarTree.build(fx.mv, s.dims, s.metrics).rollup
-              .write.mode("overwrite").parquet(treePath(i))
-          }
-          builtTrees = (spark, key, built)
-          built
-        }
-      }
-    specs.zipWithIndex.foreach { case (s, i) =>
-      graft.plans.StarTreeRegistry.register(stFactDir(numRows),
-        graft.plans.StarTree.Index(s.dims, s.metrics,
-          spark.read.parquet(treePath(i))))
-    }
-    specs
-  }
-
-  // ---- dictionary-layout routed mode -------------------------------------
-
-  /** Fact-segment copy + encoded copy used by dict mode — pid-tagged
-    * for the same write-collision reasons as [[stFactDir]] (and swept
-    * by [[sweepStaleFixtureDirs]] once the JVM dies). */
-  def dictFactDir(numRows: Int = 8000): String = s"${segDir(numRows)}_dictfact_$jvmTag"
-  def dictEncDir(numRows: Int = 8000): String = s"${segDir(numRows)}_dictenc_$jvmTag"
-
-  @volatile private var builtDict: (SparkSession, Int, graft.plans.DictLayout.Index) = null
-
-  /** Build (once per session/numRows), persist, and REGISTER the
-    * dictionary forward-index layout over EVERY single-value string
-    * dimension of the fixture — [[graft.plans.DictRoutingRule]] then
-    * answers routable aggregates and ordered selections from the
-    * encoded copy ([[dictEncDir]]) while non-routable shapes (MV
-    * group keys, transform group keys) keep the raw scan. Corpus and
-    * generated lines run unchanged; the hsql twin still reads the
-    * plain flat table, so any id-space translation or decode defect
-    * flips `matched`. Caller owns
-    * `DictRegistry.unregister(dictFactDir(numRows))`. */
-  def registerCorpusDict(spark: SparkSession, fx: Fixture,
-      numRows: Int = 8000): graft.plans.DictLayout.Index = {
-    val cached = builtDict
-    val idx =
-      if (cached != null && (cached._1 eq spark) && cached._2 == numRows) cached._3
-      else synchronized {
-        val c2 = builtDict
-        if (c2 != null && (c2._1 eq spark) && c2._2 == numRows) c2._3
-        else {
-          fx.mv.write.mode("overwrite").parquet(dictFactDir(numRows))
-          // every SV string dimension (MV/array columns are not
-          // dictionary-encodable; numerics pass through raw) — at
-          // fixture scale each dictionary is ≤ numRows entries
-          val dictCols = fx.mv.schema.fields
-            .filter(_.dataType == org.apache.spark.sql.types.StringType)
-            .map(_.name).toSeq
-          val built = graft.plans.DictLayout.build(
-            spark, spark.read.parquet(dictFactDir(numRows)),
-            dictFactDir(numRows), dictEncDir(numRows), dictCols)
-          builtDict = (spark, numRows, built)
-          built
-        }
-      }
-    graft.plans.DictRegistry.register(dictFactDir(numRows), idx)
-    idx
-  }
-
-  /** (answered-from-encoded-copy, still-scans-raw-fact) for one
-    * line's optimized plan under dict mode — same contract as
-    * [[routeCensus]]: "routed" means the plan READS the encoded copy;
-    * a plan may legitimately be neither (constant-folded scans,
-    * metadata-only COUNT). */
-  def dictCensus(q: Pql.Query, pqlTable: DataFrame,
-      numRows: Int = 8000): (Boolean, Boolean) = {
-    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-    val plan = Pql.toDataFrame(q, _ => pqlTable).queryExecution.optimizedPlan
-    var routed = false
-    var scansFact = false
-    plan.foreach {
-      case LogicalRelation(fs: HadoopFsRelation, _, _, _, _) =>
-        val roots = fs.location.rootPaths.map(_.toString)
-        if (roots.exists(_.contains(dictEncDir(numRows)))) routed = true
-        if (roots.exists(_.contains(dictFactDir(numRows)))) scansFact = true
-      case _ => ()
-    }
-    (routed, scansFact)
-  }
-
-  /** (answered-from-rollup, still-scans-fact) for one line's optimized
-    * plan. "Routed" means the plan READS a registered rollup — absence
-    * of the fact scan alone is not routing: `LIMIT 0` and
-    * contradictory predicates constant-fold the scan away entirely,
-    * and a global `COUNT(*)` takes the metadata-only plan, all without
-    * touching a rollup. A plan may legitimately be neither. */
-  def routeCensus(q: Pql.Query, pqlTable: DataFrame,
-      numRows: Int = 8000): (Boolean, Boolean) = {
-    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-    val plan = Pql.toDataFrame(q, _ => pqlTable).queryExecution.optimizedPlan
-    var routed = false
-    var scansFact = false
-    plan.foreach {
-      case LogicalRelation(fs: HadoopFsRelation, _, _, _, _) =>
-        val roots = fs.location.rootPaths.map(_.toString)
-        if (roots.exists(_.contains(s"${segDir(numRows)}_startree_"))) routed = true
-        if (roots.exists(_.contains(stFactDir(numRows)))) scansFact = true
-      case _ => ()
-    }
-    (routed, scansFact)
-  }
-
-  /** Was this line answered from a registered rollup? */
-  def isRouted(q: Pql.Query, pqlTable: DataFrame, numRows: Int = 8000): Boolean =
-    routeCensus(q, pqlTable, numRows)._1
 
   // ---- canonical values -------------------------------------------------
 
@@ -495,117 +516,143 @@ object CorpusHarness {
   private def fuzzyEq(a: Double, b: Double): Boolean =
     a == b || math.abs(a - b) <= 1e-9 * math.max(1.0, math.max(math.abs(a), math.abs(b)))
 
+
   // ---- per-line comparison ---------------------------------------------
 
   final case class Outcome(id: Int, matched: Boolean, mode: String, reason: String)
 
-  def compareLine(spark: SparkSession, fx: Fixture, line: OnTimeCorpus.Line): Outcome =
-    compareLine(spark, fx, line, fx.mv)
+  /** Every line PQL-vs-hsql under every layout in `layouts`: each line
+    * is parsed and its hsql twin collected ONCE, then each layout's PQL
+    * answer is checked against that twin. Lines run on the driver pool
+    * under the micro-query confs; outcomes keep `lines` order. */
+  def compare(spark: SparkSession, lines: Seq[OnTimeCorpus.Line],
+      layouts: Seq[Layout]): Map[Layout, Seq[Outcome]] = {
+    val fx = fixture(spark)
+    val perLine = withLayouts(spark, layouts) { tables =>
+      parMap(spark, lines)(l => compareLine(spark, fx, l, tables))
+    }
+    layouts.zipWithIndex.map { case (layout, i) => layout -> perLine.map(_(i)) }.toMap
+  }
 
-  /** As [[compareLine]], but the PQL side reads `pqlTable` (the hybrid
-    * stitched view in hybrid mode); the hsql side always reads the
-    * plain flat twin, so a stitch defect cannot cancel out. */
-  def compareLine(spark: SparkSession, fx: Fixture, line: OnTimeCorpus.Line,
-      pqlTable: DataFrame): Outcome = {
+  /** One outcome per table: the twin is collected first, then each
+    * table's PQL answer checked against it. A line that does not parse
+    * or whose twin fails is an error under every table. */
+  private def compareLine(spark: SparkSession, fx: Fixture, line: OnTimeCorpus.Line,
+      tables: Seq[DataFrame]): Seq[Outcome] = {
+    def error(e: Exception) = Outcome(line.id, matched = false, "error",
+      s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(200)}")
     try {
       val q = Pql.parse(line.pql)
-      val pqlDf = Pql.toDataFrame(q, _ => pqlTable)
       val selAggs = q.select.filter(Pql.isAggExpr)
-      if (selAggs.nonEmpty && q.groupBy.isEmpty) compareAggOnly(spark, line, q, pqlDf, selAggs)
-      else if (q.groupBy.nonEmpty) compareGroupBy(spark, line, q, pqlDf, selAggs)
-      else compareSelection(spark, fx, line, q, pqlDf)
-    } catch {
-      case e: Exception =>
-        Outcome(line.id, matched = false, "error", s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(200)}")
-    }
+      val check: DataFrame => Outcome =
+        if (selAggs.nonEmpty && q.groupBy.isEmpty) aggOnlyCheck(spark, line, selAggs)
+        else if (q.groupBy.nonEmpty) groupByCheck(spark, line, q, selAggs)
+        else selectionCheck(spark, fx, line, q)
+      tables.map { t =>
+        try check(Pql.toDataFrame(q, _ => t))
+        catch { case e: Exception => error(e) }
+      }
+    } catch { case e: Exception => tables.map(_ => error(e)) }
   }
 
-  private def compareAggOnly(spark: SparkSession, line: OnTimeCorpus.Line,
-      q: Pql.Query, pqlDf: DataFrame, selAggs: Seq[Pql.Expr]): Outcome = {
+  private def aggOnlyCheck(spark: SparkSession, line: OnTimeCorpus.Line,
+      selAggs: Seq[Pql.Expr]): DataFrame => Outcome = {
     require(line.hsqls.length == selAggs.length,
       s"hsql count ${line.hsqls.length} != aggregation count ${selAggs.length}")
-    val row = pqlDf.head()
-    var i = 0
-    while (i < selAggs.length) {
-      val h2 = spark.sql(line.hsqls(i)).head()
-      val expected = toDouble(h2.get(0))
-      val actual = toDouble(row.get(i))
-      val isCount = selAggs(i) match {
-        case Pql.Func(n, _) => n == "count"
-        case _ => false
-      }
-      (expected, actual) match {
-        case (None, None) => () // both empty-input nulls
-        case (None, Some(a)) =>
-          // H2 null ⟺ zero docs selected (ref lines 549-559); COUNT
-          // over zero docs is 0 on the engine side, not null
-          if (!(isCount && a == 0.0))
+    val expected = line.hsqls.map(h => toDouble(spark.sql(h).head().get(0)))
+    // a method, not a lambda: its early returns must return from it
+    def check(pqlDf: DataFrame): Outcome = {
+      val row = pqlDf.head()
+      var i = 0
+      while (i < selAggs.length) {
+        val actual = toDouble(row.get(i))
+        val isCount = selAggs(i) match {
+          case Pql.Func(n, _) => n == "count"
+          case _ => false
+        }
+        (expected(i), actual) match {
+          case (None, None) => () // both empty-input nulls
+          case (None, Some(a)) =>
+            // H2 null ⟺ zero docs selected (ref lines 549-559); COUNT
+            // over zero docs is 0 on the engine side, not null
+            if (!(isCount && a == 0.0))
+              return Outcome(line.id, matched = false, "agg",
+                s"agg $i: H2 empty but engine returned $a")
+          case (Some(e), Some(a)) =>
+            if (!fuzzyEq(a, e))
+              return Outcome(line.id, matched = false, "agg",
+                s"agg $i: expected $e got $a")
+          case (Some(e), None) =>
             return Outcome(line.id, matched = false, "agg",
-              s"agg $i: H2 empty but engine returned $a")
-        case (Some(e), Some(a)) =>
-          if (!fuzzyEq(a, e))
-            return Outcome(line.id, matched = false, "agg",
-              s"agg $i: expected $e got $a")
-        case (Some(e), None) =>
-          return Outcome(line.id, matched = false, "agg",
-            s"agg $i: expected $e got null")
+              s"agg $i: expected $e got null")
+        }
+        i += 1
       }
-      i += 1
+      Outcome(line.id, matched = true, "agg", "")
     }
-    Outcome(line.id, matched = true, "agg", "")
+    check
   }
 
-  private def compareGroupBy(spark: SparkSession, line: OnTimeCorpus.Line,
-      q: Pql.Query, pqlDf: DataFrame, selAggs: Seq[Pql.Expr]): Outcome = {
+  private def groupByCheck(spark: SparkSession, line: OnTimeCorpus.Line,
+      q: Pql.Query, selAggs: Seq[Pql.Expr]): DataFrame => Outcome = {
     require(line.hsqls.length == selAggs.length,
       s"hsql count ${line.hsqls.length} != aggregation count ${selAggs.length}")
     val nKeys = q.groupBy.length
-    val pqlRows = pqlDf.collect()
-    // TOP trim contract: the engine returns at most TOP n groups
-    // (default 10). Without this, generated `TOP 0` lines pass
-    // vacuously under containment (zero rows are trivially contained)
-    // — this makes those lines test the trim itself, and catches any
-    // over-return on every corpus/generated line for free.
-    val topCap = q.top.getOrElse(10)
-    if (pqlRows.length > topCap)
-      return Outcome(line.id, matched = false, "groupby",
-        s"TOP $topCap but engine returned ${pqlRows.length} groups")
-    var i = 0
-    while (i < selAggs.length) {
-      val h2Rows = spark.sql(line.hsqls(i)).collect()
-      if (h2Rows.length >= MaxRowsToCompare)
-        return Outcome(line.id, matched = true, "groupby", "skipped: H2 not exhausted")
-      val expected: Map[String, Any] = h2Rows.map { r =>
-        (0 until nKeys).map(k => canon(r.get(k))).mkString("\u0001") -> r.get(nKeys)
-      }.toMap
-      if (expected.isEmpty) {
-        if (pqlRows.nonEmpty)
-          return Outcome(line.id, matched = false, "groupby",
-            s"agg $i: H2 returned no groups but engine returned ${pqlRows.length}")
-      } else {
-        // containment: TOP trims the engine side (ref lines 631-660)
-        for (r <- pqlRows) {
-          val key = (0 until nKeys).map(k => canon(r.get(k))).mkString("\u0001")
-          expected.get(key) match {
-            case None =>
-              return Outcome(line.id, matched = false, "groupby",
-                s"agg $i: group [$key] returned by engine but absent in H2")
-            case Some(h2v) =>
-              val e = toDouble(h2v)
-              val a = toDouble(r.get(nKeys + i))
-              if (e.isDefined != a.isDefined || e.exists(ev => !fuzzyEq(a.get, ev)))
+    def key(r: Row): String = (0 until nKeys).map(k => canon(r.get(k))).mkString("\u0001")
+    // per aggregation: group key -> H2 value, or None when H2 hit the
+    // row cap (the reference then skips the comparison)
+    val twins: Seq[Option[Map[String, Any]]] = line.hsqls.map { h =>
+      val h2Rows = spark.sql(h).collect()
+      if (h2Rows.length >= MaxRowsToCompare) None
+      else Some(h2Rows.map(r => key(r) -> r.get(nKeys)).toMap)
+    }
+    def check(pqlDf: DataFrame): Outcome = {
+      val pqlRows = pqlDf.collect()
+      // TOP trim contract: the engine returns at most TOP n groups
+      // (default 10). Without this, generated `TOP 0` lines pass
+      // vacuously under containment (zero rows are trivially contained)
+      // — this makes those lines test the trim itself, and catches any
+      // over-return on every corpus/generated line for free.
+      val topCap = q.top.getOrElse(10)
+      if (pqlRows.length > topCap)
+        return Outcome(line.id, matched = false, "groupby",
+          s"TOP $topCap but engine returned ${pqlRows.length} groups")
+      var i = 0
+      while (i < selAggs.length) {
+        val expected = twins(i) match {
+          case Some(m) => m
+          case None => return Outcome(line.id, matched = true, "groupby", "skipped: H2 not exhausted")
+        }
+        if (expected.isEmpty) {
+          if (pqlRows.nonEmpty)
+            return Outcome(line.id, matched = false, "groupby",
+              s"agg $i: H2 returned no groups but engine returned ${pqlRows.length}")
+        } else {
+          // containment: TOP trims the engine side (ref lines 631-660)
+          for (r <- pqlRows) {
+            val k = key(r)
+            expected.get(k) match {
+              case None =>
                 return Outcome(line.id, matched = false, "groupby",
-                  s"agg $i group [$key]: expected $h2v got ${r.get(nKeys + i)}")
+                  s"agg $i: group [$k] returned by engine but absent in H2")
+              case Some(h2v) =>
+                val e = toDouble(h2v)
+                val a = toDouble(r.get(nKeys + i))
+                if (e.isDefined != a.isDefined || e.exists(ev => !fuzzyEq(a.get, ev)))
+                  return Outcome(line.id, matched = false, "groupby",
+                    s"agg $i group [$k]: expected $h2v got ${r.get(nKeys + i)}")
+            }
           }
         }
+        i += 1
       }
-      i += 1
+      Outcome(line.id, matched = true, "groupby", "")
     }
-    Outcome(line.id, matched = true, "groupby", "")
+    check
   }
 
-  private def compareSelection(spark: SparkSession, fx: Fixture,
-      line: OnTimeCorpus.Line, q: Pql.Query, pqlDf: DataFrame): Outcome = {
+  private def selectionCheck(spark: SparkSession, fx: Fixture,
+      line: OnTimeCorpus.Line, q: Pql.Query): DataFrame => Outcome = {
     val mvCols = fx.mv.schema.fields.collect {
       case f if f.dataType.isInstanceOf[ArrayType] => f.name.toLowerCase
     }.toSet
@@ -615,7 +662,7 @@ object CorpusHarness {
     }
     val h2Rows = spark.sql(line.hsqls.head).collect()
     if (h2Rows.length >= MaxRowsToCompare)
-      return Outcome(line.id, matched = true, "selection", "skipped: H2 not exhausted")
+      return _ => Outcome(line.id, matched = true, "selection", "skipped: H2 not exhausted")
 
     // H2 rows: each MV select item occupies five __MVi columns
     def h2Canon(r: Row): String = {
@@ -631,92 +678,63 @@ object CorpusHarness {
       }.mkString("\u0001")
 
     val expected = h2Rows.map(h2Canon).toSet
-    val pqlRows = pqlDf.collect()
-    // LIMIT trim contract (mirror of the group-by TOP cap): at most
-    // `size` rows (default 10) — generated `LIMIT 0` lines then test
-    // the trim instead of passing vacuously under containment.
-    val limitCap = q.limit.map(_._2).getOrElse(10)
-    if (pqlRows.length > limitCap)
-      return Outcome(line.id, matched = false, "selection",
-        s"LIMIT $limitCap but engine returned ${pqlRows.length} rows")
-    if (expected.isEmpty) {
-      if (pqlRows.nonEmpty)
+    def check(pqlDf: DataFrame): Outcome = {
+      val pqlRows = pqlDf.collect()
+      // LIMIT trim contract (mirror of the group-by TOP cap): at most
+      // `size` rows (default 10) — generated `LIMIT 0` lines then test
+      // the trim instead of passing vacuously under containment.
+      val limitCap = q.limit.map(_._2).getOrElse(10)
+      if (pqlRows.length > limitCap)
         return Outcome(line.id, matched = false, "selection",
-          s"H2 returned no rows but engine returned ${pqlRows.length}")
-      return Outcome(line.id, matched = true, "selection", "")
+          s"LIMIT $limitCap but engine returned ${pqlRows.length} rows")
+      if (expected.isEmpty) {
+        if (pqlRows.nonEmpty)
+          return Outcome(line.id, matched = false, "selection",
+            s"H2 returned no rows but engine returned ${pqlRows.length}")
+        return Outcome(line.id, matched = true, "selection", "")
+      }
+      for (r <- pqlRows) {
+        val v = pqlCanon(r)
+        if (!expected.contains(v))
+          return Outcome(line.id, matched = false, "selection",
+            s"row returned by engine but absent in H2: ${v.replace('\u0001', '|').take(200)}")
+      }
+      Outcome(line.id, matched = true, "selection", "")
     }
-    for (r <- pqlRows) {
-      val v = pqlCanon(r)
-      if (!expected.contains(v))
-        return Outcome(line.id, matched = false, "selection",
-          s"row returned by engine but absent in H2: ${v.replace('\u0001', '|').take(200)}")
-    }
-    Outcome(line.id, matched = true, "selection", "")
+    check
   }
 
-  // ---- entry points -----------------------------------------------------
+  // ---- driver pool --------------------------------------------------------
 
   /** Micro-query regime for the harness only: the fixture is a few
     * thousand cached rows, so AQE's stage-by-stage resubmission and
     * multi-partition exchanges cost more than the queries themselves
-    * (measured ~100× on the full sweep). Session confs are set for the
-    * duration of `f` and restored — engine defaults elsewhere are
-    * untouched. Safe because harness entry points run single-caller. */
-  private def withMicroQueryConf[A](spark: SparkSession)(f: => A): A = {
-    val parts = spark.conf.get("spark.sql.shuffle.partitions")
-    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.shuffle.partitions", "1")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try f
+    * (measured ~100× on the full sweep). */
+  private val MicroQueryConfs = Seq(
+    "spark.sql.shuffle.partitions" -> "1",
+    "spark.sql.adaptive.enabled" -> "false")
+
+  /** `f` over `items` on a pool of [[Parallelism]] driver threads under
+    * [[MicroQueryConfs]], results in `items` order. Each item is a
+    * handful of tiny jobs over the cached fixture, so per-job
+    * scheduling latency, not compute, is the bottleneck; concurrent
+    * submission overlaps it. The session confs are restored afterwards
+    * — safe because harness entry points run single-caller. */
+  private def parMap[A, B](spark: SparkSession, items: Seq[A])(f: A => B): Seq[B] = {
+    val saved = MicroQueryConfs.map { case (k, _) => k -> spark.conf.get(k) }
+    MicroQueryConfs.foreach { case (k, v) => spark.conf.set(k, v) }
+    val pool = Executors.newFixedThreadPool(Parallelism)
+    try items.map(a => pool.submit(new Callable[B] { def call(): B = f(a) })).map(_.get())
     finally {
-      spark.conf.set("spark.sql.shuffle.partitions", parts)
-      spark.conf.set("spark.sql.adaptive.enabled", aqe)
+      pool.shutdown()
+      saved.foreach { case (k, v) => spark.conf.set(k, v) }
     }
   }
 
-  /** Run corpus lines through [[compareLine]] on a driver-side thread
-    * pool — each line is a handful of tiny jobs over the cached
-    * fixture, so the bottleneck is per-job scheduling latency, not
-    * compute; concurrent submission overlaps it (Spark's scheduler is
-    * built for multi-threaded drivers). Results keep `lines` order. */
-  /** Driver-pool width for [[compareAll]] — the work is per-line query
-    * PLANNING (parse/analyze over the 115-column fixture) plus tiny
-    * jobs, both of which overlap across threads; GRAFT_CORPUS_PAR
-    * overrides for tuning runs. */
-  private def defaultParallelism: Int =
-    sys.env.get("GRAFT_CORPUS_PAR").map(_.toInt).getOrElse(8)
+  // ---- line sets and self-oracles ---------------------------------------
 
-  def compareAll(spark: SparkSession, fx: Fixture,
-      lines: Seq[OnTimeCorpus.Line], parallelism: Int = defaultParallelism,
-      pqlTable: DataFrame = null): Seq[Outcome] =
-    withMicroQueryConf(spark) {
-      val table = if (pqlTable == null) fx.mv else pqlTable
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(parallelism)
-      try {
-        val futures = lines.map { l =>
-          pool.submit(new java.util.concurrent.Callable[Outcome] {
-            def call(): Outcome = compareLine(spark, fx, l, table)
-          })
-        }
-        futures.map(_.get())
-      } finally { pool.shutdown(); () }
-    }
-
-  /** Run a set of corpus lines, returning (line_id, mode, matched,
-    * reason) — the `q_corpus_sample` surface; `hybrid = true` answers
-    * the PQL side from the stitched offline∪realtime view;
-    * `starTree = true` reads the fact from its (uncached) parquet
-    * segment with the mined rollup trees registered, so routable lines
-    * are answered by [[graft.plans.StarTreeRoutingRule]] — a routing
-    * defect then flips `matched` against the plain-table hsql twin.
-    * `dict = true` likewise reads a raw fact copy with the dictionary
-    * layout registered ([[registerCorpusDict]]), so
-    * [[graft.plans.DictRoutingRule]] answers routable aggregates and
-    * ordered selections from the encoded copy. */
-  def runLines(spark: SparkSession, ids: Seq[Int], numRows: Int = 8000,
-      hybrid: Boolean = false, starTree: Boolean = false,
-      dict: Boolean = false): DataFrame =
-    runLineSet(spark, corpusLines(ids), numRows, hybrid, starTree, dict)
+  /** Deterministic sample: every `step`-th line id. */
+  def sampleIds(step: Int): Seq[Int] = 0 until 10000 by step
 
   /** The corpus lines with these ids, in `ids` order. Reads the corpus
     * file, so a missing file fails with its path. */
@@ -725,113 +743,107 @@ object CorpusHarness {
     ids.map(byId)
   }
 
-  /** As [[runLines]] but over an explicit line set (the [[QueryGen]]
-    * surfaces feed generated lines through the same fixture modes). */
-  def runLineSet(spark: SparkSession, lines: Seq[OnTimeCorpus.Line],
-      numRows: Int = 8000, hybrid: Boolean = false,
-      starTree: Boolean = false, dict: Boolean = false): DataFrame = {
-    val fx = fixture(spark, numRows)
-    val table =
-      if (hybrid) hybridView(spark, numRows)
-      else if (starTree) {
-        graft.Graft.enable(spark)
-        registerCorpusTrees(spark, fx, numRows)
-        spark.read.parquet(stFactDir(numRows))
-      } else if (dict) {
-        graft.Graft.enable(spark)
-        registerCorpusDict(spark, fx, numRows)
-        spark.read.parquet(dictFactDir(numRows))
-      } else fx.mv
-    try {
-      val outcomes = compareAll(spark, fx, lines, pqlTable = table)
-      import spark.implicits._
-      outcomes.map(o => (o.id, o.mode, o.matched, o.reason))
-        .toDF("line_id", "mode", "matched", "reason")
-    } finally {
-      if (starTree) graft.plans.StarTreeRegistry.unregister(stFactDir(numRows))
-      if (dict) graft.plans.DictRegistry.unregister(dictFactDir(numRows))
+  /** The aggregation-only lines (no GROUP BY, every select item an
+    * aggregation) of `lines`, in order: scalar results, exact DuckDB
+    * oracle material. Spark-free, so oracles built from it stay static
+    * contracts. */
+  def aggOnly(lines: Seq[OnTimeCorpus.Line]): Seq[OnTimeCorpus.Line] =
+    lines.filter { l =>
+      val q = try Some(Pql.parse(l.pql)) catch { case _: IllegalArgumentException => None }
+      q.exists(p => p.groupBy.isEmpty && p.select.nonEmpty && p.select.forall(Pql.isAggExpr))
     }
+
+  /** Static self-oracle of a gate row: these line ids, all expected to
+    * match — a mismatch on ANY line flips its `matched` cell and fails
+    * the DuckDB oracle compare. */
+  def selfOracle(ids: Seq[Int]): String = {
+    val values = ids.map(i => s"($i)").mkString(",")
+    s"SELECT line_id, TRUE AS matched FROM (VALUES $values) t(line_id) ORDER BY line_id"
   }
 
-  /** Deterministic sample: every `step`-th line id. */
-  def sampleIds(step: Int): Seq[Int] = 0 until 10000 by step
+  // ---- DuckDB-valued slices ---------------------------------------------
 
-  /** The first `k` aggregation-only corpus lines (deterministic scalar
-    * results → exact DuckDB oracle material). Spark-free: `oracleSql`
-    * is a static contract, so this reads and parses the corpus only. */
-  def aggOnlyLines(k: Int): Vector[OnTimeCorpus.Line] =
-    OnTimeCorpus.corpus.filter { l =>
-      val q = try Some(Pql.parse(l.pql)) catch { case _: IllegalArgumentException => None }
-      q.exists(p => p.groupBy.isEmpty && p.select.forall(Pql.isAggExpr) && p.select.nonEmpty)
-    }.take(k)
-
-  /** PQL-side frame for the DuckDB-checked slice: one row per
-    * (line_id, agg_idx) with the aggregation value rounded to 6
-    * places — the oracle runs the paired hsqls in DuckDB over the
-    * parquet dump of the same synthesized table. */
-  def duckSlice(spark: SparkSession, k: Int, numRows: Int = 8000): DataFrame =
-    duckSliceFor(spark, aggOnlyLines(k), numRows)
-
-  /** [[duckSlice]] over an arbitrary aggregation-only line set (the
-    * [[QueryGen]] slice reuses the exact same machinery). */
-  def duckSliceFor(spark: SparkSession, lines: Seq[OnTimeCorpus.Line],
-      numRows: Int = 8000): DataFrame = {
-    val fx = fixture(spark, numRows)
+  /** PQL-side frame of a DuckDB-checked aggregation slice: one row per
+    * (line_id, agg_idx) with the aggregation value rounded to 6 places
+    * — the oracle ([[duckOracle]]) runs the paired hsqls in DuckDB over
+    * the parquet dump of the same synthesized table. */
+  def duckSlice(spark: SparkSession, lines: Seq[OnTimeCorpus.Line]): DataFrame = {
+    val fx = fixture(spark)
     import spark.implicits._
-    val slice: Seq[(Int, Int, java.lang.Double)] = withMicroQueryConf(spark) {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
-      try {
-        val futures = lines.map { l =>
-          pool.submit(new java.util.concurrent.Callable[Seq[(Int, Int, java.lang.Double)]] {
-            def call(): Seq[(Int, Int, java.lang.Double)] = {
-              val q = Pql.parse(l.pql)
-              val row = Pql.toDataFrame(q, _ => fx.mv).head()
-              q.select.indices.map { i =>
-                val v: java.lang.Double = toDouble(row.get(i))
-                  .map(d => BigDecimal(d).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)
-                  .map(Double.box).orNull
-                (l.id, i, v)
-              }
-            }
-          })
-        }
-        futures.flatMap(_.get())
-      } finally { pool.shutdown(); () }
-    }
+    val slice: Seq[(Int, Int, java.lang.Double)] = parMap(spark, lines) { l =>
+      val q = Pql.parse(l.pql)
+      val row = Pql.toDataFrame(q, _ => fx.mv).head()
+      q.select.indices.map { i =>
+        val v: java.lang.Double = toDouble(row.get(i))
+          .map(d => BigDecimal(d).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)
+          .map(Double.box).orNull
+        (l.id, i, v)
+      }
+    }.flatten
     slice.toDF("line_id", "agg_idx", "value")
       .orderBy("line_id", "agg_idx")
   }
 
-  /** DuckDB oracle SQL for [[duckSlice]]: each hsql rewritten to read
-    * the flat parquet dump (`{OUT}` is substituted by Verify with the
-    * output dir at dump time). */
-  def duckSliceOracle(k: Int): String = duckSliceOracleFor(aggOnlyLines(k))
+  /** An hsql as DuckDB runs it: reading the flat parquet dump (`{OUT}`
+    * is substituted by Verify with the output dir at dump time), with
+    * Spark's `regexp_like` renamed to DuckDB's `regexp_matches` (same
+    * partial-match semantics) and Spark's exact `percentile` to
+    * DuckDB's `quantile_cont` (same (n−1)·q linear interpolation).
+    * Generated lines carry both names; fixed-corpus hsqls neither. */
+  private def duckSql(hsql: String): String =
+    hsql.replaceAll("(?i)\\bFROM\\s+mytable\\b",
+        "FROM read_parquet('{OUT}_aux/corpus_flat_parquet/*.parquet')")
+      .replaceAll("(?i)\\bregexp_like\\(", "regexp_matches(")
+      .replaceAll("(?i)\\bpercentile\\(", "quantile_cont(")
 
-  /** [[duckSliceOracle]] over an arbitrary aggregation-only line set;
-    * also renames Spark's `regexp_like` to DuckDB's `regexp_matches`
-    * (same partial-match semantics, different name — generated lines
-    * carry regex predicates the corpus does not) and Spark's exact
-    * `percentile` to DuckDB's `quantile_cont` (same (n−1)·q linear
-    * interpolation — the mode-B slice carries exact-percentile
-    * aggregations; fixed-corpus hsqls contain neither name). */
-  def duckSliceOracleFor(lines: Seq[OnTimeCorpus.Line]): String = {
+  /** DuckDB oracle SQL for [[duckSlice]] over the same lines. */
+  def duckOracle(lines: Seq[OnTimeCorpus.Line]): String = {
     val parts = lines.flatMap { l =>
       l.hsqls.zipWithIndex.map { case (h, i) =>
-        val scalar = h.replaceAll("(?i)\\bFROM\\s+mytable\\b",
-            "FROM read_parquet('{OUT}_aux/corpus_flat_parquet/*.parquet')")
-          .replaceAll("(?i)\\bregexp_like\\(", "regexp_matches(")
-          .replaceAll("(?i)\\bpercentile\\(", "quantile_cont(")
-        s"SELECT ${l.id} AS line_id, $i AS agg_idx, round(CAST(($scalar) AS DOUBLE), 6) AS value"
+        s"SELECT ${l.id} AS line_id, $i AS agg_idx, round(CAST((${duckSql(h)}) AS DOUBLE), 6) AS value"
       }
     }
     parts.mkString("SELECT * FROM (", " UNION ALL ", ") ORDER BY line_id, agg_idx")
   }
 
-  /** Static self-oracle for `q_corpus_sample`: the sampled ids, all
-    * expected to match — a mismatch on ANY sampled line flips its
-    * `matched` cell and fails the driver's hash compare. */
-  def sampleOracle(step: Int): String = {
-    val values = sampleIds(step).map(i => s"($i)").mkString(",")
-    s"SELECT line_id, TRUE AS matched FROM (VALUES $values) t(line_id) ORDER BY line_id"
+  /** PQL-side frame of a DuckDB-checked selection slice (lines from
+    * [[QueryGenB.duckSelLines]]): one row per returned selection row,
+    * every projected cell canonicalized to VARCHAR and padded to 3
+    * columns so heterogeneous projections share one schema. Row sets
+    * are exact (DISTINCT + total ORDER BY + LIMIT), so the oracle
+    * compare is a strict equality check against DuckDB running
+    * the same statement over the flat dump. Driver-side collect
+    * bounded by lines × LIMIT ≤ 30 rows. */
+  def duckSelSlice(spark: SparkSession, lines: Seq[OnTimeCorpus.Line]): DataFrame = {
+    val fx = fixture(spark)
+    import spark.implicits._
+    val rows: Seq[(Int, String, String, String)] = parMap(spark, lines) { l =>
+      Pql.toDataFrame(Pql.parse(l.pql), _ => fx.mv).collect().toSeq.map { r =>
+        val cells = (0 until r.length).map(i => String.valueOf(r.get(i))).padTo(3, "")
+        (l.id, cells(0), cells(1), cells(2))
+      }
+    }.flatten
+    rows.toDF("line_id", "c0", "c1", "c2")
+      .orderBy("line_id", "c0", "c1", "c2")
+  }
+
+  /** DuckDB oracle for [[duckSelSlice]]: each statement over the flat
+    * parquet dump, cells CAST to VARCHAR and padded, matching the PQL
+    * side's canonicalization. */
+  def duckSelOracle(lines: Seq[OnTimeCorpus.Line]): String = {
+    val parts = lines.map { l =>
+      // project the inner statement's columns by name as c0..c2
+      val names = Pql.parse(l.pql).select.map {
+        case Pql.Ident(n) => n
+        case other => throw new IllegalStateException(
+          s"duck selections project plain columns only, got $other")
+      }
+      val cells = (0 until 3).map { i =>
+        if (i < names.length) s"CAST(${names(i)} AS VARCHAR) AS c$i"
+        else s"'' AS c$i"
+      }
+      s"SELECT ${l.id} AS line_id, ${cells.mkString(", ")} FROM (${duckSql(l.hsqls.head)}) t"
+    }
+    parts.mkString("SELECT * FROM (", " UNION ALL ", ") ORDER BY line_id, c0, c1, c2")
   }
 }

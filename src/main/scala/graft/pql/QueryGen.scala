@@ -3,8 +3,6 @@ package graft.pql
 import scala.collection.mutable
 import scala.util.Random
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-
 /** Port of the reference's randomized equivalent-query-pair generator
   * (`pinot-integration-tests/.../QueryGenerator.java`): random
   * selection and aggregation PQL over the OnTime schema's single- and
@@ -277,30 +275,6 @@ object QueryGen {
     (0 until n).map(g.line).toVector
   }
 
-  /** Run `n` generated lines PQL-vs-hsql over the corpus fixture →
-    * (line_id, matched) — the `q_querygen_sample` surface. With
-    * `starTree = true` the PQL side reads the star-tree-registered
-    * fact segment with the routing rule active (the
-    * `q_querygen_startree` surface): generated aggregation shapes the
-    * fixed corpus never drew exercise the routing rewrite, and any
-    * rewrite that changes an answer flips `matched` against the
-    * plain-table hsql twin. With `hybrid = true` the PQL side answers
-    * from the stitched offline∪realtime view (the
-    * `q_querygen_hybrid` surface) — generated predicates probe the
-    * broker time-boundary stitch with fresh shapes, the twin still
-    * reading the plain table. With `dict = true` the PQL side reads
-    * the dictionary-layout-registered fact copy (the
-    * `q_querygen_dict` surface): generated predicates — notably
-    * REGEXP_LIKE, the decode-fallback path — and group-bys exercise
-    * [[graft.plans.DictRoutingRule]]'s id-space translation. */
-  def runSample(spark: SparkSession, n: Int, seed: Long = DefaultSeed,
-      numRows: Int = 8000, starTree: Boolean = false,
-      hybrid: Boolean = false, dict: Boolean = false): DataFrame =
-    CorpusHarness.runLineSet(spark, lines(n, seed), numRows,
-        hybrid = hybrid, starTree = starTree, dict = dict)
-      .select("line_id", "matched")
-      .orderBy("line_id")
-
   /** Rotating sweep seed: the UTC date — a fresh combination space
     * every day/round while staying reproducible (a failure names the
     * seed; rerun with it pinned). The driver-gated oracle rows keep
@@ -308,31 +282,4 @@ object QueryGen {
   def rotatingSeed(): Long =
     java.time.LocalDate.now(java.time.ZoneOffset.UTC)
       .format(java.time.format.DateTimeFormatter.BASIC_ISO_DATE).toLong
-
-  /** Static self-oracle: every generated line must match. */
-  def sampleOracle(n: Int): String = {
-    val values = (0 until n).map(i => s"($i)").mkString(",")
-    s"SELECT line_id, TRUE AS matched FROM (VALUES $values) t(line_id) ORDER BY line_id"
-  }
-
-  /** The first `k` aggregation-only (no GROUP BY) generated lines out
-    * of `n` — scalar results, exact DuckDB oracle material. */
-  def aggOnlyLines(k: Int, n: Int, seed: Long = DefaultSeed): Vector[OnTimeCorpus.Line] =
-    lines(n, seed).filter { l =>
-      val q = try Some(Pql.parse(l.pql))
-      catch { case _: IllegalArgumentException => None }
-      q.exists(p => p.groupBy.isEmpty && p.select.nonEmpty && p.select.forall(Pql.isAggExpr))
-    }.take(k)
-
-  /** PQL-side frame for the DuckDB-checked generated slice — the
-    * `q_querygen_duck` surface: (line_id, agg_idx, value). */
-  def duckSlice(spark: SparkSession, k: Int, n: Int,
-      seed: Long = DefaultSeed, numRows: Int = 8000): DataFrame =
-    CorpusHarness.duckSliceFor(spark, aggOnlyLines(k, n, seed), numRows)
-
-  /** DuckDB oracle for [[duckSlice]]: the generated hsqls over the
-    * flat parquet dump, `regexp_like` renamed to DuckDB's
-    * `regexp_matches` (same partial-match semantics). */
-  def duckOracle(k: Int, n: Int, seed: Long = DefaultSeed): String =
-    CorpusHarness.duckSliceOracleFor(aggOnlyLines(k, n, seed))
 }

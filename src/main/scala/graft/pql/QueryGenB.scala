@@ -3,8 +3,6 @@ package graft.pql
 import scala.collection.mutable
 import scala.util.Random
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-
 /** Mode-B randomized query generator: graft's FULL PQL surface.
   *
   * [[QueryGen]] is a faithful port of the reference's randomized
@@ -559,39 +557,12 @@ object QueryGenB {
   def lines(n: Int, seed: Long = DefaultSeed): Vector[OnTimeCorpus.Line] =
     genLines(n, seed).map(_.line)
 
-  /** Run `n` mode-B lines PQL-vs-twin over the corpus fixture →
-    * (line_id, matched) — the `q_querygen_graft` surface. starTree /
-    * hybrid / dict answer the PQL side from the routed fact segment /
-    * the stitched offline∪realtime view / the dictionary-layout
-    * fact copy, as in [[QueryGen.runSample]] (dict mode sends mode-B's
-    * percentile, MV-twin, HAVING, and transform shapes through
-    * [[graft.plans.DictRoutingRule]]'s routable/non-routable split). */
-  def runSample(spark: SparkSession, n: Int, seed: Long = DefaultSeed,
-      numRows: Int = 8000, starTree: Boolean = false,
-      hybrid: Boolean = false, dict: Boolean = false): DataFrame =
-    CorpusHarness.runLineSet(spark, lines(n, seed), numRows,
-        hybrid = hybrid, starTree = starTree, dict = dict)
-      .select("line_id", "matched")
-      .orderBy("line_id")
-
-  /** Static self-oracle: every generated line must match. */
-  def sampleOracle(n: Int): String = QueryGen.sampleOracle(n)
-
   /** The first `k` DuckDB-valuable aggregation-only mode-B lines out
     * of `n` — graft-surface aggregations (MV twins, MINMAXRANGE,
     * DISTINCTCOUNT, exact percentiles, transforms) valued by an
     * external engine. */
   def duckAggLines(k: Int, n: Int, seed: Long = DefaultSeed): Vector[OnTimeCorpus.Line] =
     genLines(n, seed).filter(_.duckAgg).map(_.line).take(k)
-
-  /** PQL-side frame for the mode-B DuckDB agg slice —
-    * `q_querygen_duck_b`: (line_id, agg_idx, value). */
-  def duckAggSlice(spark: SparkSession, k: Int, n: Int,
-      seed: Long = DefaultSeed, numRows: Int = 8000): DataFrame =
-    CorpusHarness.duckSliceFor(spark, duckAggLines(k, n, seed), numRows)
-
-  def duckAggOracle(k: Int, n: Int, seed: Long = DefaultSeed): String =
-    CorpusHarness.duckSliceOracleFor(duckAggLines(k, n, seed))
 
   // ---- externally-valued selection slice ---------------------------------
 
@@ -603,55 +574,4 @@ object QueryGenB {
     val g = new Generator(OnTimeCorpus.Columns, QueryGen.sqlTokenPools(), seed)
     (0 until k).map(g.duckSelection).toVector
   }
-
-  /** PQL side of the duck-selection slice — `q_querygen_duck_sel`:
-    * one row per returned selection row, every projected cell
-    * canonicalized to VARCHAR and padded to 3 columns so heterogeneous
-    * projections share one schema. Row sets are exact (DISTINCT +
-    * total ORDER BY + LIMIT), so the driver's hash compare is a strict
-    * equality check against DuckDB running the same statement over the
-    * flat dump. Driver-side collect bounded by k × LIMIT ≤ 30 rows. */
-  def duckSelSlice(spark: SparkSession, k: Int, seed: Long = DefaultSeed,
-      numRows: Int = 8000): DataFrame = {
-    val fx = CorpusHarness.fixture(spark, numRows)
-    import spark.implicits._
-    val rows: Seq[(Int, String, String, String)] =
-      duckSelLines(k, seed).flatMap { l =>
-        val df = Pql.toDataFrame(Pql.parse(l.pql), _ => fx.mv)
-        df.collect().map { r =>
-          val cells = (0 until r.length).map(i => String.valueOf(r.get(i)))
-            .padTo(3, "")
-          (l.id, cells(0), cells(1), cells(2))
-        }
-      }
-    rows.toDF("line_id", "c0", "c1", "c2")
-      .orderBy("line_id", "c0", "c1", "c2")
-  }
-
-  /** DuckDB oracle for [[duckSelSlice]]: each generated statement over
-    * the flat parquet dump, cells CAST to VARCHAR and padded, matching
-    * the PQL side's canonicalization. */
-  def duckSelOracle(k: Int, seed: Long = DefaultSeed): String = {
-    val parts = duckSelLines(k, seed).map { l =>
-      val sql = l.hsqls.head
-        .replaceAll("(?i)\\bFROM\\s+mytable\\b",
-          "FROM read_parquet('{OUT}_aux/corpus_flat_parquet/*.parquet')")
-        .replaceAll("(?i)\\bregexp_like\\(", "regexp_matches(")
-      // project the inner statement's columns by name as c0..c2
-      val names = Pql.parse(l.pql).select.map {
-        case Pql.Ident(n) => n
-        case other => throw new IllegalStateException(
-          s"duck selections project plain columns only, got $other")
-      }
-      val cells = (0 until 3).map { i =>
-        if (i < names.length) s"CAST(${names(i)} AS VARCHAR) AS c$i"
-        else s"'' AS c$i"
-      }
-      s"SELECT ${l.id} AS line_id, ${cells.mkString(", ")} FROM ($sql) t"
-    }
-    parts.mkString("SELECT * FROM (", " UNION ALL ", ") ORDER BY line_id, c0, c1, c2")
-  }
-
-  /** Rotating sweep seed (UTC date), shared with mode A. */
-  def rotatingSeed(): Long = QueryGen.rotatingSeed()
 }

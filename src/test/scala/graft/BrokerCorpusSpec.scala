@@ -155,7 +155,7 @@ class BrokerCorpusSpec extends SparkSpec {
     // broker table dir: `mytable.parquet` links to the fixture's dump
     val dir = Files.createTempDirectory("graft_broker_fx").toFile
     val link = Paths.get(dir.getAbsolutePath, "mytable.parquet")
-    Files.createSymbolicLink(link, Paths.get(CorpusHarness.segDir()))
+    Files.createSymbolicLink(link, Paths.get(CorpusHarness.segDir))
     val broker = new BrokerServer(spark, dir.getAbsolutePath)
     val port = broker.start()
     try {

@@ -1,25 +1,26 @@
 package graft
 
 import graft.pql.{CorpusHarness, OnTimeCorpus}
+import graft.pql.CorpusHarness.Layout
 
 /** The full 10,000-line golden-corpus sweep — the reference's own
   * integration bar (`ClusterIntegrationTestUtils.testQuery` over every
   * line of `On_Time_..._test_queries_10K`). Minutes of wall time (25K+
   * small jobs), so gated behind GRAFT_CORPUS_FULL=1; the always-on
   * sampled gate is [[CorpusSpec]] and the driver-checked
-  * `q_corpus_sample`. Lines run on a driver thread pool
-  * ([[CorpusHarness.compareAll]]) to overlap per-job latency. */
+  * `q_corpus_sample`. Lines run on the harness's driver pool
+  * ([[CorpusHarness.compare]]) to overlap per-job latency. The same
+  * sweep, resumable and over any layouts, is
+  * `graft.HarnessSweep corpus 0-10000 <layout,…> <outFile>`. */
 class CorpusFullSpec extends SparkSpec {
 
   private val enabled = sys.env.get("GRAFT_CORPUS_FULL").contains("1")
 
   test("all 10,000 corpus lines match PQL-vs-hsql (≥9,900 bar, mismatches triaged)") {
     assume(enabled, "set GRAFT_CORPUS_FULL=1 to run the full sweep")
-    spark.sparkContext.setLogLevel("WARN") // 25K jobs of INFO would dominate wall time
-    val fx = CorpusHarness.fixture(spark)
     val t0 = System.nanoTime()
     val outcomes = OnTimeCorpus.corpus.grouped(1000).zipWithIndex.flatMap { case (chunk, i) =>
-      val os = CorpusHarness.compareAll(spark, fx, chunk, parallelism = 8)
+      val os = CorpusHarness.compare(spark, chunk, Seq(Layout.Plain))(Layout.Plain)
       val done = (i + 1) * 1000
       val secs = (System.nanoTime() - t0) / 1e9
       info(f"$done%5d/10000 lines, ${os.count(_.matched) + 0}%4d matched in chunk, $secs%.0f s elapsed")

@@ -1,12 +1,20 @@
 package graft
 
 import graft.pql.{CorpusHarness, OnTimeCorpus, Pql}
+import graft.pql.CorpusHarness.Layout
 
 /** Result-level golden-corpus execution, sampled (the always-on gate;
   * the full 10,000-line sweep lives in [[CorpusFullSpec]]). Every
   * sampled line's PQL must produce results the paired hsqls confirm
   * under the reference harness's own comparison semantics. */
 class CorpusSpec extends SparkSpec {
+
+  private def assertAllMatch(layout: Layout, ids: Seq[Int]): Unit = {
+    val outcomes = CorpusHarness.compare(spark, CorpusHarness.corpusLines(ids), Seq(layout))(layout)
+    val bad = outcomes.filterNot(_.matched)
+    assert(bad.isEmpty, s"${bad.length}/${outcomes.length} mismatched; first 5:\n" +
+      bad.take(5).map(o => s"  line ${o.id} [${o.mode}]: ${o.reason}").mkString("\n"))
+  }
 
   test("corpus file parses into (pql, hsqls) lines with the expected multiplicities") {
     assumeFile(OnTimeCorpus.CorpusPath)
@@ -51,16 +59,12 @@ class CorpusSpec extends SparkSpec {
 
   test("sampled corpus lines all match PQL-vs-hsql (every 100th line)") {
     assumeFile(OnTimeCorpus.CorpusPath)
-    val outcomes = CorpusHarness.runLines(spark, CorpusHarness.sampleIds(100)).collect()
-    val bad = outcomes.filter(!_.getBoolean(2))
-    assert(bad.isEmpty, s"${bad.length}/${outcomes.length} mismatched; first 5:\n" +
-      bad.take(5).map(r => s"  line ${r.getInt(0)} [${r.getString(1)}]: ${r.getString(3)}")
-        .mkString("\n"))
+    assertAllMatch(Layout.Plain, CorpusHarness.sampleIds(100))
   }
 
   test("hybrid stitched view is row-identical to the plain table (exactly-once)") {
     val fx = CorpusHarness.fixture(spark)
-    val hv = CorpusHarness.hybridView(spark)
+    val hv = fx.hybrid
     // overlap is real: the realtime side carries ALL rows, the offline
     // slice is non-empty — yet the stitch loses and duplicates nothing
     assert(hv.count() === fx.mv.count(), "row count through the boundary")
@@ -74,20 +78,15 @@ class CorpusSpec extends SparkSpec {
 
   test("sampled corpus lines match from the HYBRID view (every 200th line)") {
     assumeFile(OnTimeCorpus.CorpusPath)
-    val outcomes = CorpusHarness.runLines(spark, CorpusHarness.sampleIds(200),
-      hybrid = true).collect()
-    val bad = outcomes.filter(!_.getBoolean(2))
-    assert(bad.isEmpty, s"${bad.length}/${outcomes.length} mismatched; first 5:\n" +
-      bad.take(5).map(r => s"  line ${r.getInt(0)} [${r.getString(1)}]: ${r.getString(3)}")
-        .mkString("\n"))
+    assertAllMatch(Layout.Hybrid, CorpusHarness.sampleIds(200))
   }
 
   test("duck slice emits one rounded value per aggregation of the first 40 agg-only lines") {
     assumeFile(OnTimeCorpus.CorpusPath)
-    val df = CorpusHarness.duckSlice(spark, 5)
-    val rows = df.collect()
+    val lines = CorpusHarness.aggOnly(OnTimeCorpus.corpus).take(5)
+    val rows = CorpusHarness.duckSlice(spark, lines).collect()
     assert(rows.length >= 5)
-    val oracle = CorpusHarness.duckSliceOracle(5)
+    val oracle = CorpusHarness.duckOracle(lines)
     // the dump lives in a SIBLING of the verify out dir ("<out>_aux"):
     // anything inside outDir surfaces as a bogus no-oracle result row
     assert(oracle.contains("read_parquet('{OUT}_aux/corpus_flat_parquet/*.parquet')"))

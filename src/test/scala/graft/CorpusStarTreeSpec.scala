@@ -1,7 +1,7 @@
 package graft
 
-import graft.pql.{CorpusHarness, OnTimeCorpus, Pql}
-import graft.plans.StarTreeRegistry
+import graft.pql.{CorpusHarness, OnTimeCorpus}
+import graft.pql.CorpusHarness.Layout
 
 /** Corpus × star-tree routing: the reference's star-tree contract is
   * that a tree-answered query returns EXACTLY what the scan plan
@@ -18,47 +18,40 @@ class CorpusStarTreeSpec extends SparkSpec {
   test("mined trees route predicted lines only; routed answers match the twin") {
     assumeFile(OnTimeCorpus.CorpusPath)
     val fx = CorpusHarness.fixture(spark)
-    Graft.enable(spark)
-    val specs = CorpusHarness.registerCorpusTrees(spark, fx)
-    try {
-      assert(specs.nonEmpty, "mining found no tree-worthy workload")
-      assert(specs.map(_.minedCover).sum > 100,
-        s"implausibly small mined cover: $specs")
-      val predicted = CorpusHarness.predictedRoutedIds(fx, specs)
-      assert(predicted.nonEmpty)
+    val specs = fx.treeSpecs
+    assert(specs.nonEmpty, "mining found no tree-worthy workload")
+    assert(specs.map(_.minedCover).sum > 100,
+      s"implausibly small mined cover: $specs")
+    val predicted = CorpusHarness.predictedRoutedIds(fx, specs)
+    assert(predicted.nonEmpty)
 
-      val table = spark.read.parquet(CorpusHarness.stFactDir())
-      val byId = OnTimeCorpus.corpus.map(l => l.id -> l).toMap
+    // plan census over a deterministic slice that includes routed
+    // lines: every 40th line plus the first 40 predicted-routed ids.
+    // Two safety claims, asserted separately because a plan can
+    // legitimately read NEITHER source (LIMIT 0 / contradictory
+    // filters fold the scan away; global COUNT(*) goes metadata-only):
+    //  1. the rule NEVER rewrites a shape the model calls
+    //     non-routable (no accidental rewrites), and
+    //  2. a predicted line never silently falls back to the fact
+    //     scan (the rule really covers what the model promises).
+    // every predicted id is censused (plan-only, no execution), so a
+    // routed count below the mined cover in the full sweep is proven
+    // to be constant-folded-empty plans, never a fact-scan fallback
+    val ids = (CorpusHarness.sampleIds(40) ++ predicted.toSeq.sorted).distinct
+    val census = ids.zip(CorpusHarness.census(spark, Layout.StarTree,
+      CorpusHarness.corpusLines(ids))).toMap
+    val unexpected = ids.filter(i => census(i).routed && !predicted.contains(i))
+    val fellBack = ids.filter(i => predicted.contains(i) && census(i).scansFact)
+    assert(unexpected.isEmpty,
+      s"rule rewrote shapes the mining model calls non-routable: ${unexpected.take(5)}")
+    assert(fellBack.isEmpty,
+      s"predicted-routable lines fell back to the fact scan: ${fellBack.take(5)}")
+    assert(ids.count(i => census(i).routed) > 0, "census slice routed nothing")
 
-      // plan census over a deterministic slice that includes routed
-      // lines: every 40th line plus the first 40 predicted-routed ids.
-      // Two safety claims, asserted separately because a plan can
-      // legitimately read NEITHER source (LIMIT 0 / contradictory
-      // filters fold the scan away; global COUNT(*) goes metadata-only):
-      //  1. the rule NEVER rewrites a shape the model calls
-      //     non-routable (no accidental rewrites), and
-      //  2. a predicted line never silently falls back to the fact
-      //     scan (the rule really covers what the model promises).
-      // every predicted id is censused (plan-only, no execution), so a
-      // routed count below the mined cover in the full sweep is proven
-      // to be constant-folded-empty plans, never a fact-scan fallback
-      val ids = (CorpusHarness.sampleIds(40) ++ predicted.toSeq.sorted).distinct
-      val census = ids.map(i =>
-        i -> CorpusHarness.routeCensus(Pql.parse(byId(i).pql), table)).toMap
-      val unexpected = ids.filter(i => census(i)._1 && !predicted.contains(i))
-      val fellBack = ids.filter(i => predicted.contains(i) && census(i)._2)
-      assert(unexpected.isEmpty,
-        s"rule rewrote shapes the mining model calls non-routable: ${unexpected.take(5)}")
-      assert(fellBack.isEmpty,
-        s"predicted-routable lines fell back to the fact scan: ${fellBack.take(5)}")
-      assert(ids.count(i => census(i)._1) > 0, "census slice routed nothing")
-
-      // routed lines must still match the plain-table twin
-      val routedSample = predicted.toSeq.sorted.take(60)
-      val outcomes = CorpusHarness.compareAll(spark, fx,
-        routedSample.map(byId), pqlTable = table)
-      assert(outcomes.forall(_.matched),
-        outcomes.filterNot(_.matched).take(5).mkString("; "))
-    } finally StarTreeRegistry.unregister(CorpusHarness.stFactDir())
+    // routed lines must still match the plain-table twin
+    val routedSample = CorpusHarness.corpusLines(predicted.toSeq.sorted.take(60))
+    val outcomes = CorpusHarness.compare(spark, routedSample, Seq(Layout.StarTree))(Layout.StarTree)
+    assert(outcomes.forall(_.matched),
+      outcomes.filterNot(_.matched).take(5).mkString("; "))
   }
 }

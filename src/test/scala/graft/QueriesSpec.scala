@@ -1,7 +1,11 @@
 package graft
 
+import org.apache.spark.sql.functions.{coalesce, col, lit}
+
 /** Smoke: every declared query runs and yields rows at sf0.001, and
-  * every oracle key refers to a declared query. */
+  * every oracle key refers to a declared query. A row with a `matched`
+  * column (the corpus-harness gate rows) must also match on every line:
+  * its self-oracle pins each cell to true. */
 class QueriesSpec extends SparkSpec {
 
   test("every oracle key has a query") {
@@ -16,6 +20,11 @@ class QueriesSpec extends SparkSpec {
       val df = fn(spark, sfDir)
       assert(df.columns.nonEmpty)
       assert(df.count() > 0, s"$name returned 0 rows")
+      if (df.columns.contains("matched")) {
+        val unmatched = df.where(!coalesce(col("matched"), lit(false))).collect()
+        assert(unmatched.isEmpty,
+          s"$name: ${unmatched.length} rows not matched; first 5: ${unmatched.take(5).mkString(", ")}")
+      }
     }
   }
 }

@@ -1,6 +1,7 @@
 package graft
 
 import graft.pql.{CorpusHarness, OnTimeCorpus, Pql, QueryGen, QueryGenB}
+import graft.pql.CorpusHarness.Layout
 
 /** The randomized-query-generator gate (VERDICT r10 item 2): 500
   * generated PQL/SQL pairs per round through the corpus harness's
@@ -10,12 +11,18 @@ import graft.pql.{CorpusHarness, OnTimeCorpus, Pql, QueryGen, QueryGenB}
   * sides run over identical data through independent parse paths. */
 class QueryGenSpec extends SparkSpec {
 
+  /** The unmatched plain-layout outcomes of `lines`. */
+  private def unmatched(lines: Seq[OnTimeCorpus.Line]): Seq[CorpusHarness.Outcome] =
+    CorpusHarness.compare(spark, lines, Seq(Layout.Plain))(Layout.Plain).filterNot(_.matched)
+
   test("generation is deterministic: same (n, seed) → identical lines") {
     val a = QueryGen.lines(40, seed = 7L)
     val b = QueryGen.lines(40, seed = 7L)
     assert(a == b)
     val c = QueryGen.lines(40, seed = 8L)
     assert(a != c, "different seeds must generate different query sets")
+    // a shorter set is a prefix of a longer one at the same seed
+    assert(QueryGen.lines(40) == QueryGen.lines(50).take(40))
   }
 
   /** FIXTURES.md §1's tables, row by row: (name, Pinot type, MV,
@@ -95,9 +102,7 @@ class QueryGenSpec extends SparkSpec {
       floatCols(m.group(1)) && !(BigDecimal(m.group(2)) * 2).isWhole)),
       "no float/double column compared with a non-dyadic literal")
 
-    val fx = CorpusHarness.fixture(spark)
-    val outcomes = CorpusHarness.compareAll(spark, fx, lines)
-    val failed = outcomes.filterNot(_.matched)
+    val failed = unmatched(lines)
     assert(failed.isEmpty,
       s"${failed.size}/500 generated lines mismatched; first 5:\n" +
         failed.take(5).map(o =>
@@ -105,36 +110,39 @@ class QueryGenSpec extends SparkSpec {
             s"    sql: ${lines(o.id).hsqls.head}").mkString("\n"))
   }
 
+  /** The unmatched outcomes of `lines` under each of `layouts`, one
+    * message per outcome. */
+  private def mismatches(lines: Seq[OnTimeCorpus.Line], layouts: Layout*): Seq[String] =
+    CorpusHarness.compare(spark, lines, layouts).toSeq.flatMap { case (layout, outcomes) =>
+      outcomes.filterNot(_.matched).map(o =>
+        s"[${layout.name} ${o.id}] ${o.mode}: ${o.reason}\n  pql: ${lines(o.id).pql}")
+    }
+
+  /** How many of `lines` read `layout`'s routed copy; fails on none. */
+  private def assertRoutes(layout: Layout, grammar: String, lines: Seq[OnTimeCorpus.Line]): Unit = {
+    val nRouted = CorpusHarness.census(spark, layout, lines).count(_.routed)
+    assert(nRouted > 0, s"no $grammar line routed under ${layout.name}")
+    info(s"${layout.name}: $nRouted/${lines.size} $grammar lines answered from the routed copy")
+  }
+
   test("generated sample through the star-tree-routed fixture: all matched, " +
       "and the dimension is not vacuous (some lines actually route)") {
     import graft.queries.CorpusQueries._
-    val routed = QueryGen.runSample(spark, GenSampleLines, starTree = true).collect()
-    assert(routed.length === GenSampleLines)
-    assert(routed.forall(_.getBoolean(1)),
-      "a generated line mismatched under star-tree routing")
+    val lines = QueryGen.lines(GenSampleLines)
+    val bad = mismatches(lines, Layout.StarTree)
+    assert(bad.isEmpty, s"${bad.size} generated lines mismatched under star-tree routing; " +
+      s"first 5:\n${bad.take(5).mkString("\n")}")
     // vacuity guard: at least one generated line must be answered from
-    // a registered rollup, or the mode adds nothing over the plain run
-    val fx = CorpusHarness.fixture(spark)
-    graft.Graft.enable(spark)
-    CorpusHarness.registerCorpusTrees(spark, fx)
-    try {
-      val fact = spark.read.parquet(CorpusHarness.stFactDir())
-      val nRouted = QueryGen.lines(GenSampleLines).count { l =>
-        val q = try Some(Pql.parse(l.pql))
-        catch { case _: IllegalArgumentException => None }
-        q.exists(CorpusHarness.isRouted(_, fact))
-      }
-      assert(nRouted > 0, "no generated line routed to a star-tree rollup")
-      info(s"$nRouted/$GenSampleLines generated lines answered from rollups")
-    } finally graft.plans.StarTreeRegistry.unregister(CorpusHarness.stFactDir())
+    // a registered rollup, or the layout adds nothing over the plain run
+    assertRoutes(Layout.StarTree, "mode-A", lines)
   }
 
-  test("generated sample through the hybrid stitched view: all matched") {
+  test("the dict layout routes some generated lines of both grammars") {
     import graft.queries.CorpusQueries._
-    val hybrid = QueryGen.runSample(spark, GenSampleLines, hybrid = true).collect()
-    assert(hybrid.length === GenSampleLines)
-    assert(hybrid.forall(_.getBoolean(1)),
-      "a generated line mismatched through the hybrid boundary stitch")
+    // vacuity guard: a dict layout whose plans never read the encoded
+    // copy would pass its gate rows without testing the rewrite
+    assertRoutes(Layout.Dict, "mode-A", QueryGen.lines(GenSampleLines))
+    assertRoutes(Layout.Dict, "mode-B", QueryGenB.lines(300))
   }
 
   // ---- mode B: graft's full PQL surface (QueryGenB) --------------------
@@ -143,6 +151,7 @@ class QueryGenSpec extends SparkSpec {
     assert(QueryGenB.lines(40, seed = 7L) == QueryGenB.lines(40, seed = 7L))
     assert(QueryGenB.lines(40, seed = 7L) != QueryGenB.lines(40, seed = 8L))
     assert(QueryGenB.duckSelLines(10) == QueryGenB.duckSelLines(10))
+    assert(QueryGenB.lines(40) == QueryGenB.lines(50).take(40))
   }
 
   test("mode B: 500 graft-surface lines — full shape coverage, every line matches") {
@@ -186,8 +195,7 @@ class QueryGenSpec extends SparkSpec {
     }
     assert(hidden, "mode B generated no hidden-aggregation HAVING")
 
-    val fx = CorpusHarness.fixture(spark)
-    val failed = CorpusHarness.compareAll(spark, fx, lines).filterNot(_.matched)
+    val failed = unmatched(lines)
     assert(failed.isEmpty,
       s"${failed.size}/500 mode-B lines mismatched; first 5:\n" +
         failed.take(5).map(o =>
@@ -213,16 +221,15 @@ class QueryGenSpec extends SparkSpec {
 
   test("mode B duck slices are non-trivial and internally consistent") {
     import graft.queries.CorpusQueries._
-    val aggLines = QueryGenB.duckAggLines(GenBDuckLines, GenBPoolSize)
+    val aggLines = genBDuckLines
     assert(aggLines.length === GenBDuckLines,
       s"600-line pool yields only ${aggLines.length} duckable agg lines — grow GenBPoolSize")
-    val slice = QueryGenB.duckAggSlice(spark, GenBDuckLines, GenBPoolSize).collect()
+    val slice = CorpusHarness.duckSlice(spark, aggLines).collect()
     assert(slice.length >= GenBDuckLines)
     // one oracle branch per (line, agg) — counted by its `AS agg_idx`
     // marker (MV element-view twins contain UNION ALL internally, so
     // splitting on that would overcount)
-    assert(QueryGenB.duckAggOracle(GenBDuckLines, GenBPoolSize)
-      .split("AS agg_idx").length - 1 === slice.length)
+    assert(CorpusHarness.duckOracle(aggLines).split("AS agg_idx").length - 1 === slice.length)
     // selection slice: the Spark-side rows must exactly equal the twin
     // statement executed by Spark SQL over the flat view (DuckDB then
     // re-values the same statement externally via the driver oracle)
@@ -234,48 +241,25 @@ class QueryGenSpec extends SparkSpec {
         (l.id, cells(0), cells(1), cells(2))
       }
     }.toSet
-    val engineRows = QueryGenB.duckSelSlice(spark, GenBSelLines).collect()
+    val engineRows = CorpusHarness.duckSelSlice(spark, selLines).collect()
       .map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getString(3))).toSet
     assert(engineRows === twinRows,
       "mode-B selection slice differs from its Spark-SQL twin")
     assert(engineRows.nonEmpty)
   }
 
-  test("the q_querygen_graft sample is green") {
-    import graft.queries.CorpusQueries._
-    val sample = QueryGenB.runSample(spark, GenBSampleLines).collect()
-    assert(sample.length === GenBSampleLines)
-    assert(sample.forall(_.getBoolean(1)), "q_querygen_graft has a mismatched line")
-  }
-
   test("mode B through star-tree routing and the hybrid stitch: all matched, " +
       "routing not vacuous over the default-seed stream") {
     import graft.queries.CorpusQueries._
-    val st = QueryGenB.runSample(spark, GenBSampleLines, starTree = true).collect()
-    assert(st.length === GenBSampleLines)
-    assert(st.forall(_.getBoolean(1)),
-      "a mode-B line mismatched under star-tree routing")
-    val hy = QueryGenB.runSample(spark, GenBSampleLines, hybrid = true).collect()
-    assert(hy.length === GenBSampleLines)
-    assert(hy.forall(_.getBoolean(1)),
-      "a mode-B line mismatched through the hybrid boundary stitch")
+    val lines = QueryGenB.lines(GenBSampleLines)
+    val bad = mismatches(lines, Layout.StarTree, Layout.Hybrid)
+    assert(bad.isEmpty, s"${bad.size} mode-B outcomes mismatched under star-tree routing " +
+      s"or the hybrid boundary stitch; first 5:\n${bad.take(5).mkString("\n")}")
     // vacuity guard over a wider default-seed stream: mode-B lines are
     // mostly graft-only shapes the routing rule must NOT touch, but
-    // its basic-agg subset must actually route (the 10-seed sweep saw
-    // 105/2500 ≈ 4%)
-    val fx = CorpusHarness.fixture(spark)
-    graft.Graft.enable(spark)
-    CorpusHarness.registerCorpusTrees(spark, fx)
-    try {
-      val fact = spark.read.parquet(CorpusHarness.stFactDir())
-      val nRouted = QueryGenB.lines(300).count { l =>
-        val q = try Some(Pql.parse(l.pql))
-        catch { case _: IllegalArgumentException => None }
-        q.exists(CorpusHarness.isRouted(_, fact))
-      }
-      assert(nRouted > 0, "no mode-B line routed to a star-tree rollup")
-      info(s"$nRouted/300 mode-B lines answered from rollups")
-    } finally graft.plans.StarTreeRegistry.unregister(CorpusHarness.stFactDir())
+    // its basic-agg subset must actually route (a 10-seed star-tree
+    // sweep routed 105/2500 ≈ 4%)
+    assertRoutes(Layout.StarTree, "mode-B", QueryGenB.lines(300))
   }
 
   // ---- rotating-seed gate (both grammars) ------------------------------
@@ -290,12 +274,11 @@ class QueryGenSpec extends SparkSpec {
     // PROTOCOL on first fire: reproduce with
     // QueryGen[B].lines(150, <printed seed>), fix the divergence, and
     // add (grammar, seed, id) to PinnedRegressions below so the case
-    // runs FATALLY forever after. The round-level QueryGenSweep gate
-    // (fixed + fresh seeds, wide) still hard-fails on any mismatch.
+    // runs FATALLY forever after. The wide sweep main
+    // (`graft.HarnessSweep a|b <seeds> …`) exits 1 on any mismatch.
     val seed = QueryGen.rotatingSeed()
-    val fx = CorpusHarness.fixture(spark)
     def sweep(tag: String, lines: Vector[OnTimeCorpus.Line]): Seq[String] =
-      CorpusHarness.compareAll(spark, fx, lines).filterNot(_.matched).map(o =>
+      unmatched(lines).map(o =>
         s"[grammar $tag seed=$seed id=${o.id}] ${o.mode}: ${o.reason}\n" +
           s"  pql: ${lines(o.id).pql}\n  sql: ${lines(o.id).hsqls.head}")
     val bad = sweep("A", QueryGen.lines(150, seed)) ++
@@ -312,29 +295,23 @@ class QueryGenSpec extends SparkSpec {
   private val PinnedRegressions: Seq[(String, Long, Int)] = Nil
 
   test("pinned rotating-seed regressions stay fixed") {
-    val fx = CorpusHarness.fixture(spark)
     PinnedRegressions.foreach { case (g, seed, id) =>
       val line =
         if (g == "B") QueryGenB.lines(id + 1, seed)(id)
         else QueryGen.lines(id + 1, seed)(id)
-      val o = CorpusHarness.compareAll(spark, fx, Seq(line)).head
-      assert(o.matched, s"pinned regression ($g, seed=$seed, id=$id) " +
-        s"regressed: ${o.reason}\n  pql: ${line.pql}")
+      unmatched(Seq(line)).foreach(o => fail(s"pinned regression ($g, seed=$seed, id=$id) " +
+        s"regressed: ${o.reason}\n  pql: ${line.pql}"))
     }
   }
 
-  test("the driver-gated sample and duck slice are green and non-trivial") {
+  test("the q_querygen_duck slice is non-trivial and a static contract") {
     import graft.queries.CorpusQueries._
-    val sample = QueryGen.runSample(spark, GenSampleLines).collect()
-    assert(sample.length === GenSampleLines)
-    assert(sample.forall(_.getBoolean(1)), "q_querygen_sample has a mismatched line")
-    val aggLines = QueryGen.aggOnlyLines(GenDuckLines, GenPoolSize)
+    val aggLines = genDuckLines
     assert(aggLines.length === GenDuckLines,
       s"generated pool yields only ${aggLines.length} agg-only lines — grow GenPoolSize")
-    val slice = QueryGen.duckSlice(spark, GenDuckLines, GenPoolSize).collect()
+    val slice = CorpusHarness.duckSlice(spark, aggLines).collect()
     assert(slice.length >= GenDuckLines, "each agg-only line contributes ≥1 value row")
     // the oracle is a static contract: one SELECT per (line, agg)
-    val oracle = QueryGen.duckOracle(GenDuckLines, GenPoolSize)
-    assert(oracle.split("UNION ALL").length === slice.length)
+    assert(CorpusHarness.duckOracle(aggLines).split("UNION ALL").length === slice.length)
   }
 }
