@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.pql.Pql
-import graft.plans.StarTree
+import graft.plans.{DictLayout, StarTree}
 import graft.queries.ScaleTable
 
 /** BASELINE B2/B3/B4 at scale: the benchmark the sf0.1 harness cannot
@@ -192,6 +192,12 @@ object BenchScale {
       spark.read.parquet(stPath), 0, 0)
   }
 
+  /** The star-tree section's query: ArrDelay sum and row count per
+    * (Origin, Dest), which the [[ensureStarTree]] rollup answers. */
+  def odSums(table: DataFrame): DataFrame =
+    table.groupBy(col("Origin"), col("Dest"))
+      .agg(sum(col("ArrDelay")).as("sum_ArrDelay"), count(lit(1)).as("cnt"))
+
   /** Routed-vs-scan answer equality, matched BY GROUP KEY (not sorted
     * position): the rollup sums longs exactly while the scan-side
     * Average accumulates doubles, so last-ulp drift is legal — it can
@@ -255,7 +261,7 @@ object BenchScale {
     *     DISTINCTCOUNTHLL(FlightNum) to the DataSketches HLL, which
     *     the routing rule answers from the stored all-stars sketch —
     *     the BrokerRequestPreProcessor fastHLL swap end-to-end. */
-  private def ensureWorkloadTrees(spark: SparkSession, dir: String,
+  private[graft] def ensureWorkloadTrees(spark: SparkSession, dir: String,
       table: DataFrame): Seq[StarTree.Index] = {
     def ensure(path: String, markerName: String)(build: => DataFrame): DataFrame = {
       val marker = new java.io.File(s"$dir/$markerName")
@@ -326,10 +332,13 @@ object BenchScale {
 
     // star-tree: routed group-by vs the fact scan, value-checked equal
     val index = ensureStarTree(spark, dir, table)
-    val (routed, fromIndex) = StarTree.route(index, table, Seq("Origin", "Dest"), "ArrDelay")
-    require(fromIndex, "star-tree must cover (Origin, Dest)")
-    val factPlan = table.groupBy(col("Origin"), col("Dest"))
-      .agg(sum(col("ArrDelay")).as("sum_ArrDelay"), count(lit(1)).as("cnt"))
+    val factPlan = odSums(table)
+    val routed = Graft.withIndexes(spark, trees = Seq(s"$dir/ontime.parquet" -> index)) {
+      val df = odSums(table)
+      require(!df.queryExecution.executedPlan.toString.contains("ontime.parquet"),
+        "star-tree must cover (Origin, Dest)")
+      df
+    }
     val sumRouted = routed.agg(sum(col("sum_ArrDelay"))).head().getLong(0)
     val sumFact = factPlan.agg(sum(col("sum_ArrDelay"))).head().getLong(0)
     require(sumRouted == sumFact, s"star-tree routing changed answers: $sumRouted != $sumFact")
@@ -351,7 +360,6 @@ object BenchScale {
     // separate section — the engine capability DuckDB's raw-parquet
     // scan has no analogue for.
     val routedSection = {
-      import graft.plans.StarTreeRegistry
       val trees = ensureWorkloadTrees(spark, dir, table)
       val idx = trees.head
       // a2/a3 are GLOBAL aggregates (dim-filtered, no GROUP BY) — the
@@ -363,9 +371,7 @@ object BenchScale {
         val pql = workload.find(_._1 == name).get._3
         name -> Pql.toDataFrame(Pql.parse(pql), loader).collect()
       }.toMap
-      Graft.enable(spark)
-      trees.foreach(t => StarTreeRegistry.register(s"$dir/ontime.parquet", t))
-      try {
+      Graft.withIndexes(spark, trees = trees.map(s"$dir/ontime.parquet" -> _)) {
         val rs = routable.map { name =>
           val (_, _, pql, duckSql) = workload.find(_._1 == name).get
           val df = Pql.toDataFrame(Pql.parse(pql), loader)
@@ -403,7 +409,7 @@ object BenchScale {
         }
         s""""routed":{${(rs :+ hllEntry).map(_.json).mkString(",")},""" +
           s""""rollup_rows":${idx.rollup.count()}}"""
-      } finally StarTreeRegistry.unregister(s"$dir/ontime.parquet")
+      }
     }
 
     // Sorted-segment layout (the reference's sortedColumn table
@@ -533,7 +539,6 @@ object BenchScale {
     // ad-hoc dim group-by at fact-scan cost minus the string
     // constant).
     {
-      import graft.plans.{DictLayout, DictRegistry}
       val dPath = s"$dir/ontime_dict.parquet"
       val marker = new java.io.File(s"$dir/_DICT_DONE")
       val factPath = s"$dir/ontime.parquet"
@@ -563,9 +568,7 @@ object BenchScale {
         val pql = workload.find(_._1 == name).get._3
         name -> Pql.toDataFrame(Pql.parse(pql), loader).collect()
       }.toMap
-      Graft.enable(spark)
-      DictRegistry.register(factPath, idx)
-      try {
+      Graft.withIndexes(spark, dicts = Seq(factPath -> idx)) {
         val rs = names.map { name =>
           val (_, _, pql, duckSql) = workload.find(_._1 == name).get
           val df = Pql.toDataFrame(Pql.parse(pql), loader)
@@ -592,9 +595,82 @@ object BenchScale {
             sparkReps, duck, twinNone = duck.isEmpty)
         }
         s""""dict":{${rs.map(_.json).mkString(",")}}"""
-      } finally DictRegistry.unregister(factPath)
+      }
     }
   }
+
+  /** The dictionary layout over `native` (`$dir/ontime_sorted_dse.parquet`),
+    * marker-cached. It keeps the native (DaysSinceEpoch, FlightNum)
+    * sort (`layoutBy`), so the s2 page composes the sorted-subset read
+    * with id-space sort keys + late decode (DictLayout.orderedDictPage).
+    * Marker v2: older flat copies (before r8) must rebuild. */
+  private[graft] def ensureNativeDict(spark: SparkSession, dir: String,
+      native: DataFrame): DictLayout.Index = {
+    val nativePath = s"$dir/ontime_sorted_dse.parquet"
+    val dPath = s"$dir/ontime_native_dict.parquet"
+    val dMarker = new java.io.File(s"$dir/_NATIVE_DICT2_DONE")
+    if (dMarker.exists() && new java.io.File(dPath).exists())
+      DictLayout.load(spark, nativePath, dPath)
+    else {
+      val i = DictLayout.build(spark, native, nativePath, dPath,
+        Seq("Carrier", "Origin", "Dest", "OriginState"),
+        layoutBy = Seq("DaysSinceEpoch", "FlightNum"))
+      java.nio.file.Files.write(dMarker.toPath, java.util.Arrays.asList("ok"))
+      i
+    }
+  }
+
+  /** The structure that must answer workload query `name` over the
+    * native layout, asserted on its plan: trees take a2-a5 + h1, the
+    * dictionary a6 (Aggregate rewrite) and s1/s3 (Sort rewrite), and
+    * s2 composes the sorted read with the dictionary layout (fewer
+    * files, decode after the page cut). a1 answers from footers; h2
+    * is an honest scan. */
+  private[graft] def requireNativeRoute(name: String, df: DataFrame,
+      native: DataFrame): Unit = {
+    val treeRouted = Set("a2_agg_1pred", "a3_agg_2pred",
+      "a4_groupby_1dim", "a5_groupby_2dim", "h1_hll")
+    val dictRouted = Set("a6_groupby_3dim", "s1_filter_topn", "s3_point_topn")
+    val plan = df.queryExecution.executedPlan.toString
+    if (treeRouted(name))
+      require(!plan.contains("ontime_sorted_dse"),
+        s"$name did not route off the fact scan:\n$plan")
+    if (dictRouted(name))
+      require(plan.contains("ontime_native_dict"),
+        s"$name did not route to the dictionary layout:\n$plan")
+    if (name == "s2_page") {
+      require(df.inputFiles.length < native.inputFiles.length,
+        s"s2 ordered read did not prune " +
+          s"(${df.inputFiles.length}/${native.inputFiles.length} files)")
+      // the COMPOSED route: sorted-subset read OF THE ENCODED
+      // copy (id-space page, decode fused into the top-K project)
+      require(plan.contains("ontime_native_dict"),
+        s"s2 did not compose the dict layout with the sorted read:\n$plan")
+      require(df.queryExecution.optimizedPlan.toString.contains("dict_decode"),
+        s"s2 page does not late-decode dictionary values:\n$plan")
+    }
+  }
+
+  /** A routed answer against `expected`, the raw scan's rows: h1
+    * within 5% of the exact distinct count (both paths estimate), a
+    * selection on its primary ORDER BY column (tie rows may swap), any
+    * other query under [[verifyRoutedRows]]' drift rule. */
+  private[graft] def requireNativeAnswer(name: String, df: DataFrame,
+      expected: => Option[Array[org.apache.spark.sql.Row]], hllExact: Long): Unit =
+    name match {
+      case "h1_hll" =>
+        val est = df.head().getLong(0)
+        require(math.abs(est - hllExact) <= 0.05 * hllExact,
+          s"native h1 estimate $est outside 5% of exact $hllExact")
+      case n if n.startsWith("s") =>
+        val keyCol = if (n == "s2_page") "DaysSinceEpoch"
+          else if (n == "s1_filter_topn") "ArrDelay" else "DepDelay"
+        val got = df.select(col(keyCol)).collect().map(_.get(0)).toSeq
+        val exp = expected.get.map(r => r.get(r.schema.fieldIndex(keyCol))).toSeq
+        require(got == exp, s"$n page diverged from the raw plan on $keyCol")
+      case n =>
+        verifyRoutedRows(n, df.collect(), expected.get)
+    }
 
   /** The native-layout section (`"native":{...}`), extractable for a
     * `layout:` sub-section re-run. */
@@ -619,28 +695,11 @@ object BenchScale {
     // time-sorted parquet files, so both engines see identical bytes —
     // the sidecar index artifacts are the engine capability under test.
     {
-      import graft.plans.{DictLayout, DictRegistry, StarTreeRegistry}
       val nativePath = s"$dir/ontime_sorted_dse.parquet" // built by sortedSection
       val native = spark.read.parquet(nativePath)
       val nLoader: String => DataFrame = _ => native
       val trees = ensureWorkloadTrees(spark, dir, table)
-      // layoutBy: the encoded copy keeps the native table's
-      // (DaysSinceEpoch, FlightNum) physical sort, so the s2 page
-      // COMPOSES the sorted-subset read with id-space sort keys + late
-      // decode (DictLayout.orderedDictPage). Marker v2: the layout
-      // contract changed in r8, older flat copies must rebuild.
-      val dPath = s"$dir/ontime_native_dict.parquet"
-      val dMarker = new java.io.File(s"$dir/_NATIVE_DICT2_DONE")
-      val dictIdx =
-        if (dMarker.exists() && new java.io.File(dPath).exists())
-          DictLayout.load(spark, nativePath, dPath)
-        else {
-          val i = DictLayout.build(spark, native, nativePath, dPath,
-            Seq("Carrier", "Origin", "Dest", "OriginState"),
-            layoutBy = Seq("DaysSinceEpoch", "FlightNum"))
-          java.nio.file.Files.write(dMarker.toPath, java.util.Arrays.asList("ok"))
-          i
-        }
+      val dictIdx = ensureNativeDict(spark, dir, native)
       exec(native); exec(dictIdx.encoded) // warm like the main table
       // expected answers from the RAW scan plans, collected BEFORE
       // registration; h1/h2 verify against exact instead (both paths
@@ -653,62 +712,18 @@ object BenchScale {
       val hllExactN = table.agg(countDistinct(col("FlightNum"))).head().getLong(0)
       val pctExact = table.select(expr("percentile(ArrDelay, array(0.5, 0.95))"))
         .head().getSeq[Double](0)
-      Graft.enable(spark)
-      trees.foreach(t => StarTreeRegistry.register(nativePath, t))
-      DictRegistry.register(nativePath, dictIdx)
-      try {
-        // which structure must answer each query, asserted on the plan:
-        // trees take a2-a5 + h1, the dictionary takes a6 (Aggregate
-        // rewrite) and s1/s3 (Sort rewrite: id-space filter + top-K,
-        // decode after LIMIT), the sorted layout's ordered read takes
-        // s2; a1 answers from footers; h2 is an honest scan of the
-        // native copy.
-        val treeRouted = Set("a2_agg_1pred", "a3_agg_2pred",
-          "a4_groupby_1dim", "a5_groupby_2dim", "h1_hll")
-        val dictRouted = Set("a6_groupby_3dim", "s1_filter_topn", "s3_point_topn")
+      Graft.withIndexes(spark, trees = trees.map(nativePath -> _),
+          dicts = Seq(nativePath -> dictIdx)) {
         val rs = workload.map { case (name, cls, pql, duckSql) =>
           val df = Pql.toDataFrame(Pql.parse(pql), nLoader)
-          val plan = df.queryExecution.executedPlan.toString
-          if (treeRouted(name))
-            require(!plan.contains("ontime_sorted_dse"),
-              s"$name did not route off the fact scan:\n$plan")
-          if (dictRouted(name))
-            require(plan.contains("ontime_native_dict"),
-              s"$name did not route to the dictionary layout:\n$plan")
-          if (name == "s2_page") {
-            require(df.inputFiles.length < native.inputFiles.length,
-              s"s2 ordered read did not prune " +
-                s"(${df.inputFiles.length}/${native.inputFiles.length} files)")
-            // the COMPOSED route: sorted-subset read OF THE ENCODED
-            // copy (id-space page, decode fused into the top-K project)
-            require(plan.contains("ontime_native_dict"),
-              s"s2 did not compose the dict layout with the sorted read:\n$plan")
-            require(df.queryExecution.optimizedPlan.toString.contains("dict_decode"),
-              s"s2 page does not late-decode dictionary values:\n$plan")
-          }
-          name match {
-            case "h1_hll" =>
-              val est = df.head().getLong(0)
-              require(math.abs(est - hllExactN) <= 0.05 * hllExactN,
-                s"native h1 estimate $est outside 5% of exact $hllExactN")
-            case "h2_pctest" =>
-              val r = df.head()
-              def num(v: Any): Double = v.asInstanceOf[Number].doubleValue()
-              require(math.abs(num(r.get(0)) - pctExact(0)) <= 1.0 &&
-                  math.abs(num(r.get(1)) - pctExact(1)) <= 1.0,
-                s"native h2 ($r) outside the percentile envelope ($pctExact)")
-            case n if n.startsWith("s") =>
-              // selections: the primary ORDER BY column sequence is the
-              // page contract (tie rows may swap within equal keys)
-              val keyCol = if (n == "s2_page") "DaysSinceEpoch"
-                else if (n == "s1_filter_topn") "ArrDelay" else "DepDelay"
-              val got = df.select(col(keyCol)).collect().map(_.get(0)).toSeq
-              val exp = expected(n).map(r =>
-                r.get(r.schema.fieldIndex(keyCol))).toSeq
-              require(got == exp, s"$n page diverged from the raw plan on $keyCol")
-            case n =>
-              verifyRoutedRows(n, df.collect(), expected(n))
-          }
+          requireNativeRoute(name, df, native)
+          if (name == "h2_pctest") {
+            val r = df.head()
+            def num(v: Any): Double = v.asInstanceOf[Number].doubleValue()
+            require(math.abs(num(r.get(0)) - pctExact(0)) <= 1.0 &&
+                math.abs(num(r.get(1)) - pctExact(1)) <= 1.0,
+              s"native h2 ($r) outside the percentile envelope ($pctExact)")
+          } else requireNativeAnswer(name, df, expected.get(name), hllExactN)
           System.gc()
           val sparkReps = sample(reps)(exec(df))
           // the twin reads the SAME time-sorted files (identical
@@ -761,9 +776,6 @@ object BenchScale {
         }
         s""""native":{"queries":{${rsAll.map(_.json).mkString(",")}},""" +
           s""""classes":{${nClasses.mkString(",")}}}"""
-      } finally {
-        StarTreeRegistry.unregister(nativePath)
-        DictRegistry.unregister(nativePath)
       }
     }
   }
@@ -989,7 +1001,6 @@ object BenchScale {
   def runHeavy(spark: SparkSession, tag: String, rows: Long, reps: Int,
       dirTag: Option[String] = None): String = {
     import graft.operators.Percentiles
-    import graft.plans.StarTreeRegistry
     val dir = s"$dataRoot/scale_${dirTag.getOrElse(tag)}"
     val genSecs = time { ScaleTable.ensure(spark, dir, rows) }
     val table = spark.read.parquet(s"$dir/ontime.parquet")
@@ -1149,21 +1160,20 @@ object BenchScale {
       name -> QueryResult(name, "agg", sparkReps, duck, twinNone = duck.isEmpty)
     }
     val expected = routable.map(name => name -> pqlDf(name).collect()).toMap
-    Graft.enable(spark)
-    StarTreeRegistry.register(s"$dir/ontime.parquet", idx)
-    StarTreeRegistry.register(s"$dir/ontime.parquet", idx7)
     val routedRs =
-      try routable.map { name =>
-        val df = pqlDf(name)
-        val plan = df.queryExecution.executedPlan.toString
-        require(!plan.contains("ontime.parquet"),
-          s"$name did not route to the star-tree:\n$plan")
-        verifyRoutedRows(name, df.collect(), expected(name))
-        System.gc()
-        val sparkReps = sampleGc(reps)(exec(df))
-        val duck = pairedTwin(duckSqlOf(name)) // memoized same-window twin
-        QueryResult(name, "agg", sparkReps, duck, twinNone = duck.isEmpty)
-      } finally StarTreeRegistry.unregister(s"$dir/ontime.parquet")
+      Graft.withIndexes(spark, trees = Seq(idx, idx7).map(s"$dir/ontime.parquet" -> _)) {
+        routable.map { name =>
+          val df = pqlDf(name)
+          val plan = df.queryExecution.executedPlan.toString
+          require(!plan.contains("ontime.parquet"),
+            s"$name did not route to the star-tree:\n$plan")
+          verifyRoutedRows(name, df.collect(), expected(name))
+          System.gc()
+          val sparkReps = sampleGc(reps)(exec(df))
+          val duck = pairedTwin(duckSqlOf(name)) // memoized same-window twin
+          QueryResult(name, "agg", sparkReps, duck, twinNone = duck.isEmpty)
+        }
+      }
 
     // dictionary layout at 1B rows: the dict-id group-by must scale
     // linearly with the scan (the dictionaries themselves are
@@ -1171,7 +1181,6 @@ object BenchScale {
     // proving the layout is a constant-factor win, not a small-scale
     // artifact. a6 is the heavy shape (3 keys, one dict-encoded).
     val dictRs = {
-      import graft.plans.{DictLayout, DictRegistry}
       val dPath = s"$dir/ontime_dict.parquet"
       val dMarker = new java.io.File(s"$dir/_DICT_DONE")
       val factPath = s"$dir/ontime.parquet"
@@ -1186,17 +1195,18 @@ object BenchScale {
         }
       exec(dIdx.encoded)
       val dictNames = Seq("a4_groupby_1dim", "a5_groupby_2dim", "a6_groupby_3dim")
-      DictRegistry.register(factPath, dIdx)
-      try dictNames.map { name =>
-        val df = pqlDf(name)
-        val plan = df.queryExecution.executedPlan.toString
-        require(!plan.contains("ontime.parquet") && plan.contains("ontime_dict"),
-          s"$name did not route to the dictionary layout:\n$plan")
-        System.gc()
-        val sparkReps = sampleGc(reps)(exec(df))
-        val duck = pairedTwin(duckSqlOf(name)) // memoized same-window twin
-        QueryResult(name, "agg", sparkReps, duck, twinNone = duck.isEmpty)
-      } finally DictRegistry.unregister(factPath)
+      Graft.withIndexes(spark, dicts = Seq(factPath -> dIdx)) {
+        dictNames.map { name =>
+          val df = pqlDf(name)
+          val plan = df.queryExecution.executedPlan.toString
+          require(!plan.contains("ontime.parquet") && plan.contains("ontime_dict"),
+            s"$name did not route to the dictionary layout:\n$plan")
+          System.gc()
+          val sparkReps = sampleGc(reps)(exec(df))
+          val duck = pairedTwin(duckSqlOf(name)) // memoized same-window twin
+          QueryResult(name, "agg", sparkReps, duck, twinNone = duck.isEmpty)
+        }
+      }
     }
 
     val heavy = Seq(a6, g1, g2, g3, h1).map(_.json).mkString(",")

@@ -1,49 +1,87 @@
 package graft
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{Dataset, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.GraftSqlBridge
 import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.analysis.FunctionRegistry.FunctionBuilder
 import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
 import graft.functions.SqlFunctions
-import graft.plans.{DictRoutingRule, StarTreeRoutingRule}
+import graft.plans.{DictLayout, DictRegistry, DictRoutingRule, StarTree, StarTreeRegistry, StarTreeRoutingRule}
 
 /** The engine's `SparkSessionExtensions` entry point — the preference-
   * order capstone for operators Spark can't express natively (project
   * brief option (c)): custom expressions registered as SQL functions
-  * and the star-tree routing optimizer rule, injected at session build
-  * via
+  * and the star-tree and dictionary routing optimizer rules, injected
+  * at session build via
   *
   * {{{
   * spark.sql.extensions=graft.GraftExtensions
   * }}}
   *
-  * For an ALREADY-RUNNING session (tests, notebooks), [[Graft.enable]]
-  * applies the same pieces through the public `experimental` hooks.
-  */
+  * [[GraftExtensions.functions]] and [[GraftExtensions.rules]] are the
+  * one list of what graft injects; [[Graft.enable]] applies the same
+  * list to an ALREADY-RUNNING session. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    SqlFunctions.all.foreach { case (name, builder) =>
-      ext.injectFunction((FunctionIdentifier(name),
-        new ExpressionInfo("graft.functions.exprs", name), builder))
-    }
-    ext.injectOptimizerRule(StarTreeRoutingRule.apply)
-    // after star-tree: a full pre-aggregation answer wins over the
-    // dictionary-encoded scan when both artifacts are registered
-    ext.injectOptimizerRule(DictRoutingRule.apply)
+    GraftExtensions.functions.foreach(ext.injectFunction)
+    GraftExtensions.rules.foreach(ext.injectOptimizerRule)
   }
 }
 
-/** Runtime enabling of the graft extensions on an existing session. */
-object Graft {
-  def enable(spark: SparkSession): Unit = {
-    SqlFunctions.all.foreach { case (name, builder) =>
-      GraftSqlBridge.registerFunction(spark, name, builder)
+object GraftExtensions {
+  /** The graft SQL functions. */
+  val functions: Seq[(FunctionIdentifier, ExpressionInfo, FunctionBuilder)] =
+    SqlFunctions.all.map { case (name, builder) =>
+      (FunctionIdentifier(name), new ExpressionInfo("graft.functions.exprs", name), builder)
     }
-    if (!spark.experimental.extraOptimizations.exists(_.isInstanceOf[StarTreeRoutingRule]))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ StarTreeRoutingRule(spark)
-    if (!spark.experimental.extraOptimizations.exists(_.isInstanceOf[DictRoutingRule]))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ DictRoutingRule(spark)
+
+  /** The routing rules, in order: star-tree first, so a full
+    * pre-aggregation answer wins over the dictionary-encoded scan when
+    * both artifacts are registered. */
+  val rules: Seq[SparkSession => Rule[LogicalPlan]] =
+    Seq(StarTreeRoutingRule(_), DictRoutingRule(_))
+}
+
+/** Graft on an existing session, and the one way to put indexes in
+  * front of its queries. */
+object Graft {
+
+  /** Apply [[GraftExtensions]] to a running session through its public
+    * `experimental` hooks. Idempotent: a function is registered only
+    * when the session lacks it, and a rule is added only when the
+    * session runs none of its class yet — whether from an earlier call
+    * or from `spark.sql.extensions`. */
+  def enable(spark: SparkSession): Unit = {
+    GraftExtensions.functions.foreach { case f @ (id, _, _) =>
+      if (!GraftSqlBridge.functionExists(spark, id)) GraftSqlBridge.registerFunction(spark, f)
+    }
+    val running = spark.experimental.extraOptimizations ++ GraftSqlBridge.injectedRules(spark)
+    GraftExtensions.rules.map(_(spark)).foreach { rule =>
+      if (!running.exists(_.getClass == rule.getClass))
+        spark.experimental.extraOptimizations = spark.experimental.extraOptimizations :+ rule
+    }
+  }
+
+  /** Run `body` with `trees` and `dicts` (fact table path → index)
+    * registered and the routing rules enabled on `spark`; their paths
+    * are unregistered afterwards, even when `body` throws. A
+    * DataFrame result comes back over its optimized — routed — plan,
+    * so it and every frame derived from it keep the route once the
+    * indexes are gone. */
+  def withIndexes[A](spark: SparkSession,
+      trees: Seq[(String, StarTree.Index)] = Nil,
+      dicts: Seq[(String, DictLayout.Index)] = Nil)(body: => A): A = {
+    enable(spark)
+    trees.foreach { case (path, index) => StarTreeRegistry.register(path, index) }
+    dicts.foreach { case (path, index) => DictRegistry.register(path, index) }
+    try body match {
+      case ds: Dataset[_] => GraftSqlBridge.planned(ds).asInstanceOf[A]
+      case other => other
+    } finally {
+      trees.foreach { case (path, _) => StarTreeRegistry.unregister(path) }
+      dicts.foreach { case (path, _) => DictRegistry.unregister(path) }
+    }
   }
 }

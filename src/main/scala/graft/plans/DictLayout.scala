@@ -1,7 +1,5 @@
 package graft.plans
 
-import scala.collection.concurrent.TrieMap
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, In, IsNotNull, IsNull, LessThan, LessThanOrEqual, Literal, NamedExpression, SortOrder}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, LogicalPlan, Project, Sort}
@@ -293,7 +291,6 @@ object DictLayout {
       offset: Int, size: Int,
       filter: Option[org.apache.spark.sql.Column] = None): Option[DataFrame] = {
     import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
     // every raw column the predicate references must exist in the
     // encoded copy (a resolved/multi-part reference fails `covered`
     // below and the route bails — never a wrong answer)
@@ -302,13 +299,11 @@ object DictLayout {
     if (selectIdents.isEmpty || selectIdents.length != selectCount ||
       orderBy.isEmpty) return None
     val idx = base.queryExecution.analyzed match {
-      case lr: LogicalRelation => lr.relation match {
-        case fs: HadoopFsRelation => fs.location.rootPaths match {
-          case Seq(single) => DictRegistry.lookupExact(single.toString)
+      case LogicalRelation(fs: HadoopFsRelation, _, _, _, _) =>
+        fs.location.rootPaths match {
+          case Seq(root) => DictRegistry.lookupExact(root.toString)
           case _ => None
         }
-        case _ => None
-      }
       case _ => None
     }
     idx.flatMap { i =>
@@ -360,27 +355,15 @@ object DictLayout {
 }
 
 /** Session-scoped registry mapping raw-table scan roots to their
-  * dictionary-encoded copies — same path-normalization and
-  * segment-boundary matching contract as [[StarTreeRegistry]]. */
+  * dictionary-encoded copies, over the [[PathRegistry]] matcher
+  * [[StarTreeRegistry]] uses. */
 object DictRegistry {
-  private val entries = new TrieMap[String, DictLayout.Index]
+  private val entries = new PathRegistry[DictLayout.Index]
 
-  def register(path: String, index: DictLayout.Index): Unit = {
-    entries.put(path, index); ()
-  }
-  def unregister(path: String): Unit = { entries.remove(path); () }
+  def register(path: String, index: DictLayout.Index): Unit = entries.update(path)(_ => index)
+  def unregister(path: String): Unit = entries.remove(path)
   def clear(): Unit = entries.clear()
   def isEmpty: Boolean = entries.isEmpty
-
-  private def normalize(p: String): String = {
-    val noScheme =
-      try {
-        val u = new java.net.URI(p)
-        if (u.getScheme != null && u.getPath != null) u.getPath else p
-      } catch { case _: java.net.URISyntaxException => p }
-    val trimmed = noScheme.replaceAll("/+$", "")
-    if (trimmed.isEmpty) "/" else trimmed
-  }
 
   /** EXACT normalized-path match only — the selection rewrite's
     * lookup. Selection plans over a file SUBSET of a registered table
@@ -389,20 +372,10 @@ object DictRegistry {
     * faster plan and the prefix rule would hijack it. An aggregate has
     * no such pruned-subset producer, so [[lookup]] keeps the prefix
     * contract there. */
-  def lookupExact(rootPath: String): Option[DictLayout.Index] = {
-    val root = normalize(rootPath)
-    entries.collectFirst { case (pfx, idx) if normalize(pfx) == root => idx }
-  }
+  def lookupExact(rootPath: String): Option[DictLayout.Index] = entries.exact(rootPath)
 
-  /** Longest normalized prefix match at a path-segment boundary (the
-    * [[StarTreeRegistry.lookup]] contract). */
-  def lookup(rootPath: String): Option[DictLayout.Index] = {
-    val root = normalize(rootPath)
-    entries.toSeq.filter { case (pfx0, _) =>
-      val pfx = normalize(pfx0)
-      root == pfx || root.startsWith(pfx + "/")
-    }.maxByOption { case (pfx, _) => normalize(pfx).length }.map(_._2)
-  }
+  /** Longest normalized prefix match at a path-segment boundary. */
+  def lookup(rootPath: String): Option[DictLayout.Index] = entries.longestPrefix(rootPath)
 }
 
 /** The query-side rewrite: an `Aggregate` (grouped or global) or an
@@ -426,57 +399,23 @@ object DictRegistry {
   * query decodes `size` strings, not 100M. */
 case class DictRoutingRule(spark: SparkSession) extends Rule[LogicalPlan] {
 
-  private def peel(plan: LogicalPlan, cond: Option[Expression])
-      : Option[(Option[Expression], DictLayout.Index)] = plan match {
-    case LogicalRelation(fs: HadoopFsRelation, _, _, _, _) =>
-      fs.location.rootPaths.headOption
-        .flatMap(p => DictRegistry.lookup(p.toString))
-        .map(idx => (cond, idx))
-    case Project(projs, child) if projs.forall(_.isInstanceOf[AttributeReference]) =>
-      peel(child, cond)
-    case Filter(c, child) if cond.isEmpty => peel(child, Some(c))
-    case _ => None
-  }
-
-  /** Selection peel: like [[peel]] but ALSO tracks the subtree's
-    * output attributes (the innermost relation's, overridden by each
-    * enclosing Project), and requires the relation to match a
-    * registered path EXACTLY — a pruned file-subset read (the sorted
-    * layout's ordered page) must keep its pruning. */
-  private def peelSel(plan: LogicalPlan)
-      : Option[(Seq[AttributeReference], Option[Expression], DictLayout.Index)] =
-    plan match {
-      case lr @ LogicalRelation(fs: HadoopFsRelation, _, _, _, _) =>
-        fs.location.rootPaths match {
-          case Seq(single) => DictRegistry.lookupExact(single.toString)
-            .map(idx => (lr.output.map(_.asInstanceOf[AttributeReference]), None, idx))
-          case _ => None
-        }
-      case Project(projs, child) if projs.forall(_.isInstanceOf[AttributeReference]) =>
-        peelSel(child).map { case (_, cond, idx) =>
-          (projs.map(_.asInstanceOf[AttributeReference]), cond, idx)
-        }
-      case Filter(c, child) =>
-        peelSel(child).flatMap {
-          case (out, None, idx) => Some((out, Some(c), idx))
-          case _ => None
-        }
-      case _ => None
-    }
-
   override def apply(plan: LogicalPlan): LogicalPlan = {
     if (DictRegistry.isEmpty) return plan
     var rewrote = false
     val routed = plan.transformDown {
-      case agg @ Aggregate(groupings, aggExprs, child, _)
+      case agg @ Aggregate(groupings, aggExprs, IndexedScan(cond, roots), _)
           if groupings.forall(_.isInstanceOf[AttributeReference]) =>
-        peel(child, None).flatMap { case (cond, idx) =>
+        roots.headOption.flatMap(DictRegistry.lookup).flatMap { idx =>
           rewrite(agg, groupings.map(_.asInstanceOf[AttributeReference]),
             aggExprs, cond, idx)
         }.map { r => rewrote = true; r }.getOrElse(agg)
-      case sort @ Sort(_, true, child, _) =>
-        peelSel(child).flatMap { case (outAttrs, cond, idx) =>
-          rewriteSelection(sort, outAttrs, cond, idx)
+      // a selection requires its ONE scan root to match a registered
+      // path EXACTLY: a pruned file-subset read (the sorted layout's
+      // ordered page) must keep its pruning
+      case sort @ Sort(_, true, child @ IndexedScan(cond, Seq(root)), _) =>
+        DictRegistry.lookupExact(root).flatMap { idx =>
+          rewriteSelection(sort, child.output.map(_.asInstanceOf[AttributeReference]),
+            cond, idx)
         }.map { r => rewrote = true; r }.getOrElse(sort)
     }
     // The selection rewrite's restore Project lands directly above the

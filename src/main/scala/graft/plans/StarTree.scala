@@ -31,6 +31,11 @@ import org.apache.spark.sql.functions._
   *  - query cost: a filter on `_gid` + a scan of one rollup slice —
   *    at 100 TB the rollup is orders of magnitude smaller than the
   *    fact table and prunes by parquet stats on `_gid` when persisted.
+  *
+  * A query reaches an index one way: register it for its fact table
+  * ([[StarTreeRegistry.register]], or for one scope with
+  * [[graft.Graft.withIndexes]]) and run the plain aggregate over the
+  * table; [[StarTreeRoutingRule]] rewrites it onto the slice.
   */
 object StarTree {
 
@@ -145,22 +150,4 @@ object StarTree {
       .agg(aggCols.head, aggCols.tail :+ grouping_id().as("_gid"): _*)
     Index(dims, metrics, rollup, math.max(sketchLgK, 0), math.max(quantileEps, 0))
   }
-
-  /** Route a group-by aggregate: answer from the index when it covers
-    * the query, else fall back to the fact table — the reference's
-    * star-tree routing rule (use the tree iff dims and aggregation
-    * functions are tree-compatible). Returns (plan, fromIndex). */
-  def route(index: Index, fact: DataFrame, groupBy: Seq[String],
-      sumMetric: String): (DataFrame, Boolean) =
-    if (index.covers(groupBy) && index.metrics.contains(sumMetric)) {
-      // the slice already holds exactly one pre-aggregated row per
-      // group — no further aggregation, no shuffle, no fact scan
-      (index.slice(groupBy).select(
-        groupBy.map(col) :+ col(s"sum_$sumMetric") :+ col("star_count").as("cnt"): _*),
-        true)
-    } else {
-      (fact.groupBy(groupBy.map(col): _*)
-        .agg(sum(col(sumMetric)).as(s"sum_$sumMetric"),
-          count(lit(1)).as("cnt")), false)
-    }
 }

@@ -1,7 +1,5 @@
 package graft.plans
 
-import scala.collection.concurrent.TrieMap
-
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference, Cast, Coalesce, Divide, EvalMode, Expression, HllSketchEstimate, Literal, NamedExpression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, AggregateFunction, Average, Complete, Count, HllSketchAgg, HllUnionAgg, Max, Min, Sum}
@@ -42,65 +40,38 @@ object StarTreeRegistry {
 
   // one table may carry SEVERAL star-trees (the reference's
   // `IndexingConfig._starTreeIndexConfigs` list — different dimension
-  // subsets/split orders); key = registered path, value = all indexes
-  private val entries = new TrieMap[String, Vector[Entry]]
+  // subsets/split orders); value = all indexes of the registered path,
+  // SMALLEST dimension set first
+  private val entries = new PathRegistry[Vector[Entry]]
 
   /** Register a built index for the fact table rooted at `path`
     * (matched against the scan's root path at rewrite time).
     * Registering a second index with the SAME dimension set replaces
     * it (rebuild); a different dimension set adds a sibling index. */
-  def register(path: String, index: StarTree.Index): Unit = {
-    val e = Entry(path, index)
-    entries.updateWith(path) {
-      case Some(v) =>
-        Some(v.filterNot(_.index.dims.toSet == index.dims.toSet) :+ e)
-      case None => Some(Vector(e))
+  def register(path: String, index: StarTree.Index): Unit =
+    entries.update(path) { v =>
+      (v.getOrElse(Vector.empty).filterNot(_.index.dims.toSet == index.dims.toSet) :+
+        Entry(path, index)).sortBy(e => (e.index.dims.size, e.index.dims.mkString(",")))
     }
-    ()
-  }
 
   def clear(): Unit = entries.clear()
 
-  def unregister(path: String): Unit = { entries.remove(path); () }
+  def unregister(path: String): Unit = entries.remove(path)
 
-  /** Strip URI scheme (scan roots come back as `file:/...`) and any
-    * trailing slashes so registered paths and scan roots compare in
-    * the same form. */
-  private def normalize(p: String): String = {
-    val noScheme =
-      try {
-        val u = new java.net.URI(p)
-        if (u.getScheme != null && u.getPath != null) u.getPath else p
-      } catch { case _: java.net.URISyntaxException => p }
-    val trimmed = noScheme.replaceAll("/+$", "")
-    if (trimmed.isEmpty) "/" else trimmed
-  }
+  def isEmpty: Boolean = entries.isEmpty
 
-  /** Exact match on the normalized root path, or a prefix match only
-    * at a path-segment boundary — `/data/lineitem10.parquet` must NOT
-    * hit an index registered for `/data/lineitem1` (a substring match
-    * here silently answers from the wrong rollup). When several
-    * registered prefixes match one scan root (a parent directory and
-    * the exact table path), the LONGEST normalized prefix wins —
-    * deterministic most-specific-wins, not TrieMap iteration order. */
+  /** The first of [[lookupAll]]. */
   def lookup(rootPath: String): Option[Entry] = lookupAll(rootPath).headOption
 
-  /** All indexes registered for the longest matching prefix, SMALLEST
-    * dimension set first — the routing rule tries them in order and
-    * the first index that covers the query's dims/metrics wins, so a
-    * narrower (cheaper, more pre-aggregated) tree is preferred over a
-    * wide one, exactly the reference's choose-the-best-tree behavior
-    * across its starTreeIndexConfigs. */
-  def lookupAll(rootPath: String): Seq[Entry] = {
-    val root = normalize(rootPath)
-    val matching = entries.toSeq.filter { case (pfx0, _) =>
-      val pfx = normalize(pfx0)
-      root == pfx || root.startsWith(pfx + "/")
-    }
-    matching.maxByOption { case (pfx, _) => normalize(pfx).length }
-      .map(_._2.sortBy(e => (e.index.dims.size, e.index.dims.mkString(","))))
-      .getOrElse(Vector.empty)
-  }
+  /** All indexes registered for the longest matching prefix
+    * ([[PathRegistry.longestPrefix]]), SMALLEST dimension set first —
+    * the routing rule tries them in order and the first index that
+    * covers the query's dims/metrics wins, so a narrower (cheaper, more
+    * pre-aggregated) tree is preferred over a wide one, exactly the
+    * reference's choose-the-best-tree behavior across its
+    * starTreeIndexConfigs. */
+  def lookupAll(rootPath: String): Seq[Entry] =
+    entries.longestPrefix(rootPath).getOrElse(Vector.empty)
 
   /** The derived-HLL "segment metadata" view of a table frame — the
     * analog of `SegmentMetadataImpl.getDerivedColumn(column, HLL)`
@@ -132,24 +103,6 @@ object StarTreeRegistry {
 }
 
 case class StarTreeRoutingRule(spark: SparkSession) extends Rule[LogicalPlan] {
-
-  /** Peel attribute-only Projects and at most ONE Filter off the
-    * aggregate's child down to an indexed fact scan. The filter (when
-    * present) is the dimension predicate the reference's star-tree
-    * answers by tree traversal; here it re-applies over the rollup
-    * slice. */
-  private def peel(plan: LogicalPlan, cond: Option[Expression])
-      : Option[(Option[Expression], Seq[StarTreeRegistry.Entry])] = plan match {
-    case LogicalRelation(fs: HadoopFsRelation, _, _, _, _) =>
-      fs.location.rootPaths.headOption
-        .map(p => StarTreeRegistry.lookupAll(p.toString))
-        .filter(_.nonEmpty)
-        .map(es => (cond, es))
-    case Project(projs, child) if projs.forall(_.isInstanceOf[AttributeReference]) =>
-      peel(child, cond)
-    case Filter(c, child) if cond.isEmpty => peel(child, Some(c))
-    case _ => None
-  }
 
   /** Slice expression answering one aggregate, if tree-mergeable and
     * the slice materializes the needed columns (None → no rewrite, so
@@ -288,22 +241,25 @@ case class StarTreeRoutingRule(spark: SparkSession) extends Rule[LogicalPlan] {
       } else None
   }
 
-  override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
-    // grouped AND global aggregates route: a global aggregate (no
-    // GROUP BY) re-aggregates the cube's all-stars slice — the
-    // Aggregate node is KEPT (empty grouping always emits exactly one
-    // row, even over an empty rollup, matching the one-row contract of
-    // a global aggregate over an empty fact table)
-    case agg @ Aggregate(groupings, aggExprs, child, _) =>
-      // several indexes may be registered for one table — smallest
-      // dimension set first (lookupAll's order); the first whose
-      // dims/metrics cover the query wins
-      val rewritten = peel(child, None).flatMap { case (cond, candidates) =>
-        candidates.view.flatMap(entry =>
-          tryEntry(agg, groupings, aggExprs, cond, entry)).headOption
-      }
-      rewritten.getOrElse(agg)
-  }
+  override def apply(plan: LogicalPlan): LogicalPlan =
+    if (StarTreeRegistry.isEmpty) plan
+    else plan.transformUp {
+      // grouped AND global aggregates route: a global aggregate (no
+      // GROUP BY) re-aggregates the cube's all-stars slice — the
+      // Aggregate node is KEPT (empty grouping always emits exactly one
+      // row, even over an empty rollup, matching the one-row contract
+      // of a global aggregate over an empty fact table). The filter of
+      // the peeled scan (when present) is the dimension predicate the
+      // reference's star-tree answers by tree traversal; here it
+      // re-applies over the rollup slice.
+      case agg @ Aggregate(groupings, aggExprs, IndexedScan(cond, roots), _) =>
+        // several indexes may be registered for one table — smallest
+        // dimension set first (lookupAll's order); the first whose
+        // dims/metrics cover the query wins
+        roots.headOption.toSeq.flatMap(StarTreeRegistry.lookupAll).view
+          .flatMap(entry => tryEntry(agg, groupings, aggExprs, cond, entry))
+          .headOption.getOrElse(agg)
+    }
 
   /** Attempt the rewrite against ONE candidate index; None when the
     * index does not cover the query (wrong dims, missing metric or

@@ -180,10 +180,8 @@ object CorpusHarness {
 
     /** [[treeSpecs]] built over the fact copy ([[stFactDir]], written
       * here) and persisted as parquet, so queries column-prune the
-      * rollup scan like any segment. Enables the routing rules in this
-      * session, as [[dict]] does. */
+      * rollup scan like any segment. */
     private[pql] lazy val treeIndexes: Seq[graft.plans.StarTree.Index] = {
-      graft.Graft.enable(spark)
       mv.write.mode("overwrite").parquet(stFactDir)
       treeSpecs.zipWithIndex.map { case (s, i) =>
         graft.plans.StarTree.build(mv, s.dims, s.metrics).rollup
@@ -198,7 +196,6 @@ object CorpusHarness {
       * dictionary-encodable and numerics pass through raw; at fixture
       * scale each dictionary holds at most [[NumRows]] entries. */
     lazy val dict: graft.plans.DictLayout.Index = {
-      graft.Graft.enable(spark)
       mv.write.mode("overwrite").parquet(dictFactDir)
       val dictCols = mv.schema.fields.filter(_.dataType == StringType).map(_.name).toSeq
       graft.plans.DictLayout.build(spark, spark.read.parquet(dictFactDir),
@@ -219,8 +216,8 @@ object CorpusHarness {
 
   /** Where the PQL side of a comparison reads from. The hsql twin always
     * reads the plain flat table, so no layout defect can cancel out.
-    * Each layout owns the table its PQL side reads, the registration
-    * of the segment its routing rule answers from, and the plan
+    * Each layout owns the table its PQL side reads, the indexes its
+    * routing rule answers from (by fact path), and the plan
     * fragments its route [[census]] looks for: `routedRoot`, the copy
     * it routes onto, and `factRoot`, the raw fact copy it routes away
     * from. The scan layouts have neither. */
@@ -228,8 +225,8 @@ object CorpusHarness {
       private[pql] val factRoot: Option[String]) {
     /** The table the PQL side reads, built on first use. */
     private[pql] def table(fx: Fixture): DataFrame
-    private[pql] def register(fx: Fixture): Unit = ()
-    private[pql] def unregister(): Unit = ()
+    private[pql] def trees(fx: Fixture): Seq[(String, graft.plans.StarTree.Index)] = Nil
+    private[pql] def dicts(fx: Fixture): Seq[(String, graft.plans.DictLayout.Index)] = Nil
     /** Whether a plan under this layout can read a routed copy. */
     def routes: Boolean = routedRoot.nonEmpty
   }
@@ -253,10 +250,7 @@ object CorpusHarness {
         fx.treeIndexes
         fx.spark.read.parquet(stFactDir)
       }
-      override private[pql] def register(fx: Fixture): Unit =
-        fx.treeIndexes.foreach(graft.plans.StarTreeRegistry.register(stFactDir, _))
-      override private[pql] def unregister(): Unit =
-        graft.plans.StarTreeRegistry.unregister(stFactDir)
+      override private[pql] def trees(fx: Fixture) = fx.treeIndexes.map(stFactDir -> _)
     }
 
     /** The uncached fact copy with the dictionary layout registered:
@@ -270,10 +264,7 @@ object CorpusHarness {
         fx.dict
         fx.spark.read.parquet(dictFactDir)
       }
-      override private[pql] def register(fx: Fixture): Unit =
-        graft.plans.DictRegistry.register(dictFactDir, fx.dict)
-      override private[pql] def unregister(): Unit =
-        graft.plans.DictRegistry.unregister(dictFactDir)
+      override private[pql] def dicts(fx: Fixture) = Seq(dictFactDir -> fx.dict)
     }
 
     val all: Seq[Layout] = Seq(Plain, Hybrid, StarTree, Dict)
@@ -298,8 +289,8 @@ object CorpusHarness {
       f: Seq[DataFrame] => A): A = {
     val tables = prepare(spark, layouts)
     val fx = fixture(spark)
-    layouts.foreach(_.register(fx))
-    try f(tables) finally layouts.foreach(_.unregister())
+    graft.Graft.withIndexes(spark, layouts.flatMap(_.trees(fx)),
+      layouts.flatMap(_.dicts(fx)))(f(tables))
   }
 
   // ---- route census -----------------------------------------------------

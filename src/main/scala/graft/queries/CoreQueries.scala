@@ -494,61 +494,62 @@ object CoreQueries {
       .orderBy($"region")
   }
 
-  /** Star-tree routing ([[graft.plans.StarTree]]): the group-by is
-    * answered from the materialized rollup (route() asserts the tree
-    * was used — no fact scan), and must still equal the oracle's
+  /** A star-tree over `lineitem`'s `dims` with the `l_quantity`
+    * metric, its rollup persisted as a segment (written once per
+    * session and dir): a live cube plan would re-scan the fact table
+    * the route is meant to bypass. */
+  private def lineitemTree(s: SparkSession, dir: String, tag: String,
+      dims: Seq[String]): graft.plans.StarTree.Index =
+    stCache.getOrElseUpdate(s, s"$tag|$dir") {
+      import graft.plans.StarTree
+      val rollupDir = s"${System.getProperty("java.io.tmpdir")}/graft_st_${tag}_" +
+        TmpTag(dir)
+      StarTree.build(t(s, dir, "lineitem"), dims, Seq("l_quantity"))
+        .rollup.write.mode("overwrite").parquet(rollupDir)
+      StarTree.Index(dims, Seq("l_quantity"), s.read.parquet(rollupDir))
+    }
+
+  /** Star-tree routing ([[graft.plans.StarTreeRoutingRule]]): the
+    * group-by is answered from the materialized rollup slice (the plan
+    * is asserted fact-scan-free), and must still equal the oracle's
     * direct aggregate over the fact table. */
   def qStartree(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    import graft.plans.StarTree
-    val fact = t(s, dir, "lineitem")
-    val idx = stCache.getOrElseUpdate(s, s"route|$dir")(
-      StarTree.build(fact, Seq("l_returnflag", "l_linestatus"), Seq("l_quantity")))
-    val (answer, fromTree) = StarTree.route(idx, fact, Seq("l_returnflag"), "l_quantity")
-    require(fromTree, "star-tree must cover this group-by")
-    answer
-      .select($"l_returnflag", round($"sum_l_quantity", 3).as("sum_qty"), $"cnt")
-      .orderBy($"l_returnflag")
+    val idx = lineitemTree(s, dir, "route", Seq("l_returnflag", "l_linestatus"))
+    graft.Graft.withIndexes(s, trees = Seq(s"$dir/lineitem.parquet" -> idx)) {
+      val df = t(s, dir, "lineitem")
+        .groupBy($"l_returnflag")
+        .agg(round(sum($"l_quantity"), 3).as("sum_qty"), count(lit(1)).as("cnt"))
+        .orderBy($"l_returnflag")
+      require(!df.queryExecution.executedPlan.toString.contains("lineitem.parquet"),
+        "star-tree routing must eliminate the fact scan")
+      df
+    }
   }
 
   /** Star-tree FILTERED routing (the reference's actual star-tree
     * query shape: WHERE on dimensions + GROUP BY —
     * `StarTreeIndexOperator`): the optimizer rule rewrites the
     * dim-filtered aggregate to filter the rollup slice and
-    * re-aggregate; the plan is asserted fact-scan-free before the
-    * registry entry is withdrawn, and the answer must still match the
-    * oracle's direct aggregate over the fact table. */
+    * re-aggregate; the plan is asserted fact-scan-free, and the answer
+    * must still match the oracle's direct aggregate over the fact
+    * table. */
   def qStartreeFiltered(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    import graft.plans.{StarTree, StarTreeRegistry}
-    graft.Graft.enable(s)
-    val fact = t(s, dir, "lineitem")
-    val idx = stCache.getOrElseUpdate(s, s"filtered|$dir") {
-      val rollupDir = s"${System.getProperty("java.io.tmpdir")}/graft_st_rollup_" +
-        TmpTag(dir)
-      StarTree.build(fact, Seq("l_returnflag", "l_linestatus", "l_linenumber"),
-          Seq("l_quantity"))
-        .rollup.write.mode("overwrite").parquet(rollupDir)
-      StarTree.Index(Seq("l_returnflag", "l_linestatus", "l_linenumber"),
-        Seq("l_quantity"), s.read.parquet(rollupDir))
-    }
-    val factPath = s"$dir/lineitem.parquet"
-    StarTreeRegistry.register(factPath, idx)
-    try {
-      val df = fact
+    val idx = lineitemTree(s, dir, "rollup",
+      Seq("l_returnflag", "l_linestatus", "l_linenumber"))
+    graft.Graft.withIndexes(s, trees = Seq(s"$dir/lineitem.parquet" -> idx)) {
+      val df = t(s, dir, "lineitem")
         .filter($"l_linestatus" === "F" && $"l_linenumber" <= 4)
         .groupBy($"l_returnflag")
         .agg(round(sum($"l_quantity"), 3).as("sum_qty"),
           count(lit(1)).as("cnt"),
           round(avg($"l_quantity"), 6).as("avg_qty"))
         .orderBy($"l_returnflag")
-      // memoize the optimized plan NOW (QueryExecution lazy vals), so
-      // the routing survives the unregister below
-      val plan = df.queryExecution.executedPlan.toString
-      require(!plan.contains("lineitem.parquet"),
+      require(!df.queryExecution.executedPlan.toString.contains("lineitem.parquet"),
         "star-tree filtered routing must eliminate the fact scan")
       df
-    } finally StarTreeRegistry.unregister(factPath)
+    }
   }
 
   private val dictCache = new SessionCache[graft.plans.DictLayout.Index]
@@ -563,33 +564,29 @@ object CoreQueries {
     * table. */
   def qDictGroup(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    import graft.plans.{DictLayout, DictRegistry}
-    graft.Graft.enable(s)
-    val fact = t(s, dir, "orders")
-    val factPath = s"$dir/orders.parquet"
-    val idx = dictCache.getOrElseUpdate(s, s"dict|$dir") {
-      val encDir = s"${System.getProperty("java.io.tmpdir")}/graft_dict_ord_" +
-        TmpTag(dir)
-      DictLayout.build(s, fact, factPath, encDir,
-        Seq("o_orderstatus", "o_orderpriority"))
-    }
-    DictRegistry.register(factPath, idx)
-    try {
-      val df = fact
+    graft.Graft.withIndexes(s, dicts = Seq(s"$dir/orders.parquet" -> ordersDict(s, dir))) {
+      val df = t(s, dir, "orders")
         .filter($"o_orderstatus" === "F")
         .groupBy($"o_orderpriority")
         .agg(count(lit(1)).as("cnt"),
           round(sum($"o_totalprice"), 3).as("sum_price"),
           max($"o_orderstatus").as("max_status"))
         .orderBy($"o_orderpriority")
-      // memoize the optimized plan before unregistering (same
-      // QueryExecution-lazy-val contract as qStartreeFiltered)
-      val plan = df.queryExecution.executedPlan.toString
-      require(!plan.contains("orders.parquet"),
+      require(!df.queryExecution.executedPlan.toString.contains("orders.parquet"),
         "dictionary routing must replace the raw scan")
       df
-    } finally DictRegistry.unregister(factPath)
+    }
   }
+
+  /** The dictionary layout over `orders`' status and priority columns,
+    * written once per session and dir. */
+  private def ordersDict(s: SparkSession, dir: String): graft.plans.DictLayout.Index =
+    dictCache.getOrElseUpdate(s, s"dict|$dir") {
+      val encDir = s"${System.getProperty("java.io.tmpdir")}/graft_dict_ord_" +
+        TmpTag(dir)
+      graft.plans.DictLayout.build(s, t(s, dir, "orders"), s"$dir/orders.parquet", encDir,
+        Seq("o_orderstatus", "o_orderpriority"))
+    }
 
   /** Dictionary-routed ORDERED SELECTION (the reference's selection
     * result assembly: `SelectionOperatorUtils` picks doc ids by
@@ -601,19 +598,8 @@ object CoreQueries {
     * oracle comparison is exact. */
   def qDictPage(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    import graft.plans.DictRegistry
-    graft.Graft.enable(s)
-    val fact = t(s, dir, "orders")
-    val factPath = s"$dir/orders.parquet"
-    val idx = dictCache.getOrElseUpdate(s, s"dict|$dir") {
-      val encDir = s"${System.getProperty("java.io.tmpdir")}/graft_dict_ord_" +
-        TmpTag(dir)
-      graft.plans.DictLayout.build(s, fact, factPath, encDir,
-        Seq("o_orderstatus", "o_orderpriority"))
-    }
-    DictRegistry.register(factPath, idx)
-    try {
-      val df = fact
+    graft.Graft.withIndexes(s, dicts = Seq(s"$dir/orders.parquet" -> ordersDict(s, dir))) {
+      val df = t(s, dir, "orders")
         .filter($"o_orderstatus" === "F")
         .select($"o_orderkey", $"o_orderpriority", $"o_totalprice")
         .orderBy($"o_totalprice".desc, $"o_orderkey".asc)
@@ -626,7 +612,7 @@ object CoreQueries {
       require(plan.contains("TakeOrderedAndProject"),
         s"routed selection must fuse into TakeOrderedAndProject:\n$plan")
       df
-    } finally DictRegistry.unregister(factPath)
+    }
   }
 
   private val composedCache =
@@ -661,11 +647,8 @@ object CoreQueries {
     }
 
   def qComposedPage(s: SparkSession, dir: String): DataFrame = {
-    import graft.plans.DictRegistry
-    graft.Graft.enable(s)
     val (sortedPath, idx) = composedArtifact(s, dir)
-    DictRegistry.register(sortedPath, idx)
-    try {
+    graft.Graft.withIndexes(s, dicts = Seq(sortedPath -> idx)) {
       val pql = "SELECT o_orderkey, o_orderstatus, o_orderpriority " +
         "FROM orders_sorted ORDER BY o_orderkey LIMIT 100, 40"
       val df = graft.pql.Pql.toDataFrame(graft.pql.Pql.parse(pql),
@@ -676,7 +659,7 @@ object CoreQueries {
       require(df.queryExecution.optimizedPlan.toString.contains("dict_decode"),
         "composed page must late-decode dictionary values")
       df
-    } finally DictRegistry.unregister(sortedPath)
+    }
   }
 
   /** FILTERED composed page (r9): the same sorted+dict artifact
@@ -688,11 +671,8 @@ object CoreQueries {
     * still happens after the page cut. The reference's
     * `SelectionOrderByOperator.java` shape: filter + sort + page. */
   def qComposedPageFiltered(s: SparkSession, dir: String): DataFrame = {
-    import graft.plans.DictRegistry
-    graft.Graft.enable(s)
     val (sortedPath, idx) = composedArtifact(s, dir)
-    DictRegistry.register(sortedPath, idx)
-    try {
+    graft.Graft.withIndexes(s, dicts = Seq(sortedPath -> idx)) {
       val pql = "SELECT o_orderkey, o_orderstatus, o_orderpriority, o_totalprice " +
         "FROM orders_sorted WHERE o_orderpriority = '1-URGENT' AND " +
         "o_totalprice > 50000.0 ORDER BY o_orderkey LIMIT 50, 30"
@@ -706,7 +686,7 @@ object CoreQueries {
       require(plan.contains("o_orderpriority__did"),
         s"dict predicate must run in id space:\n$plan")
       df
-    } finally DictRegistry.unregister(sortedPath)
+    }
   }
 
   private val bucketReady = new SessionCache[(String, String)]

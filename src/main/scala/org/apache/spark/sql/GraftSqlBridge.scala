@@ -1,6 +1,8 @@
 package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
 
 /** Bridge to the `private[sql]` Column ↔ Catalyst Expression
   * converters. Lives in the `org.apache.spark.sql` package solely to
@@ -42,10 +44,31 @@ object GraftSqlBridge {
     spark.asInstanceOf[classic.SparkSession].internalCreateDataFrame(
       rdd, schema, isStreaming = false)
 
-  /** Register a temp SQL function on an existing session (the
-    * session-state function registry is `private[sql]`). */
-  def registerFunction(spark: SparkSession, name: String,
-      builder: Seq[Expression] => Expression): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, builder, "scala_udf")
+  /** Whether the session's function registry (`private[sql]`) holds
+    * `id`. */
+  def functionExists(spark: SparkSession,
+      id: org.apache.spark.sql.catalyst.FunctionIdentifier): Boolean =
+    spark.sessionState.functionRegistry.functionExists(id)
+
+  /** Register a SQL function on an existing session — the same
+    * (identifier, info, builder) triple `SparkSessionExtensions`
+    * injects. */
+  def registerFunction(spark: SparkSession,
+      f: (org.apache.spark.sql.catalyst.FunctionIdentifier,
+        org.apache.spark.sql.catalyst.expressions.ExpressionInfo,
+        Seq[Expression] => Expression)): Unit =
+    spark.sessionState.functionRegistry.registerFunction(f._1, f._2, f._3)
+
+  /** The optimizer rules the session's own `SparkSessionExtensions`
+    * (`spark.sql.extensions`, `Builder.withExtensions`) inject. */
+  def injectedRules(spark: SparkSession): Seq[Rule[LogicalPlan]] =
+    spark.asInstanceOf[classic.SparkSession].extensions.buildOptimizerRules(spark)
+
+  /** `ds` over its optimized plan: actions on the result, and on every
+    * frame derived from it, start from the plan the optimizer produced
+    * now, whatever the session's rules would make of it later. */
+  def planned[T](ds: Dataset[T]): Dataset[T] = {
+    val c = ds.asInstanceOf[classic.Dataset[T]]
+    new classic.Dataset[T](c.sparkSession, c.queryExecution.optimizedPlan, c.encoder)
+  }
 }

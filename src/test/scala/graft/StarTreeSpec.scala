@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.plans.StarTree
 import graft.sources.Tables
@@ -32,19 +33,19 @@ class StarTreeSpec extends SparkSpec {
     assert(all === direct)
   }
 
-  test("routing: covered queries come from the tree, others scan the fact table") {
-    val (fromTree, usedTree) = StarTree.route(idx, fact, Seq("l_returnflag"), "l_quantity")
-    assert(usedTree)
-    val (fallback, usedTree2) = StarTree.route(idx, fact, Seq("l_suppkey"), "l_quantity")
-    assert(!usedTree2)
-    val t = fromTree.orderBy("l_returnflag")
-      .select("l_returnflag", "sum_l_quantity", "cnt")
-      .collect().map(_.toSeq).toSeq
-    val d = fact.groupBy($"l_returnflag")
-      .agg(sum($"l_quantity").as("s"), count(lit(1)).as("c"))
-      .orderBy("l_returnflag").collect().map(_.toSeq).toSeq
-    assert(t === d)
-    assert(fallback.count() > 0)
+  test("rule routing: covered group-bys read the rollup, others the fact table") {
+    def bySum(dim: String) = fact.groupBy(col(dim))
+      .agg(sum($"l_quantity").as("s"), count(lit(1)).as("c")).orderBy(dim)
+    def scansFact(df: DataFrame) =
+      df.queryExecution.executedPlan.toString.contains("lineitem.parquet")
+    val direct = bySum("l_returnflag").collect().map(_.toSeq).toSeq
+    val routed = Graft.withIndexes(spark,
+        trees = Seq(s"$sfDir/lineitem.parquet" -> persisted(idx, "route"))) {
+      assert(scansFact(bySum("l_suppkey")), "an uncovered group-by must scan the fact table")
+      bySum("l_returnflag")
+    }
+    assert(!scansFact(routed), "a covered group-by must read the rollup")
+    assert(routed.collect().map(_.toSeq).toSeq === direct)
   }
 
   test("percentile-est metric: slice sketches bracket the exact percentiles") {
@@ -83,11 +84,8 @@ class StarTreeSpec extends SparkSpec {
   }
 
   test("global aggregates route through the tree, filtered and unfiltered") {
-    import graft.plans.StarTreeRegistry
-    graft.Graft.enable(spark)
-    val factPath = s"$sfDir/lineitem.parquet"
-    StarTreeRegistry.register(factPath, persisted(idx, "global"))
-    try {
+    Graft.withIndexes(spark,
+        trees = Seq(s"$sfDir/lineitem.parquet" -> persisted(idx, "global"))) {
       val unfiltered = fact.agg(
         sum($"l_quantity").as("s"), count(lit(1)).as("c"),
         avg($"l_quantity").as("a"), min($"l_quantity").as("mn"),
@@ -111,19 +109,15 @@ class StarTreeSpec extends SparkSpec {
       val (dfs, dfc) = fact.filter($"l_linestatus" === "F")
         .agg(sum($"l_quantity"), count(lit(1))).as[(Double, Long)].head()
       assert(fs === dfs && fc === dfc)
-    } finally StarTreeRegistry.unregister(factPath)
+    }
   }
 
   test("derived-HLL rewrite: PQL over the raw column answers from stored sketches") {
-    import graft.plans.StarTreeRegistry
     import graft.pql.Pql
-    graft.Graft.enable(spark)
-    val factPath = s"$sfDir/lineitem.parquet"
     val sketchIdx = persisted(StarTree.build(fact,
       Seq("l_returnflag", "l_linestatus"), Seq("l_partkey"), sketchLgK = 12),
       "sketch")
-    StarTreeRegistry.register(factPath, sketchIdx)
-    try {
+    Graft.withIndexes(spark, trees = Seq(s"$sfDir/lineitem.parquet" -> sketchIdx)) {
       val resolve = (name: String) => Tables.load(spark, sfDir, name)
       val grouped = Pql.toDataFrame(Pql.parse(
         "SELECT DISTINCTCOUNTHLL(l_partkey) FROM lineitem GROUP BY l_returnflag TOP 10"),
@@ -148,23 +142,20 @@ class StarTreeSpec extends SparkSpec {
       val est = global.head().getLong(0)
       val exact = fact.agg(countDistinct($"l_partkey")).head().getLong(0)
       assert(math.abs(est - exact) <= 0.05 * exact, s"$est vs $exact")
-    } finally StarTreeRegistry.unregister(factPath)
+    }
   }
 
   test("inconsistent derived-HLL lgK across artifacts is a query-time error") {
-    import graft.plans.StarTreeRegistry
     import graft.pql.Pql
     val factPath = s"$sfDir/lineitem.parquet"
-    StarTreeRegistry.register(factPath, StarTree.build(fact,
-      Seq("l_returnflag"), Seq("l_partkey"), sketchLgK = 8))
-    StarTreeRegistry.register(factPath, StarTree.build(fact,
-      Seq("l_linestatus"), Seq("l_partkey"), sketchLgK = 12))
-    try {
+    Graft.withIndexes(spark, trees = Seq(
+        factPath -> StarTree.build(fact, Seq("l_returnflag"), Seq("l_partkey"), sketchLgK = 8),
+        factPath -> StarTree.build(fact, Seq("l_linestatus"), Seq("l_partkey"), sketchLgK = 12))) {
       val resolve = (name: String) => Tables.load(spark, sfDir, name)
       val e = intercept[IllegalArgumentException](Pql.toDataFrame(Pql.parse(
         "SELECT DISTINCTCOUNTHLL(l_partkey) FROM lineitem GROUP BY l_returnflag TOP 5"),
         resolve))
       assert(e.getMessage.contains("inconsistent derived-HLL lgK"))
-    } finally StarTreeRegistry.unregister(factPath)
+    }
   }
 }
