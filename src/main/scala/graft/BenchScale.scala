@@ -243,56 +243,66 @@ object BenchScale {
     }
   }
 
-  /** The three star-tree artifacts a reference table config would
-    * declare for this workload (built once per scale dir, marker-
-    * cached):
-    *
-    *  1. (Cancelled, Carrier, Origin, Dest) / (ArrDelay, DepDelay) —
-    *     answers a4 (filterless 1-dim group-by) and a5 (tree-dim
-    *     filter + 2-dim group-by);
-    *  2. (OriginState, DepDelay) / (ArrDelay) — a predicate column
-    *     must be a tree dim for the routing rule to traverse it, so
-    *     DepDelay is declared a DIMENSION here (any column may appear
-    *     in the reference's dimensionsSplitOrder); answers a3's
-    *     dim-filtered global aggregate (~15K rollup rows);
-    *  3. (Carrier) / sketch(FlightNum) at lgK 12 — the DERIVED-HLL
-    *     artifact (MetricFieldSpec derived metric / hllConfig shape):
-    *     its presence makes the PQL front-end compile
-    *     DISTINCTCOUNTHLL(FlightNum) to the DataSketches HLL, which
-    *     the routing rule answers from the stored all-stars sketch —
-    *     the BrokerRequestPreProcessor fastHLL swap end-to-end. */
-  private[graft] def ensureWorkloadTrees(spark: SparkSession, dir: String,
-      table: DataFrame): Seq[StarTree.Index] = {
-    def ensure(path: String, markerName: String)(build: => DataFrame): DataFrame = {
-      val marker = new java.io.File(s"$dir/$markerName")
-      if (!marker.exists()) {
-        build.write.mode("overwrite").parquet(path)
-        java.nio.file.Files.write(marker.toPath, java.util.Arrays.asList("ok"))
+  /** One workload star-tree as a scale dir caches it: its rollup's
+    * file and build marker under the dir, and the tree's shape. */
+  private final case class WorkloadTree(file: String, marker: String,
+      dims: Seq[String], metrics: Seq[String], sketchLgK: Int = 0) {
+
+    /** Build the rollup unless the dir's marker says it is there. */
+    def build(dir: String, table: DataFrame): Unit = {
+      val done = new java.io.File(s"$dir/$marker")
+      if (!done.exists()) {
+        StarTree.build(table, dims, metrics, sketchLgK = sketchLgK).rollup
+          .write.mode("overwrite").parquet(s"$dir/$file")
+        java.nio.file.Files.write(done.toPath, java.util.Arrays.asList("ok"))
       }
-      spark.read.parquet(path)
     }
-    val t1 = ensure(s"$dir/startree_cancel_carrier_od.parquet", "_ST4_DONE")(
-      StarTree.build(table, Seq("Cancelled", "Carrier", "Origin", "Dest"),
-        Seq("ArrDelay", "DepDelay")).rollup)
-    val t2 = ensure(s"$dir/startree_os_depdelay.parquet", "_ST5_DONE")(
-      StarTree.build(table, Seq("OriginState", "DepDelay"), Seq("ArrDelay")).rollup)
-    val t3 = ensure(s"$dir/startree_hll_flightnum.parquet", "_ST6_DONE")(
-      StarTree.build(table, Seq("Carrier"), Seq("FlightNum"), sketchLgK = 12).rollup)
-    // the a5-matching sibling: dropping Carrier shrinks the rollup
-    // ~15× (490K → ~33K rows at SF1000), so the a5 slice re-aggregates
-    // tens of thousands of rows, not half a million — the registry
-    // picks the smallest covering tree per query automatically
-    val t4 = ensure(s"$dir/startree_cancel_od.parquet", "_ST7_DONE")(
-      StarTree.build(table, Seq("Cancelled", "Origin", "Dest"),
-        Seq("ArrDelay", "DepDelay")).rollup)
-    Seq(
-      StarTree.Index(Seq("Cancelled", "Carrier", "Origin", "Dest"),
-        Seq("ArrDelay", "DepDelay"), t1, 0, 0),
-      StarTree.Index(Seq("OriginState", "DepDelay"), Seq("ArrDelay"), t2, 0, 0),
-      StarTree.Index(Seq("Carrier"), Seq("FlightNum"), t3, 12, 0),
-      StarTree.Index(Seq("Cancelled", "Origin", "Dest"),
-        Seq("ArrDelay", "DepDelay"), t4, 0, 0))
+
+    def ensure(spark: SparkSession, dir: String, table: DataFrame): StarTree.Index = {
+      build(dir, table)
+      StarTree.Index(dims, metrics, spark.read.parquet(s"$dir/$file"), sketchLgK, 0)
+    }
   }
+
+  /** (Cancelled, Carrier, Origin, Dest) / (ArrDelay, DepDelay) —
+    * answers a4 (filterless 1-dim group-by) and a5 (tree-dim filter +
+    * 2-dim group-by). */
+  private val CancelCarrierOdTree = WorkloadTree("startree_cancel_carrier_od.parquet",
+    "_ST4_DONE", Seq("Cancelled", "Carrier", "Origin", "Dest"), Seq("ArrDelay", "DepDelay"))
+
+  /** The a5-matching sibling: dropping Carrier shrinks the rollup ~15×
+    * (490K → ~33K rows at SF1000), so the a5 slice re-aggregates tens
+    * of thousands of rows, not half a million — the registry picks the
+    * smallest covering tree per query automatically. */
+  private val CancelOdTree = WorkloadTree("startree_cancel_od.parquet",
+    "_ST7_DONE", Seq("Cancelled", "Origin", "Dest"), Seq("ArrDelay", "DepDelay"))
+
+  /** The star-tree artifacts a reference table config would declare
+    * for this workload (built once per scale dir, marker-cached): the
+    * two trees above and
+    *
+    *  - (OriginState, DepDelay) / (ArrDelay) — a predicate column
+    *    must be a tree dim for the routing rule to traverse it, so
+    *    DepDelay is declared a DIMENSION here (any column may appear
+    *    in the reference's dimensionsSplitOrder); answers a3's
+    *    dim-filtered global aggregate (~15K rollup rows);
+    *  - (Carrier) / sketch(FlightNum) at lgK 12 — the DERIVED-HLL
+    *    artifact (MetricFieldSpec derived metric / hllConfig shape):
+    *    its presence makes the PQL front-end compile
+    *    DISTINCTCOUNTHLL(FlightNum) to the DataSketches HLL, which
+    *    the routing rule answers from the stored all-stars sketch —
+    *    the BrokerRequestPreProcessor fastHLL swap end-to-end. */
+  private val WorkloadTrees = Seq(
+    CancelCarrierOdTree,
+    WorkloadTree("startree_os_depdelay.parquet", "_ST5_DONE",
+      Seq("OriginState", "DepDelay"), Seq("ArrDelay")),
+    WorkloadTree("startree_hll_flightnum.parquet", "_ST6_DONE",
+      Seq("Carrier"), Seq("FlightNum"), sketchLgK = 12),
+    CancelOdTree)
+
+  private[graft] def ensureWorkloadTrees(spark: SparkSession, dir: String,
+      table: DataFrame): Seq[StarTree.Index] =
+    WorkloadTrees.map(_.ensure(spark, dir, table))
 
   /** One scale point: run the workload + star-tree + approx-error
     * sections, return the JSON object body. */
@@ -1127,31 +1137,11 @@ object BenchScale {
     // rollup cardinality is bounded by the dimension universe, NOT by
     // rows — at 1B rows the build costs one group-by pass and the
     // routed a4/a5 must cost the same as at SF1000.
-    val stPath = s"$dir/startree_cancel_carrier_od.parquet"
-    val marker = new java.io.File(s"$dir/_ST4_DONE")
-    val buildSecs = time {
-      if (!marker.exists()) {
-        StarTree.build(table, Seq("Cancelled", "Carrier", "Origin", "Dest"),
-          Seq("ArrDelay", "DepDelay")).rollup
-          .write.mode("overwrite").parquet(stPath)
-        java.nio.file.Files.write(marker.toPath, java.util.Arrays.asList("ok"))
-      }
-    }
-    val idx = StarTree.Index(Seq("Cancelled", "Carrier", "Origin", "Dest"),
-      Seq("ArrDelay", "DepDelay"), spark.read.parquet(stPath), 0, 0)
-    // the a5-matching sibling (see ensureWorkloadTrees): at 1B rows the
-    // 490K-row 4-dim rollup was the routed-a5 residual; the 3-dim tree
-    // re-aggregates ~33K rows instead
-    val st7Path = s"$dir/startree_cancel_od.parquet"
-    val marker7 = new java.io.File(s"$dir/_ST7_DONE")
-    if (!marker7.exists()) {
-      StarTree.build(table, Seq("Cancelled", "Origin", "Dest"),
-        Seq("ArrDelay", "DepDelay")).rollup
-        .write.mode("overwrite").parquet(st7Path)
-      java.nio.file.Files.write(marker7.toPath, java.util.Arrays.asList("ok"))
-    }
-    val idx7 = StarTree.Index(Seq("Cancelled", "Origin", "Dest"),
-      Seq("ArrDelay", "DepDelay"), spark.read.parquet(st7Path), 0, 0)
+    val buildSecs = time { CancelCarrierOdTree.build(dir, table) }
+    val idx = CancelCarrierOdTree.ensure(spark, dir, table)
+    // the a5-matching sibling: at 1B rows the 490K-row 4-dim rollup was
+    // the routed-a5 residual; the 3-dim tree re-aggregates ~33K rows instead
+    val idx7 = CancelOdTree.ensure(spark, dir, table)
     val routable = Seq("a4_groupby_1dim", "a5_groupby_2dim")
     val scanRs = routable.map { name =>
       System.gc()
