@@ -1,6 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
 
 /** Star-tree analog: a materialized pre-aggregation answering group-by
@@ -28,9 +29,12 @@ import org.apache.spark.sql.functions._
   *    min/max — avg derives from sum+count at query time); percentile
   *    or distinct-count would be wrong under rollup merging, exactly
   *    why the reference restricts star-tree metrics to mergeable fns;
-  *  - query cost: a filter on `_gid` + a scan of one rollup slice —
-  *    at 100 TB the rollup is orders of magnitude smaller than the
-  *    fact table and prunes by parquet stats on `_gid` when persisted.
+  *  - query cost: a filter on `_gid` + a scan of the rollup — at
+  *    100 TB the rollup is orders of magnitude smaller than the fact
+  *    table. The `_gid` filter does NOT prune files or row groups of
+  *    a persisted rollup: [[build]] writes the grouping sets
+  *    interleaved, so every file's `_gid` range spans them all and a
+  *    slice query decodes every rollup row to keep one grouping set's.
   *
   * A query reaches an index one way: register it for its fact table
   * ([[StarTreeRegistry.register]], or for one scope with
@@ -47,6 +51,14 @@ object StarTree {
     * segment-build step of the reference's tree. */
   final case class Index(dims: Seq[String], metrics: Seq[String], rollup: DataFrame,
       sketchLgK: Int = 0, quantileEps: Double = 0) {
+
+    /** Bytes of the rollup's files when it is a bare file relation
+      * (a persisted rollup read back), from the file index's listing —
+      * no job; None for a computed rollup. */
+    lazy val fileBytes: Option[Long] = rollup.queryExecution.analyzed match {
+      case LogicalRelation(fs: HadoopFsRelation, _, _, _, _) => Some(fs.sizeInBytes)
+      case _ => None
+    }
 
     private def gidFor(groupBy: Seq[String]): Long =
       dims.zipWithIndex.map { case (d, i) =>

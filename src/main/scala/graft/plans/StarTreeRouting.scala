@@ -1,10 +1,10 @@
 package graft.plans
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference, Cast, Coalesce, Divide, EvalMode, Expression, HllSketchEstimate, Literal, NamedExpression}
+import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference, Cast, Coalesce, Divide, EqualTo, EvalMode, Expression, HllSketchEstimate, Literal, NamedExpression, PredicateHelper}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, AggregateFunction, Average, Complete, Count, HllSketchAgg, HllUnionAgg, Max, Min, Sum}
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
-import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, LogicalPlan, Project}
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, LogicalPlan, Project, Repartition}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 
@@ -29,9 +29,21 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
   * aggregate pre-aggregated records).
   *
   * Safety: the rewrite only fires when EVERY aggregate expression maps
-  * onto a materialized column and the grouping is non-empty (a global
-  * aggregate over an empty fact table yields one row, which a cube
-  * cannot reproduce); anything else leaves the plan untouched.
+  * onto a materialized column; anything else leaves the plan
+  * untouched. A grouped query whose filter pins every non-group slice
+  * dim with a top-level `dim = literal` conjunct (or that has no
+  * filter) projects the [filtered] slice directly: each surviving
+  * slice row is exactly one group, so there is no merge and no
+  * exchange. A dim constrained only under an `OR`, an `IN` or a range
+  * does not pin, and the query keeps the merge. Every other routed
+  * query — every global aggregate among them — keeps its `Aggregate`
+  * node, so an empty slice still yields the one row a global
+  * aggregate owes. When the rollup is a file relation of at most
+  * `spark.sql.files.openCostInBytes` (one file-open's worth of bytes,
+  * known from the file listing), that merge reads the slice in one
+  * task: a non-shuffling coalesce to one partition satisfies the
+  * aggregate's distribution, so the query runs as one Spark job with
+  * no exchange. A larger or computed rollup keeps the shuffled merge.
   * Output attribute ids are preserved via aliases, so parent operators
   * resolve unchanged.
   */
@@ -102,7 +114,8 @@ object StarTreeRegistry {
   }
 }
 
-case class StarTreeRoutingRule(spark: SparkSession) extends Rule[LogicalPlan] {
+case class StarTreeRoutingRule(spark: SparkSession) extends Rule[LogicalPlan]
+    with PredicateHelper {
 
   /** Slice expression answering one aggregate, if tree-mergeable and
     * the slice materializes the needed columns (None → no rewrite, so
@@ -248,9 +261,10 @@ case class StarTreeRoutingRule(spark: SparkSession) extends Rule[LogicalPlan] {
       // GROUP BY) re-aggregates the cube's all-stars slice — the
       // Aggregate node is KEPT (empty grouping always emits exactly one
       // row, even over an empty rollup, matching the one-row contract
-      // of a global aggregate over an empty fact table). The filter of
-      // the peeled scan (when present) is the dimension predicate the
-      // reference's star-tree answers by tree traversal; here it
+      // of a global aggregate over an empty fact table), over one
+      // task when the rollup is within the open-cost bound. The filter
+      // of the peeled scan (when present) is the dimension predicate
+      // the reference's star-tree answers by tree traversal; here it
       // re-applies over the rollup slice.
       case agg @ Aggregate(groupings, aggExprs, IndexedScan(cond, roots), _) =>
         // several indexes may be registered for one table — smallest
@@ -291,10 +305,16 @@ case class StarTreeRoutingRule(spark: SparkSession) extends Rule[LogicalPlan] {
         slicePlan = entry.index.slice(sliceDims).queryExecution.analyzed
         bySlice = slicePlan.output.map(a => a.name -> a).toMap
         groupNames = groupAttrs.map(_.name).toSet
-        // the direct-projection form only fits the grouped unfiltered
-        // case (slice rows ARE the groups); filtered or GLOBAL
-        // aggregates keep the Aggregate node and merge slice rows
-        reAggregate = cond.isDefined || groupAttrs.isEmpty
+        // the direct-projection form fits a grouped query whose filter
+        // leaves one value of every non-group slice dim: the slice
+        // rows that survive ARE the groups. GLOBAL aggregates and
+        // unpinned filters keep the Aggregate node and merge slice rows
+        pinned = cond.toSeq.flatMap(splitConjunctivePredicates).collect {
+          case EqualTo(a: AttributeReference, _: Literal) => a.name
+          case EqualTo(_: Literal, a: AttributeReference) => a.name
+        }.toSet
+        reAggregate = groupAttrs.isEmpty ||
+          !sliceDims.forall(d => groupNames(d) || pinned(d))
         replaceAgg = (e: Expression) =>
           if (!reAggregate) rollupExpr(e, entry.index.metrics, bySlice, entry.index.sketchLgK)
           else reAggExpr(e, entry.index.metrics, bySlice, entry.index.sketchLgK)
@@ -307,23 +327,26 @@ case class StarTreeRoutingRule(spark: SparkSession) extends Rule[LogicalPlan] {
           case _ => None
         }
       } yield {
+        // [filter] the (group ∪ filter)-dim slice
+        val filtered = cond match {
+          case Some(c) => Filter(c.transform {
+            case ar: AttributeReference => bySlice(ar.name)
+          }, slicePlan)
+          case None => slicePlan
+        }
         if (!reAggregate)
           // direct projection: slice rows ARE the query's groups
-          Project(newOut, slicePlan)
+          Project(newOut, filtered)
         else {
-          // filtered and/or global: [filter] the (group ∪ filter)-dim
-          // slice, then merge the surviving pre-aggregated rows back
-          // down to the query's groups (one row, for a global agg)
-          val newChild = cond match {
-            case Some(c) => Filter(c.transform {
-              case ar: AttributeReference => bySlice(ar.name)
-            }, slicePlan)
-            case None => slicePlan
-          }
+          // merge the surviving pre-aggregated rows back down to the
+          // query's groups (one row, for a global agg) — in one task
+          // when the rollup is small enough that a shuffle costs more
+          // than reading it whole
+          val oneTask = entry.index.fileBytes.exists(_ <= conf.filesOpenCostInBytes)
           agg.copy(
             groupingExpressions = groupAttrs.map(a => bySlice(a.name)),
             aggregateExpressions = newOut,
-            child = newChild)
+            child = if (oneTask) Repartition(1, shuffle = false, filtered) else filtered)
         }
       }
       rewritten

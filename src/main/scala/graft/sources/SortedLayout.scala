@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions.{col, lit}
+import org.apache.parquet.column.ParquetProperties
+import org.apache.parquet.hadoop.ParquetOutputFormat
 
 /** Ordered selection over a SORTED segment layout — the Spark-native
   * analog of the reference's sorted-column fast path
@@ -172,10 +174,20 @@ object SortedLayout {
     * keys follow Spark's default null ordering (asc = nulls FIRST →
     * kept via isNull; desc = nulls LAST → correctly beyond the bound).
     * A probe miss (fewer rows than `needed`) or a non-embeddable type
-    * just skips tightening. */
-  private def tighten(frame: DataFrame, order: Seq[(String, Boolean)],
-      needed: Long): DataFrame = {
+    * just skips tightening.
+    *
+    * The probe is skipped — no job — when every file of `subset` holds
+    * at most `parquet.page.row.count.limit` rows (the session's Hadoop
+    * conf; parquet's default 20,000): a file that small has no page
+    * the bound could skip, and the untightened subset frame is already
+    * a superset the top-K cuts to the same page. */
+  private def tighten(frame: DataFrame, subset: Seq[FileStat],
+      order: Seq[(String, Boolean)], needed: Long): DataFrame = {
     if (needed < 1 || needed - 1 > Int.MaxValue) return frame
+    val pageRows = frame.sparkSession.sessionState.newHadoopConf().getInt(
+      ParquetOutputFormat.PAGE_ROW_COUNT_LIMIT,
+      ParquetProperties.DEFAULT_PAGE_ROW_COUNT_LIMIT)
+    if (subset.forall(_.rows <= pageRows)) return frame
     val cols = order.take(2).filter(c => frame.schema.fieldNames.contains(c._1))
     if (cols.isEmpty || cols.head._1 != order.head._1) return frame
     val sortCols = cols.map { case (c, asc) => if (asc) col(c).asc else col(c).desc }
@@ -273,7 +285,7 @@ object SortedLayout {
           if (subset.size >= ordered.size) None
           else if (needed >= subset.map(_.rows).sum)
             Some(finish(filteredOver(subset))) // subset IS the page
-          else Some(finish(tighten(filteredOver(subset), order, needed)))
+          else Some(finish(tighten(filteredOver(subset), subset, order, needed)))
         case Some(_) =>
           // adaptive: footer counts bound UNFILTERED rows only, so the
           // subset doubles until the filtered page is full (the probe
@@ -288,7 +300,7 @@ object SortedLayout {
             full = subset.size >= ordered.size
           }
           if (full) None
-          else Some(finish(tighten(filteredOver(subset), order, needed)))
+          else Some(finish(tighten(filteredOver(subset), subset, order, needed)))
       }
     }
   }

@@ -33,6 +33,9 @@ class NativeRoutesSpec extends SparkSpec {
     "a5_groupby_2dim", "a6_groupby_3dim", "s1_filter_topn", "s2_page",
     "s3_point_topn", "h1_hll")
 
+  private val treeRouted = Seq("a2_agg_1pred", "a3_agg_2pred", "a4_groupby_1dim",
+    "a5_groupby_2dim", "h1_hll")
+
   private def query(name: String, over: DataFrame) =
     Pql.toDataFrame(Pql.parse(BenchScale.workload.find(_._1 == name).get._3), _ => over)
 
@@ -47,6 +50,19 @@ class NativeRoutesSpec extends SparkSpec {
         val df = query(n, native)
         BenchScale.requireNativeRoute(n, df, native)
         BenchScale.requireNativeAnswer(n, df, expected.get(n), hllExact)
+      }
+    }
+  }
+
+  test("the star-tree routes a2-a5 and h1 each run one Spark job") {
+    // a pinned group-by (a4, a5) projects its slice; every merge (a2,
+    // a3, h1) reads the small rollup in one task, with no exchange
+    val trees = BenchScale.ensureWorkloadTrees(spark, dir, native)
+    Graft.withIndexes(spark, trees = trees.map(nativePath -> _)) {
+      treeRouted.foreach { n =>
+        val df = query(n, native)
+        val (_, jobs) = jobsOf(df.collect())
+        assert(jobs == 1, s"$n ran $jobs jobs:\n${df.queryExecution.executedPlan}")
       }
     }
   }

@@ -92,4 +92,29 @@ class SortedLayoutSpec extends SparkSpec {
     assert(df.inputFiles.length == totalFiles)
     assert(df.count() == fact.count())
   }
+
+  test("a page over files of at most one parquet page probes only when the limit is lower") {
+    val pql = "SELECT l_orderkey, l_linenumber, l_quantity FROM lineitem_sorted " +
+      "ORDER BY l_orderkey, l_linenumber, l_quantity LIMIT 20, 15"
+    val expect = fact.select($"l_orderkey", $"l_linenumber", $"l_quantity")
+      .orderBy($"l_orderkey", $"l_linenumber", $"l_quantity").offset(20).limit(15)
+      .collect().map(_.toSeq).toSeq
+    val sorted = spark.read.parquet(sortedDir)
+    assert(SortedLayout.layoutFor(sorted, "l_orderkey").get.forall(_.rows <= 20000))
+    // every file is under parquet's default 20,000-row page limit:
+    // the bound could skip no page, so building the frame runs no job
+    val (fast, jobs) = jobsOf(Pql.toDataFrame(Pql.parse(pql), _ => sorted))
+    assert(jobs == 0, s"building the page ran $jobs jobs")
+    assert(fast.inputFiles.length < totalFiles)
+    assert(fast.collect().map(_.toSeq).toSeq == expect)
+    // a limit below the file size brings the boundary probe back
+    val session = spark.newSession()
+    session.conf.set("parquet.page.row.count.limit", "100")
+    val small = session.read.parquet(sortedDir)
+    val (probed, probeJobs) = jobsOf(Pql.toDataFrame(Pql.parse(pql), _ => small))
+    assert(probeJobs >= 1, "the boundary probe did not run")
+    assert(probed.queryExecution.optimizedPlan.toString.contains("Filter"),
+      s"no bound predicate:\n${probed.queryExecution.optimizedPlan}")
+    assert(probed.collect().map(_.toSeq).toSeq == expect)
+  }
 }

@@ -3,9 +3,7 @@ package graft
 import java.net.{HttpURLConnection, URI}
 import java.nio.charset.StandardCharsets
 import java.nio.file.Files
-import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.Trigger
@@ -25,44 +23,6 @@ class TablesSpec extends SparkSpec {
 
   private def tempDir(prefix: String): String =
     Files.createTempDirectory(prefix).toFile.getAbsolutePath
-
-  /** Spark jobs `f` launches on this thread. */
-  private def jobsOf[T](f: => T): (T, Int) = {
-    val (out, jobs, _) = jobsAndTasksOf(f)
-    (out, jobs)
-  }
-
-  /** Spark jobs `f` launches on this thread, and their tasks. The
-    * listener bus delivers in order, so once a later marker job has
-    * arrived every job of `f` has been counted. */
-  private def jobsAndTasksOf[T](f: => T): (T, Int, Int) = {
-    val group = s"tables-spec-${System.nanoTime()}"
-    val marker = group + "-marker"
-    val jobs = new AtomicInteger
-    val tasks = new AtomicInteger
-    val markerSeen = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))) match {
-          case Some(`group`) =>
-            jobs.incrementAndGet()
-            tasks.addAndGet(e.stageInfos.map(_.numTasks).sum); ()
-          case Some(`marker`) => markerSeen.countDown()
-          case _ =>
-        }
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "counted")
-      val out = try f finally sc.clearJobGroup()
-      sc.setJobGroup(marker, "marker")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      assert(markerSeen.await(30, java.util.concurrent.TimeUnit.SECONDS),
-        "listener bus did not deliver the marker job")
-      (out, jobs.get, tasks.get)
-    } finally sc.removeSparkListener(listener)
-  }
 
   private def relationOf(df: org.apache.spark.sql.DataFrame): HadoopFsRelation =
     df.queryExecution.analyzed.collectFirst {
