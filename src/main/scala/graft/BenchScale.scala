@@ -489,47 +489,51 @@ object BenchScale {
         QueryResult(name, "agg", sparkReps, duck, twinNone = duck.isEmpty)
       }
       // ORDERED-READ fast path (SortedInvertedIndexBasedFilterOperator
-      // analog, graft.sources.SortedLayout): copies range-partitioned
-      // on each query's primary ORDER BY column answer the page from
-      // head/tail files only — detected from footer min/max, asserted
-      // pruned. s2 pages an unfiltered total order (footer row counts
-      // give the exact file subset); s3 is dim-filtered (the subset
-      // expands adaptively until the page fills — here one tail file).
+      // analog, graft.plans.SortedPageRule over graft.sources.SortedLayout,
+      // so the section runs with the rules enabled): copies
+      // range-partitioned on each query's primary ORDER BY column
+      // answer the page from head/tail files only — detected from
+      // footer min/max, asserted pruned. s2 pages an unfiltered total
+      // order (footer row counts give the exact file subset); s3 is
+      // dim-filtered (the subset expands adaptively until the page
+      // fills — here one tail file).
       val orderedSpecs = Seq(
         ("s2_page", s"$dir/ontime_sorted_dse.parquet", "_SORTED_DSE_DONE",
           Seq("DaysSinceEpoch", "FlightNum")),
         ("s3_point_topn", s"$dir/ontime_sorted_dep.parquet", "_SORTED_DEP_DONE",
           Seq("DepDelay")))
-      val ordRs = orderedSpecs.map { case (name, path, markerName, sortCols) =>
-        val m = new java.io.File(s"$dir/$markerName")
-        if (!m.exists()) {
-          table.repartitionByRange(64, sortCols.map(col): _*)
-            .sortWithinPartitions(sortCols.map(col): _*)
-            .write.mode("overwrite").parquet(path)
-          java.nio.file.Files.write(m.toPath, java.util.Arrays.asList("ok"))
+      val ordRs = Graft.withIndexes(spark) {
+        orderedSpecs.map { case (name, path, markerName, sortCols) =>
+          val m = new java.io.File(s"$dir/$markerName")
+          if (!m.exists()) {
+            table.repartitionByRange(64, sortCols.map(col): _*)
+              .sortWithinPartitions(sortCols.map(col): _*)
+              .write.mode("overwrite").parquet(path)
+            java.nio.file.Files.write(m.toPath, java.util.Arrays.asList("ok"))
+          }
+          val copy = spark.read.parquet(path)
+          val ldr: String => DataFrame = _ => copy
+          val (_, _, pql, duckSql) = workload.find(_._1 == name).get
+          val df = Pql.toDataFrame(Pql.parse(pql), ldr)
+          require(df.inputFiles.length < copy.inputFiles.length,
+            s"$name ordered read did not prune " +
+              s"(${df.inputFiles.length}/${copy.inputFiles.length} files)")
+          // the page's ORDER BY values must equal the full-scan plan's
+          // (tie rows may swap within equal keys — compare the ordered
+          // key columns, which both plans pin exactly)
+          val keyCols = sortCols.take(1) // primary column carries the page contract
+          val fastKeys = df.select(keyCols.map(col): _*).collect().map(_.toSeq).toSeq
+          val scanKeys = Pql.toDataFrame(Pql.parse(pql), loader)
+            .select(keyCols.map(col): _*).collect().map(_.toSeq).toSeq
+          require(fastKeys == scanKeys,
+            s"$name ordered-read page diverged from the scan plan on $keyCols")
+          System.gc()
+          val sparkReps = sample(reps)(exec(df))
+          val view = path.substring(path.lastIndexOf('/') + 1).stripSuffix(".parquet")
+          val duck = duckTwin(duckViews(dir, view -> s"$view.parquet"),
+            duckSql.replace("FROM ontime", s"FROM $view"), reps)
+          QueryResult(name, "sel", sparkReps, duck, twinNone = duck.isEmpty)
         }
-        val copy = spark.read.parquet(path)
-        val ldr: String => DataFrame = _ => copy
-        val (_, _, pql, duckSql) = workload.find(_._1 == name).get
-        val df = Pql.toDataFrame(Pql.parse(pql), ldr)
-        require(df.inputFiles.length < copy.inputFiles.length,
-          s"$name ordered read did not prune " +
-            s"(${df.inputFiles.length}/${copy.inputFiles.length} files)")
-        // the page's ORDER BY values must equal the full-scan plan's
-        // (tie rows may swap within equal keys — compare the ordered
-        // key columns, which both plans pin exactly)
-        val keyCols = sortCols.take(1) // primary column carries the page contract
-        val fastKeys = df.select(keyCols.map(col): _*).collect().map(_.toSeq).toSeq
-        val scanKeys = Pql.toDataFrame(Pql.parse(pql), loader)
-          .select(keyCols.map(col): _*).collect().map(_.toSeq).toSeq
-        require(fastKeys == scanKeys,
-          s"$name ordered-read page diverged from the scan plan on $keyCols")
-        System.gc()
-        val sparkReps = sample(reps)(exec(df))
-        val view = path.substring(path.lastIndexOf('/') + 1).stripSuffix(".parquet")
-        val duck = duckTwin(duckViews(dir, view -> s"$view.parquet"),
-          duckSql.replace("FROM ontime", s"FROM $view"), reps)
-        QueryResult(name, "sel", sparkReps, duck, twinNone = duck.isEmpty)
       }
       s""""sorted":{${(rs ++ ordRs).map(_.json).mkString(",")}}"""
     }
@@ -612,7 +616,8 @@ object BenchScale {
   /** The dictionary layout over `native` (`$dir/ontime_sorted_dse.parquet`),
     * marker-cached. It keeps the native (DaysSinceEpoch, FlightNum)
     * sort (`layoutBy`), so the s2 page composes the sorted-subset read
-    * with id-space sort keys + late decode (DictLayout.orderedDictPage).
+    * with id-space sort keys + late decode ([[graft.plans.DictRoutingRule]]'s
+    * selection rewrite, then [[graft.plans.SortedPageRule]]'s file cut).
     * Marker v2: older flat copies (before r8) must rebuild. */
   private[graft] def ensureNativeDict(spark: SparkSession, dir: String,
       native: DataFrame): DictLayout.Index = {

@@ -8,12 +8,12 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
 import graft.functions.SqlFunctions
-import graft.plans.{DictLayout, DictRegistry, DictRoutingRule, StarTree, StarTreeRegistry, StarTreeRoutingRule}
+import graft.plans.{DictLayout, DictRegistry, DictRoutingRule, SortedPageRule, StarTree, StarTreeRegistry, StarTreeRoutingRule}
 
 /** The engine's `SparkSessionExtensions` entry point — the preference-
   * order capstone for operators Spark can't express natively (project
   * brief option (c)): custom expressions registered as SQL functions
-  * and the star-tree and dictionary routing optimizer rules, injected
+  * and the star-tree, dictionary and sorted-page optimizer rules, injected
   * at session build via
   *
   * {{{
@@ -39,9 +39,10 @@ object GraftExtensions {
 
   /** The routing rules, in order: star-tree first, so a full
     * pre-aggregation answer wins over the dictionary-encoded scan when
-    * both artifacts are registered. */
+    * both artifacts are registered; the sorted page last, so it cuts
+    * whichever relation the dictionary rewrite left under the sort. */
   val rules: Seq[SparkSession => Rule[LogicalPlan]] =
-    Seq(StarTreeRoutingRule(_), DictRoutingRule(_))
+    Seq(StarTreeRoutingRule(_), DictRoutingRule(_), SortedPageRule(_))
 }
 
 /** Graft on an existing session, and the one way to put indexes in

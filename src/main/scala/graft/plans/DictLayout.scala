@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, In, IsNotNull, IsNull, LessThan, LessThanOrEqual, Literal, NamedExpression, SortOrder}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, LogicalPlan, Project, Sort}
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StringType
 import org.apache.spark.sql.GraftSqlBridge
@@ -153,7 +152,8 @@ object DictLayout {
     // `layoutBy`: ALSO range-partition + sort the encoded copy on the
     // given (non-dict) columns, so [[graft.sources.SortedLayout]]
     // detects the encoded copy as a sorted layout too — the composed
-    // sorted-page + id-space route ([[orderedDictPage]]). Without it,
+    // page: [[DictRoutingRule]]'s selection rewrite, then
+    // [[SortedPageRule]]'s file cut over the encoded copy. Without it,
     // the narrow select-write packs input splits by size and destroys
     // per-file range disjointness.
     val encoded0 = fact.select(encodedCols.toIndexedSeq: _*)
@@ -175,165 +175,6 @@ object DictLayout {
         .parquet(s"$encodedPath/_dicts/$c")
     }
     Index(factPath, spark.read.parquet(encodedPath), dicts)
-  }
-
-  /** Translate a predicate built against the RAW table into one the
-    * ENCODED copy evaluates: EQ / IN / range / null tests on dict
-    * columns compare the int id (sorted dictionary ⇒ value order ≡ id
-    * order — the same table [[DictRoutingRule]]'s resolved-plan
-    * Translator uses, here over the UNRESOLVED `col`/`lit` tree so the
-    * result applies to any re-read of the encoded files), raw columns
-    * pass through by name, and any other use of a dict column falls
-    * back to a per-row [[graft.functions.exprs.DictDecode]] — correct
-    * for LIKE/REGEXP/function predicates, it just loses pushdown for
-    * that conjunct only. */
-  def encodedFilter(i: Index, pred: org.apache.spark.sql.Column)
-      : org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-    def dictOf(name: String): Option[(String, Array[UTF8String])] =
-      i.dicts.collectFirst { case (c, vs) if c.equalsIgnoreCase(name) => (c, vs) }
-    def codeOf(c: String): Expression = UnresolvedAttribute(Seq(c + "__did"))
-    object DictAttr {
-      def unapply(e: Expression): Option[String] = e match {
-        case UnresolvedAttribute(Seq(n)) => dictOf(n).map(_._1)
-        case _ => None
-      }
-    }
-    // A Column-API predicate (the PQL compiler's output) is a tree of
-    // UNRESOLVED FUNCTION nodes — `===` is UnresolvedFunction("=", …),
-    // `.isin` is "in", `.isNull` is "isnull" — not the catalyst
-    // comparison nodes a resolved plan carries. Match both layers.
-    object Fn {
-      def unapply(e: Expression): Option[(String, Seq[Expression])] = e match {
-        case f: org.apache.spark.sql.catalyst.analysis.UnresolvedFunction
-            if f.nameParts.size == 1 =>
-          Some((f.nameParts.head.toLowerCase(java.util.Locale.ROOT), f.arguments))
-        case _ => None
-      }
-    }
-    object StrLit {
-      def unapply(e: Expression): Option[UTF8String] = e match {
-        case Literal(v: UTF8String, StringType) => Some(v)
-        case _ => None
-      }
-    }
-    def eqId(c: String, v: UTF8String): Expression =
-      EqualTo(codeOf(c), Literal(i.idOf(c, v).getOrElse(-1)))
-    def inIds(c: String, vs: Seq[UTF8String]): Expression = {
-      val ids = vs.flatMap(v => i.idOf(c, v))
-      In(codeOf(c), if (ids.isEmpty) Seq(Literal(-1)) else ids.map(Literal(_)))
-    }
-    def gtId(c: String, v: UTF8String, strict: Boolean): Expression =
-      GreaterThanOrEqual(codeOf(c), Literal(i.lowerBound(c, v, strict = strict)))
-    def ltId(c: String, v: UTF8String, inclusive: Boolean): Expression =
-      LessThan(codeOf(c), Literal(i.lowerBound(c, v, strict = inclusive)))
-    val xlated = GraftSqlBridge.deepExpression(pred).transformDown {
-      // ---- resolved/catalyst comparison nodes (direct-API callers) ----
-      case EqualTo(DictAttr(c), StrLit(v)) => eqId(c, v)
-      case EqualTo(StrLit(v), DictAttr(c)) => eqId(c, v)
-      case In(DictAttr(c), list) if list.forall(StrLit.unapply(_).isDefined) =>
-        inIds(c, list.collect { case StrLit(v) => v })
-      case GreaterThan(DictAttr(c), StrLit(v)) => gtId(c, v, strict = true)
-      case GreaterThanOrEqual(DictAttr(c), StrLit(v)) => gtId(c, v, strict = false)
-      case LessThan(DictAttr(c), StrLit(v)) => ltId(c, v, inclusive = false)
-      case LessThanOrEqual(DictAttr(c), StrLit(v)) => ltId(c, v, inclusive = true)
-      case IsNull(DictAttr(c)) => IsNull(codeOf(c))
-      case IsNotNull(DictAttr(c)) => IsNotNull(codeOf(c))
-      // ---- Column-API unresolved function nodes (the PQL compiler) ----
-      case Fn("=", Seq(DictAttr(c), StrLit(v))) => eqId(c, v)
-      case Fn("=", Seq(StrLit(v), DictAttr(c))) => eqId(c, v)
-      case Fn("in", DictAttr(c) +: rest)
-          if rest.nonEmpty && rest.forall(StrLit.unapply(_).isDefined) =>
-        inIds(c, rest.collect { case StrLit(v) => v })
-      case Fn(">", Seq(DictAttr(c), StrLit(v))) => gtId(c, v, strict = true)
-      case Fn(">=", Seq(DictAttr(c), StrLit(v))) => gtId(c, v, strict = false)
-      case Fn("<", Seq(DictAttr(c), StrLit(v))) => ltId(c, v, inclusive = false)
-      case Fn("<=", Seq(DictAttr(c), StrLit(v))) => ltId(c, v, inclusive = true)
-      case Fn("<", Seq(StrLit(v), DictAttr(c))) => gtId(c, v, strict = true)
-      case Fn("<=", Seq(StrLit(v), DictAttr(c))) => gtId(c, v, strict = false)
-      case Fn(">", Seq(StrLit(v), DictAttr(c))) => ltId(c, v, inclusive = false)
-      case Fn(">=", Seq(StrLit(v), DictAttr(c))) => ltId(c, v, inclusive = true)
-      case Fn("isnull", Seq(DictAttr(c))) => IsNull(codeOf(c))
-      case Fn("isnotnull", Seq(DictAttr(c))) => IsNotNull(codeOf(c))
-    }
-    val decoded = xlated.transformDown {
-      case DictAttr(c) => exprs.DictDecode(codeOf(c), i.dicts(c))
-    }
-    GraftSqlBridge.column(decoded)
-  }
-
-  /** COMPOSED sorted-page + dictionary route: a
-    * `SELECT cols [WHERE pred] ORDER BY ... LIMIT offset, size` over a
-    * registered raw table answers from the ENCODED copy's sorted
-    * layout — file subset + boundary tightening from
-    * [[graft.sources.SortedLayout]] (a filter switches its subset walk
-    * to adaptive doubling, since footer row counts bound UNFILTERED
-    * rows only), the predicate translated to id space via
-    * [[encodedFilter]] so it still pushes to the parquet scan, sort
-    * keys on dict columns compare int ids (sorted dictionary ⇒ id
-    * order ≡ value order, null ids iff null values), and values decode
-    * AFTER the offset/limit cut — `size` decodes, not file-rows. This
-    * is the composition [[DictRegistry.lookupExact]] deliberately
-    * blocks at the rule level (a pruned subset relation must not be
-    * hijacked onto the FULL encoded copy); here the pruning and the
-    * encoding come from the same artifact, so both levers apply.
-    * Requires the encoded copy built with `layoutBy = <primary order
-    * column>` (otherwise its footers fail the sorted-layout detection
-    * and this returns None). The reference's
-    * `SelectionOrderByOperator.java` is exactly this shape: filter +
-    * sort + page over the sorted forward index.
-    *
-    * `selectIdents` are the query's plainly-named output columns;
-    * `selectCount` is the FULL select-list length — a computed select
-    * expression makes them differ, and the route bails. */
-  def orderedDictPage(base: DataFrame, selectIdents: Seq[String],
-      selectCount: Int, orderBy: Seq[(String, Boolean)],
-      offset: Int, size: Int,
-      filter: Option[org.apache.spark.sql.Column] = None): Option[DataFrame] = {
-    import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-    // every raw column the predicate references must exist in the
-    // encoded copy (a resolved/multi-part reference fails `covered`
-    // below and the route bails — never a wrong answer)
-    val filterNames: Seq[String] = filter.toSeq.flatMap(f =>
-      GraftSqlBridge.deepExpression(f).collect { case u: UnresolvedAttribute => u.name })
-    if (selectIdents.isEmpty || selectIdents.length != selectCount ||
-      orderBy.isEmpty) return None
-    val idx = base.queryExecution.analyzed match {
-      case LogicalRelation(fs: HadoopFsRelation, _, _, _, _) =>
-        fs.location.rootPaths match {
-          case Seq(root) => DictRegistry.lookupExact(root.toString)
-          case _ => None
-        }
-      case _ => None
-    }
-    idx.flatMap { i =>
-      val enc = i.encoded
-      val names = selectIdents ++ orderBy.map(_._1) ++ filterNames
-      def encName(c: String): String = if (i.dicts.contains(c)) c + "__did" else c
-      val covered = names.forall(n => enc.schema.fieldNames.contains(encName(n)))
-      // the primary order column must be a RAW (non-dict) column: the
-      // encoded copy's sorted layout is physical on the raw values
-      if (!covered || i.dicts.contains(orderBy.head._1)) None
-      else {
-        val order = orderBy.map { case (c, asc) => (encName(c), asc) }
-        graft.sources.SortedLayout.orderedSelection(
-          enc, order, filter.map(encodedFilter(i, _)),
-          offset.toLong + size.toLong, { sub =>
-            val sortCols = order.map { case (c, asc) =>
-              if (asc) col(c).asc else col(c).desc }
-            val paged = sub
-              .select(names.distinct.map(n => col(encName(n))): _*)
-              .orderBy(sortCols: _*)
-            val cut = (if (offset > 0) paged.offset(offset) else paged).limit(size)
-            cut.select(selectIdents.map { n =>
-              if (i.dicts.contains(n))
-                GraftSqlBridge.column(exprs.DictDecode(
-                  GraftSqlBridge.expression(col(n + "__did")), i.dicts(n))).as(n)
-              else col(n)
-            }: _*)
-          })
-      }
-    }
   }
 
   /** Re-open a previously [[build]]-written encoded segment: reads the
@@ -366,12 +207,15 @@ object DictRegistry {
   def isEmpty: Boolean = entries.isEmpty
 
   /** EXACT normalized-path match only — the selection rewrite's
-    * lookup. Selection plans over a file SUBSET of a registered table
-    * (the sorted-layout ordered read prunes to head/tail files) must
-    * NOT route back onto the full encoded copy: the subset read is the
-    * faster plan and the prefix rule would hijack it. An aggregate has
-    * no such pruned-subset producer, so [[lookup]] keeps the prefix
-    * contract there. */
+    * lookup. A selection over a file SUBSET of a registered table (a
+    * frame a user built over some of its files, or a page
+    * [[SortedPageRule]] already cut) must NOT route back onto the full
+    * encoded copy: the subset read is the smaller plan and the prefix
+    * match would hijack it. The composed page needs no exception:
+    * the dictionary rewrite runs on the table's own root, before
+    * [[SortedPageRule]] cuts the encoded copy. An aggregate has no such
+    * pruned-subset producer, so [[lookup]] keeps the prefix contract
+    * there. */
   def lookupExact(rootPath: String): Option[DictLayout.Index] = entries.exact(rootPath)
 
   /** Longest normalized prefix match at a path-segment boundary. */

@@ -57,7 +57,7 @@ object PathRegistry {
   }
 }
 
-/** The plan shape both routing rules answer over: attribute-only
+/** The plan shape the routing rules answer over: attribute-only
   * Projects and at most ONE Filter above a file scan. Yields the
   * filter (the predicate the index re-applies) and the scan's root
   * paths. */

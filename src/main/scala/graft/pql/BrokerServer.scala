@@ -7,6 +7,7 @@ import java.util.concurrent.{Executors, TimeUnit, TimeoutException}
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
 import org.apache.spark.sql.SparkSession
 
+import graft.Graft
 import graft.sources.Tables
 
 /** PQL-over-HTTP broker endpoint — the reference's main query path
@@ -52,6 +53,9 @@ final class BrokerServer(spark: SparkSession, tableDir: String, port: Int = 0,
     s"admissionWaitMs must be positive, got $admissionWaitMs")
   require(tableQuotas.values.forall(_ > 0),
     s"table QPS quotas must be positive: $tableQuotas")
+  // the routing rules (star-tree, dictionary, sorted page) serve every
+  // query the broker plans
+  Graft.enable(spark)
 
   private val quotaLimiters: Map[String, BrokerServer.QpsLimiter] =
     tableQuotas.map { case (t, qps) => t -> new BrokerServer.QpsLimiter(qps) }

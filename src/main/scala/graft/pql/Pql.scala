@@ -922,53 +922,21 @@ object Pql {
       require(q.having.isEmpty, "HAVING requires GROUP BY")
       require(q.top.isEmpty, "TOP requires GROUP BY")
       val (offset, size) = q.limit.getOrElse((0, 10))
-      def finish(from: DataFrame): DataFrame = {
-        val projected0 =
-          if (q.select == Seq(Star)) from
-          else from.select(q.select.map(e => scalar(e).as(nameOf(e))): _*)
-        // SELECT DISTINCT (the DistinctAggregation path, SURVEY §2.5)
-        val projected = if (q.distinct) projected0.distinct() else projected0
-        val ordered =
-          if (q.orderBy.isEmpty) projected
-          else projected.orderBy(q.orderBy.map { case (c, asc) =>
-            if (asc) col(c).asc else col(c).desc
-          }: _*)
-        val off = if (offset > 0) ordered.offset(offset) else ordered
-        off.limit(size)
-      }
-      // Sorted-segment ordered read (SortedInvertedIndexBasedFilter
-      // Operator analog, [[graft.sources.SortedLayout]]): when the
-      // table's parquet files are range-disjoint on the primary ORDER
-      // BY column, the page answers from the head/tail files only —
-      // detected from footer metadata, never assumed. DISTINCT pages
-      // are excluded: dedup could shrink the page below `size` after
-      // pruning decided the subset from raw row counts.
-      //
-      // COMPOSED route first: when the table also has a registered
-      // dictionary layout whose encoded copy is range-partitioned on
-      // the same primary column, the page runs over the ENCODED subset
-      // — id-space sort keys AND id-space filter (translated via
-      // DictLayout.encodedFilter, still pushed to the scan), dictionary
-      // values decoded AFTER the page cut (the reference's sorted
-      // forward index + selection result assembly,
-      // `SelectionOperatorService.java:46-95`; filter + sort + page is
-      // its `SelectionOrderByOperator` shape).
-      val fastPage: Option[DataFrame] =
-        if (q.orderBy.isEmpty || q.distinct) None
-        else {
-          val needed = offset.toLong + size.toLong
-          val composed =
-            if (q.select == Seq(Star)) None
-            else graft.plans.DictLayout.orderedDictPage(
-              base, q.select.collect { case Ident(n) => n },
-              q.select.length, q.orderBy, offset, size,
-              q.where.map(w => predicate(w, base.schema)))
-          composed.orElse(graft.sources.SortedLayout.orderedSelection(
-            base, q.orderBy,
-            q.where.map(w => predicate(w, base.schema)),
-            needed, finish))
-        }
-      fastPage.getOrElse(finish(filtered))
+      val projected0 =
+        if (q.select == Seq(Star)) filtered
+        else filtered.select(q.select.map(e => scalar(e).as(nameOf(e))): _*)
+      // SELECT DISTINCT (the DistinctAggregation path, SURVEY §2.5)
+      val projected = if (q.distinct) projected0.distinct() else projected0
+      // an ordered page over a sorted layout reads only its head/tail
+      // files: graft.plans.SortedPageRule decides that at optimization,
+      // for this frame as for any other
+      val ordered =
+        if (q.orderBy.isEmpty) projected
+        else projected.orderBy(q.orderBy.map { case (c, asc) =>
+          if (asc) col(c).asc else col(c).desc
+        }: _*)
+      val off = if (offset > 0) ordered.offset(offset) else ordered
+      off.limit(size)
     }
   }
 

@@ -621,12 +621,12 @@ object CoreQueries {
   /** COMPOSED page route (r8): a SORTED segment whose dictionary-
     * encoded copy keeps the same physical order (`DictLayout.build
     * layoutBy = sort key`) answers an unfiltered ordered page from the
-    * ENCODED file subset — footer pruning + boundary tightening from
-    * [[graft.sources.SortedLayout]], id-space page cut, dictionary
-    * values decoded only for the LIMIT rows
-    * ([[graft.plans.DictLayout.orderedDictPage]], the reference's
-    * sorted forward index + `SelectionOperatorService` result
-    * assembly). Unique `o_orderkey` order makes the page exact. */
+    * ENCODED file subset — id-space page cut with dictionary values
+    * decoded only for the LIMIT rows ([[graft.plans.DictRoutingRule]]),
+    * then footer pruning + boundary tightening over the encoded copy's
+    * files ([[graft.plans.SortedPageRule]]): the reference's sorted
+    * forward index + `SelectionOperatorService` result assembly.
+    * Unique `o_orderkey` order makes the page exact. */
   /** Write-once sorted+dict composed artifact over `orders` for this
     * (session, dir): raw copy range-sorted on o_orderkey, encoded copy
     * with the same physical order (`layoutBy`). */
@@ -664,9 +664,9 @@ object CoreQueries {
 
   /** FILTERED composed page (r9): the same sorted+dict artifact
     * answers `WHERE <pred> ORDER BY <sorted col> LIMIT off, n` — the
-    * predicate translates to id space ([[graft.plans.DictLayout
-    * .encodedFilter]]: dict EQ compares the int id and still pushes to
-    * the parquet scan), the sorted-subset walk switches to adaptive
+    * predicate translates to id space ([[graft.plans.DictRoutingRule]]:
+    * dict EQ compares the int id and still pushes to the parquet
+    * scan), the sorted-subset walk switches to adaptive
     * doubling (footer counts bound unfiltered rows only), and decode
     * still happens after the page cut. The reference's
     * `SelectionOrderByOperator.java` shape: filter + sort + page. */

@@ -1,9 +1,13 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{And, Attribute, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, IsNull, LessThan, LessThanOrEqual, Literal, NullsFirst, Or, SortOrder}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, Limit, LogicalPlan, Offset, Project, Sort}
+import org.apache.spark.sql.execution.datasources.{FileIndex, FileStatusWithMetadata, HadoopFsRelation, LogicalRelation, PartitionDirectory}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.types.StructType
 import org.apache.parquet.column.ParquetProperties
 import org.apache.parquet.hadoop.ParquetOutputFormat
 
@@ -62,40 +66,43 @@ object SortedLayout {
   // entry holds ~100 B per file)
   private val fileStats = new FileSets.Carry[(Seq[String], String), Option[FileStat]]
 
-  /** The sorted layout of `df`'s scan for `column`, or None when the
-    * frame is not a bare parquet scan, the column's per-file ranges
+  /** The sorted layout of `df`'s scan for `column` (see the relation
+    * overload), or None when the frame is not a bare file scan. */
+  def layoutFor(df: DataFrame, column: String): Option[Seq[FileStat]] =
+    df.queryExecution.optimizedPlan match {
+      case LogicalRelation(fs: HadoopFsRelation, _, _, _, _) => layoutFor(fs, column)
+      case _ => None
+    }
+
+  /** The sorted layout of a relation's files for `column`, or None when
+    * the relation is not a parquet scan, the column's per-file ranges
     * overlap (not a sorted layout), any footer lacks stats, or any
     * file contains nulls in the column (null ordering cannot be
     * decided from range stats). Result is ASC-ordered by file min.
     * The disjointness check runs over the whole file set every time;
     * only the footer reads carry over. */
-  def layoutFor(df: DataFrame, column: String): Option[Seq[FileStat]] = {
-    df.queryExecution.optimizedPlan match {
-      case LogicalRelation(fs: HadoopFsRelation, _, _, _, _)
-          if fs.fileFormat.isInstanceOf[ParquetFileFormat] =>
-        try {
-          val files = FileSets.scanFiles(fs)
-          val stats = fileStats.values((FileSets.rootKey(fs), column.toLowerCase), files) {
-            fresh => FileSets.perFile(df.sparkSession, fresh)(fileStat(_, column, _))
-          }
-          if (stats.exists(_.isEmpty)) None
-          else {
-            val flat = stats.flatten.filter(_.rows > 0)
-            val asc = flat.sortBy(s =>
-              s.minKey.fold(d => (0, d, ""), str => (1, 0.0, str)))
-            // disjoint ranges: each file starts at or after the
-            // previous file's end (boundary ties legal — absorbed
-            // by the subset walk)
-            val disjoint = asc.zip(asc.drop(1)).forall { case (a, b) =>
-              a.numeric == b.numeric && leq(a.maxKey, b.minKey)
-            }
-            // a single file is "sorted" but prunes nothing
-            if (disjoint && asc.size > 1) Some(asc) else None
-          }
-        } catch { case scala.util.control.NonFatal(_) => None }
-      case _ => None
-    }
-  }
+  def layoutFor(fs: HadoopFsRelation, column: String): Option[Seq[FileStat]] =
+    if (!fs.fileFormat.isInstanceOf[ParquetFileFormat]) None
+    else try {
+      val files = FileSets.scanFiles(fs)
+      val stats = fileStats.values((FileSets.rootKey(fs), column.toLowerCase), files) {
+        fresh => FileSets.perFile(fs.sparkSession, fresh)(fileStat(_, column, _))
+      }
+      if (stats.exists(_.isEmpty)) None
+      else {
+        val flat = stats.flatten.filter(_.rows > 0)
+        val asc = flat.sortBy(s =>
+          s.minKey.fold(d => (0, d, ""), str => (1, 0.0, str)))
+        // disjoint ranges: each file starts at or after the
+        // previous file's end (boundary ties legal — absorbed
+        // by the subset walk)
+        val disjoint = asc.zip(asc.drop(1)).forall { case (a, b) =>
+          a.numeric == b.numeric && leq(a.maxKey, b.minKey)
+        }
+        // a single file is "sorted" but prunes nothing
+        if (disjoint && asc.size > 1) Some(asc) else None
+      }
+    } catch { case scala.util.control.NonFatal(_) => None }
 
   /** Footer stats of one file for one column: Some(None) propagation —
     * outer None = this file disqualifies the layout (missing stats,
@@ -147,19 +154,22 @@ object SortedLayout {
     } finally r.close()
   }
 
-  /** Literal-embeddable probe values — the tightening bound becomes a
-    * pushable `lit(v)` of the COLUMN's own type (a mismatched literal
-    * type would wrap the column in a Cast and kill pushdown). */
-  private def litable(v: Any): Boolean = v match {
-    case _: java.lang.Integer | _: java.lang.Long | _: java.lang.Short |
-        _: java.lang.Byte | _: java.lang.Float | _: java.lang.Double |
-        _: String | _: java.math.BigDecimal | _: java.sql.Date |
-        _: java.sql.Timestamp | _: java.lang.Boolean => true
-    case _ => false
+  /** The files of one ordered page: a fixed subset of a relation's
+    * listing, served without listing again. A relation over it is a
+    * page already, so [[orderedSelection]] never cuts it twice. */
+  final case class PageFiles(files: Seq[FileStatusWithMetadata]) extends FileIndex {
+    def rootPaths: Seq[Path] = files.map(_.getPath)
+    def listFiles(partitionFilters: Seq[Expression],
+        dataFilters: Seq[Expression]): Seq[PartitionDirectory] =
+      Seq(PartitionDirectory(InternalRow.empty, files))
+    def inputFiles: Array[String] = files.map(_.getPath.toString).toArray
+    def refresh(): Unit = ()
+    def sizeInBytes: Long = files.map(_.getLen).sum
+    def partitionSchema: StructType = new StructType()
   }
 
-  /** Boundary tightening: ONE plan-time probe reads the sort-key row
-    * at rank `needed` and synthesizes a pushed predicate keeping only
+  /** Boundary tightening: ONE probe reads the sort-key row at rank
+    * `needed` of `page` and synthesizes a pushed predicate keeping only
     * rows at-or-before it in the requested order — the reference's
     * sorted-index "stop at docId offset+size" made declarative. The
     * subset chosen from footer row counts still reads every row of its
@@ -170,87 +180,79 @@ object SortedLayout {
     *
     * Correctness: every kept row is lexicographically ≤ (≥, desc) the
     * probed rank-`needed` sort key — a SUPERSET of the page for ANY
-    * tie-breaking, since ties at the boundary all pass. Null secondary
-    * keys follow Spark's default null ordering (asc = nulls FIRST →
-    * kept via isNull; desc = nulls LAST → correctly beyond the bound).
-    * A probe miss (fewer rows than `needed`) or a non-embeddable type
-    * just skips tightening.
+    * tie-breaking, since ties at the boundary all pass. A secondary
+    * key's nulls are kept wherever its null ordering puts them first.
+    * The bound's literals carry the probed internal values with the
+    * columns' own types, so no Cast wraps the column and the
+    * predicate still pushes to the scan. A probe miss (fewer rows than
+    * `needed`) just skips tightening.
     *
     * The probe is skipped — no job — when every file of `subset` holds
     * at most `parquet.page.row.count.limit` rows (the session's Hadoop
     * conf; parquet's default 20,000): a file that small has no page
-    * the bound could skip, and the untightened subset frame is already
-    * a superset the top-K cuts to the same page. */
-  private def tighten(frame: DataFrame, subset: Seq[FileStat],
-      order: Seq[(String, Boolean)], needed: Long): DataFrame = {
-    if (needed < 1 || needed - 1 > Int.MaxValue) return frame
-    val pageRows = frame.sparkSession.sessionState.newHadoopConf().getInt(
+    * the bound could skip, and the untightened subset is already a
+    * superset the top-K cuts to the same page. */
+  private def bound(spark: SparkSession, page: LogicalPlan, subset: Seq[FileStat],
+      order: Seq[SortOrder], needed: Long): Option[Expression] = {
+    val pageRows = spark.sessionState.newHadoopConf().getInt(
       ParquetOutputFormat.PAGE_ROW_COUNT_LIMIT,
       ParquetProperties.DEFAULT_PAGE_ROW_COUNT_LIMIT)
-    if (subset.forall(_.rows <= pageRows)) return frame
-    val cols = order.take(2).filter(c => frame.schema.fieldNames.contains(c._1))
-    if (cols.isEmpty || cols.head._1 != order.head._1) return frame
-    val sortCols = cols.map { case (c, asc) => if (asc) col(c).asc else col(c).desc }
-    val probe = frame.select(cols.map(c => col(c._1)): _*)
-      .orderBy(sortCols: _*).offset((needed - 1).toInt).limit(1)
-      .collect().headOption
-    // the literal must carry the COLUMN's exact DataType: lit() on a
-    // collected BigDecimal typically derives a different precision/
-    // scale than the column, so the comparison gets wrapped in Casts
-    // and silently loses the parquet page-index pushdown this whole
-    // optimization exists for (ADVICE r8). Literal.create with the
-    // column's own type produces a cast-free pushable predicate; any
-    // conversion failure just skips tightening (correct either way).
-    def typedLit(name: String, v: Any): Option[Column] =
-      try Some(org.apache.spark.sql.GraftSqlBridge.column(
-        org.apache.spark.sql.catalyst.expressions.Literal.create(
-          v, frame.schema(name).dataType)))
-      catch { case scala.util.control.NonFatal(_) => None }
-    probe match {
-      case None => frame // fewer matching rows than the page — no cut
-      case Some(r) =>
-        val (pName, pAsc) = cols.head
-        val pv = r.get(0)
-        if (pv == null || !litable(pv)) return frame
-        val pLit = typedLit(pName, pv).getOrElse(return frame)
-        val pCol = col(pName)
-        val strictPrim = if (pAsc) pCol < pLit else pCol > pLit
-        val tiePred =
-          if (cols.size < 2) lit(true)
+    if (subset.forall(_.rows <= pageRows)) return None
+    val keys = order.take(2).takeWhile(k => k.child match {
+      case a: Attribute => page.outputSet.contains(a)
+      case _ => false
+    })
+    val attrs = keys.map(_.child.asInstanceOf[Attribute])
+    val probe = Limit(Literal(1), Offset(Literal((needed - 1).toInt),
+      Sort(keys, global = true, Project(attrs, page))))
+    GraftSqlBridge.frame(spark, probe).queryExecution.executedPlan
+      .executeCollect().headOption.filterNot(_.isNullAt(0)).map { row =>
+        def lit(i: Int) = Literal(row.get(i, attrs(i).dataType), attrs(i).dataType)
+        val p = attrs.head
+        val strict = if (keys.head.isAscending) LessThan(p, lit(0)) else GreaterThan(p, lit(0))
+        val tie = if (keys.size < 2) Literal.TrueLiteral else {
+          val s = attrs(1)
+          val nullsFirst = keys(1).nullOrdering == NullsFirst
+          if (row.isNullAt(1)) { if (nullsFirst) IsNull(s) else Literal.TrueLiteral }
           else {
-            val (sName, sAsc) = cols(1)
-            val sv = r.get(1)
-            val sCol = col(sName)
-            if (sv == null) { if (sAsc) sCol.isNull else lit(true) }
-            else if (!litable(sv)) lit(true)
-            else typedLit(sName, sv) match {
-              case None => lit(true)
-              case Some(sLit) =>
-                if (sAsc) (sCol <= sLit) || sCol.isNull else sCol >= sLit
-            }
+            val cmp = if (keys(1).isAscending) LessThanOrEqual(s, lit(1))
+              else GreaterThanOrEqual(s, lit(1))
+            if (nullsFirst) Or(cmp, IsNull(s)) else cmp
           }
-        frame.where(strictPrim || (pCol === pLit && tiePred))
-    }
+        }
+        Or(strict, And(EqualTo(p, lit(0)), tie))
+      }
   }
 
-  /** Build the pruned ordered-selection frame, or None when the fast
-    * path does not apply (unsorted layout, or pruning would read
-    * every file anyway — the plain plan is then strictly simpler).
+  /** `rel` cut to the head (tail, descending) files of its sorted
+    * layout that an ordered page of `needed` rows (offset included)
+    * can draw from, with the same output attributes; or None when the
+    * cut does not apply: `rel` is not a parquet scan, has partition
+    * columns, is a page already ([[PageFiles]]) or is not sorted on
+    * `order`'s head (which must be one of its attributes), or the page
+    * would read every file anyway — the plain plan is then strictly
+    * simpler.
     *
-    * `order` is the query's ORDER BY as (column, ascending); its HEAD
-    * is the sorted column deciding which files can contribute, and the
-    * first two columns feed the [[tighten]] bound. With a filter,
-    * footer row counts over-estimate the matching rows, so the subset
-    * grows by doubling until the filtered page is full — each probe is
-    * one job over the candidate files, and the final frame is a plain
-    * lazy plan over the chosen subset. */
-  def orderedSelection(table: DataFrame, order: Seq[(String, Boolean)],
-      filter: Option[Column], needed: Long,
-      finish: DataFrame => DataFrame): Option[DataFrame] = {
-    if (needed <= 0 || order.isEmpty) return None
-    val column = order.head._1
-    val primaryAsc = order.head._2
-    layoutFor(table, column).flatMap { asc =>
+    * `order`'s HEAD decides which files can contribute, and its first
+    * two keys feed the [[bound]], applied as a `Filter` over the cut.
+    * With a `filter` (deterministic, over `rel`'s attributes), footer
+    * row counts over-estimate the matching rows, so the subset grows
+    * eightfold until the filtered page is full — each probe is one
+    * limit-bounded count over the candidate files. */
+  def orderedSelection(rel: LogicalRelation, order: Seq[SortOrder],
+      filter: Option[Expression], needed: Long): Option[LogicalPlan] = {
+    val fs = rel.relation match {
+      case fs: HadoopFsRelation
+          if fs.partitionSchema.isEmpty && !fs.location.isInstanceOf[PageFiles] => fs
+      case _ => return None
+    }
+    val primary = order.headOption.map(_.child) match {
+      case Some(a: Attribute) if rel.outputSet.contains(a) => a
+      case _ => return None
+    }
+    if (needed <= 0 || needed > Int.MaxValue) return None
+    layoutFor(fs, primary.name).flatMap { asc =>
+      val primaryAsc = order.head.isAscending
       val ordered = if (primaryAsc) asc else asc.reverse
       def headKey(s: FileStat) = if (primaryAsc) s.minKey else s.maxKey
       def tailKey(s: FileStat) = if (primaryAsc) s.maxKey else s.minKey
@@ -274,33 +276,25 @@ object SortedLayout {
         }
         ordered.take(i)
       }
-      def filteredOver(subset: Seq[FileStat]): DataFrame = {
-        val raw = table.sparkSession.read.schema(table.schema)
-          .parquet(subset.map(_.path): _*)
-        filter.map(raw.where).getOrElse(raw)
+      val listed = fs.location.listFiles(Nil, Nil).flatMap(_.files)
+        .map(f => f.getPath.toString -> f).toMap
+      def over(subset: Seq[FileStat]): LogicalPlan =
+        rel.copy(relation = fs.copy(location = PageFiles(subset.map(s => listed(s.path))))(
+          fs.sparkSession))
+      def filtered(cut: LogicalPlan): LogicalPlan = filter.fold(cut)(Filter(_, cut))
+      def fills(subset: Seq[FileStat]): Boolean = filter.isEmpty ||
+        GraftSqlBridge.frame(fs.sparkSession, filtered(over(subset)))
+          .limit(needed.toInt).count() >= needed
+      var subset = prefix(needed)
+      var want = needed
+      while (subset.size < ordered.size && !fills(subset)) {
+        want *= 8
+        subset = prefix(want)
       }
-      filter match {
-        case None =>
-          val subset = prefix(needed)
-          if (subset.size >= ordered.size) None
-          else if (needed >= subset.map(_.rows).sum)
-            Some(finish(filteredOver(subset))) // subset IS the page
-          else Some(finish(tighten(filteredOver(subset), subset, order, needed)))
-        case Some(_) =>
-          // adaptive: footer counts bound UNFILTERED rows only, so the
-          // subset doubles until the filtered page is full (the probe
-          // is a limit-bounded count — it stops scanning as soon as
-          // `needed` matches are found)
-          var want = needed
-          var subset = prefix(want)
-          var full = subset.size >= ordered.size
-          while (!full && filteredOver(subset).limit(needed.toInt).count() < needed) {
-            want *= 8
-            subset = prefix(want)
-            full = subset.size >= ordered.size
-          }
-          if (full) None
-          else Some(finish(tighten(filteredOver(subset), subset, order, needed)))
+      Option.when(subset.size < ordered.size) {
+        val cut = over(subset)
+        bound(fs.sparkSession, filtered(cut), subset, order, needed)
+          .fold(cut)(Filter(_, cut))
       }
     }
   }

@@ -12,16 +12,6 @@ object GraftSqlBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
-  /** FULLY-CONVERTED expression tree of a Column. `expression` wraps a
-    * Column-API tree in one opaque `ColumnNodeExpression` leaf (the
-    * conversion happens lazily at analysis), so plan-level pattern
-    * matching sees no structure; this runs the converter eagerly —
-    * `===`/`isin`/`&&` become `UnresolvedFunction("="/"in"/"and", …)`
-    * over `UnresolvedAttribute`/`Literal` leaves, transformable before
-    * any analyzer runs. */
-  def deepExpression(c: Column): Expression =
-    classic.ColumnNodeToExpressionConverter(c.node)
-
   /** `AbstractDataType` is `private[sql]` in Spark 4; this public alias
     * lets graft expressions declare `inputTypes` (ExpectsInputTypes)
     * for analysis-time type checking. */
@@ -63,6 +53,12 @@ object GraftSqlBridge {
     * (`spark.sql.extensions`, `Builder.withExtensions`) inject. */
   def injectedRules(spark: SparkSession): Seq[Rule[LogicalPlan]] =
     spark.asInstanceOf[classic.SparkSession].extensions.buildOptimizerRules(spark)
+
+  /** A DataFrame over an already resolved logical plan — for the
+    * probes an optimizer rule runs over a fragment of the plan it
+    * rewrites. */
+  def frame(spark: SparkSession, plan: LogicalPlan): DataFrame =
+    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
   /** `ds` over its optimized plan: actions on the result, and on every
     * frame derived from it, start from the plan the optimizer produced

@@ -2,6 +2,12 @@ package graft
 
 import java.net.{HttpURLConnection, URI}
 import java.nio.charset.StandardCharsets
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.functions.col
 
 import graft.pql.BrokerServer
 
@@ -339,5 +345,77 @@ class BrokerServerSpec extends SparkSpec {
         Some("""{"pql": "SELECT COUNT(*) FROM nation OPTION(timeoutMs=60000)"}"""))
       assert(ok.contains("\"aggregationResults\""), ok.take(300))
     } finally broker.stop()
+  }
+
+  test("OPTION(timeoutMs) runs a sorted page's count and probe jobs in the query's job group") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_broker_page").toFile.getAbsolutePath
+    spark.read.parquet(s"$sfDir/lineitem.parquet").repartitionByRange(8, col("l_orderkey"))
+      .sortWithinPartitions("l_orderkey").write.parquet(s"$dir/li_sorted.parquet")
+    // ~750-row files above a 100-row page limit: the filtered page
+    // counts its candidate files and probes its boundary
+    val session = spark.newSession()
+    session.conf.set("parquet.page.row.count.limit", "100")
+    val broker = new BrokerServer(session, dir)
+    val port = broker.start()
+    val sc = spark.sparkContext
+    val groups = new ConcurrentLinkedQueue[String]
+    val marker = s"marker-${System.nanoTime()}"
+    val markerSeen = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        String.valueOf(Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull) match {
+          case `marker` => markerSeen.countDown()
+          case group => groups.add(group); ()
+        }
+    }
+    try {
+      val pql = "SELECT l_orderkey, l_quantity FROM li_sorted WHERE l_quantity > 10 " +
+        "ORDER BY l_orderkey LIMIT 25"
+      def post(q: String) = http("POST", s"http://127.0.0.1:$port/query", Some(s"""{"pql": "$q"}"""))
+      // a first answer loads the table and reads its footers
+      assert(post(pql).contains("\"selectionResults\""))
+      sc.addSparkListener(listener)
+      val out = post(s"$pql OPTION(timeoutMs=60000)")
+      assert(out.contains("\"selectionResults\""), out.take(300))
+      sc.setJobGroup(marker, "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(markerSeen.await(30, TimeUnit.SECONDS), "listener bus did not deliver the marker job")
+    } finally { sc.removeSparkListener(listener); broker.stop() }
+    // the count, the boundary probe and the page itself
+    assert(groups.size >= 3, groups)
+    assert(groups.asScala.forall(_.startsWith("graft-broker-")), groups)
+  }
+
+  test("the latest-events page over an ingested table answers from the plain plan") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_broker_events").toFile.getAbsolutePath
+    val source = org.apache.spark.sql.execution.streaming.runtime
+      .MemoryStream[(Long, java.sql.Timestamp)](spark)
+    val q = graft.streaming.RealtimeIngest.start(source.toDF.toDF("event_id", "ts"),
+      s"$dir/events.parquet", s"$dir/ckp",
+      org.apache.spark.sql.streaming.Trigger.ProcessingTime(0L))
+    val broker = new BrokerServer(spark, dir)
+    val port = broker.start()
+    try {
+      // four commits of time-ordered events, one part file each
+      (0 until 4).foreach { b =>
+        source.addData((b * 50 until (b + 1) * 50).map(i =>
+          (i.toLong, new java.sql.Timestamp(1700000000000L + i * 1000L))))
+        q.processAllAvailable()
+      }
+      // the ingest_serve workload's e3_latest
+      val e3 = "SELECT event_id, ts FROM events ORDER BY ts DESC LIMIT 10"
+      val out = http("POST", s"http://127.0.0.1:$port/query", Some(s"""{"pql": "$e3"}"""))
+      val ids = "\\[\"(\\d+)\",".r.findAllMatchIn(out).map(_.group(1).toInt).toSeq
+      assert(ids == (199 to 190 by -1), out.take(400))
+      // the sink writes ts as INT96, whose parquet footers carry no
+      // min/max: no sorted layout is detected, and the page reads
+      // every committed file, as the plain plan does
+      val events = graft.sources.Tables.load(spark, dir, "events")
+      assert(graft.sources.SortedLayout.layoutFor(events, "ts").isEmpty)
+      val page = graft.pql.Pql.toDataFrame(graft.pql.Pql.parse(e3),
+        graft.sources.Tables.load(spark, dir, _))
+      assert(page.inputFiles.length == events.inputFiles.length && events.inputFiles.length >= 4)
+    } finally { broker.stop(); q.stop() }
   }
 }

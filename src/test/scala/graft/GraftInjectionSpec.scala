@@ -6,7 +6,9 @@ import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
-import graft.plans.{DictRoutingRule, StarTree, StarTreeRoutingRule}
+import graft.plans.{DictRoutingRule, SortedPageRule, StarTree, StarTreeRoutingRule}
+import graft.pql.Pql
+import graft.queries.ScaleTable
 
 /** Graft reaches a session one way: [[GraftExtensions]]' list, injected
   * at build (`spark.sql.extensions`) or applied to a running session by
@@ -31,6 +33,19 @@ class GraftInjectionSpec extends SparkSpec {
     StarTree.Index(Seq("l_returnflag"), Seq("l_quantity"), spark.read.parquet(dir))
   }
 
+  /** BenchScale's native table at unit scale — sorted on
+    * (DaysSinceEpoch, FlightNum) into range-disjoint files — and its
+    * dictionary layout, which keeps that order: the s2 page's
+    * composed route. */
+  private lazy val (nativePath, nativeDict) = {
+    val dir = Files.createTempDirectory("graft-injection-native").toString
+    val path = s"$dir/ontime_sorted_dse.parquet"
+    val order = Seq(col("DaysSinceEpoch"), col("FlightNum"))
+    ScaleTable.frame(spark, 20000L).repartitionByRange(8, order: _*)
+      .sortWithinPartitions(order: _*).write.parquet(path)
+    (path, BenchScale.ensureNativeDict(spark, dir, spark.read.parquet(path)))
+  }
+
   test("Graft.enable is idempotent: one rule of each kind, no function re-registered") {
     val fresh = spark.newSession()
     // a definition the session already holds stays as it is
@@ -41,6 +56,7 @@ class GraftInjectionSpec extends SparkSpec {
     val rules = fresh.experimental.extraOptimizations
     assert(rules.count(_.isInstanceOf[StarTreeRoutingRule]) === 1)
     assert(rules.count(_.isInstanceOf[DictRoutingRule]) === 1)
+    assert(rules.count(_.isInstanceOf[SortedPageRule]) === 1)
     assert(fresh.catalog.getFunction(id.funcName).className === "sentinel")
     assert(fresh.catalog.getFunction(GraftExtensions.functions.last._1.funcName).className ===
       "graft.functions.exprs")
@@ -65,6 +81,24 @@ class GraftInjectionSpec extends SparkSpec {
         assert(scanRoots(viaBuild) === scanRoots(viaEnable))
         assert(viaBuild.collect().toSeq === viaEnable.collect().toSeq)
         assert(viaEnable.collect().toSeq === direct)
+      }
+      // the s2 page: the dictionary rewrite, then the sorted cut of the
+      // encoded copy's files, from either optimizer batch
+      val s2 = BenchScale.workload.find(_._1 == "s2_page").get._3
+      def page(s: SparkSession) = Pql.toDataFrame(Pql.parse(s2), _ => s.read.parquet(nativePath))
+      def keys(df: DataFrame) = df.select($"DaysSinceEpoch", $"FlightNum").collect().toSeq
+      // the unrouted page: the generated rows, which no rule matches
+      val plainKeys = keys(Pql.toDataFrame(Pql.parse(s2), _ => ScaleTable.frame(spark, 20000L)))
+      Graft.withIndexes(spark, dicts = Seq(nativePath -> nativeDict)) {
+        val (viaBuild, viaEnable) = (page(built), page(spark))
+        assert(scanRoots(viaEnable).nonEmpty &&
+          scanRoots(viaEnable).forall(_.contains("ontime_native_dict")), scanRoots(viaEnable))
+        assert(viaEnable.inputFiles.length < nativeDict.encoded.inputFiles.length)
+        assert(scanRoots(viaBuild) === scanRoots(viaEnable))
+        for (df <- Seq(viaBuild, viaEnable))
+          assert(df.queryExecution.optimizedPlan.toString.contains("dict_decode"))
+        assert(keys(viaBuild) === keys(viaEnable))
+        assert(keys(viaEnable) === plainKeys)
       }
     } finally {
       SparkSession.setDefaultSession(spark)
@@ -96,6 +130,15 @@ class GraftInjectionSpec extends SparkSpec {
     }.map(f => root.toPath.relativize(f.toPath).toString).toSet
     assert(mentioning("extraOptimizations", "registerFunction", "createOrReplaceTempFunction")
       === Set("graft/GraftExtensions.scala", "org/apache/spark/sql/GraftSqlBridge.scala"))
-    assert(mentioning("Registry.unregister", "Graft.enable(") === Set("graft/GraftExtensions.scala"))
+    assert(mentioning("Registry.unregister") === Set("graft/GraftExtensions.scala"))
+    // the one caller that enables graft itself: the broker, for the
+    // queries it plans
+    assert(mentioning("Graft.enable(") === Set("graft/pql/BrokerServer.scala"))
+  }
+
+  test("src/main: the PQL compiler leaves index routes to the optimizer rules") {
+    val pql = Files.readString(java.nio.file.Paths.get("src/main/scala/graft/pql/Pql.scala"))
+    for (layout <- Seq("DictLayout", "SortedLayout"))
+      assert(!pql.contains(layout), s"pql/Pql.scala names $layout")
   }
 }

@@ -54,6 +54,26 @@ class NativeRoutesSpec extends SparkSpec {
     }
   }
 
+  test("s2 and s3 route and answer as the scan as spark.sql text and when built before registration") {
+    // the routes are the optimizer rules': they reach SQL text over a
+    // view of the native table, and a frame built while no index was
+    // registered, planned once the index is
+    val dict = BenchScale.ensureNativeDict(spark, dir, native)
+    val pages = Seq("s2_page", "s3_point_topn")
+    val expected = pages.map(n => n -> query(n, table).collect()).toMap
+    val early = pages.map(n => n -> query(n, native)).toMap
+    native.createOrReplaceTempView("ontime")
+    try Graft.withIndexes(spark, dicts = Seq(nativePath -> dict)) {
+      pages.foreach { n =>
+        val sql = spark.sql(BenchScale.workload.find(_._1 == n).get._4)
+        for (df <- Seq(sql, early(n))) {
+          BenchScale.requireNativeRoute(n, df, native)
+          BenchScale.requireNativeAnswer(n, df, expected.get(n), 0L)
+        }
+      }
+    } finally { spark.catalog.dropTempView("ontime"); () }
+  }
+
   test("the star-tree routes a2-a5 and h1 each run one Spark job") {
     // a pinned group-by (a4, a5) projects its slice; every merge (a2,
     // a3, h1) reads the small rollup in one task, with no exchange
