@@ -31,8 +31,8 @@ object Bench {
     }
 
     // correctness HARNESSES, not throughput queries: each runs
-    // hundreds of sub-second corpus statements (the hybrid/star-tree
-    // variants additionally stitch views or build rollup trees) and
+    // hundreds of sub-second corpus statements (their hybrid/star-tree
+    // layouts additionally stitch views or build rollup trees) and
     // would dominate (and distort) the headline total whose baseline
     // counterpart does no comparable work. Timed separately, once,
     // under "harness".
@@ -108,17 +108,18 @@ object Bench {
       System.err.println("[bench] streaming ingest FAILED"); e.printStackTrace(); ""
     }
     // Harness fixture artifacts are ingest-time segment builds (the
-    // corpus fixture synthesis + cache, the six star-tree cubes, the
+    // corpus fixture synthesis + cache, the mined star-tree cubes, the
     // dictionary layout, the hybrid view) — all session-cached, exactly
     // like the sketch/star-tree segments the MAIN queries amortize into
     // the untimed warmup pass above. Harness rows run once with no
     // warmup, so without this prewarm their first-and-only execution
-    // billed the one-time builds to the row: q_corpus_startree read
-    // ~119 s of which ~87 s was cube builds + parquet writes (probed
-    // r12: an immediate second run takes 32 s, the same as plain-mode
-    // comparisons). Build here, untimed; the timed rows then measure
-    // the comparison workload. Old (build-inclusive) numbers are kept
-    // in OPTIMIZATION_r12.md per the measurement-change rule.
+    // billed the one-time builds to the row: the corpus sample's
+    // star-tree pass, then a row of its own, read ~119 s of which
+    // ~87 s was cube builds + parquet writes (probed r12: an immediate
+    // second run takes 32 s, the same as plain-mode comparisons).
+    // Build here, untimed; the timed rows then measure the comparison
+    // workload. Old (build-inclusive) numbers are kept in
+    // OPTIMIZATION_r12.md per the measurement-change rule.
     // Registration stays per-row (CorpusHarness.compare registers and
     // unregisters the layouts it reads).
     try {

@@ -22,7 +22,9 @@ import graft.pql.CorpusHarness.Layout
   * line per outcome to `outFile` (seed `-` for corpus lines), so a long
   * sweep composes from bounded invocations. Prints every mismatch with
   * its PQL and first hsql, and for each routed layout how many lines
-  * its plans answered from the routed copy. Exits 1 if any outcome is
+  * its plans answered from the routed copy — read from the same pass
+  * that compared them — and, for the star-tree layout, how many lines
+  * have a shape its rule can rewrite. Exits 1 if any outcome is
   * unmatched. */
 object HarnessSweep {
   private val ChunkLines = 500
@@ -48,6 +50,7 @@ object HarnessSweep {
     val total = scala.collection.mutable.Map.empty[Layout, Int].withDefaultValue(0)
     val matched = scala.collection.mutable.Map.empty[Layout, Int].withDefaultValue(0)
     val routed = scala.collection.mutable.Map.empty[Layout, Int].withDefaultValue(0)
+    var eligible = 0
     try batches.foreach { case (seed, lines) =>
       val byId = lines.map(l => l.id -> l).toMap
       val outcomes = CorpusHarness.compare(spark, lines, layouts)
@@ -64,9 +67,9 @@ object HarnessSweep {
         }
         total(layout) += os.size
         matched(layout) += os.count(_.matched)
-        if (layout.routes)
-          routed(layout) += CorpusHarness.census(spark, layout, lines).count(_.routed)
+        routed(layout) += os.count(_.route.routed)
       }
+      eligible += CorpusHarness.starTreeEligibleIds(CorpusHarness.fixture(spark), lines).size
       out.flush()
       println(f"[sweep] $source seed=$seed lines ${lines.head.id}..${lines.last.id}: " +
         layouts.map(l => s"${l.name} ${outcomes(l).count(_.matched)}/${lines.size}").mkString(", ") +
@@ -77,7 +80,8 @@ object HarnessSweep {
     }
     layouts.foreach { l =>
       println(s"[sweep] TOTAL ${l.name}: ${matched(l)}/${total(l)} matched" +
-        (if (l.routes) s", ${routed(l)} answered from the routed copy" else ""))
+        (if (l.routes) s", ${routed(l)} answered from the routed copy" else "") +
+        (if (l == Layout.StarTree) s" ($eligible star-tree-eligible)" else ""))
     }
     if (layouts.exists(l => matched(l) < total(l))) sys.exit(1)
   }

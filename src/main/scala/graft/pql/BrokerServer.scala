@@ -21,11 +21,12 @@ import graft.sources.Tables
   * `QueryException.java:40,44,49` — 150 parse, 200 execution,
   * 250 timeout) and every response carries `timeUsedMs`.
   *
-  * `OPTION(timeoutMs=...)` is honored for real: the query runs in its
-  * own Spark job group and the group is cancelled at the deadline —
-  * the broker-timeout semantics the reference enforces server-side.
+  * `OPTION(timeoutMs=...)` is honored for real: the query is compiled
+  * and run in its own Spark job group and the group is cancelled at
+  * the deadline — the broker-timeout semantics the reference enforces
+  * server-side.
   *
-  * The query itself is compiled on the request thread and executed by
+  * The query itself is compiled in the broker and executed by
   * Spark's scheduler across the cluster; the HTTP layer only carries
   * the (LIMIT/TOP-bounded) response, exactly like the reference's
   * broker — this class is deliberately a thin adapter, not an engine.
@@ -456,11 +457,14 @@ object BrokerServer {
         val pool = q.options.get("schedulerPool")
         pool.foreach(p =>
           spark.sparkContext.setLocalProperty("spark.scheduler.pool", p))
+        // compiling may run jobs too (a COUNT(*)'s footer read, an
+        // exact percentile's rank passes), so the deadline covers it
+        def answer(): String = BrokerResponse.render(q,
+          Pql.toDataFrame(q, Tables.load(spark, tableDir, _)), preserve, trace)
         try {
-          val df = Pql.toDataFrame(q, Tables.load(spark, tableDir, _))
           val body = timeoutMs match {
-            case None => BrokerResponse.render(q, df, preserve, trace)
-            case Some(ms) => renderWithTimeout(spark, q, df, ms, preserve, trace)
+            case None => answer()
+            case Some(ms) => withTimeout(spark, ms)(answer())
           }
           withTime(body)
         } catch {
@@ -475,12 +479,12 @@ object BrokerServer {
     }
   }
 
-  /** Execute under a cancellable job group with a deadline — the
+  /** `body` under a cancellable job group with a deadline — the
     * reference's broker timeout. interruptOnCancel interrupts running
-    * tasks; the waiting thread gets a TimeoutException. */
-  private def renderWithTimeout(spark: SparkSession, q: Pql.Query,
-      df: org.apache.spark.sql.DataFrame, ms: Long,
-      preserveType: Boolean, trace: Boolean = false): String = {
+    * tasks; the waiting thread gets a TimeoutException. A failure of
+    * `body` is rethrown as itself, so it reports the same error as
+    * without a deadline. */
+  private def withTimeout(spark: SparkSession, ms: Long)(body: => String): String = {
     val group = s"graft-broker-${java.util.UUID.randomUUID()}"
     val pool = Executors.newSingleThreadExecutor()
     try {
@@ -488,7 +492,7 @@ object BrokerServer {
         def call(): String = {
           spark.sparkContext.setJobGroup(group, s"broker pql (timeout ${ms}ms)",
             interruptOnCancel = true)
-          try BrokerResponse.render(q, df, preserveType, trace)
+          try body
           finally spark.sparkContext.clearJobGroup()
         }
       })
@@ -497,8 +501,7 @@ object BrokerServer {
         case e: TimeoutException =>
           spark.sparkContext.cancelJobGroup(group)
           throw e
-        case e: java.util.concurrent.ExecutionException =>
-          throw new RuntimeException(e.getCause)
+        case e: java.util.concurrent.ExecutionException => throw e.getCause
       }
     } finally pool.shutdownNow()
   }

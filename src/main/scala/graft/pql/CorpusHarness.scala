@@ -41,7 +41,7 @@ import org.apache.spark.sql.types.{ArrayType, DecimalType, NumericType, StringTy
   * One harness serves every layout the PQL side can read ([[Layout]]:
   * plain, hybrid, star-tree, dictionary). [[compare]] parses each line
   * and collects its hsql twin once, then checks every requested
-  * layout's PQL answer against it. The `q_corpus_*` / `q_querygen_*`
+  * layout's PQL answer against it. The `q_corpus` / `q_querygen*`
   * gate rows ([[graft.queries.CorpusQueries]]), the specs and the
   * resumable sweep main
   * `graft.HarnessSweep <corpus|a|b> <lo-hi> <layout,…> <outFile>` all
@@ -63,9 +63,10 @@ object CorpusHarness {
     * threads (Spark's scheduler is built for multi-threaded drivers). */
   private val Parallelism = 8
 
-  /** Star-tree mining bound: at most this many trees of at most this
-    * many dimensions each. */
-  private val MaxTrees = 6
+  /** Star-tree mining bound: at most this many trees per mined
+    * workload, of at most this many dimensions each. Ten cover every
+    * coverable star-tree-eligible line of the generated gate rows. */
+  private val MaxTrees = 10
   private val MaxDims = 8
 
   /** Parquet dump backing the fixture — the "segment directory". Every
@@ -218,8 +219,8 @@ object CorpusHarness {
     * reads the plain flat table, so no layout defect can cancel out.
     * Each layout owns the table its PQL side reads, the indexes its
     * routing rule answers from (by fact path), and the plan
-    * fragments its route [[census]] looks for: `routedRoot`, the copy
-    * it routes onto, and `factRoot`, the raw fact copy it routes away
+    * fragments its [[Route]] looks for: `routedRoot`, the copy it
+    * routes onto, and `factRoot`, the raw fact copy it routes away
     * from. The scan layouts have neither. */
   sealed abstract class Layout(val name: String, private[pql] val routedRoot: Option[String],
       private[pql] val factRoot: Option[String]) {
@@ -229,6 +230,19 @@ object CorpusHarness {
     private[pql] def dicts(fx: Fixture): Seq[(String, graft.plans.DictLayout.Index)] = Nil
     /** Whether a plan under this layout can read a routed copy. */
     def routes: Boolean = routedRoot.nonEmpty
+
+    /** What `df`'s optimized plan reads under this layout — the plan
+      * its execution runs, so reading it plans nothing twice. */
+    private[pql] def route(df: DataFrame): Route =
+      if (!routes) Route.Neither
+      else {
+        val roots = df.queryExecution.optimizedPlan.collect {
+          case LogicalRelation(fs: HadoopFsRelation, _, _, _, _) =>
+            fs.location.rootPaths.map(_.toString)
+        }.flatten
+        def reads(root: Option[String]) = root.exists(r => roots.exists(_.contains(r)))
+        Route(reads(routedRoot), reads(factRoot))
+      }
   }
 
   object Layout {
@@ -276,8 +290,8 @@ object CorpusHarness {
 
   /** Build everything `layouts` read in this session — the fixture, the
     * hybrid view, the rollups, the dictionary layout — and return their
-    * tables, in order. [[compare]] and [[census]] start here; Bench
-    * calls it to keep one-time builds out of its timed harness rows. */
+    * tables, in order. [[compare]] starts here; Bench calls it to keep
+    * one-time builds out of its timed harness rows. */
   def prepare(spark: SparkSession, layouts: Seq[Layout]): Seq[DataFrame] = {
     val fx = fixture(spark)
     layouts.map(_.table(fx))
@@ -293,7 +307,7 @@ object CorpusHarness {
       layouts.flatMap(_.dicts(fx)))(f(tables))
   }
 
-  // ---- route census -----------------------------------------------------
+  // ---- routes -----------------------------------------------------------
 
   /** What one line's optimized plan reads under a layout: `routed` —
     * its routed copy (a registered rollup, the dictionary-encoded
@@ -302,26 +316,14 @@ object CorpusHarness {
     * routing, because `LIMIT 0` and contradictory predicates
     * constant-fold the scan away and a global `COUNT(*)` takes the
     * metadata-only plan, all without touching a routed copy. A plan may
-    * legitimately read neither; so does a line that does not parse. */
+    * legitimately read neither; so does a line that does not parse, and
+    * every plan of a scan layout. */
   final case class Route(routed: Boolean, scansFact: Boolean)
 
-  /** The [[Route]] of each line under `layout`, from its optimized plan
-    * alone (nothing executes). The scan layouts never route. */
-  def census(spark: SparkSession, layout: Layout, lines: Seq[OnTimeCorpus.Line]): Seq[Route] =
-    withLayouts(spark, Seq(layout)) { case Seq(table) =>
-      lines.map { l =>
-        (try Some(Pql.parse(l.pql)) catch { case _: IllegalArgumentException => None }) match {
-          case None => Route(routed = false, scansFact = false)
-          case Some(q) =>
-            val roots = Pql.toDataFrame(q, _ => table).queryExecution.optimizedPlan.collect {
-              case LogicalRelation(fs: HadoopFsRelation, _, _, _, _) =>
-                fs.location.rootPaths.map(_.toString)
-            }.flatten
-            def reads(root: Option[String]) = root.exists(r => roots.exists(_.contains(r)))
-            Route(reads(layout.routedRoot), reads(layout.factRoot))
-        }
-      }
-    }
+  object Route {
+    /** Reads no routed copy and no fact copy. */
+    val Neither: Route = Route(routed = false, scansFact = false)
+  }
 
   // ---- star-tree mining -------------------------------------------------
 
@@ -352,15 +354,24 @@ object CorpusHarness {
   private val TreeAggs = Set("count", "sum", "min", "max", "avg")
 
   /** (dims-needed, metrics-needed) when the line is a star-tree-
-    * routable group-by aggregation: non-DISTINCT, no HAVING, grouped
-    * on plain scalar columns, every select item a plain
-    * COUNT/SUM/MIN/MAX/AVG over a numeric column (or COUNT(*)), and
-    * every WHERE-referenced column scalar. Mirrors exactly what
+    * routable aggregation: no HAVING, grouped on plain scalar columns,
+    * every select item a plain COUNT/SUM/MIN/MAX/AVG over a numeric
+    * column (or COUNT(*)), and every WHERE-referenced column scalar —
+    * or a SELECT DISTINCT of plain scalar columns, which plans as a
+    * grouping with no aggregation. Mirrors exactly what
     * [[graft.plans.StarTreeRoutingRule]] can rewrite, so prediction
     * and plan behavior can be equated in tests. */
   private def routableNeed(q: Pql.Query, scalarCols: Set[String],
       numericCols: Set[String]): Option[(Set[String], Set[String])] = {
-    if (q.distinct || q.having.nonEmpty) return None
+    if (q.having.nonEmpty) return None
+    val whereCols = q.where.map(predCols).getOrElse(Set.empty)
+    if (q.distinct) {
+      val dims = q.select.map {
+        case Pql.Ident(n) => n
+        case _ => return None
+      }.toSet ++ whereCols
+      return if (dims.subsetOf(scalarCols)) Some((dims, Set.empty)) else None
+    }
     // GLOBAL aggregations (no GROUP BY) route too — the rule keeps the
     // Aggregate node and merges the all-stars slice — EXCEPT the bare
     // unfiltered COUNT(*), which the PQL front-end answers from
@@ -388,7 +399,7 @@ object CorpusHarness {
       }
       case _ => return None
     }
-    val dims = gcols.toSet ++ q.where.map(predCols).getOrElse(Set.empty)
+    val dims = gcols.toSet ++ whereCols
     if (!dims.subsetOf(scalarCols)) return None
     if (!metrics.subsetOf(numericCols)) return None
     if (metrics.exists(dims.contains)) return None
@@ -415,36 +426,58 @@ object CorpusHarness {
     }
   }
 
-  /** The workload star-trees are mined for: the generated mode-A pool
-    * that `q_querygen_duck` draws from (its first lines are the
-    * `q_querygen_*` samples), plus every corpus line where the corpus
-    * file exists. */
-  private def miningWorkload(): Seq[OnTimeCorpus.Line] =
-    QueryGen.lines(graft.queries.CorpusQueries.GenPoolSize) ++
-      (if (OnTimeCorpus.corpusPresent) OnTimeCorpus.corpus else Nil)
+  /** The workloads star-trees are mined for, each on its own: the
+    * generated lines the gate rows replay
+    * ([[graft.queries.CorpusQueries.generatedGateLines]]), then every
+    * corpus line where the corpus file exists. */
+  private def miningWorkloads(): Seq[Seq[OnTimeCorpus.Line]] =
+    graft.queries.CorpusQueries.generatedGateLines +:
+      (if (OnTimeCorpus.corpusPresent) Seq(OnTimeCorpus.corpus) else Nil)
 
-  /** Mine star-tree configs for the harness workload
-    * ([[miningWorkload]]): greedy set cover — each round grows a
-    * dimension set (preferring the column that completes the most
+  /** Mine star-tree configs for the harness workloads
+    * ([[miningWorkloads]]), up to [[MaxTrees]] trees per workload: the
+    * generated lines' trees come first and do not depend on whether the
+    * corpus exists, and since a tree can only add routes, the
+    * generated gate rows route at least as many lines where it does.
+    * Trees of one dimension set merge into one (the registry keeps one
+    * index per set). Deterministic: the workloads and schema are fixed
+    * inputs. */
+  def starTreeSpecs(fx: Fixture): Seq[TreeSpec] = {
+    val mined = miningWorkloads().flatMap(ls => mineTrees(minedNeeds(fx, ls).map(_._2)))
+    mined.map(_.dims.toSet).distinct.map { ds =>
+      val same = mined.filter(_.dims.toSet == ds)
+      TreeSpec(same.head.dims, same.flatMap(_.metrics).distinct.sorted, same.map(_.minedCover).sum)
+    }
+  }
+
+  /** Greedy set cover over one workload's routable needs: each round
+    * seeds a dimension set with the first uncovered line's dimensions,
+    * grows it (preferring the column that completes the most
     * one-dim-short lines, then the most-demanded column), takes every
     * still-uncovered line it can answer, and declares the union of
-    * their aggregation columns as the tree's metrics. Deterministic:
-    * ties break on column name, the workload and schema are fixed
-    * inputs. The generator and the corpus both draw columns uniformly
-    * from an ~80-column schema, so no small tree family covers
-    * everything — the point is a sizable, *predictable* routed subset
-    * whose answers must be bit-identical to the scan plans. */
-  def starTreeSpecs(fx: Fixture): Seq[TreeSpec] = {
-    var remaining = minedNeeds(fx, miningWorkload()).map(_._2)
+    * their aggregation columns as the tree's metrics. Ties break on
+    * column name. The generator and the corpus both draw columns
+    * uniformly from an ~80-column schema, so no small tree family
+    * covers everything — the point is a sizable, *predictable* routed
+    * subset whose answers must be bit-identical to the scan plans. */
+  private def mineTrees(needs: Seq[(Set[String], Set[String])]): Seq[TreeSpec] = {
+    var remaining = needs.filter(_._1.size <= MaxDims)
     val out = Seq.newBuilder[TreeSpec]
     var t = 0
     while (t < MaxTrees && remaining.nonEmpty) {
-      var dims = Set.empty[String]
-      var d = 0
+      // seeded with the first uncovered line, so every tree covers one
+      var dims = remaining.head._1
+      var d = dims.size
       while (d < MaxDims) {
+        // a line cannot be covered once one of its metrics is a
+        // dimension, so only lines that still can be vote: none of
+        // their metrics is a dimension, and none of their dimensions
+        // is a metric of a line the tree already covers
+        val open = remaining.filterNot(_._2.exists(dims.contains))
+        val kept = open.filter(_._1.subsetOf(dims)).flatMap(_._2).toSet
         val gain = scala.collection.mutable.Map.empty[String, Int].withDefaultValue(0)
         val freq = scala.collection.mutable.Map.empty[String, Int].withDefaultValue(0)
-        remaining.foreach { case (ds, _) =>
+        open.filterNot(_._1.exists(kept)).foreach { case (ds, _) =>
           val miss = ds -- dims
           if (miss.size == 1) gain(miss.head) += 1
           miss.foreach(c => freq(c) += 1)
@@ -458,25 +491,27 @@ object CorpusHarness {
           case None => d = MaxDims
         }
       }
-      val spec0 = TreeSpec(dims.toSeq.sorted, Nil, 0)
       def coveredBy(n: (Set[String], Set[String])): Boolean =
         n._1.subsetOf(dims) && !n._2.exists(dims.contains)
       val cov = remaining.filter(coveredBy)
-      if (cov.nonEmpty)
-        out += spec0.copy(
-          metrics = cov.flatMap(_._2).distinct.sorted,
-          minedCover = cov.size)
+      out += TreeSpec(dims.toSeq.sorted, cov.flatMap(_._2).distinct.sorted, cov.size)
       remaining = remaining.filterNot(coveredBy)
       t += 1
     }
     out.result()
   }
 
-  /** Corpus line ids the mining model predicts WILL route given the
-    * built trees — equated with actual plan shape ([[census]]) in
-    * CorpusStarTreeSpec. Reads the corpus file. */
-  def predictedRoutedIds(fx: Fixture, specs: Seq[TreeSpec]): Set[Int] =
-    minedNeeds(fx, OnTimeCorpus.corpus).collect {
+  /** Ids of the `lines` whose shape the star-tree rule can rewrite
+    * ([[routableNeed]]), whether or not a built tree covers them. */
+  def starTreeEligibleIds(fx: Fixture, lines: Seq[OnTimeCorpus.Line]): Set[Int] =
+    minedNeeds(fx, lines).map(_._1).toSet
+
+  /** Ids of the `lines` the mining model predicts WILL route given the
+    * built trees — equated with the plans' [[Route]]s in
+    * CorpusStarTreeSpec. */
+  def predictedRoutedIds(fx: Fixture, specs: Seq[TreeSpec],
+      lines: Seq[OnTimeCorpus.Line]): Set[Int] =
+    minedNeeds(fx, lines).collect {
       case (id, need) if specs.exists(_.covers(need)) => id
     }.toSet
 
@@ -510,26 +545,30 @@ object CorpusHarness {
 
   // ---- per-line comparison ---------------------------------------------
 
-  final case class Outcome(id: Int, matched: Boolean, mode: String, reason: String)
+  /** One line under one layout: whether its PQL answer matched the
+    * hsql twin, and what its plan read. */
+  final case class Outcome(id: Int, matched: Boolean, mode: String, reason: String,
+      route: Route = Route.Neither)
 
   /** Every line PQL-vs-hsql under every layout in `layouts`: each line
     * is parsed and its hsql twin collected ONCE, then each layout's PQL
-    * answer is checked against that twin. Lines run on the driver pool
-    * under the micro-query confs; outcomes keep `lines` order. */
+    * answer is checked against that twin, and its [[Route]] read from
+    * the plan that answered. Lines run on the driver pool under the
+    * micro-query confs; outcomes keep `lines` order. */
   def compare(spark: SparkSession, lines: Seq[OnTimeCorpus.Line],
       layouts: Seq[Layout]): Map[Layout, Seq[Outcome]] = {
     val fx = fixture(spark)
     val perLine = withLayouts(spark, layouts) { tables =>
-      parMap(spark, lines)(l => compareLine(spark, fx, l, tables))
+      parMap(spark, lines)(l => compareLine(spark, fx, l, layouts.zip(tables)))
     }
     layouts.zipWithIndex.map { case (layout, i) => layout -> perLine.map(_(i)) }.toMap
   }
 
-  /** One outcome per table: the twin is collected first, then each
-    * table's PQL answer checked against it. A line that does not parse
-    * or whose twin fails is an error under every table. */
+  /** One outcome per layout: the twin is collected first, then each
+    * layout's PQL answer checked against it. A line that does not parse
+    * or whose twin fails is an error under every layout. */
   private def compareLine(spark: SparkSession, fx: Fixture, line: OnTimeCorpus.Line,
-      tables: Seq[DataFrame]): Seq[Outcome] = {
+      tables: Seq[(Layout, DataFrame)]): Seq[Outcome] = {
     def error(e: Exception) = Outcome(line.id, matched = false, "error",
       s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(200)}")
     try {
@@ -539,9 +578,14 @@ object CorpusHarness {
         if (selAggs.nonEmpty && q.groupBy.isEmpty) aggOnlyCheck(spark, line, selAggs)
         else if (q.groupBy.nonEmpty) groupByCheck(spark, line, q, selAggs)
         else selectionCheck(spark, fx, line, q)
-      tables.map { t =>
-        try check(Pql.toDataFrame(q, _ => t))
-        catch { case e: Exception => error(e) }
+      tables.map { case (layout, t) =>
+        try {
+          val df = Pql.toDataFrame(q, _ => t)
+          // every check collects `df` itself, so its execution reuses
+          // the optimized plan the route was read from
+          val route = layout.route(df)
+          check(df).copy(route = route)
+        } catch { case e: Exception => error(e) }
       }
     } catch { case e: Exception => tables.map(_ => error(e)) }
   }
@@ -553,7 +597,7 @@ object CorpusHarness {
     val expected = line.hsqls.map(h => toDouble(spark.sql(h).head().get(0)))
     // a method, not a lambda: its early returns must return from it
     def check(pqlDf: DataFrame): Outcome = {
-      val row = pqlDf.head()
+      val row = pqlDf.collect().head // one row: a global aggregation
       var i = 0
       while (i < selAggs.length) {
         val actual = toDouble(row.get(i))
@@ -744,12 +788,13 @@ object CorpusHarness {
       q.exists(p => p.groupBy.isEmpty && p.select.nonEmpty && p.select.forall(Pql.isAggExpr))
     }
 
-  /** Static self-oracle of a gate row: these line ids, all expected to
-    * match — a mismatch on ANY line flips its `matched` cell and fails
-    * the DuckDB oracle compare. */
-  def selfOracle(ids: Seq[Int]): String = {
-    val values = ids.map(i => s"($i)").mkString(",")
-    s"SELECT line_id, TRUE AS matched FROM (VALUES $values) t(line_id) ORDER BY line_id"
+  /** Static self-oracle of a gate row: every (line id, layout) cell,
+    * all expected to match — a mismatch in ANY cell flips its `matched`
+    * and fails the DuckDB oracle compare. */
+  def selfOracle(ids: Seq[Int], layouts: Seq[Layout]): String = {
+    val values = (for (i <- ids; l <- layouts) yield s"($i, '${l.name}')").mkString(",")
+    s"SELECT line_id, layout, TRUE AS matched FROM (VALUES $values) t(line_id, layout) " +
+      "ORDER BY line_id, layout"
   }
 
   // ---- DuckDB-valued slices ---------------------------------------------

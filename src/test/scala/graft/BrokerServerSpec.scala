@@ -347,16 +347,8 @@ class BrokerServerSpec extends SparkSpec {
     } finally broker.stop()
   }
 
-  test("OPTION(timeoutMs) runs a sorted page's count and probe jobs in the query's job group") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_broker_page").toFile.getAbsolutePath
-    spark.read.parquet(s"$sfDir/lineitem.parquet").repartitionByRange(8, col("l_orderkey"))
-      .sortWithinPartitions("l_orderkey").write.parquet(s"$dir/li_sorted.parquet")
-    // ~750-row files above a 100-row page limit: the filtered page
-    // counts its candidate files and probes its boundary
-    val session = spark.newSession()
-    session.conf.set("parquet.page.row.count.limit", "100")
-    val broker = new BrokerServer(session, dir)
-    val port = broker.start()
+  /** The job group of every Spark job `body` starts. */
+  private def jobGroupsOf(body: => Unit): Seq[String] = {
     val sc = spark.sparkContext
     val groups = new ConcurrentLinkedQueue[String]
     val marker = s"marker-${System.nanoTime()}"
@@ -368,22 +360,76 @@ class BrokerServerSpec extends SparkSpec {
           case group => groups.add(group); ()
         }
     }
+    sc.addSparkListener(listener)
     try {
+      body
+      // the listener bus delivers the marker job's start after body's jobs'
+      sc.setJobGroup(marker, "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(markerSeen.await(30, TimeUnit.SECONDS), "listener bus did not deliver the marker job")
+    } finally sc.removeSparkListener(listener)
+    groups.asScala.toSeq
+  }
+
+  test("OPTION(timeoutMs) runs a sorted page's count and probe jobs in the query's job group") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_broker_page").toFile.getAbsolutePath
+    spark.read.parquet(s"$sfDir/lineitem.parquet").repartitionByRange(8, col("l_orderkey"))
+      .sortWithinPartitions("l_orderkey").write.parquet(s"$dir/li_sorted.parquet")
+    // ~750-row files above a 100-row page limit: the filtered page
+    // counts its candidate files and probes its boundary
+    val session = spark.newSession()
+    session.conf.set("parquet.page.row.count.limit", "100")
+    val broker = new BrokerServer(session, dir)
+    val port = broker.start()
+    val groups = try {
       val pql = "SELECT l_orderkey, l_quantity FROM li_sorted WHERE l_quantity > 10 " +
         "ORDER BY l_orderkey LIMIT 25"
       def post(q: String) = http("POST", s"http://127.0.0.1:$port/query", Some(s"""{"pql": "$q"}"""))
       // a first answer loads the table and reads its footers
       assert(post(pql).contains("\"selectionResults\""))
-      sc.addSparkListener(listener)
-      val out = post(s"$pql OPTION(timeoutMs=60000)")
-      assert(out.contains("\"selectionResults\""), out.take(300))
-      sc.setJobGroup(marker, "marker")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      assert(markerSeen.await(30, TimeUnit.SECONDS), "listener bus did not deliver the marker job")
-    } finally { sc.removeSparkListener(listener); broker.stop() }
+      jobGroupsOf {
+        val out = post(s"$pql OPTION(timeoutMs=60000)")
+        assert(out.contains("\"selectionResults\""), out.take(300))
+      }
+    } finally broker.stop()
     // the count, the boundary probe and the page itself
     assert(groups.size >= 3, groups)
-    assert(groups.asScala.forall(_.startsWith("graft-broker-")), groups)
+    assert(groups.forall(_.startsWith("graft-broker-")), groups)
+  }
+
+  test("OPTION(timeoutMs) runs the jobs of compilation in the query's job group") {
+    // a table no earlier request has loaded or counted: its schema
+    // inference and COUNT(*)'s footer read run while the frame is built
+    val dir = java.nio.file.Files.createTempDirectory("graft_broker_compile").toFile.getAbsolutePath
+    spark.read.parquet(s"$sfDir/lineitem.parquet").write.parquet(s"$dir/li.parquet")
+    val broker = new BrokerServer(spark, dir)
+    val port = broker.start()
+    val groups = try jobGroupsOf {
+      def post(q: String) = http("POST", s"http://127.0.0.1:$port/query", Some(s"""{"pql": "$q"}"""))
+      // an exact percentile over a double column narrows by rank in
+      // passes that run while the frame is built
+      val pct = post("SELECT PERCENTILE50(l_extendedprice) FROM li OPTION(timeoutMs=60000)")
+      assert(pct.contains("\"aggregationResults\""), pct.take(300))
+      val count = post("SELECT COUNT(*) FROM li OPTION(timeoutMs=60000)")
+      assert(count.contains("\"aggregationResults\""), count.take(300))
+    } finally broker.stop()
+    assert(groups.size >= 3, groups)
+    assert(groups.forall(_.startsWith("graft-broker-")), groups)
+  }
+
+  test("OPTION(timeoutMs) reports a failed query's own error") {
+    val broker = new BrokerServer(spark, sfDir)
+    val port = broker.start()
+    try {
+      def post(q: String) = http("POST", s"http://127.0.0.1:$port/query", Some(s"""{"pql": "$q"}"""))
+      // a division by zero fails while the query executes
+      val bad = "SELECT SUM(DIV(l_quantity, 0)) FROM lineitem"
+      val plain = post(bad)
+      val timed = post(s"$bad OPTION(timeoutMs=60000)")
+      def error(json: String) = json.replaceAll(""", "timeUsedMs": \d+""", "")
+      assert(plain.contains("\"errorCode\": 200") && plain.contains("DIVIDE_BY_ZERO"), plain.take(300))
+      assert(error(timed) === error(plain))
+    } finally broker.stop()
   }
 
   test("the latest-events page over an ingested table answers from the plain plan") {

@@ -8,13 +8,14 @@ import graft.pql.CorpusHarness.Layout
   * answered from the encoded copy (int dict ids, decode at output)
   * returns exactly what the raw scan returns. Real corpus lines run
   * with the layout registered over the fixture's fact copy:
-  *  - a census proves the rewrite actually fires on a healthy share of
-  *    both aggregate and selection shapes (a layout where nothing routes
+  *  - the plans' routes prove the rewrite actually fires on both
+  *    aggregate and selection shapes (a layout where nothing routes
   *    would pass vacuously), and
   *  - routed and non-routed lines alike must match the plain-table
   *    hsql twin (the split between them is the rule's own business).
   * Generated lines (both grammars) run through the same layout in the
-  * `q_querygen_dict` / `q_querygen_graft_dict` gate rows (QueriesSpec).
+  * `q_querygen` / `q_querygen_graft` gate rows (QueriesSpec), which
+  * also hold the dictionary layout's routed floor.
   */
 class CorpusDictSpec extends SparkSpec {
 
@@ -32,19 +33,17 @@ class CorpusDictSpec extends SparkSpec {
 
     val lines = CorpusHarness.corpusLines(CorpusHarness.sampleIds(40))
 
-    // plan census: the rewrite must fire on a non-trivial share of
-    // the slice, including at least one grouped aggregate AND one
-    // ordered selection (the two distinct rewrite paths)
-    val routed = lines.zip(CorpusHarness.census(spark, Layout.Dict, lines))
-      .collect { case (l, r) if r.routed => Pql.parse(l.pql) }
-    val (routedAgg, routedSel) =
-      routed.partition(q => q.select.exists(Pql.isAggExpr) || q.groupBy.nonEmpty)
-    assert(routedAgg.nonEmpty, "no aggregate line routed onto the encoded copy")
-    assert(routedSel.nonEmpty, "no ordered selection routed onto the encoded copy")
-
     // the full slice (routed and non-routed) must match the twin
     val outcomes = CorpusHarness.compare(spark, lines, Seq(Layout.Dict))(Layout.Dict)
     assert(outcomes.forall(_.matched),
       outcomes.filterNot(_.matched).take(5).mkString("; "))
+
+    // the rewrite must fire on at least one grouped aggregate AND one
+    // ordered selection (the two distinct rewrite paths)
+    val routed = lines.zip(outcomes).collect { case (l, o) if o.route.routed => Pql.parse(l.pql) }
+    val (routedAgg, routedSel) =
+      routed.partition(q => q.select.exists(Pql.isAggExpr) || q.groupBy.nonEmpty)
+    assert(routedAgg.nonEmpty, "no aggregate line routed onto the encoded copy")
+    assert(routedSel.nonEmpty, "no ordered selection routed onto the encoded copy")
   }
 }

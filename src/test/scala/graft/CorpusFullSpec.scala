@@ -8,7 +8,7 @@ import graft.pql.CorpusHarness.Layout
   * line of `On_Time_..._test_queries_10K`). Minutes of wall time (25K+
   * small jobs), so gated behind GRAFT_CORPUS_FULL=1; the always-on
   * sampled gate is [[CorpusSpec]] and the driver-checked
-  * `q_corpus_sample`. Lines run on the harness's driver pool
+  * `q_corpus`. Lines run on the harness's driver pool
   * ([[CorpusHarness.compare]]) to overlap per-job latency. The same
   * sweep, resumable and over any layouts, is
   * `graft.HarnessSweep corpus 0-10000 <layout,…> <outFile>`. */

@@ -110,41 +110,6 @@ class QueryGenSpec extends SparkSpec {
             s"    sql: ${lines(o.id).hsqls.head}").mkString("\n"))
   }
 
-  /** The unmatched outcomes of `lines` under each of `layouts`, one
-    * message per outcome. */
-  private def mismatches(lines: Seq[OnTimeCorpus.Line], layouts: Layout*): Seq[String] =
-    CorpusHarness.compare(spark, lines, layouts).toSeq.flatMap { case (layout, outcomes) =>
-      outcomes.filterNot(_.matched).map(o =>
-        s"[${layout.name} ${o.id}] ${o.mode}: ${o.reason}\n  pql: ${lines(o.id).pql}")
-    }
-
-  /** How many of `lines` read `layout`'s routed copy; fails on none. */
-  private def assertRoutes(layout: Layout, grammar: String, lines: Seq[OnTimeCorpus.Line]): Unit = {
-    val nRouted = CorpusHarness.census(spark, layout, lines).count(_.routed)
-    assert(nRouted > 0, s"no $grammar line routed under ${layout.name}")
-    info(s"${layout.name}: $nRouted/${lines.size} $grammar lines answered from the routed copy")
-  }
-
-  test("generated sample through the star-tree-routed fixture: all matched, " +
-      "and the dimension is not vacuous (some lines actually route)") {
-    import graft.queries.CorpusQueries._
-    val lines = QueryGen.lines(GenSampleLines)
-    val bad = mismatches(lines, Layout.StarTree)
-    assert(bad.isEmpty, s"${bad.size} generated lines mismatched under star-tree routing; " +
-      s"first 5:\n${bad.take(5).mkString("\n")}")
-    // vacuity guard: at least one generated line must be answered from
-    // a registered rollup, or the layout adds nothing over the plain run
-    assertRoutes(Layout.StarTree, "mode-A", lines)
-  }
-
-  test("the dict layout routes some generated lines of both grammars") {
-    import graft.queries.CorpusQueries._
-    // vacuity guard: a dict layout whose plans never read the encoded
-    // copy would pass its gate rows without testing the rewrite
-    assertRoutes(Layout.Dict, "mode-A", QueryGen.lines(GenSampleLines))
-    assertRoutes(Layout.Dict, "mode-B", QueryGenB.lines(300))
-  }
-
   // ---- mode B: graft's full PQL surface (QueryGenB) --------------------
 
   test("mode B: generation is deterministic and duck slices are static contracts") {
@@ -246,20 +211,6 @@ class QueryGenSpec extends SparkSpec {
     assert(engineRows === twinRows,
       "mode-B selection slice differs from its Spark-SQL twin")
     assert(engineRows.nonEmpty)
-  }
-
-  test("mode B through star-tree routing and the hybrid stitch: all matched, " +
-      "routing not vacuous over the default-seed stream") {
-    import graft.queries.CorpusQueries._
-    val lines = QueryGenB.lines(GenBSampleLines)
-    val bad = mismatches(lines, Layout.StarTree, Layout.Hybrid)
-    assert(bad.isEmpty, s"${bad.size} mode-B outcomes mismatched under star-tree routing " +
-      s"or the hybrid boundary stitch; first 5:\n${bad.take(5).mkString("\n")}")
-    // vacuity guard over a wider default-seed stream: mode-B lines are
-    // mostly graft-only shapes the routing rule must NOT touch, but
-    // its basic-agg subset must actually route (a 10-seed star-tree
-    // sweep routed 105/2500 ≈ 4%)
-    assertRoutes(Layout.StarTree, "mode-B", QueryGenB.lines(300))
   }
 
   // ---- rotating-seed gate (both grammars) ------------------------------
