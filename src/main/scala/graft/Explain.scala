@@ -1,8 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicLong
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.execution.FormattedMode
 
 /** Plan and latency probe for `SparkEntry` rows, all in one JVM:
@@ -30,27 +27,6 @@ object Explain {
     val (planDir, names) = args.drop(2).toSeq.partition(_.startsWith("plans:"))
     val spark = LocalSession()
 
-    val jobCount = new AtomicLong()
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = {
-        jobCount.incrementAndGet(); ()
-      }
-    })
-    // listener delivery is async: poll until the count is stable for
-    // two consecutive intervals (a fixed sleep under-counts on a loaded
-    // box with long event queues), at most 5 s so a busy bus never
-    // hangs the probe
-    def settledJobs(): Long = {
-      var prev = -1L
-      var stable = 0
-      var waited = 0
-      while (stable < 2 && waited < 5000) {
-        Thread.sleep(100); waited += 100
-        val c = jobCount.get()
-        if (c == prev) stable += 1 else { stable = 0; prev = c }
-      }
-      jobCount.get()
-    }
     def exec(n: String): Unit = {
       LocalSession.checksum(SparkEntry.queries(n)(spark, sfDir)); ()
     }
@@ -79,18 +55,17 @@ object Explain {
     val times = live.map(_ -> scala.collection.mutable.ArrayBuffer[Double]()).toMap
     val jobs = scala.collection.mutable.Map[String, Long]().withDefaultValue(0L)
     var dropped = Set.empty[String]
-    var seen = settledJobs()
     (1 to reps).foreach { _ =>
       live.filterNot(dropped).foreach { n =>
         try {
           System.gc()
-          val t0 = System.nanoTime()
-          exec(n)
-          times(n) += (System.nanoTime() - t0) / 1e9
+          val counted = JobCount(spark) {
+            val t0 = System.nanoTime()
+            exec(n)
+            times(n) += (System.nanoTime() - t0) / 1e9
+          }
+          jobs(n) += counted.jobs.size
         } catch { case e: Throwable => failed(n, e); dropped += n }
-        val now = settledJobs()
-        jobs(n) += now - seen
-        seen = now
       }
     }
     live.filterNot(dropped).foreach { n =>

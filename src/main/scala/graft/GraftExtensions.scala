@@ -8,13 +8,13 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
 import graft.functions.SqlFunctions
-import graft.plans.{DictLayout, DictRegistry, DictRoutingRule, SortedPageRule, StarTree, StarTreeRegistry, StarTreeRoutingRule}
+import graft.plans.{DictLayout, DictRegistry, DictRoutingRule, HllRegisterRule, SortedPageRule, StarTree, StarTreeRegistry, StarTreeRoutingRule}
 
 /** The engine's `SparkSessionExtensions` entry point — the preference-
   * order capstone for operators Spark can't express natively (project
   * brief option (c)): custom expressions registered as SQL functions
-  * and the star-tree, dictionary and sorted-page optimizer rules, injected
-  * at session build via
+  * and the star-tree, dictionary, sorted-page and HLL register-plan
+  * optimizer rules, injected at session build via
   *
   * {{{
   * spark.sql.extensions=graft.GraftExtensions
@@ -39,10 +39,12 @@ object GraftExtensions {
 
   /** The routing rules, in order: star-tree first, so a full
     * pre-aggregation answer wins over the dictionary-encoded scan when
-    * both artifacts are registered; the sorted page last, so it cuts
-    * whichever relation the dictionary rewrite left under the sort. */
+    * both artifacts are registered; the sorted page after the
+    * dictionary rewrite, so it cuts whichever relation that rewrite
+    * left under the sort; the HLL register plan last, so a stored
+    * sketch wins over it for a distinct count. */
   val rules: Seq[SparkSession => Rule[LogicalPlan]] =
-    Seq(StarTreeRoutingRule(_), DictRoutingRule(_), SortedPageRule(_))
+    Seq(StarTreeRoutingRule(_), DictRoutingRule(_), SortedPageRule(_), HllRegisterRule(_))
 }
 
 /** Graft on an existing session, and the one way to put indexes in

@@ -5,9 +5,8 @@ import java.nio.ByteBuffer
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.GraftSqlBridge
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.HyperLogLogPlusPlusHelper
 import org.apache.spark.sql.functions._
@@ -24,17 +23,13 @@ import org.apache.spark.sql.types._
   * reference pays the same per-row loop by hand
   * (`pinot-core/.../query/aggregation/function/DistinctCountHLLAggregationFunction.java:34-35`).
   *
-  * The Spark-native answer is to make the register build DECLARATIVE
-  * so codegen keeps it: every HLL register is just `max(rank)` grouped
-  * by register index, both derivable per row from the same xxhash64
-  * the built-in uses. The plan becomes
+  * The shipped plan keeps the per-row work in whole-stage codegen and
+  * does the register max by hand:
   *
   * {{{
-  *   scan → project(idx = h >>> (64-p), rank = clz((h << p)|pad)+1)
-  *        → HashAggregate(keys=idx, max(rank))     // codegen, 2^p groups
-  *        → Exchange(2^p rows)                     // ≤512 rows for rsd 0.065
-  *        → HashAggregate(final max)
-  *        → [[aggs2.HllRegisterEstimate]]          // ≤2^p input rows
+  *   scan → filter(not null) → project(xxhash64)   // codegen, [[HllFastPlan.hashedFrame]]
+  *        → per-partition byte[2^p] register max  // ≤2^p (idx, rank) rows out
+  *        → [[aggs2.HllRegisterEstimate]]          // ≤2^p rows per partition in
   * }}}
   *
   * and the estimate is BIT-IDENTICAL to `approx_count_distinct(c, rsd)`
@@ -50,8 +45,7 @@ import org.apache.spark.sql.types._
   *
   * At scale the shuffle carries ≤2^p (idx, rank) rows per map
   * partition instead of per-partition sketch blobs — strictly smaller
-  * than the built-in's 2^p packed registers, and the map side stays in
-  * one codegen stage with the scan.
+  * than the built-in's 2^p packed registers.
   */
 object HllFast {
 
@@ -63,26 +57,6 @@ object HllFast {
     * `private[util]`; the formula is the class contract). */
   def precision(rsd: Double): Int =
     math.ceil(2.0d * math.log(1.106d / rsd) / math.log(2.0d)).toInt
-
-  /** rank = numberOfLeadingZeros((h << p) | (1 << (p-1))) + 1 — the
-    * helper's exact suffix-rank derivation, kept inside whole-stage
-    * codegen (IntegerType; 1..64-p+1 so it fits any width). */
-  case class HllRank(child: Expression, p: Int)
-      extends UnaryExpression with ImplicitCastInputTypes {
-    require(p >= 4 && p <= 20, s"HLL precision out of range: $p")
-    private val pad: Long = 1L << (p - 1)
-    override def inputTypes: Seq[GraftSqlBridge.AbstractType] = Seq(LongType)
-    override def dataType: DataType = IntegerType
-    override def nullSafeEval(input: Any): Any =
-      java.lang.Long.numberOfLeadingZeros(
-        (input.asInstanceOf[Long] << p) | pad) + 1
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev,
-        c => s"(java.lang.Long.numberOfLeadingZeros(($c << $p) | ${pad}L) + 1)")
-    override protected def withNewChildInternal(newChild: Expression): HllRank =
-      copy(child = newChild)
-    override def prettyName: String = "hll_rank"
-  }
 
   /** Flat max-register buffer in the helper's own packed word layout
     * (6-bit registers, 10 per long word). */
@@ -184,7 +158,10 @@ object aggs2 {
   }
 }
 
-/** Plan builders. */
+/** Plan builders. A query reaches [[HllFastPlan.distinctCountHll]]
+  * through [[graft.plans.HllRegisterRule]], which rewrites a lone
+  * global `approx_count_distinct` in any plan of a graft-enabled
+  * session. */
 object HllFastPlan {
   import HllFast._
 
@@ -213,35 +190,14 @@ object HllFastPlan {
     case _ => c
   }
 
-  /** (register idx, max rank) rows — ≤2^p of them — for `expr` under
-    * precision `p`, as a fully DECLARATIVE plan (scan-side aggregate is
-    * a codegen `max` over 2^p int groups). Kept as the parity/pushdown
-    * reference for [[registerRows]]: both derive idx/rank from the same
-    * [[hashedFrame]], and HllFastSpec pins their estimates equal.
-    * Probed 100M rows: this plan pays the aggregate framework's ~100 ns
-    * per-row group lookup (0.50 s vs the RDD build's 0.235 s), which is
-    * why the shipped path is imperative. */
-  def registers(df: DataFrame, expr: Column, p: Int): DataFrame = {
-    val h = col("_h")
-    hashedFrame(df, expr).select(
-        shiftrightunsigned(h, 64 - p).cast(IntegerType).as("_hll_idx"),
-        GraftSqlBridge.column(
-          HllRank(GraftSqlBridge.expression(h), p)).as("_hll_rank"))
-      .groupBy(col("_hll_idx"))
-      .agg(max(col("_hll_rank")).as("_hll_rank"))
-  }
-
-  /** [[distinctCountHll]] through the declarative [[registers]] plan —
-    * the reference implementation the spec pins against the shipped
-    * RDD path (and against `approx_count_distinct` itself). */
-  def distinctCountHllDeclarative(df: DataFrame, expr: Column, rsd: Double,
-      alias: String): DataFrame = {
-    val p = precision(rsd)
-    registers(df, expr, p).agg(
-      GraftSqlBridge.column(aggs2.HllRegisterEstimate(
-        GraftSqlBridge.expression(col("_hll_idx")),
-        GraftSqlBridge.expression(col("_hll_rank")),
-        rsd).toAggregateExpression()).as(alias))
+  /** The codegen'd scan → filter → hash frame the register builds
+    * iterate — exposed so specs can assert its pushdown/codegen shape
+    * (the RDD boundary hides it from the outer executed plan). */
+  def hashedFrame(df: DataFrame, expr: Column): DataFrame = {
+    val vdf = df.select(expr.as("_hll_v")).where(col("_hll_v").isNotNull)
+    val dt = vdf.schema.head.dataType
+    require(supported(dt), s"fast HLL unsupported for type $dt")
+    vdf.select(xxhash64(normalized(col("_hll_v"), dt)).as("_h"))
   }
 
   /** Per-partition flat register build: the codegen'd scan+hash frame
@@ -254,21 +210,12 @@ object HllFastPlan {
     * framework's per-row group lookup added ~0.32 s. This is the
     * "mapPartitions as a last resort" case the design brief names —
     * taken on measurement, after the declarative formulation
-    * ([[registers]], kept as the parity/pushdown reference) proved
-    * bounded by the same per-row constant it was built to avoid.
+    * (`groupBy(idx).max(rank)`, kept in HllFastSpec as the parity
+    * reference) proved bounded by the same per-row constant it was
+    * built to avoid.
     * Fully lazy (`toRdd` plans but does not run) and partition-local:
     * at 1000 executors the shuffle is ≤2^p rows per partition, less
     * than the built-in's per-partition sketch blob. */
-  /** The codegen'd scan → filter → hash frame the register builds
-    * iterate — exposed so specs can assert its pushdown/codegen shape
-    * (the RDD boundary hides it from the outer executed plan). */
-  def hashedFrame(df: DataFrame, expr: Column): DataFrame = {
-    val vdf = df.select(expr.as("_hll_v")).where(col("_hll_v").isNotNull)
-    val dt = vdf.schema.head.dataType
-    require(supported(dt), s"fast HLL unsupported for type $dt")
-    vdf.select(xxhash64(normalized(col("_hll_v"), dt)).as("_h"))
-  }
-
   def registerRows(df: DataFrame, expr: Column, p: Int): DataFrame = {
     import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
     val hashed = hashedFrame(df, expr)

@@ -124,9 +124,12 @@ object StarTree {
     * insertion-order invariant, so the stored sketch for a group is
     * byte-for-byte the sketch a query-time `hll_sketch_agg` over the
     * same rows would build — which is what makes sketch routing
-    * TRANSPARENT (identical estimates), unlike mixing sketch
-    * algorithms (approx_count_distinct is HLL++ and is deliberately
-    * NOT routed to these columns). */
+    * TRANSPARENT (identical estimates). approx_count_distinct (HLL++,
+    * what PQL's DISTINCTCOUNTHLL compiles to) is a different sketch:
+    * it routes to these columns only when the stored sketch is at
+    * least as accurate as the call asks, `1.04 / sqrt(2^lgK) <= rsd`,
+    * so the estimate changes algorithm but stays inside the asked
+    * accuracy ([[StarTreeRoutingRule]]). */
   def build(fact: DataFrame, dims: Seq[String], metrics: Seq[String],
       sketchLgK: Int = 0, quantileEps: Double = 0): Index = {
     // DataSketches HLL accepts int/bigint/string/binary only — sketch

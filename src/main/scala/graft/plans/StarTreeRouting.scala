@@ -2,24 +2,25 @@ package graft.plans
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference, Cast, Coalesce, Divide, EqualTo, EvalMode, Expression, HllSketchEstimate, Literal, NamedExpression, PredicateHelper}
-import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, AggregateFunction, Average, Complete, Count, HllSketchAgg, HllUnionAgg, Max, Min, Sum}
+import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, AggregateFunction, Average, Complete, Count, HllSketchAgg, HllUnionAgg, HyperLogLogPlusPlus, Max, Min, Sum}
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, LogicalPlan, Project, Repartition}
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 
 /** Automatic star-tree routing as a Catalyst optimizer rule — the
   * query-side half of [[StarTree]].
   *
   * The reference rewrites eligible queries to read the star-tree
   * instead of raw docs inside its plan maker
-  * (`BrokerRequestPreProcessor.java:50-78` rewrites fastHLL;
+  * (`BrokerRequestPreProcessor.java:50-81` swaps DISTINCTCOUNTHLL and
+  * FASTHLL onto a derived HLL column;
   * star-tree selection in `plan/StarTreeIndexOperator`); the Spark
   * analogue is a `Rule[LogicalPlan]` injected through
   * `SparkSessionExtensions`: an `Aggregate` whose grouping keys are a
   * subset of a registered index's dimensions and whose aggregates are
   * all tree-mergeable (SUM/MIN/MAX/COUNT/AVG over indexed metrics,
-  * COUNT(*), fastHLL estimates) over the indexed fact relation is
+  * COUNT(*), distinct-count estimates a stored sketch is accurate
+  * enough for) over the indexed fact relation is
   * replaced by a scan of the pre-aggregated rollup slice — same
   * results, no fact scan. A dimension-only WHERE between the
   * aggregate and the scan routes too: the filter re-applies over the
@@ -45,7 +46,9 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
   * aggregate's distribution, so the query runs as one Spark job with
   * no exchange. A larger or computed rollup keeps the shuffled merge.
   * Output attribute ids are preserved via aliases, so parent operators
-  * resolve unchanged.
+  * resolve unchanged. The rule runs before [[HllRegisterRule]], so a
+  * distinct count a stored sketch answers never takes the register
+  * plan's fact scan.
   */
 object StarTreeRegistry {
   final case class Entry(pathPrefix: String, index: StarTree.Index)
@@ -84,38 +87,38 @@ object StarTreeRegistry {
     * starTreeIndexConfigs. */
   def lookupAll(rootPath: String): Seq[Entry] =
     entries.longestPrefix(rootPath).getOrElse(Vector.empty)
-
-  /** The derived-HLL "segment metadata" view of a table frame — the
-    * analog of `SegmentMetadataImpl.getDerivedColumn(column, HLL)`
-    * that `BrokerRequestPreProcessor.java:50-81` consults to rewrite
-    * fastHLL aggregations onto an ingest-built sketch artifact. Here
-    * the artifact is a registered star-tree's `hll_<col>` metric
-    * sketch: the result maps each such raw column (lower-cased) to
-    * the lgK values the trees were built with — several registered
-    * trees may disagree, and the reference treats that inconsistency
-    * as a query-time error (`BrokerRequestPreProcessor.java:86-95`),
-    * so the caller must reject a rewrite over a multi-lgK column
-    * rather than pick one silently. */
-  def derivedHllFor(df: org.apache.spark.sql.DataFrame): Map[String, Seq[Int]] = {
-    if (entries.isEmpty) return Map.empty // skip the plan walk entirely
-    val root = df.queryExecution.analyzed.collectFirst {
-      case LogicalRelation(fs: HadoopFsRelation, _, _, _, _) =>
-        fs.location.rootPaths.headOption.map(_.toString)
-    }.flatten
-    root.map { r =>
-      val specs = for {
-        e <- lookupAll(r)
-        if e.index.sketchLgK > 0
-        m <- e.index.metrics
-        if e.index.rollup.columns.contains(s"hll_$m")
-      } yield m.toLowerCase -> e.index.sketchLgK
-      specs.groupBy(_._1).view.mapValues(_.map(_._2).distinct).toMap
-    }.getOrElse(Map.empty)
-  }
 }
 
 case class StarTreeRoutingRule(spark: SparkSession) extends Rule[LogicalPlan]
     with PredicateHelper {
+
+  /** A distinct-count estimate over a raw column, and the stored
+    * sketch lgKs that answer it (an `hll_<m>` slice column holds the
+    * DataSketches HLL registers of its rows, which are insertion-order
+    * invariant):
+    *  - `hll_sketch_estimate(hll_sketch_agg(m, lgK))` at the tree's own
+    *    lgK: the same registers, so the same estimate bit for bit;
+    *  - `approx_count_distinct(m, rsd)` (HLL++, what PQL's
+    *    DISTINCTCOUNTHLL compiles to) when the stored sketch is at
+    *    least as accurate as asked, `1.04 / sqrt(2^lgK) <= rsd`: the
+    *    estimate comes from the other algorithm, inside the accuracy
+    *    the query asked for (the reference's fastHLL swap,
+    *    `BrokerRequestPreProcessor.java:50-81`).
+    * Either estimate is wrapped in `Coalesce(_, 0)`: both originals are
+    * 0, never null, over no rows. */
+  private object DistinctEstimate {
+    def unapply(e: Expression): Option[(AttributeReference, Int => Boolean)] = e match {
+      case HllSketchEstimate(AggregateExpression(h: HllSketchAgg, Complete, false, None, _)) =>
+        (h.left, h.right) match {
+          case (ar: AttributeReference, Literal(lgk: Int, _)) => Some((ar, _ == lgk))
+          case _ => None
+        }
+      case AggregateExpression(HyperLogLogPlusPlus(ar: AttributeReference, rsd, _, _),
+          Complete, false, None, _) =>
+        Some((ar, lgK => 1.04 / math.sqrt((1 << lgK).toDouble) <= rsd))
+      case _ => None
+    }
+  }
 
   /** Slice expression answering one aggregate, if tree-mergeable and
     * the slice materializes the needed columns (None → no rewrite, so
@@ -126,21 +129,9 @@ case class StarTreeRoutingRule(spark: SparkSession) extends Rule[LogicalPlan]
   private def rollupExpr(e: Expression, metrics: Seq[String],
       bySlice: Map[String, org.apache.spark.sql.catalyst.expressions.Attribute],
       sketchLgK: Int): Option[Expression] = e match {
-    // fastHLL family: estimate of the STORED group sketch — HLL
-    // register state is insertion-order invariant, so this equals the
-    // query-time hll_sketch_agg over the same rows bit-for-bit,
-    // provided lgK matches the one the tree was built with.
-    // approx_count_distinct (HLL++) deliberately does NOT route: a
-    // different sketch algorithm would silently change estimates.
-    case HllSketchEstimate(
-        AggregateExpression(h: HllSketchAgg, Complete, false, None, _))
-        if sketchLgK > 0 =>
-      (h.left, h.right) match {
-        case (ar: AttributeReference, Literal(lgk: Int, _))
-            if metrics.contains(ar.name) && lgk == sketchLgK =>
-          bySlice.get(s"hll_${ar.name}").map(HllSketchEstimate(_))
-        case _ => None
-      }
+    case DistinctEstimate(ar, fits) if sketchLgK > 0 && fits(sketchLgK) &&
+        metrics.contains(ar.name) =>
+      bySlice.get(s"hll_${ar.name}").map(a => Coalesce(Seq(HllSketchEstimate(a), Literal(0L))))
     case AggregateExpression(Sum(ar: AttributeReference, _), Complete, false, None, _)
         if metrics.contains(ar.name) => bySlice.get(s"sum_${ar.name}")
     case AggregateExpression(Min(ar: AttributeReference), Complete, false, None, _)
@@ -186,16 +177,10 @@ case class StarTreeRoutingRule(spark: SparkSession) extends Rule[LogicalPlan]
   private def reAggExpr(e: Expression, metrics: Seq[String],
       bySlice: Map[String, org.apache.spark.sql.catalyst.expressions.Attribute],
       sketchLgK: Int): Option[Expression] = e match {
-    case HllSketchEstimate(
-        AggregateExpression(h: HllSketchAgg, Complete, false, None, _))
-        if sketchLgK > 0 =>
-      (h.left, h.right) match {
-        case (ar: AttributeReference, Literal(lgk: Int, _))
-            if metrics.contains(ar.name) && lgk == sketchLgK =>
-          bySlice.get(s"hll_${ar.name}")
-            .map(a => HllSketchEstimate(aggE(HllUnionAgg(a, Literal(false)))))
-        case _ => None
-      }
+    case DistinctEstimate(ar, fits) if sketchLgK > 0 && fits(sketchLgK) &&
+        metrics.contains(ar.name) =>
+      bySlice.get(s"hll_${ar.name}").map(a => Coalesce(Seq(
+        HllSketchEstimate(aggE(HllUnionAgg(a, Literal(false)))), Literal(0L))))
     case AggregateExpression(Sum(ar: AttributeReference, _), Complete, false, None, _)
         if metrics.contains(ar.name) =>
       // re-summing a DecimalType sum widens precision by another 10

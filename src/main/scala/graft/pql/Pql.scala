@@ -2,7 +2,7 @@ package graft.pql
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, ByteType, DecimalType, DoubleType, FloatType, IntegerType, LongType, ShortType, StructType}
+import org.apache.spark.sql.types.{ArrayType, BinaryType, ByteType, DecimalType, DoubleType, FloatType, IntegerType, LongType, ShortType, StructType}
 import graft.functions.DateTimeOps
 import graft.sources.Tables
 
@@ -423,27 +423,12 @@ object Pql {
     }
   }
 
-  /** Aggregation function → Column (unnamed). `derivedHll` is the
-    * table's derived-sketch metadata (raw column, lower-cased → lgK
-    * values of registered `hll_<col>` tree metrics): the
-    * `BrokerRequestPreProcessor.java:50-81` rewrite — when an
-    * ingest-built sketch artifact exists for the raw column,
-    * DISTINCTCOUNTHLL/FASTHLL over it compile to the DataSketches HLL
-    * at the artifact's lgK, which [[graft.plans.StarTreeRoutingRule]]
-    * then answers from the stored sketches without a fact scan
-    * (bit-identical registers — HLL state is insertion-order
-    * invariant). Inconsistent lgK across artifacts is a query-time
-    * error, the reference's consistency-check contract
-    * (`BrokerRequestPreProcessor.java:86-95`). */
-  private def aggColumn(e: Expr,
-      derivedHll: Map[String, Seq[Int]] = Map.empty): Column = {
-    def derivedLgK(n: String): Option[Int] =
-      derivedHll.get(n.toLowerCase).map { lgks =>
-        require(lgks.size == 1,
-          s"inconsistent derived-HLL lgK for column $n: ${lgks.mkString(", ")}")
-        lgks.head
-      }
-    e match {
+  /** Aggregation function → Column (unnamed). DISTINCTCOUNTHLL is
+    * HLL++ at rsd 0.065; the optimizer rules pick its plan
+    * ([[graft.plans.StarTreeRoutingRule]] answers it from a tree's
+    * stored sketches, [[graft.plans.HllRegisterRule]] from the register
+    * plan). */
+  private def aggColumn(e: Expr): Column = e match {
     case Func("count", Seq(Star)) => count(lit(1))
     case Func("count", Seq(a)) => count(scalar(a))
     case Func("min", Seq(a)) => min(scalar(a))
@@ -452,9 +437,6 @@ object Pql {
     case Func("avg", Seq(a)) => avg(scalar(a))
     case Func("minmaxrange", Seq(a)) => max(scalar(a)) - min(scalar(a))
     case Func("distinctcount", Seq(a)) => countDistinct(scalar(a))
-    case Func("distinctcounthll" | "fasthll", Seq(Ident(n)))
-        if derivedLgK(n).isDefined =>
-      hll_sketch_estimate(hll_sketch_agg(col(n), lit(derivedLgK(n).get)))
     case Func("distinctcounthll", Seq(a)) => approx_count_distinct(scalar(a), 0.065)
     // FASTHLL (FastHLLAggregationFunction.java): aggregates a column
     // that ALREADY holds serialized per-row/per-group HLL sketches
@@ -467,7 +449,6 @@ object Pql {
       if (kind == "percentile") percentile(scalar(a), lit(q))
       else estResult(kind, percentile_approx(scalar(a), lit(q), lit(EstAccuracy)))
     case _ => throw new IllegalArgumentException(s"not an aggregation: $e")
-    }
   }
 
   /** Result domain of the approximate percentile flavors, applied on
@@ -598,10 +579,6 @@ object Pql {
   /** Compile a parsed query against a table resolver. */
   def toDataFrame(q: Query, resolve: String => DataFrame): DataFrame = {
     val base = resolve(q.table)
-    // derived-HLL segment metadata (BrokerRequestPreProcessor analog) —
-    // empty unless sketch-bearing star-trees are registered for this
-    // table's scan root, so the common path pays one map lookup
-    val derivedHll = graft.plans.StarTreeRegistry.derivedHllFor(base)
     val filtered = q.where.map(w => base.filter(predicate(w, base.schema))).getOrElse(base)
     val selAggs = q.select.filter(isAgg)
 
@@ -684,9 +661,17 @@ object Pql {
       // aggregations in the same query still see one row per entry
       // (the reference's per-aggregation value-buffer independence,
       // `*MVAggregationFunction`).
+      def rawValues(n: String): Boolean = filtered.schema.fields.exists(f =>
+        f.name.equalsIgnoreCase(n) && f.dataType != BinaryType)
       val named: Seq[(Expr, String)] =
-        selAggs.map(e => e -> nameOf(e)) ++
-          havingAggs.map(e => e -> hiddenNames(nameOf(e)))
+        (selAggs.map(e => e -> nameOf(e)) ++
+          havingAggs.map(e => e -> hiddenNames(nameOf(e)))).map {
+          // FASTHLL over raw values, not serialized sketches, is a
+          // distinct count: the same HLL++ aggregate as DISTINCTCOUNTHLL
+          case (Func("fasthll", Seq(a @ Ident(n))), nm) if rawValues(n) =>
+            Func("distinctcounthll", Seq(a)) -> nm
+          case other => other
+        }
       val (mvNamed, svNamed) = named.partition { case (e, _) => isMvAgg(e) }
       require(named.nonEmpty, "aggregation query needs at least one aggregation function")
       def mvArgOf(e: Expr): Expr = e match {
@@ -747,34 +732,22 @@ object Pql {
         case _ => None
       }
       val (rankNamed, nonRankNamed) = nonHistNamed.partition(p => rankArg(p).isDefined)
-      // GLOBAL DISTINCTCOUNTHLL over a plain column (no derived-sketch
-      // artifact registered — that route answers from stored sketches
-      // without any fact scan and stays preferred) routes through the
-      // codegen register plan (functions.HllFastPlan): the built-in
-      // approx_count_distinct is an ImperativeAggregate that kicks the
-      // scan stage out of whole-stage codegen, ~6× the single-node
-      // oracle at 100M rows on pure update-loop overhead. The register
-      // plan is groupBy(idx).max(rank) — declarative, codegen end to
-      // end — and its estimate is bit-identical (same xxhash64/idx/
-      // rank derivation; the final ≤2^p-row aggregate calls Spark's
-      // own HyperLogLogPlusPlusHelper.query). Grouped queries keep
-      // approx_count_distinct: one sketch blob per group per partition
+      // GLOBAL DISTINCTCOUNTHLL over a plain column is its own 1-row
+      // frame: a lone global approx_count_distinct, which the optimizer
+      // rules answer from a star-tree's stored sketch or the codegen
+      // register plan. Grouped queries keep approx_count_distinct in
+      // the main aggregation: one sketch blob per group per partition
       // beats keys×2^p shuffle rows once groups are many.
       val hllArg: ((Expr, String)) => Option[String] = {
-        case (Func("distinctcounthll", Seq(Ident(n))), _)
-            if q.groupBy.isEmpty && !derivedHll.contains(n.toLowerCase) =>
-          filtered.schema.fields.find(_.name.equalsIgnoreCase(n)).collect {
-            case f if graft.functions.HllFastPlan.supported(f.dataType) => f.name
-          }
+        case (Func("distinctcounthll", Seq(Ident(n))), _) if q.groupBy.isEmpty => Some(n)
         case _ => None
       }
       val (hllNamed, sketchNamed) = nonRankNamed.partition(p => hllArg(p).isDefined)
       val hllFrames: Seq[DataFrame] =
         hllNamed.groupBy(p => hllArg(p).get).toSeq.sortBy(_._1)
-          .map { case (argName, items) =>
-            val first = items.head._2
-            val est = graft.functions.HllFastPlan.distinctCountHll(
-              filtered, col(argName), 0.065, first)
+          .map { case (_, items) =>
+            val (e, first) = items.head
+            val est = filtered.agg(aggColumn(e).as(first))
             if (items.size == 1) est
             else est.select(items.map { case (_, nm) => col(first).as(nm) }: _*)
           }
@@ -847,7 +820,7 @@ object Pql {
           val fusedNames = fused.values.flatten.map(_._2).toSet
           val svCols =
             sketchNamed.collect { case (e, nm) if !fusedNames.contains(nm) =>
-              aggColumn(e, derivedHll).as(nm)
+              aggColumn(e).as(nm)
             } ++
               fused.toSeq.sortBy(_._1).map { case (argName, items) =>
                 val arg = items.head._1 match { case Func(_, Seq(a)) => scalar(a) }

@@ -64,18 +64,19 @@ object ApproxQueries {
       .orderBy($"l_returnflag")
   }
 
-  /** GLOBAL distinctCountHLL through the PQL front-end — routes to the
-    * codegen register plan ([[graft.functions.HllFastPlan]]): the
-    * estimate is bit-identical to `approx_count_distinct` (pinned in
-    * HllFastSpec), and the verified bound here is the same 3×-rsd
-    * envelope as [[qHll]]. The plan assert keeps the route honest —
-    * a silent fallback to the ImperativeAggregate would still pass the
-    * value check. */
+  /** GLOBAL distinctCountHLL through the PQL front-end — with the graft
+    * rules on, [[graft.plans.HllRegisterRule]] routes it to the codegen
+    * register plan ([[graft.functions.HllFastPlan]]): the estimate is
+    * bit-identical to `approx_count_distinct` (pinned in HllFastSpec),
+    * and the verified bound here is the same 3×-rsd envelope as
+    * [[qHll]]. The plan assert keeps the route honest — a silent
+    * fallback to the ImperativeAggregate would still pass the value
+    * check. */
   def qHllFast(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val est = graft.pql.Pql.toDataFrame(
+    val est = graft.Graft.withIndexes(s)(graft.pql.Pql.toDataFrame(
       graft.pql.Pql.parse("SELECT DISTINCTCOUNTHLL(l_partkey) FROM lineitem"),
-      name => t(s, dir, name))
+      name => t(s, dir, name)))
     require(est.queryExecution.executedPlan.toString.contains("hll_register_estimate"),
       "global DISTINCTCOUNTHLL must route to the codegen register plan")
     t(s, dir, "lineitem")
@@ -184,13 +185,13 @@ object ApproxQueries {
   private val derivedIdx = new SessionCache[graft.plans.StarTree.Index]
 
   /** Automatic derived-HLL rewrite, end to end: the PQL text names
-    * only the RAW column — `DISTINCTCOUNTHLL(l_partkey)` — but the
-    * table carries an ingest-built sketch artifact (a star-tree with
-    * an `hll_l_partkey` metric), so the broker-side pre-process
-    * (`BrokerRequestPreProcessor.java:50-81` analog in
-    * [[graft.pql.Pql]]) compiles the aggregation to the DataSketches
-    * HLL at the artifact's lgK and the routing rule answers it from
-    * stored sketches — the executed plan is asserted fact-scan-free
+    * only the RAW column — `DISTINCTCOUNTHLL(l_partkey)` and
+    * `FASTHLL(l_partkey)`, both compiled to `approx_count_distinct` at
+    * rsd 0.065 — but the table carries an ingest-built sketch artifact
+    * (a star-tree with an lgK-12 `hll_l_partkey` metric, more accurate
+    * than asked), so [[graft.plans.StarTreeRoutingRule]] answers it
+    * from the stored sketches, the `BrokerRequestPreProcessor.java:50-81`
+    * swap — the executed plan is asserted fact-scan-free
     * for BOTH the grouped and the global shape. Output pins the exact distinct count plus
     * booleans asserting the routed estimates land inside the lgK-12
     * envelope (rsd ≈ 1.6%; bound 5%). */

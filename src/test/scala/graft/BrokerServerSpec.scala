@@ -2,11 +2,7 @@ package graft
 
 import java.net.{HttpURLConnection, URI}
 import java.nio.charset.StandardCharsets
-import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
 
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions.col
 
 import graft.pql.BrokerServer
@@ -347,30 +343,6 @@ class BrokerServerSpec extends SparkSpec {
     } finally broker.stop()
   }
 
-  /** The job group of every Spark job `body` starts. */
-  private def jobGroupsOf(body: => Unit): Seq[String] = {
-    val sc = spark.sparkContext
-    val groups = new ConcurrentLinkedQueue[String]
-    val marker = s"marker-${System.nanoTime()}"
-    val markerSeen = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        String.valueOf(Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull) match {
-          case `marker` => markerSeen.countDown()
-          case group => groups.add(group); ()
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      body
-      // the listener bus delivers the marker job's start after body's jobs'
-      sc.setJobGroup(marker, "marker")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      assert(markerSeen.await(30, TimeUnit.SECONDS), "listener bus did not deliver the marker job")
-    } finally sc.removeSparkListener(listener)
-    groups.asScala.toSeq
-  }
-
   test("OPTION(timeoutMs) runs a sorted page's count and probe jobs in the query's job group") {
     val dir = java.nio.file.Files.createTempDirectory("graft_broker_page").toFile.getAbsolutePath
     spark.read.parquet(s"$sfDir/lineitem.parquet").repartitionByRange(8, col("l_orderkey"))
@@ -387,10 +359,10 @@ class BrokerServerSpec extends SparkSpec {
       def post(q: String) = http("POST", s"http://127.0.0.1:$port/query", Some(s"""{"pql": "$q"}"""))
       // a first answer loads the table and reads its footers
       assert(post(pql).contains("\"selectionResults\""))
-      jobGroupsOf {
+      JobCount(spark) {
         val out = post(s"$pql OPTION(timeoutMs=60000)")
         assert(out.contains("\"selectionResults\""), out.take(300))
-      }
+      }.jobs.map(_.group)
     } finally broker.stop()
     // the count, the boundary probe and the page itself
     assert(groups.size >= 3, groups)
@@ -404,7 +376,7 @@ class BrokerServerSpec extends SparkSpec {
     spark.read.parquet(s"$sfDir/lineitem.parquet").write.parquet(s"$dir/li.parquet")
     val broker = new BrokerServer(spark, dir)
     val port = broker.start()
-    val groups = try jobGroupsOf {
+    val groups = try JobCount(spark) {
       def post(q: String) = http("POST", s"http://127.0.0.1:$port/query", Some(s"""{"pql": "$q"}"""))
       // an exact percentile over a double column narrows by rank in
       // passes that run while the frame is built
@@ -412,7 +384,7 @@ class BrokerServerSpec extends SparkSpec {
       assert(pct.contains("\"aggregationResults\""), pct.take(300))
       val count = post("SELECT COUNT(*) FROM li OPTION(timeoutMs=60000)")
       assert(count.contains("\"aggregationResults\""), count.take(300))
-    } finally broker.stop()
+    }.jobs.map(_.group) finally broker.stop()
     assert(groups.size >= 3, groups)
     assert(groups.forall(_.startsWith("graft-broker-")), groups)
   }
@@ -432,7 +404,7 @@ class BrokerServerSpec extends SparkSpec {
     } finally broker.stop()
   }
 
-  test("the latest-events page over an ingested table answers from the plain plan") {
+  test("the latest-events page over an ingested table reads only the newest file") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft_broker_events").toFile.getAbsolutePath
     val source = org.apache.spark.sql.execution.streaming.runtime
@@ -454,14 +426,15 @@ class BrokerServerSpec extends SparkSpec {
       val out = http("POST", s"http://127.0.0.1:$port/query", Some(s"""{"pql": "$e3"}"""))
       val ids = "\\[\"(\\d+)\",".r.findAllMatchIn(out).map(_.group(1).toInt).toSeq
       assert(ids == (199 to 190 by -1), out.take(400))
-      // the sink writes ts as INT96, whose parquet footers carry no
-      // min/max: no sorted layout is detected, and the page reads
-      // every committed file, as the plain plan does
+      // the sink writes ts as INT64 micros, whose parquet footers carry
+      // min/max: the commits show a sorted layout, and the page reads
+      // only the newest committed file
       val events = graft.sources.Tables.load(spark, dir, "events")
-      assert(graft.sources.SortedLayout.layoutFor(events, "ts").isEmpty)
+      assert(graft.sources.SortedLayout.layoutFor(events, "ts").isDefined)
       val page = graft.pql.Pql.toDataFrame(graft.pql.Pql.parse(e3),
         graft.sources.Tables.load(spark, dir, _))
-      assert(page.inputFiles.length == events.inputFiles.length && events.inputFiles.length >= 4)
+      assert(page.inputFiles.length == 1 && events.inputFiles.length >= 4,
+        s"${page.inputFiles.length} of ${events.inputFiles.length} files read")
     } finally { broker.stop(); q.stop() }
   }
 }

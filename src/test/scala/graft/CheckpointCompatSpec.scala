@@ -17,11 +17,14 @@ import graft.streaming.RealtimeIngest
   * every row committed exactly once. Each stream runs under the default
   * manager, stops mid-stream with its last commit lost (so the resumed
   * run re-executes that batch), resumes through `RealtimeIngest`, stops
-  * again and drains under the default manager. */
+  * again and drains under the default manager. The default runs write
+  * `ts` as INT96 and `RealtimeIngest` as INT64 micros, so each table
+  * mixes both, and reads back every timestamp. */
 class CheckpointCompatSpec extends SparkSpec {
   import spark.implicits._
 
   private val Key = "spark.sql.streaming.checkpointFileManagerClass"
+  private val TsKey = "spark.sql.parquet.outputTimestampType"
   private val Tick = Trigger.ProcessingTime(50, TimeUnit.MILLISECONDS)
 
   private def tmp(prefix: String) =
@@ -41,6 +44,8 @@ class CheckpointCompatSpec extends SparkSpec {
     Files.walk(Paths.get(dir)).iterator().asScala.map(_.getFileName.toString)
       .filter(n => n.startsWith(".") && n.endsWith(".crc")).toSet
 
+  private def ts(sec: Int) = new Timestamp(1700000000000L + sec * 1000L)
+
   /** Drop the last commit-log entry, as a crash between a batch's sink
     * write and its commit would. */
   private def loseLastCommit(ckp: String): Unit = {
@@ -58,8 +63,10 @@ class CheckpointCompatSpec extends SparkSpec {
     q.stop()
   }
 
-  private def ids(session: SparkSession, seg: String): Seq[Long] =
-    RealtimeIngest.readSegments(session, seg).select("id").as[Long].collect().toSeq
+  /** The committed (id, ts) rows, sorted by id. */
+  private def rows(session: SparkSession, seg: String): Seq[(Long, Timestamp)] =
+    RealtimeIngest.readSegments(session, seg).select("id", "ts").as[(Long, Timestamp)]
+      .collect().toSeq.sortBy(_._1)
 
   /** The three runs over one checkpoint: `default` under Spark's own
     * manager, `graft` through RealtimeIngest. */
@@ -67,7 +74,7 @@ class CheckpointCompatSpec extends SparkSpec {
       default: Trigger => StreamingQuery, graft: Trigger => StreamingQuery,
       phase1: StreamingQuery => Unit, phase2: StreamingQuery => Unit,
       phase3: () => Unit): Unit = {
-    assert(session.conf.getOption(Key).isEmpty)
+    assert(session.conf.getOption(Key).isEmpty && !session.conf.getAll.contains(TsKey))
     phase1(default(Tick))
     val written = sidecars(ckp)
     assert(written.nonEmpty, "Spark's default manager wrote no checksum sidecars")
@@ -75,9 +82,11 @@ class CheckpointCompatSpec extends SparkSpec {
 
     phase2(graft(Tick))
     assert(session.conf.getOption(Key).nonEmpty)
+    assert(session.conf.get(TsKey) === "TIMESTAMP_MICROS")
     assert(sidecars(ckp).subsetOf(written), "RealtimeIngest's manager wrote checksum sidecars")
 
     session.conf.unset(Key)
+    session.conf.unset(TsKey)
     phase3()
     default(Trigger.AvailableNow()).awaitTermination()
   }
@@ -86,23 +95,24 @@ class CheckpointCompatSpec extends SparkSpec {
     val session = spark.newSession()
     val seg = tmp("graft-compat-seg")
     val ckp = tmp("graft-compat-ckp")
-    val source = MemoryStream[Long](session)
-    val df = source.toDF.toDF("id")
+    val source = MemoryStream[(Long, Timestamp)](session)
+    val df = source.toDF.toDF("id", "ts")
+    def batch(ids: Range) = ids.map(i => (i.toLong, ts(i)))
     handOver(session, ckp)(
       default = t => plainStart(df, seg, ckp, t),
       graft = t => RealtimeIngest.start(df, seg, ckp, t),
-      phase1 = q => feed(q, source, 1L to 10L, 11L to 20L),
-      phase2 = q => feed(q, source, 21L to 30L, 31L to 40L),
-      phase3 = () => source.addData((41L to 50L): _*))
-    val got = ids(session, seg)
-    assert(got.sorted === (1L to 50L), "a row was lost or committed twice")
+      phase1 = q => feed(q, source, batch(1 to 10), batch(11 to 20)),
+      phase2 = q => feed(q, source, batch(21 to 30), batch(31 to 40)),
+      phase3 = () => source.addData(batch(41 to 50): _*))
+    assert(physicalTypes(seg, "ts") === Set("INT96", "INT64"))
+    assert(rows(session, seg) === batch(1 to 50), "a row was lost, committed twice or misread")
   }
 
   test("startWithDedup: default-written state-store deltas resume through RealtimeIngest, and back") {
     val session = spark.newSession()
     val seg = tmp("graft-compat-dedup-seg")
     val ckp = tmp("graft-compat-dedup-ckp")
-    def ts(min: Int) = Timestamp.valueOf(f"2024-01-01 00:$min%02d:00")
+    def at(min: Int) = ts(min * 60)
     val source = MemoryStream[(Long, String, Timestamp)](session)
     val df = source.toDF.toDF("id", "key", "ts")
     val deduped = df.withWatermark("ts", "1 hour").dropDuplicatesWithinWatermark("key")
@@ -110,18 +120,19 @@ class CheckpointCompatSpec extends SparkSpec {
       default = t => plainStart(deduped, seg, ckp, t),
       graft = t => RealtimeIngest.startWithDedup(df, Seq("key"), "ts", "1 hour", seg, ckp, t),
       phase1 = q => feed(q, source,
-        Seq((1L, "a", ts(1)), (2L, "b", ts(2))),
-        Seq((3L, "b", ts(3)), (4L, "c", ts(4)))),
+        Seq((1L, "a", at(1)), (2L, "b", at(2))),
+        Seq((3L, "b", at(3)), (4L, "c", at(4)))),
       // 5 repeats a key only the default manager's state holds
-      phase2 = q => feed(q, source, Seq((5L, "a", ts(5)), (6L, "d", ts(6)))),
+      phase2 = q => feed(q, source, Seq((5L, "a", at(5)), (6L, "d", at(6)))),
       // 7 repeats a key only RealtimeIngest's state holds
-      phase3 = () => source.addData((7L, "d", ts(7)), (8L, "e", ts(8))))
+      phase3 = () => source.addData((7L, "d", at(7)), (8L, "e", at(8))))
     // RealtimeIngest's run wrote state-store deltas (with overwrite, and
     // no sidecar) that the last run read back to drop key d
     val deltas = Files.walk(Paths.get(ckp, "state")).iterator().asScala.toSeq
       .filter(_.getFileName.toString.endsWith(".delta"))
     assert(deltas.exists(d => !Files.exists(d.resolveSibling(s".${d.getFileName}.crc"))))
-    val got = ids(session, seg)
-    assert(got.sorted === Seq(1L, 2L, 4L, 6L, 8L), "a row was lost, repeated or not deduplicated")
+    assert(physicalTypes(seg, "ts") === Set("INT96", "INT64"))
+    assert(rows(session, seg) === Seq(1, 2, 4, 6, 8).map(i => (i.toLong, at(i))),
+      "a row was lost, repeated, not deduplicated or misread")
   }
 }

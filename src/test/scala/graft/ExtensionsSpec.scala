@@ -235,6 +235,14 @@ class ExtensionsSpec extends SparkSpec {
 
     StarTreeRegistry.clear()
     val direct = q(8).orderBy("l_returnflag").collect().map(_.toSeq).toSeq
+    // PQL's DISTINCTCOUNTHLL, built before the tree is registered: the
+    // route is decided when the frame is optimized, not when it is built
+    val pql = graft.pql.Pql.toDataFrame(graft.pql.Pql.parse(
+      "SELECT DISTINCTCOUNTHLL(l_partkey) FROM lineitem GROUP BY l_returnflag TOP 10"),
+      Tables.load(spark, sfDir, _))
+    fact.createOrReplaceTempView("lineitem_hll")
+    def sqlText(rsd: String) = spark.sql("SELECT l_returnflag, approx_count_distinct(l_partkey" +
+      s"$rsd) AS dc FROM lineitem_hll GROUP BY l_returnflag")
     try {
       StarTreeRegistry.register(factPath, idx)
       assert(!scansFact(q(8)), "matching-lgK sketch estimate must route to the tree")
@@ -242,10 +250,19 @@ class ExtensionsSpec extends SparkSpec {
         "stored-sketch estimate must equal the query-time sketch estimate")
       // different lgK → different registers → must NOT route
       assert(scansFact(q(12)), "mismatched lgK must fall back to the fact scan")
-      // HLL++ (approx_count_distinct) is a different sketch → no route
+      // HLL++ (approx_count_distinct) routes only when the stored
+      // sketch is as accurate as asked: 1.04 / sqrt(2^8) = 0.065, so
+      // the default rsd 0.05 keeps the fact scan
       assert(scansFact(fact.groupBy($"l_returnflag")
         .agg(approx_count_distinct($"l_partkey").as("dc"))))
+      assert(!scansFact(pql), "PQL DISTINCTCOUNTHLL must route to the lgK-8 tree")
+      assert(pql.collect().map(r => Seq[Any](r.get(0), r.get(1))).toSet === direct.toSet)
+      assert(!scansFact(sqlText(", 0.065")), "rsd 0.065 in SQL text must route")
+      assert(scansFact(sqlText("")), "the default rsd must keep the fact scan")
     } finally StarTreeRegistry.clear()
+    // with no tree, a global call takes the register plan
+    val global = fact.agg(approx_count_distinct($"l_partkey", 0.065))
+    assert(global.queryExecution.executedPlan.toString.contains("hll_register_estimate"))
   }
 
   test("routing preserves result dataType and nullability (decimal sums, counts)") {

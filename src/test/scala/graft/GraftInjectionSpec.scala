@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
-import graft.plans.{DictRoutingRule, SortedPageRule, StarTree, StarTreeRoutingRule}
+import graft.plans.{DictRoutingRule, HllRegisterRule, SortedPageRule, StarTree, StarTreeRoutingRule}
 import graft.pql.Pql
 import graft.queries.ScaleTable
 
@@ -57,6 +57,7 @@ class GraftInjectionSpec extends SparkSpec {
     assert(rules.count(_.isInstanceOf[StarTreeRoutingRule]) === 1)
     assert(rules.count(_.isInstanceOf[DictRoutingRule]) === 1)
     assert(rules.count(_.isInstanceOf[SortedPageRule]) === 1)
+    assert(rules.count(_.isInstanceOf[HllRegisterRule]) === 1)
     assert(fresh.catalog.getFunction(id.funcName).className === "sentinel")
     assert(fresh.catalog.getFunction(GraftExtensions.functions.last._1.funcName).className ===
       "graft.functions.exprs")
@@ -138,7 +139,7 @@ class GraftInjectionSpec extends SparkSpec {
 
   test("src/main: the PQL compiler leaves index routes to the optimizer rules") {
     val pql = Files.readString(java.nio.file.Paths.get("src/main/scala/graft/pql/Pql.scala"))
-    for (layout <- Seq("DictLayout", "SortedLayout"))
-      assert(!pql.contains(layout), s"pql/Pql.scala names $layout")
+    for (name <- Seq("DictLayout", "SortedLayout", "StarTreeRegistry", "HllFastPlan"))
+      assert(!pql.contains(name), s"pql/Pql.scala names $name")
   }
 }

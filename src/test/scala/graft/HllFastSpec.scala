@@ -1,9 +1,12 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, IntegerType, LongType}
 
-import graft.functions.HllFastPlan
+import graft.functions.{HllFast, HllFastPlan, aggs2}
 import graft.pql.Pql
 import graft.sources.Tables
 
@@ -16,11 +19,58 @@ import graft.sources.Tables
 class HllFastSpec extends SparkSpec {
   import spark.implicits._
 
-  private def builtin(df: DataFrame, c: String, rsd: Double): Long =
-    df.agg(approx_count_distinct(col(c), rsd)).head().getLong(0)
+  /** A session without the graft rules: `Graft.enable` leaves them on
+    * the shared one, where `approx_count_distinct` itself would take the
+    * register plan. */
+  private lazy val plain = spark.newSession()
+
+  /** `approx_count_distinct` over `df`'s rows, computed on [[plain]]. */
+  private def builtin(df: DataFrame, c: String, rsd: Double): Long = {
+    val ref = GraftSqlBridge.frame(plain, df.queryExecution.analyzed)
+      .agg(approx_count_distinct(col(c), rsd))
+    val plan = ref.queryExecution.executedPlan.toString
+    assert(!plan.contains("hll_register_estimate"), plan)
+    ref.head().getLong(0)
+  }
+
+  private def pql(text: String): DataFrame = Graft.withIndexes(spark)(
+    Pql.toDataFrame(Pql.parse(text), Tables.load(spark, sfDir, _)))
 
   private def fast(df: DataFrame, c: String, rsd: Double): Long =
     HllFastPlan.distinctCountHll(df, col(c), rsd, "est").head().getLong(0)
+
+  /** rank = numberOfLeadingZeros((h << p) | (1 << (p-1))) + 1, the
+    * helper's suffix-rank derivation, inside whole-stage codegen. */
+  private case class HllRank(child: Expression, p: Int)
+      extends UnaryExpression with ImplicitCastInputTypes {
+    private val pad: Long = 1L << (p - 1)
+    override def inputTypes: Seq[GraftSqlBridge.AbstractType] = Seq(LongType)
+    override def dataType: DataType = IntegerType
+    override def nullSafeEval(input: Any): Any =
+      java.lang.Long.numberOfLeadingZeros((input.asInstanceOf[Long] << p) | pad) + 1
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+      defineCodeGen(ctx, ev,
+        c => s"(java.lang.Long.numberOfLeadingZeros(($c << $p) | ${pad}L) + 1)")
+    override protected def withNewChildInternal(newChild: Expression): HllRank =
+      copy(child = newChild)
+  }
+
+  /** The estimate through the DECLARATIVE register plan, the parity
+    * reference of the shipped RDD build: `groupBy(idx).max(rank)` over
+    * the same [[HllFastPlan.hashedFrame]], then the same estimate
+    * aggregate. */
+  private def declarative(df: DataFrame, c: String, rsd: Double): Long = {
+    val p = HllFast.precision(rsd)
+    val h = col("_h")
+    HllFastPlan.hashedFrame(df, col(c))
+      .select(shiftrightunsigned(h, 64 - p).cast(IntegerType).as("_hll_idx"),
+        GraftSqlBridge.column(HllRank(GraftSqlBridge.expression(h), p)).as("_hll_rank"))
+      .groupBy(col("_hll_idx")).agg(max(col("_hll_rank")).as("_hll_rank"))
+      .agg(GraftSqlBridge.column(aggs2.HllRegisterEstimate(
+        GraftSqlBridge.expression(col("_hll_idx")),
+        GraftSqlBridge.expression(col("_hll_rank")), rsd).toAggregateExpression()))
+      .head().getLong(0)
+  }
 
   private def check(df: DataFrame, c: String): Unit =
     for (rsd <- Seq(0.065, 0.05, 0.02))
@@ -85,30 +135,23 @@ class HllFastSpec extends SparkSpec {
     val df = (1 to 20000).map(i => i % 3163).toDF("v")
     for (rsd <- Seq(0.065, 0.02)) {
       val shipped = fast(df, "v", rsd)
-      val decl = HllFastPlan.distinctCountHllDeclarative(df, col("v"), rsd, "est")
-        .head().getLong(0)
+      val decl = declarative(df, "v", rsd)
       assert(shipped === decl)
       assert(shipped === builtin(df, "v", rsd))
     }
   }
 
   test("PQL global DISTINCTCOUNTHLL routes to the register plan and matches") {
-    val resolve = (n: String) => Tables.load(spark, sfDir, n)
-    val df = Pql.toDataFrame(
-      Pql.parse("SELECT DISTINCTCOUNTHLL(l_partkey) FROM lineitem"), resolve)
+    val df = pql("SELECT DISTINCTCOUNTHLL(l_partkey) FROM lineitem")
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("hll_register_estimate"), plan)
     assert(!plan.contains("approx_count_distinct"), plan)
-    val expected = resolve("lineitem")
-      .agg(approx_count_distinct(col("l_partkey"), 0.065)).head().getLong(0)
+    val expected = builtin(Tables.load(spark, sfDir, "lineitem"), "l_partkey", 0.065)
     assert(df.head().getLong(0) === expected)
   }
 
   test("PQL grouped DISTINCTCOUNTHLL keeps the sketch aggregate") {
-    val resolve = (n: String) => Tables.load(spark, sfDir, n)
-    val df = Pql.toDataFrame(
-      Pql.parse("SELECT DISTINCTCOUNTHLL(l_partkey) FROM lineitem GROUP BY l_returnflag"),
-      resolve)
+    val df = pql("SELECT DISTINCTCOUNTHLL(l_partkey) FROM lineitem GROUP BY l_returnflag")
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("approx_count_distinct"), plan)
     assert(!plan.contains("hll_register_estimate"), plan)
@@ -116,9 +159,7 @@ class HllFastSpec extends SparkSpec {
 
   test("PQL global with filter routes and the inner scan keeps the filter pushed") {
     val resolve = (n: String) => Tables.load(spark, sfDir, n)
-    val df = Pql.toDataFrame(
-      Pql.parse("SELECT DISTINCTCOUNTHLL(l_partkey) FROM lineitem WHERE l_quantity > 25"),
-      resolve)
+    val df = pql("SELECT DISTINCTCOUNTHLL(l_partkey) FROM lineitem WHERE l_quantity > 25")
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("hll_register_estimate"), plan)
     // the same filtered-frame shape the route hands registerRows, with
@@ -127,22 +168,18 @@ class HllFastSpec extends SparkSpec {
       resolve("lineitem").where(col("l_quantity") > 25), col("l_partkey"))
       .queryExecution.executedPlan.toString
     assert(inner.contains("GreaterThan(l_quantity,25"), inner)
-    val expected = resolve("lineitem").where(col("l_quantity") > 25)
-      .agg(approx_count_distinct(col("l_partkey"), 0.065)).head().getLong(0)
+    val expected = builtin(resolve("lineitem").where(col("l_quantity") > 25), "l_partkey", 0.065)
     assert(df.head().getLong(0) === expected)
   }
 
   test("mixed global aggregates: register frame crossJoins with the sv frame") {
-    val resolve = (n: String) => Tables.load(spark, sfDir, n)
-    val df = Pql.toDataFrame(
-      Pql.parse("SELECT COUNT(*), DISTINCTCOUNTHLL(l_partkey), SUM(l_quantity) FROM lineitem"),
-      resolve)
+    val df = pql("SELECT COUNT(*), DISTINCTCOUNTHLL(l_partkey), SUM(l_quantity) FROM lineitem")
     assert(df.columns.toSeq ===
       Seq("count_star", "distinctcounthll_l_partkey", "sum_l_quantity"))
-    val li = resolve("lineitem")
+    assert(df.queryExecution.executedPlan.toString.contains("hll_register_estimate"))
+    val li = Tables.load(spark, sfDir, "lineitem")
     val row = df.head()
     assert(row.getLong(0) === li.count())
-    assert(row.getLong(1) ===
-      li.agg(approx_count_distinct(col("l_partkey"), 0.065)).head().getLong(0))
+    assert(row.getLong(1) === builtin(li, "l_partkey", 0.065))
   }
 }

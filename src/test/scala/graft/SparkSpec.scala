@@ -1,9 +1,5 @@
 package graft
 
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -33,36 +29,26 @@ trait SparkSpec extends AnyFunSuite {
     (out, jobs)
   }
 
-  /** Spark jobs `f` launches on this thread, and their tasks. The
-    * listener bus delivers in order, so once a later marker job has
-    * arrived every job of `f` has been counted. */
+  /** Spark jobs `f` launches on this thread, and their tasks. */
   def jobsAndTasksOf[T](f: => T): (T, Int, Int) = {
-    val group = s"spec-jobs-${System.nanoTime()}"
-    val marker = group + "-marker"
-    val jobs = new AtomicInteger
-    val tasks = new AtomicInteger
-    val markerSeen = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))) match {
-          case Some(`group`) =>
-            jobs.incrementAndGet()
-            tasks.addAndGet(e.stageInfos.map(_.numTasks).sum); ()
-          case Some(`marker`) => markerSeen.countDown()
-          case _ =>
-        }
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "counted")
-      val out = try f finally sc.clearJobGroup()
-      sc.setJobGroup(marker, "marker")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      assert(markerSeen.await(30, TimeUnit.SECONDS),
-        "listener bus did not deliver the marker job")
-      (out, jobs.get, tasks.get)
-    } finally sc.removeSparkListener(listener)
+    val counted = JobCount(spark)(f)
+    (counted.value, counted.own.size, counted.own.map(_.tasks).sum)
+  }
+
+  /** The parquet physical type of `column` in each parquet file directly
+    * under `dir`. */
+  def physicalTypes(dir: String, column: String): Set[String] = {
+    import scala.jdk.CollectionConverters._
+    java.nio.file.Files.list(java.nio.file.Paths.get(dir)).iterator().asScala
+      .filter(_.toString.endsWith(".parquet")).map { f =>
+        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+            new org.apache.hadoop.fs.Path(f.toUri), new org.apache.hadoop.conf.Configuration()))
+        try {
+          val schema = reader.getFooter.getFileMetaData.getSchema
+          schema.getType(schema.getFieldIndex(column)).asPrimitiveType.getPrimitiveTypeName.name
+        } finally reader.close()
+      }.toSet
   }
 
   /** Cancel the test unless `path` is a regular file — for tests that

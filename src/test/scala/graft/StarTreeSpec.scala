@@ -145,17 +145,27 @@ class StarTreeSpec extends SparkSpec {
     }
   }
 
-  test("inconsistent derived-HLL lgK across artifacts is a query-time error") {
+  test("sketch trees of different lgKs: a query answers from its narrowest covering tree") {
     import graft.pql.Pql
     val factPath = s"$sfDir/lineitem.parquet"
+    // one tree answers each query, so no answer merges sketches of two
+    // lgKs (the case the reference's consistency check guards, where a
+    // broker merges segments built with different log2m)
     Graft.withIndexes(spark, trees = Seq(
-        factPath -> StarTree.build(fact, Seq("l_returnflag"), Seq("l_partkey"), sketchLgK = 8),
-        factPath -> StarTree.build(fact, Seq("l_linestatus"), Seq("l_partkey"), sketchLgK = 12))) {
-      val resolve = (name: String) => Tables.load(spark, sfDir, name)
-      val e = intercept[IllegalArgumentException](Pql.toDataFrame(Pql.parse(
+        factPath -> persisted(StarTree.build(fact, Seq("l_returnflag"), Seq("l_partkey"),
+          sketchLgK = 8), "lgk8"),
+        factPath -> persisted(StarTree.build(fact, Seq("l_linestatus"), Seq("l_partkey"),
+          sketchLgK = 12), "lgk12"))) {
+      val df = Pql.toDataFrame(Pql.parse(
         "SELECT DISTINCTCOUNTHLL(l_partkey) FROM lineitem GROUP BY l_returnflag TOP 5"),
-        resolve))
-      assert(e.getMessage.contains("inconsistent derived-HLL lgK"))
+        Tables.load(spark, sfDir, _))
+      val plan = df.queryExecution.executedPlan.toString
+      assert(!plan.contains("lineitem.parquet"), s"must route off the fact scan:\n$plan")
+      assert(plan.contains("graft_stspec_lgk8_") && !plan.contains("graft_stspec_lgk12_"), plan)
+      val direct = fact.groupBy($"l_returnflag")
+        .agg(hll_sketch_estimate(hll_sketch_agg($"l_partkey", lit(8))).as("est"))
+        .as[(String, Long)].collect().toMap
+      assert(df.as[(String, Long)].collect().toMap === direct)
     }
   }
 }

@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.Files
+import java.sql.Timestamp
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -17,26 +18,34 @@ class StreamingIngestSpec extends SparkSpec {
   private def tmp(prefix: String) =
     Files.createTempDirectory(prefix).toFile.getAbsolutePath
 
+  private val TsKey = "spark.sql.parquet.outputTimestampType"
+  private def at(sec: Int) = new Timestamp(1700000000000L + sec * 1000L)
+
   test("micro-batch commits are exactly-once across restarts (segment lifecycle)") {
     val seg = tmp("graft-seg")
     val ckp = tmp("graft-ckp")
-    val source = MemoryStream[(Long, String, Double)](spark)
+    // the first run writes ts as INT96, the restart as INT64 micros
+    val session = spark.newSession()
+    session.conf.set(TsKey, "INT96")
+    val source = MemoryStream[(Long, String, Double, Timestamp)](session)
+    def columns = source.toDF.toDF("event_id", "event_type", "value", "ts")
 
-    source.addData((1L, "click", 1.0), (2L, "view", 2.0))
-    val q1 = RealtimeIngest.start(
-      source.toDF.toDF("event_id", "event_type", "value"), seg, ckp)
+    source.addData((1L, "click", 1.0, at(1)), (2L, "view", 2.0, at(2)))
+    val q1 = RealtimeIngest.start(columns, seg, ckp)
     q1.awaitTermination()
 
     // restart from the same checkpoint with more data: only the new
     // offsets are consumed — the committed segment is not re-published
-    source.addData((3L, "click", 3.0))
-    val q2 = RealtimeIngest.start(
-      source.toDF.toDF("event_id", "event_type", "value"), seg, ckp)
+    session.conf.unset(TsKey)
+    source.addData((3L, "click", 3.0, at(3)))
+    val q2 = RealtimeIngest.start(columns, seg, ckp)
     q2.awaitTermination()
 
+    assert(physicalTypes(seg, "ts") === Set("INT96", "INT64"))
     val out = RealtimeIngest.readSegments(spark, seg)
     assert(out.count() === 3)
-    assert(out.select("event_id").as[Long].collect().sorted.toSeq === Seq(1L, 2L, 3L))
+    assert(out.select("event_id", "ts").as[(Long, Timestamp)].collect().sortBy(_._1).toSeq ===
+      Seq(1, 2, 3).map(i => (i.toLong, at(i))))
   }
 
   test("ingest rollup merges identical dimensions within a segment") {
@@ -89,8 +98,11 @@ class StreamingIngestSpec extends SparkSpec {
   test("streaming exact dedup: watermark-bounded state, first-wins across batches") {
     val seg = tmp("graft-dedup-seg")
     val ckp = tmp("graft-dedup-ckp")
-    def ts(min: Int) = java.sql.Timestamp.valueOf(f"2024-01-01 00:$min%02d:00")
-    val source = MemoryStream[(Long, String, java.sql.Timestamp)](spark)
+    def ts(min: Int) = at(min * 60)
+    // the first run writes ts as INT96, the restart as INT64 micros
+    val session = spark.newSession()
+    session.conf.set(TsKey, "INT96")
+    val source = MemoryStream[(Long, String, Timestamp)](session)
 
     // batch 1: doc 2 arrives twice (same text → same fingerprint)
     source.addData((1L, "alpha doc", ts(1)), (2L, "beta doc", ts(2)),
@@ -106,14 +118,16 @@ class StreamingIngestSpec extends SparkSpec {
     // restart from the checkpoint: a duplicate of doc 2 within the
     // watermark window is suppressed by the CHECKPOINTED state; the
     // genuinely new doc passes
+    session.conf.unset(TsKey)
     source.addData((4L, "beta doc", ts(10)), (5L, "gamma doc", ts(11)))
     RealtimeIngest.startWithDedup(
       source.toDF.toDF("id", "text", "ts")
         .withColumn("fp", graft.operators.TextAnalysis.fingerprintMd5($"text")),
       keyCols = Seq("fp"), timeCol = "ts", watermarkDelay = "1 hour", seg, ckp)
       .awaitTermination()
-    assert(RealtimeIngest.readSegments(spark, seg)
-      .select("id").as[Long].collect().sorted.toSeq === Seq(1L, 2L, 5L))
+    assert(physicalTypes(seg, "ts") === Set("INT96", "INT64"))
+    assert(RealtimeIngest.readSegments(spark, seg).select("id", "ts").as[(Long, Timestamp)]
+      .collect().sortBy(_._1).toSeq === Seq(1L -> ts(1), 2L -> ts(2), 5L -> ts(11)))
   }
 
   test("streaming windowed aggregation with watermark (event-time rollup)") {
